@@ -15,7 +15,6 @@ Input conventions:
 
 from __future__ import annotations
 
-import os
 from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
@@ -415,17 +414,14 @@ def best_movement(
     # recomputing the aggregate (measured r10: dropping this cache made
     # movement rounds ~4x slower).  The count is FORCED: r12 made it
     # lazy to save one job per round, but the r13 interleaved A/B
-    # (tools/ab_refine.py at sf0.1, 3 pairs) measured the lazy variant
-    # 12-15% SLOWER for the whole refine loop (45.7-54.7 s vs
-    # 40.1-45.8 s) — the two consumers launch concurrently before the
-    # lazy cache fills and each recomputes the aggregate, the same race
-    # the shared stats broadcast above had.  One cheap count job that
-    # serializes the fill wins.  CDFS_AB_LAZY_OWN_CACHE restores the
-    # r12 lazy fill for tools/ab_refine.py same-session A/Bs.
+    # (sf0.1, 3 pairs, plans/r13/ab_knob_lazy_own_NEGATIVE_sf01.txt)
+    # measured the lazy variant 12-15% SLOWER for the whole refine loop
+    # (45.7-54.7 s vs 40.1-45.8 s) — the two consumers launch
+    # concurrently before the lazy cache fills and each recomputes the
+    # aggregate, the same race the shared stats broadcast above had.
+    # One cheap count job that serializes the fill wins.
     if mat is not None:
-        own = mat.cache(
-            own, "own", force=not os.environ.get("CDFS_AB_LAZY_OWN_CACHE")
-        )
+        own = mat.cache(own, "own")
 
     cand = (
         vcd.where(F.col("cId") != F.col("c_own"))

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
+    loop_width,
     scoped_shuffle_partitions,
 )
 
@@ -127,15 +128,12 @@ def connected_components(
     # caller's whole pipeline once more at final-join time (r11).
     e = mat(e, "cc-edges")
     init_e = e  # its files back all_v in the RETURNED plan: never drop
-    # loop-width sizing (r11, the refinement.py:136 rule): the loop
-    # shuffles the same known-size edge state every round; ~300k rows
-    # per partition, clamped at the session value so cluster-scale
-    # runs keep their width.  The count is a parquet-metadata read of
-    # the landed state, not a recompute.  AQE stays ON in this loop
-    # (the r10 A/B: non-adaptive was 2× slower here — the stars'
-    # min-label sides need runtime broadcast discovery).
-    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_sp = max(1, min(session_sp, e.count() // 300_000 + 1))
+    # loop width (r11, plans.loop_width): the loop shuffles the same
+    # known-size edge state every round.  The count is a parquet-
+    # metadata read of the landed state, not a recompute.  AQE stays
+    # ON in this loop (the r10 A/B: non-adaptive was 2× slower here —
+    # the stars' min-label sides need runtime broadcast discovery).
+    loop_sp = loop_width(spark, e.count(), 1)
     all_v = e.select(F.col("u").alias("vId")).union(e.select(F.col("v").alias("vId")))
     if vertices is not None:
         vc = vertices.columns[0]
@@ -182,14 +180,14 @@ def connected_components(
                 obss.append(ob)
             # r13: in-loop landings are LIGHT (localCheckpoint — same
             # logical-plan truncation as parquet, no write/commit/read;
-            # see plans.Materializer) except every 4th, which stays
-            # parquet so estimated-stats drift is reset.  Cheap here
+            # see plans.Materializer) except on Materializer.land_round's
+            # parquet cadence, which resets estimated-stats drift.  Cheap here
             # BECAUSE the plan is truncated — the r11 persist() A/B
             # (75% slower, above) failed on plan growth, which a
             # LogicalRDD does not have.  AQE stays on: its runtime
             # sizes make the drifted estimates mostly moot anyway.
             n_landed += 1
-            e = mat(nxt, "cc-edges", light=n_landed % 4 != 0)
+            e = mat.land_round(nxt, "cc-edges", n_landed)
             if prev_e is not init_e:
                 mat.drop(prev_e)
             sigs = [(ob.get["n"], ob.get["h"]) for ob in obss]

@@ -153,8 +153,8 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
     Distribution: each round is one hash aggregate (degrees) and two
     ``left_semi`` joins (induced edges); no driver-side vertex state.
     The surviving edge set is landed per round (Materializer — LIGHT
-    localCheckpoint rounds with an every-4th-parquet cadence since
-    r13), so lineage stays O(1) no matter how many peel rounds run,
+    localCheckpoint rounds with the ``land_round`` parquet cadence
+    since r13), so lineage stays O(1) no matter how many peel rounds run,
     and the convergence count rides the landing as an Observation.
     Rounds are data-dependent but bounded by the graph's degeneracy
     peel depth (``max_rounds`` is a safety valve, not a tuning knob).
@@ -171,17 +171,17 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
         )
         # r13: the convergence count rides the landing as an
         # Observation (one job per round instead of land + count), and
-        # in-loop rounds land LIGHT with the every-4th-parquet cadence
-        # (plans.Materializer)
+        # in-loop rounds land LIGHT with the parquet cadence
+        # (Materializer.land_round)
         ob = Observation()
-        nxt = mat(
+        nxt = mat.land_round(
             cur.join(keep.select("src"), "src", "left_semi")
             .join(
                 keep.select(F.col("src").alias("dst")), "dst", "left_semi"
             )
             .observe(ob, F.count(F.lit(1)).alias("n")),
             "kcore",
-            light=(_round + 1) % 4 != 0,
+            _round + 1,
         )
         n_next = int(ob.get["n"] or 0)
         mat.drop(cur)
@@ -224,10 +224,10 @@ def bfs_distances(
     frontier = visited
     for d in range(1, int(max_depth) + 1):
         # r13: emptiness test rides the frontier landing as an
-        # Observation; in-loop rounds land LIGHT with the every-4th-
-        # parquet cadence (plans.Materializer)
+        # Observation; in-loop rounds land LIGHT with the parquet
+        # cadence (Materializer.land_round)
         ob = Observation()
-        nxt = mat(
+        nxt = mat.land_round(
             edges.join(
                 frontier.withColumnsRenamed({"vId": "src"}).select("src"),
                 "src",
@@ -239,12 +239,12 @@ def bfs_distances(
             .select("vId", F.lit(d).cast("long").alias("dist"))
             .observe(ob, F.count(F.lit(1)).alias("n")),
             "bfs",
-            light=d % 4 != 0,
+            d,
         )
         if int(ob.get["n"] or 0) == 0:
             mat.drop(nxt)
             break
-        new_visited = mat(visited.unionByName(nxt), "bfs-vis", light=d % 4 != 0)
+        new_visited = mat.land_round(visited.unionByName(nxt), "bfs-vis", d)
         mat.drop(visited)
         mat.drop(nxt)
         visited = new_visited
@@ -474,7 +474,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .select(F.col("src").alias("vId"), "label"),
             f"lpa-{r}",
             # NOT light: measured 2x slower with light landings here
-            # (tools/ab_light_queries.py r13: 7.49 vs 3.66 s min-of-2 —
+            # (r13 A/B, plans/r13/ab_light_queries_sf01.txt: 7.49 vs 3.66 s —
             # the per-round edges-x-labels join plans off the landed
             # stats, and a LogicalRDD's estimates flip it to a shuffle
             # join that AQE does not fully claw back)
@@ -519,14 +519,14 @@ def sssp_weighted(
                 (F.col("d") + F.col("w")).cast("long").alias("d"),
             )
         )
-        nxt = mat(
+        nxt = mat.land_round(
             dist.unionByName(relaxed).groupBy("vId").agg(F.min("d").alias("d")),
             "sssp",
-            # r13: LIGHT in-loop rounds, every 4th on parquet (measured
+            # r13: LIGHT in-loop rounds, parquet cadence (measured
             # FLAT here — 11.71 vs 11.81 s min-of-2, kept for the
             # avoided write/commit litter; the min-aggregate absorbs
             # the drifted estimates the inner-join loops choke on)
-            light=(_round + 1) % 4 != 0,
+            _round + 1,
         )
         mat.drop(dist)
         dist = nxt
@@ -656,7 +656,7 @@ def landmark_distances(
         # r13: emptiness test rides the landing as an Observation (one
         # job per round instead of land + count).  NOT light: measured
         # ~2x slower with localCheckpoint landings here (r13
-        # tools/ab_light_queries.py: g_landmark_distances 6.71 vs
+        # plans/r13/ab_light_queries_sf01_run2.txt: g_landmark_distances 6.71 vs
         # 3.53 s, g_centrality_approx 7.25 vs 3.49 s min-of-2) — the
         # per-round frontier x edges inner join plans off the landed
         # stats, which a LogicalRDD's estimates wreck.
@@ -813,7 +813,7 @@ def k_truss(edges: DataFrame, k: int = 4, max_rounds: int = 50) -> DataFrame:
         # r13: convergence count rides the landing as an Observation
         # (one job per round instead of land + count).  NOT light:
         # measured 15% slower with localCheckpoint landings (r13
-        # tools/ab_light_queries.py: 96.6 vs 83.6 s min-of-2) — the
+        # plans/r13/ab_light_queries_sf01_run2.txt: 96.6 vs 83.6 s) — the
         # wedge join multiplies off the landed stats.
         ob = Observation()
         nxt = mat(

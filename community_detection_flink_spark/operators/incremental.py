@@ -36,19 +36,21 @@ from pyspark.sql import functions as F
 
 from community_detection_flink_spark.functions.wcc_metric import cc_col
 from community_detection_flink_spark.operators.community import (
-    best_movement,
     community_adjacency,
-    community_stats,
     wccv_by_community,
 )
 from community_detection_flink_spark.operators.partition import initial_partition
 from community_detection_flink_spark.operators.preprocess import preprocess
-from community_detection_flink_spark.operators.refinement import run_wcc
+from community_detection_flink_spark.operators.refinement import (
+    FixedRounds,
+    movement_rounds,
+    run_wcc,
+)
 from community_detection_flink_spark.operators.triangles import triangles
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
+    loop_scope,
     no_aqe,
-    scoped_shuffle_partitions,
 )
 from community_detection_flink_spark.sources.edges import symmetrize_edges
 
@@ -446,55 +448,17 @@ def _elect_and_refine(
         # sf0.1).  Fall through to the whole-graph rounds.
 
     # ---------------- whole-graph parity path -------------------------
-    # fixed-round refinement, no accept test (IncrementalWCC.scala:332-393).
-    # Same per-round plan shape as refine_partition: one fused
-    # community-adjacency aggregate per labeling, LAZY per-round stats
-    # over it (see refine_partition._eval), and the incrementally-
-    # maintained static triangle list for the final WCC — no per-batch
-    # triangle re-enumeration.  The whole loop + tail runs non-adaptive
-    # (plans.no_aqe): every root is a landed parquet or a loop cache.
+    # fixed-round refinement, no accept test (IncrementalWCC.scala:332-393):
+    # the same movement_rounds as refine_partition, and the
+    # incrementally-maintained static triangle list for the final WCC —
+    # no per-batch triangle re-enumeration.  The whole loop + tail runs
+    # non-adaptive (plans.loop_scope): every root is a landed parquet
+    # or a loop cache.
     loop_edges = clean_new.repartition("src").persist()  # see refine_partition
-    cur = part
-    n_rounds = 0
-    # loop-width sizing, same rule as refine_partition (r10): ~300k
-    # edge rows per partition, clamped at the session width — the
-    # per-batch loop shuffles fixed-size state and the session width
-    # over-splits it (measured there: 8 vs 32 = 57-68s vs 75s)
-    _spark = vertices.sparkSession
-    _session_sp = int(_spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    _loop_sp = max(4, min(_session_sp, n_clean_edges // 300_000 + 1))
-    with no_aqe(_spark), scoped_shuffle_partitions(_spark, _loop_sp):
-        cur_vcd = community_adjacency(cur, loop_edges).persist()
-        # persisted but not forced: the first broadcast in best_movement
-        # materializes it; the second reads the cache (see refine_partition)
-        cur_cs = community_stats(cur, loop_edges, vcd=cur_vcd).persist()
-        for _r in range(rounds):
-            obs = Observation()
-            nxt = mat(
-                best_movement(
-                    cur, loop_edges, cur_cs, global_cc, vertex_count,
-                    mat=mat, vcd=cur_vcd, moves_observation=obs,
-                ),
-                "inc-mv",
-                # NOT light: this loop plans non-adaptively, so the
-                # parquet landing's true file stats are load-bearing
-                # (see refinement.HEAVY_LANDING_EVERY's measured A/B)
-            )
-            mat.release()
-            n_rounds += 1
-            if obs.get["moves"] == 0:
-                # fixed point: the remaining fixed rounds are identity
-                # passes (IncrementalWCC.scala:382 runs them anyway); the
-                # carried vcd/cs caches are already those of this labeling
-                mat.drop(nxt)
-                break
-            cur_vcd.unpersist(False)
-            cur_cs.unpersist(False)
-            prev = cur
-            cur = nxt
-            cur_vcd = community_adjacency(cur, loop_edges).persist()
-            cur_cs = community_stats(cur, loop_edges, vcd=cur_vcd).persist()
-            mat.drop(prev)     # superseded round state (no-op for `part`'s caller refs)
+    with loop_scope(vertices.sparkSession, n_clean_edges, 4):
+        cur, cur_vcd, cur_cs, n_rounds = movement_rounds(
+            part, loop_edges, global_cc, vertex_count, mat, FixedRounds(rounds)
+        )
 
         # per-community WCC sums (carried for the scoped path of future
         # batches); their total over |V| is the batch's global WCC — same
@@ -530,8 +494,9 @@ def _elect_and_refine(
             "inc-final",
         )
     # everything the carried state needs is parquet-landed above — the
-    # last round's (possibly light) labeling is superseded
+    # round labelings are superseded
     mat.drop(cur)
+    mat.drop(part)
     return WCCState(
         edges=full_edges,
         clean_edges=clean_new,
@@ -560,7 +525,7 @@ def _refine_scoped(
     old_wccv: DataFrame,
     pending_unions: int,
     diag: dict | None,
-    n_clean_edges: int | None = None,
+    n_clean_edges: int,
 ) -> WCCState | None:
     """Batch-neighborhood refinement (VERDICT r3 #2): run the fixed
     movement rounds over only the vertices a batch can influence, and
@@ -687,58 +652,18 @@ def _refine_scoped(
         "scope-outer",
     )
 
-    def _vcd(labels_scoped: DataFrame) -> DataFrame:
-        lab = labels_scoped.select("vId", "cId").unionByName(outer_lab)
-        return community_adjacency(lab, scope_edges)
-
-    cur = vr
-    n_rounds = 0
-    # scoped rounds are neighborhood-sized over persisted scope_edges —
-    # non-adaptive planning (plans.no_aqe) keeps the per-round job
-    # count at the query count instead of the query-stage count.
-    # Loop width (r11, VERDICT r10 #4): the ~300k-rows rule sized on
-    # the ESTIMATED scope edge count — |V_R| (already counted by the
-    # probe's Observation) × the graph's mean out-degree from two
-    # landed-state counts, no extra edge-scan job.  Clamped at the
-    # session width as everywhere else.
-    _spark = vertices.sparkSession
-    _session_sp = int(_spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    _n_clean_edges = (
-        clean_new.count() if n_clean_edges is None else int(n_clean_edges)
-    )
-    _est_edges = int(vr_obs.get["n"] or 0) * _n_clean_edges // max(1, n_clean)
-    _loop_sp = max(1, min(_session_sp, _est_edges // 300_000 + 1))
-    with no_aqe(_spark), scoped_shuffle_partitions(_spark, _loop_sp):
-        cur_vcd = _vcd(cur).persist()
-        cur_cs = community_stats(cur, scope_edges, vcd=cur_vcd).persist()
-        for _ in range(rounds):
-            obs = Observation()
-            moved_m = best_movement(
-                cur.join(m_ids, "vId", "left_semi"),
-                scope_edges, cur_cs, global_cc, vertex_count,
-                mat=mat,
-                vcd=cur_vcd.join(m_ids, "vId", "left_semi"),
-                moves_observation=obs,
-            )
-            nxt = mat(
-                cur.join(m_ids, "vId", "left_anti").unionByName(moved_m),
-                "inc-mv",
-                # NOT light: non-adaptive loop, parquet stats are
-                # load-bearing (refinement.HEAVY_LANDING_EVERY's A/B)
-            )
-            mat.release()
-            n_rounds += 1
-            if obs.get["moves"] == 0:
-                mat.drop(nxt)
-                break
-            cur_vcd.unpersist(False)
-            cur_cs.unpersist(False)
-            prev = cur
-            cur = nxt
-            cur_vcd = _vcd(cur).persist()
-            cur_cs = community_stats(cur, scope_edges, vcd=cur_vcd).persist()
-            if prev is not vr:
-                mat.drop(prev)
+    # scoped rounds are neighborhood-sized over persisted scope_edges:
+    # only M moves, and the labels outside V_R stay fixed.  Non-
+    # adaptive (plans.loop_scope) at the loop width (r11, VERDICT r10
+    # #4) sized on the ESTIMATED scope edge count — |V_R| (already
+    # counted by the probe's Observation) × the graph's mean out-degree
+    # from two landed-state counts, no extra edge-scan job.
+    est_edges = int(vr_obs.get["n"] or 0) * n_clean_edges // max(1, n_clean)
+    with loop_scope(vertices.sparkSession, est_edges, 1):
+        cur, cur_vcd, cur_cs, n_rounds = movement_rounds(
+            vr, scope_edges, global_cc, vertex_count, mat, FixedRounds(rounds),
+            candidates=m_ids, outer_labels=outer_lab,
+        )
 
         # splice carried stats/WCC sums: drop every PRE-batch community
         # with a member in V_R (complete communities — see docstring),
@@ -801,11 +726,8 @@ def _refine_scoped(
     cur_vcd.unpersist(False)
     cur_cs.unpersist(False)
     scope_edges.unpersist(False)
-    for df in (m_ids, r_comms, outer_lab, part):
+    for df in (m_ids, r_comms, outer_lab, part, cur, vr):
         mat.drop(df)
-    if cur is not vr:
-        mat.drop(cur)
-    mat.drop(vr)
     return WCCState(
         edges=full_edges,
         clean_edges=clean_new,

@@ -29,15 +29,12 @@ why not ``localCheckpoint``).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
-    no_aqe,
-    scoped_shuffle_partitions,
+    loop_scope,
 )
 
 MAX_ITERATIONS = 50  # DistributedWCC.scala:143
@@ -132,15 +129,11 @@ def initial_partition(
     # Materializer-landed roots and persisted frontiers — AQE only
     # multiplies the driver-blocking job count here (see plans.no_aqe;
     # r9 A/B at sf0.1: wall unchanged, per-round job count collapses).
-    # Loop width (r11, VERDICT r10 #4): the same ~300k-rows rule as the
-    # refinement loop, sized on the landed clean-edge count (a parquet
-    # metadata read — run_wcc lands clean_edges before calling here)
-    # and clamped at the session width so cluster-scale runs keep it.
-    spark = vertices.sparkSession
-    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # Loop width (r11, VERDICT r10 #4): plans.loop_width sized on the
+    # landed clean-edge count (a parquet metadata read — run_wcc lands
+    # clean_edges before calling here).
     n_edges = clean_edges.count() if edge_count is None else int(edge_count)
-    loop_sp = max(4, min(session_sp, n_edges // 300_000 + 1))
-    with no_aqe(spark), scoped_shuffle_partitions(spark, loop_sp):
+    with loop_scope(vertices.sparkSession, n_edges, 4):
         undecided = mat(v.select("vId"), "mis-undec")
         undec_files.append(undecided)
         # r13 MEASURED NEGATIVE (record): chaining TWO rounds per
@@ -168,7 +161,7 @@ def initial_partition(
                 # 2x slower in this non-adaptive loop (A/B at sf0.1:
                 # light 10.1-13.5 s / 177 jobs vs parquet 5.4-7.2 s /
                 # 57 jobs) — same parquet-stats dependence as the
-                # refinement loop (refinement.HEAVY_LANDING_EVERY).
+                # movement rounds (refinement.movement_rounds' note).
             )
             undec_files.append(undecided)
             if (obs.get["undec"] or 0) == 0:

@@ -18,8 +18,6 @@ driver.
 
 from __future__ import annotations
 
-import os
-
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
@@ -34,27 +32,10 @@ from community_detection_flink_spark.operators.community import (
 from community_detection_flink_spark.operators.partition import initial_partition
 from community_detection_flink_spark.operators.preprocess import preprocess
 from community_detection_flink_spark.operators.triangles import triangles
-from community_detection_flink_spark.plans.iteration import (
-    Materializer,
-    no_aqe,
-    scoped_shuffle_partitions,
-)
+from community_detection_flink_spark.plans.iteration import Materializer, loop_scope
 
 THRESHOLD = 0.01  # DistributedWCC.scala:28
 MAX_RETRIES = 5  # DistributedWCC.scala:30
-# r13 MEASURED NEGATIVE (kept as a record): landing the movement loop's
-# round states via localCheckpoint instead of parquet was 2.7-3x SLOWER
-# at sf0.1 (interleaved A/B, tools/ab_refine.py: light 136-156 s vs
-# parquet 50 s for identical results and job counts).  The loop plans
-# non-adaptively, so join strategies come from STATIC stats; a
-# LogicalRDD carries the origin plan's ESTIMATED stats, and the
-# movement plan's inner-join estimates (size products) blow past the
-# 64 MB broadcast threshold immediately — the label-map joins flip to
-# shuffle joins inside otherwise-identical jobs.  Parquet's true
-# file-size stats are load-bearing here.  AQE-on loops (connected
-# components, k-core, BFS...) don't have this failure mode and use
-# light landings (plans.Materializer).
-HEAVY_LANDING_EVERY = 4  # cadence used by loops where light IS safe
 
 
 @dataclass
@@ -79,6 +60,176 @@ class WCCResult:
     wcc_history: list | None = None
 
 
+class AcceptIfImproved:
+    """Batch accept policy (``DistributedWCC.scala:258-329``): a round
+    is kept iff it improves global WCC; every evaluated round spends a
+    retry, and a relative gain > ``threshold`` refills the budget.
+
+    ``wcc`` is the kept labeling's global WCC.  ``history``, if given,
+    receives it for the input labeling and for every kept round.  Each
+    evaluation is one job, which also fills the labeling's persisted
+    adjacency and stats caches for the next movement pass.
+    """
+
+    def __init__(self, edges, vertex_count, tri, max_retries, threshold, history=None):
+        self.edges, self.vertex_count, self.tri = edges, vertex_count, tri
+        self.max_retries, self.threshold = max_retries, threshold
+        self.retries = max_retries
+        self.history = [] if history is None else history
+        self.wcc = 0.0
+
+    def _eval(self, labels, vcd, cs) -> float:
+        return global_wcc(
+            labels, self.edges, cs, self.vertex_count, vcd=vcd, tri=self.tri
+        )
+
+    def begin(self, labels, vcd, cs) -> None:
+        self.wcc = self._eval(labels, vcd, cs)
+        self.history.append(self.wcc)
+
+    def more(self, rounds: int) -> bool:
+        return self.retries > 0
+
+    def accept(self, labels, vcd, cs) -> bool:
+        wcc = self._eval(labels, vcd, cs)
+        self.retries -= 1
+        if not wcc > self.wcc:
+            return False
+        # Scala's newWcc/bestWcc - 1 > threshold is Infinity > 0.01
+        # when bestWcc == 0, so an improvement from 0 also resets the
+        # retry budget (DistributedWCC.scala:309-312).
+        if self.wcc <= 0 or (wcc / self.wcc - 1.0) > self.threshold:
+            self.retries = self.max_retries
+        self.wcc = wcc
+        self.history.append(wcc)
+        return True
+
+
+@dataclass(frozen=True)
+class FixedRounds:
+    """Incremental accept policy (``IncrementalWCC.scala:332-393``):
+    every round is kept, at most ``cap`` of them, no WCC test.  The
+    reference runs the rounds after a fixed point as identity passes;
+    ``movement_rounds``' 0-move stop skips them."""
+
+    cap: int
+
+    def begin(self, labels, vcd, cs) -> None:
+        pass
+
+    def more(self, rounds: int) -> bool:
+        return rounds < self.cap
+
+    def accept(self, labels, vcd, cs) -> bool:
+        return True
+
+
+# r13 MEASURED NEGATIVE (why these rounds never land light): landing
+# the round states via localCheckpoint instead of parquet was 2.7-3x
+# SLOWER at sf0.1 (interleaved A/B, plans/r13/ab_refine_light_NEGATIVE_
+# sf01.txt: light 136-156 s vs parquet 50 s for identical results and
+# job counts).  The rounds plan non-adaptively (plans.loop_scope), so
+# join strategies come from STATIC stats; a LogicalRDD carries the
+# origin plan's ESTIMATED stats, and the movement plan's inner-join
+# estimates (size products) blow past the 64 MB broadcast threshold
+# immediately — the label-map joins flip to shuffle joins inside
+# otherwise-identical jobs.  Parquet's true file-size stats are
+# load-bearing here, and in the MIS election for the same reason.
+# AQE-on loops (connected components, k-core, BFS, SSSP) don't have
+# this failure mode and land light (Materializer.land_round).
+#
+# r13 MEASURED NEGATIVE (record): fusing the WCC eval into the round
+# landing (persist the raw movement output, build vcd/cs/tC over it,
+# ride the per-vertex WCC sum on the landing as an Observation)
+# removed one job per round ON PAPER but returned caches whose
+# ANALYZED plans rooted at the raw movement plan instead of the landed
+# parquet — each round's cache plan embedded the previous round's, the
+# analysis tree grew exponentially, and the driver OOM'd inside
+# Catalyst resolution at sf0.001.  The caches must build over the
+# LANDED state.
+def movement_rounds(
+    labels: DataFrame,
+    edges: DataFrame,
+    global_cc: float,
+    vertex_count: int,
+    mat: Materializer,
+    policy,
+    candidates: DataFrame | None = None,
+    outer_labels: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """The movement-round protocol every refinement loop shares.
+
+    Per labeling, ONE pass over the triplets: the two label joins feed
+    the ``community_adjacency`` aggregate ``(vId, c_own, cId, dIn)``,
+    persisted with the ``community_stats`` derived from it; they serve
+    the policy's evaluation and the next movement pass (whose two
+    stats broadcasts read the cache).  Each round runs
+    ``best_movement``, lands the result on parquet with the moved-
+    vertex count riding the landing as an Observation, and stops at a
+    0-move pass (a fixed point: identical labels ⇒ identical stats ⇒
+    identical decisions).  Otherwise ``policy.accept`` keeps the round
+    — its caches replace the previous labeling's, whose landing is
+    dropped — or rejects it, which drops the round and ends the loop.
+
+    ``policy`` has ``begin(labels, vcd, cs)`` (called once for the
+    input), ``more(rounds)`` and ``accept(labels, vcd, cs)`` — see
+    ``AcceptIfImproved`` and ``FixedRounds``.
+
+    ``candidates`` (a ``vId`` set): only these vertices move; the rest
+    of ``labels`` is carried into every round unchanged.
+    ``outer_labels`` (``vId, cId``): fixed labels of ``edges``' dst
+    endpoints outside ``labels``, used by the adjacency only.
+
+    ``edges`` must be src-partitioned and persisted by the caller; run
+    this inside ``plans.loop_scope``.  Returns ``(labels, vcd, cs,
+    rounds)`` with the kept labeling's caches still persisted (the
+    caller unpersists them after its tail); ``rounds`` counts the
+    landed rounds.  The input labeling is never dropped.
+    """
+
+    def caches(lab: DataFrame) -> tuple[DataFrame, DataFrame]:
+        both = lab
+        if outer_labels is not None:
+            both = lab.select("vId", "cId").unionByName(outer_labels)
+        vcd = community_adjacency(both, edges).persist()
+        return vcd, community_stats(lab, edges, vcd=vcd).persist()
+
+    cur = labels
+    vcd, cs = caches(cur)
+    policy.begin(cur, vcd, cs)
+    rounds = 0
+    while policy.more(rounds):
+        obs = Observation()
+        movers, movers_vcd = cur, vcd
+        if candidates is not None:
+            movers = cur.join(candidates, "vId", "left_semi")
+            movers_vcd = vcd.join(candidates, "vId", "left_semi")
+        moved = best_movement(
+            movers, edges, cs, global_cc, vertex_count,
+            mat=mat, vcd=movers_vcd, moves_observation=obs,
+        )
+        if candidates is not None:
+            moved = cur.join(candidates, "vId", "left_anti").unionByName(moved)
+        nxt = mat(moved, "moved")
+        mat.release()
+        rounds += 1
+        if obs.get["moves"] == 0:
+            mat.drop(nxt)
+            break
+        nxt_vcd, nxt_cs = caches(nxt)
+        if not policy.accept(nxt, nxt_vcd, nxt_cs):
+            nxt_vcd.unpersist(False)
+            nxt_cs.unpersist(False)
+            mat.drop(nxt)
+            break
+        vcd.unpersist(False)
+        cs.unpersist(False)
+        if cur is not labels:
+            mat.drop(cur)
+        cur, vcd, cs = nxt, nxt_vcd, nxt_cs
+    return cur, vcd, cs, rounds
+
+
 def refine_partition(
     vertices: DataFrame,
     clean_edges: DataFrame,
@@ -88,235 +239,61 @@ def refine_partition(
     mat: Materializer | None = None,
     tri: DataFrame | None = None,
     history: list | None = None,
-    materialize_every: int = 1,
-    moves_history: list | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float, int]:
-    """Run the accept-if-improved movement loop.
+    """Run the accept-if-improved movement loop (``movement_rounds``
+    with ``AcceptIfImproved``).
 
-    Planned NON-adaptive (r10, VERDICT r9 #3 — the same scoping the
-    MIS election and the incremental loop already carry): every loop
-    input is a Materializer-landed parquet (true file-size stats) or a
-    persisted loop cache, so AQE cannot improve a plan here — it only
-    splits each tiny per-round landing into one driver-blocking job
-    per query stage.  MEASURED at sf0.1 / local[32]
-    (tools/count_jobs_batch.py): 26.5 → 11.6 jobs per round (−56%)
-    for identical results (16 rounds, wcc 0.04752) and flat wall
-    (78.8 → 76.5 s; the data term dominates at this SF — the job
-    floor is what matters when rounds shrink, e.g. incrementally).
+    Planned NON-adaptive at the loop width (r10, ``plans.loop_scope``,
+    floor 4): every loop input is a Materializer-landed parquet (true
+    file-size stats) or a persisted loop cache, so AQE cannot improve a
+    plan here — it only splits each tiny per-round landing into one
+    driver-blocking job per query stage.  MEASURED at sf0.1 / local[32]
+    (tools/count_jobs_batch.py): 26.5 → 11.6 jobs per round (−56%) for
+    identical results (16 rounds, wcc 0.04752) and flat wall.
 
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
     round's WCC (driver-side floats the loop computes anyway).
-    ``moves_history``, if given, receives each landed round's moved-
-    vertex count (the Observation the loop already pays for) — scale
-    telemetry for SCALING.md's round-floor analysis, zero extra jobs.
-
-    Per-round plan shape: ONE pass over the triplets per labeling — the
-    two label joins feed directly into the ``community_adjacency``
-    aggregate ``(vId, c_own, cId, dIn)``, which is cached and serves
-    every consumer: community stats (a/b), the global-WCC intra degree
-    (vtC), and the next round's movement candidates.  The previous
-    labeling's cache is dropped the moment its labeling is superseded.
     ``tri`` (static triangle list of ``clean_edges``) turns the
     per-round tC pass into three joins + one aggregate (see
-    ``intra_triangle_counts``); computed here if absent.
-
-    ``materialize_every``: parquet-land the accepted labeling every
-    k-th accepted round instead of every round (intermediate rounds
-    carry ≤ k−1 rounds of raw lineage rooted in persisted caches —
-    bounded, so Catalyst's compounding-stats pathology stays away).
-    Parquet states and in-memory caches a raw-lineage state still
-    depends on are dropped only at the next landing.  MEASURED at
-    sf0.1 / local[32] (SCALING.md): k=1 66s vs k=2 190s for the same
-    16 rounds — a raw-lineage labeling is RE-EXECUTED by every
-    consumer job of the next round (movement pass + vcd forcing),
-    which costs far more than the parquet round-trip it saves.  k=1
-    stays the default; the knob documents the measured trade.
+    ``intra_triangle_counts``); computed here if absent.  An already-
+    landed input is not landed again, and is never dropped.
     """
+    mat = mat or Materializer(vertices.sparkSession)
     if tri is None:
         # batch-scale triangle enumeration stays ADAPTIVE — only the
         # landed-parquet loop below goes non-adaptive
-        mat = mat or Materializer(vertices.sparkSession)
         tri = mat(triangles(clean_edges, mat=mat), "tri-static")
         mat.release()
-    spark = vertices.sparkSession
-    # loop-width sizing (r10): the loop shuffles the SAME known-size
-    # state every round; the session width is sized for batch scans
-    # and over-splits it into task-launch overhead.  ~300k edge rows
-    # per partition (order-controlled A/B at sf0.1, 2.37M clean edge
-    # rows: width 8 = 57–68 s vs width 32 = 75 s, identical results),
-    # clamped at the session value so cluster-scale runs keep their
-    # width — this only ever SHRINKS small-state loops.
-    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_sp = max(4, min(session_sp, clean_edges.count() // 300_000 + 1))
-    with no_aqe(spark), scoped_shuffle_partitions(spark, loop_sp):
-        return _refine_partition_impl(
-            vertices, clean_edges, vertex_count, max_retries, threshold,
-            mat, tri, history, materialize_every, moves_history,
+    with loop_scope(vertices.sparkSession, clean_edges.count(), 4):
+        # the static triangle list is scanned once per round by the WCC
+        # eval — persist it for the loop like loop_edges below (r12),
+        # unless the caller already has (the exit unpersist must never
+        # drop a caller's cache)
+        tri_persisted = not tri.is_cached
+        if tri_persisted:
+            tri = tri.persist()
+        global_cc_total = vertices.agg(F.sum("cc").alias("s")).first()["s"] or 0.0
+        global_cc = float(global_cc_total) / float(vertex_count)  # DistributedWCC.scala:261-262
+        # One src-hash shuffle up front, reused every round: the label
+        # maps broadcast, so the triplets build preserves this
+        # partitioning and the per-src aggregations (vcd, vtC) and
+        # vId-keyed joins downstream need no further exchange.
+        loop_edges = clean_edges.repartition("src").persist()
+        start = vertices if mat.is_landed(vertices) else mat(vertices, "best")
+        policy = AcceptIfImproved(
+            loop_edges, vertex_count, tri, max_retries, threshold, history
         )
-
-
-def _refine_partition_impl(
-    vertices: DataFrame,
-    clean_edges: DataFrame,
-    vertex_count: int,
-    max_retries: int,
-    threshold: float,
-    mat: Materializer | None,
-    tri: DataFrame | None,
-    history: list | None,
-    materialize_every: int,
-    moves_history: list | None,
-) -> tuple[DataFrame, DataFrame, float, float, int]:
-    mat = mat or Materializer(vertices.sparkSession)
-    if tri is None:
-        tri = mat(triangles(clean_edges, mat=mat), "tri-static")
-        mat.release()
-    # the static triangle list is scanned once per round by the WCC
-    # eval (intra_triangle_counts) — persist it for the loop like
-    # loop_edges below, so rounds read the cache instead of re-decoding
-    # the parquet 16+ times (r12; same MEMORY_AND_DISK treatment and
-    # lifetime as the edge state, released with it at loop exit).
-    # Persist only when the caller hasn't (so the exit unpersist never
-    # drops a caller's cache); CDFS_AB_NO_TRI_PERSIST restores the
-    # pre-r12 per-round parquet re-read for tools/ab_refine.py.
-    tri_persisted = False
-    if not tri.is_cached and not os.environ.get("CDFS_AB_NO_TRI_PERSIST"):
-        tri = tri.persist()
-        tri_persisted = True
-    global_cc_total = vertices.agg(F.sum("cc").alias("s")).first()["s"] or 0.0
-    global_cc = float(global_cc_total) / float(vertex_count)  # DistributedWCC.scala:261-262
-
-    # One src-hash shuffle up front, reused every round: the label maps
-    # broadcast, so the triplets build preserves this partitioning and
-    # the per-src aggregations (vcd, vtC) and vId-keyed joins downstream
-    # need no further exchange.
-    loop_edges = clean_edges.repartition("src").persist()
-
-    def _eval(labels: DataFrame) -> tuple[DataFrame, DataFrame, float]:
-        """Fused community-adjacency cache + stats + WCC for one labeling.
-
-        ``cs`` is persist()ed but never forced with its own job: the
-        ``global_wcc`` action below materializes it together with the
-        ``vcd`` cache it derives from, so the movement pass's two
-        broadcasts of the stats read the cache instead of re-running
-        the aggregate (a parquet round-trip per round would cost a
-        write+read job for no lineage benefit — the lineage root is
-        the cached vcd).  The loop materializes only the final
-        accepted stats.
-        """
-        vcd = community_adjacency(labels, loop_edges).persist()
-        cs = community_stats(labels, loop_edges, vcd=vcd).persist()
-        wcc = global_wcc(labels, loop_edges, cs, vertex_count, vcd=vcd, tri=tri)
-        return vcd, cs, wcc
-
-    # r13 MEASURED NEGATIVE (record): fusing the WCC eval into the
-    # round landing (persist the raw movement output, build vcd/cs/tC
-    # over it, ride the per-vertex WCC sum on the landing as an
-    # Observation) removed one job per round ON PAPER but returned
-    # caches whose ANALYZED plans rooted at the raw movement plan
-    # instead of the landed parquet — each round's cache plan embedded
-    # the previous round's, the analysis tree grew exponentially, and
-    # the driver OOM'd inside Catalyst resolution at sf0.001.  The
-    # eval must build over the LANDED state, which forces the separate
-    # job; the [landing][stats-broadcast-build][eval] round shape
-    # stays.
-    # an already-landed input needs no second landing (r12 callers
-    # re-landed it as "best" unconditionally — one full write+read of
-    # the initial labeling per run for nothing); the loop never drops
-    # caller-owned state (`initial_input` guard below)
-    best = vertices if mat.is_landed(vertices) else mat(vertices, "best")
-    initial_input = best
-    best_vcd, best_cs, best_wcc = _eval(best)
-    if history is not None:
-        history.append(best_wcc)
-
-    retries = max_retries
-    rounds = 0
-    improved = True
-    # deferred cleanup for materialize_every > 1: a raw-lineage `best`
-    # still READS the superseded parquet states and persisted caches in
-    # its plan, so they are only released at the next parquet landing
-    pending_drop: list[DataFrame] = []
-    pending_unpersist: list[DataFrame] = []
-
-    def _flush_pending() -> None:
-        for df in pending_unpersist:
+        best, best_vcd, best_cs, rounds = movement_rounds(
+            start, loop_edges, global_cc, vertex_count, mat, policy
+        )
+        # the returned stats must outlive the caches they derive from
+        final_cs = mat(best_cs, "cs-final")
+        for df in (best_cs, best_vcd, loop_edges):
             df.unpersist(False)
-        pending_unpersist.clear()
-        for df in pending_drop:
-            mat.drop(df)
-        pending_drop.clear()
-
-    while improved and retries > 0:
-        obs = Observation()
-        raw_moved = best_movement(
-            best, loop_edges, best_cs, global_cc, vertex_count,
-            mat=mat, vcd=best_vcd, moves_observation=obs,
-        )
-        land = (rounds + 1) % materialize_every == 0
-        moved = mat(raw_moved, "moved") if land else raw_moved
-        if land and moves_history is not None:
-            moves_history.append(int(obs.get["moves"]))
-        if land and obs.get["moves"] == 0:
-            # fixed point: identical labels ⇒ identical stats ⇒ the
-            # evaluate-and-compare below would conclude "no
-            # improvement" after recomputing everything — skip it.
-            # (Only decidable when the pass was landed: the
-            # observation needs an executed action.)
-            rounds += 1
-            mat.drop(moved)
-            improved = False
-            break
-        new_vcd, new_cs, new_wcc = _eval(moved)
-        retries -= 1
-        rounds += 1
-        if new_wcc > best_wcc:
-            # Scala's newWcc/bestWcc - 1 > threshold is Infinity > 0.01
-            # when bestWcc == 0, so an improvement from 0 also resets
-            # the retry budget (DistributedWCC.scala:309-312).
-            if best_wcc <= 0 or (new_wcc / best_wcc - 1.0) > threshold:
-                retries = max_retries
-            pending_unpersist += [best_vcd, best_cs]
-            if best is not initial_input:
-                # caller-owned input state is never dropped (it may be
-                # reused across calls — tools/ab_refine.py does)
-                pending_drop.append(best)
-            best, best_cs, best_wcc, best_vcd = moved, new_cs, new_wcc, new_vcd
-            if land:
-                # the accepted state is on parquet: nothing live reads
-                # the superseded states or the raw rounds' ephemeral
-                # caches any more
-                mat.release()
-                _flush_pending()
-            if history is not None:
-                history.append(best_wcc)
-        else:
-            new_vcd.unpersist(False)
-            new_cs.unpersist(False)
-            mat.drop(moved)     # rejected labeling (no-op when raw)
-            improved = False
-    if pending_drop or pending_unpersist or mat.is_light(best):
-        # loop ended on a raw-lineage (or rejected-landing) best, or on
-        # a LIGHT round state: land it on parquet before releasing the
-        # states its plan still reads — returned state must be durable
-        # with true file-size stats (light blocks die with executors
-        # and carry estimated stats)
-        old_best = best
-        best = mat(best, "best-final")
-        _flush_pending()
-        if mat.is_light(old_best):
-            mat.drop(old_best)
-    mat.release()  # any ephemeral caches from a final rejected round
-    # the returned stats must outlive the caches they derive from
-    cached_cs = best_cs
-    best_cs = mat(best_cs, "cs-final")
-    cached_cs.unpersist(False)
-    best_vcd.unpersist(False)
-    loop_edges.unpersist(False)
-    if tri_persisted:
-        tri.unpersist(False)
-    return best, best_cs, best_wcc, global_cc, rounds
+        if tri_persisted:
+            tri.unpersist(False)
+    return best, final_cs, policy.wcc, global_cc, rounds
 
 
 def run_wcc(
@@ -326,7 +303,6 @@ def run_wcc(
     keep_internals: bool = False,
     pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     mat: Materializer | None = None,
-    materialize_every: int = 1,
 ) -> WCCResult:
     """E1/E3 — full batch WCC community detection.
 
@@ -375,7 +351,7 @@ def run_wcc(
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
         init, clean_edges, vertex_count, max_retries, threshold, mat=mat,
-        tri=tri, history=history, materialize_every=materialize_every,
+        tri=tri, history=history,
     )
     # only `edges` (feeds all_vertices), `best`, and `best_cs` survive
     # into the returned plans — free the pipeline intermediates (the

@@ -96,6 +96,27 @@ def scoped_shuffle_partitions(spark, n: int):
         spark.conf.set(key, old)
 
 
+def loop_width(spark, est_edge_rows: int, floor: int) -> int:
+    """Shuffle width for a fixed-point loop over ~``est_edge_rows``
+    edge rows: ~300k rows per partition (order-controlled A/B on the
+    sf0.1 refinement loop, 2.37M clean edge rows: width 8 = 57–68 s vs
+    width 32 = 75 s, identical results), at least ``floor``, clamped at
+    the session width so cluster-scale runs keep theirs — this only
+    ever SHRINKS small-state loops."""
+    session = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(floor, min(session, int(est_edge_rows) // 300_000 + 1))
+
+
+@contextmanager
+def loop_scope(spark, est_edge_rows: int, floor: int):
+    """Non-adaptive planning (:func:`no_aqe`) at the :func:`loop_width`
+    for the non-adaptive loops (movement rounds, MIS election).  Wrap
+    the loop's tail landings too, so they plan like its rounds."""
+    width = loop_width(spark, est_edge_rows, floor)
+    with no_aqe(spark), scoped_shuffle_partitions(spark, width):
+        yield
+
+
 class Materializer:
     """Write-then-read parquet materializer for loop state.
 
@@ -124,7 +145,7 @@ class Materializer:
     def __call__(
         self, df: DataFrame, name: str = "state", light: bool = False
     ) -> DataFrame:
-        if light and not os.environ.get("CDFS_AB_NO_LIGHT_LANDING"):
+        if light:
             # LIGHT landing (r13): ``localCheckpoint(eager=True)`` —
             # one job, no file write/commit/read-back, plan truncated
             # to a LogicalRDD exactly like a parquet scan truncates it.
@@ -133,15 +154,13 @@ class Materializer:
             #   * the LogicalRDD carries the origin plan's ESTIMATED
             #     stats, and those compound round-over-round (measured
             #     on 4.1: sizeInBytes bit-length ~2x/round) — callers
-            #     MUST re-land on parquet every few rounds (the loops
-            #     use a short cadence) so estimates never drift far
-            #     from the 64MB broadcast threshold's truth;
+            #     MUST re-land on parquet every few rounds
+            #     (``land_round``'s cadence) so estimates never drift
+            #     far from the 64MB broadcast threshold's truth;
             #   * blocks live in executor memory/disk with lineage cut,
             #     so an executor loss mid-loop is unrecoverable — fine
             #     for loop state a restart recomputes, wrong for
             #     carried/returned state (those stay parquet).
-            # CDFS_AB_NO_LIGHT_LANDING restores parquet-every-round for
-            # tools/ab_refine.py same-session A/Bs.
             out = df.localCheckpoint(eager=True)
             self._by_df[id(out)] = (out, None)
             return out
@@ -152,16 +171,21 @@ class Materializer:
         # 1-task footer-read job per landing — pure driver latency that
         # the loops pay hundreds of times per pipeline.  The writer's
         # schema IS the reader's schema (same df), so nothing changes
-        # except the job disappearing.  CDFS_AB_INFER_LANDING_SCHEMA
-        # restores the pre-r12 inferred read so tools/ab_refine.py can
-        # measure the two variants in one session (results identical —
-        # _as_nullable mirrors what inference reports).
-        if os.environ.get("CDFS_AB_INFER_LANDING_SCHEMA"):
-            out = self.spark.read.parquet(path)
-        else:
-            out = self.spark.read.schema(_as_nullable(df.schema)).parquet(path)
+        # except the job disappearing (_as_nullable mirrors what
+        # inference reports).
+        out = self.spark.read.schema(_as_nullable(df.schema)).parquet(path)
         self._by_df[id(out)] = (out, path)
         return out
+
+    PARQUET_EVERY = 4  # light-landing loops re-land on parquet this often
+
+    def land_round(self, df: DataFrame, name: str, n: int) -> DataFrame:
+        """Land round ``n`` of an AQE-on loop (connected components,
+        BFS, k-core, SSSP): light, except every ``PARQUET_EVERY``-th
+        round, which goes to parquet so estimated-stats drift resets.
+        The non-adaptive loops land every round on parquet instead
+        (see ``operators.refinement.movement_rounds``)."""
+        return self(df, name, light=n % self.PARQUET_EVERY != 0)
 
     def drop(self, df: DataFrame) -> None:
         """Delete the parquet files (or unpersist the localCheckpoint
@@ -190,13 +214,6 @@ class Materializer:
         produced — loop entries skip re-landing such inputs."""
         entry = self._by_df.get(id(df))
         return entry is not None and entry[1] is not None
-
-    def is_light(self, df: DataFrame) -> bool:
-        """True iff ``df`` is a LIGHT landing this materializer produced
-        (localCheckpoint-backed — see ``__call__``); loop exits re-land
-        such state on parquet before returning it to callers."""
-        entry = self._by_df.get(id(df))
-        return entry is not None and entry[1] is None
 
     def cache(self, df: DataFrame, name: str = "tmp", force: bool = True) -> DataFrame:
         """In-memory materialization for WITHIN-round temporaries.

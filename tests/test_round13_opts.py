@@ -1,21 +1,18 @@
 """Round-13 optimization pins (VERDICT r12 #3).
 
-The three r12 loop micro-opts are now A/B-switchable from the
-environment (tools/ab_refine.py drives them); these tests pin that
-
-* the lazy own-cache variant does NOT alter the movement
-  pass's physical join strategies (the r12 ADVICE risk: planning from
-  Catalyst estimates instead of actual cached sizes could flip a join
-  at a larger SF — the explicit broadcast hints must keep the shape);
-* the explicit-schema landing read-back is bit-identical to the
-  inferred one (schema AND rows), nested types included;
-* all three pre-r12 variants produce the same refinement result, so
-  the A/B harness's parity assertion is meaningful.
+* the movement pass's stats joins broadcast (explicit hints), so the
+  forced own-cache count only serializes the cache fill and never
+  decides a join strategy;
+* the explicit-schema landing read-back is bit-identical to an
+  inferred read of the same files (schema AND rows), nested types
+  included.
 """
 
 from __future__ import annotations
 
-import pytest
+import glob
+import os
+
 from pyspark.sql import functions as F
 
 from community_detection_flink_spark.operators.community import (
@@ -25,22 +22,14 @@ from community_detection_flink_spark.operators.community import (
 )
 from community_detection_flink_spark.operators.partition import initial_partition
 from community_detection_flink_spark.operators.preprocess import preprocess
-from community_detection_flink_spark.operators.refinement import refine_partition
 from community_detection_flink_spark.plans.explain import join_strategies
 from community_detection_flink_spark.plans.iteration import Materializer, no_aqe
-from community_detection_flink_spark.sources.edges import (
-    co_purchase_edges,
-    symmetrize_edges,
-)
+from community_detection_flink_spark.sources.edges import co_purchase_edges
 
 SF = "/root/testdata/sf0.001"
 
 
-def _movement_plan(spark, lazy_env: bool, monkeypatch) -> list[str]:
-    if lazy_env:
-        monkeypatch.setenv("CDFS_AB_LAZY_OWN_CACHE", "1")
-    else:
-        monkeypatch.delenv("CDFS_AB_LAZY_OWN_CACHE", raising=False)
+def test_movement_plan_broadcasts_stats(spark):
     mat = Materializer(spark)
     edges = mat(co_purchase_edges(spark, SF), "edges")
     vertex_count = edges.select("src").distinct().count()
@@ -59,69 +48,21 @@ def _movement_plan(spark, lazy_env: bool, monkeypatch) -> list[str]:
     mat.release()
     cs.unpersist()
     mat.cleanup()
-    return strategies
+    assert "BroadcastHashJoin" in strategies  # the stats joins broadcast
 
 
-def test_force_false_own_cache_plan_shape_invariant(spark, monkeypatch):
-    """The lazy own-cache variant (r12; r13 default is the forced
-    count after the interleaved A/B measured lazy 12-15% slower) plans
-    the movement joins from estimates, not the forced cache's actual
-    size — the strategies must not differ (the stats sides carry
-    explicit broadcast hints)."""
-    forced = _movement_plan(spark, lazy_env=False, monkeypatch=monkeypatch)
-    lazy = _movement_plan(spark, lazy_env=True, monkeypatch=monkeypatch)
-    assert lazy == forced
-    assert "BroadcastHashJoin" in lazy  # the stats joins broadcast
-
-
-def test_materializer_explicit_schema_read_is_bit_identical(spark, monkeypatch):
+def test_materializer_explicit_schema_read_is_bit_identical(spark):
     df = spark.range(10).select(
         F.col("id").alias("k"),
         F.array(F.col("id"), F.col("id") + 1).alias("arr"),
         F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("st"),
     )
     mat = Materializer(spark)
-    monkeypatch.delenv("CDFS_AB_INFER_LANDING_SCHEMA", raising=False)
     fast = mat(df, "fast")
-    monkeypatch.setenv("CDFS_AB_INFER_LANDING_SCHEMA", "1")
-    inferred = mat(df, "inferred")
-    monkeypatch.delenv("CDFS_AB_INFER_LANDING_SCHEMA", raising=False)
+    (path,) = glob.glob(os.path.join(mat.base, "fast-*"))
+    inferred = spark.read.parquet(path)
     assert fast.schema == inferred.schema
     assert sorted(map(tuple, fast.collect())) == sorted(
         map(tuple, inferred.collect())
     )
-    mat.cleanup()
-
-
-@pytest.mark.slow
-def test_ab_variants_identical_refinement_result(spark, monkeypatch):
-    """All three pre-r12 variants together must reproduce the default
-    path's (wcc, rounds, labeling) exactly — the property
-    tools/ab_refine.py asserts per rep."""
-    mat = Materializer(spark)
-    edges = mat(co_purchase_edges(spark, SF), "edges")
-    vertex_count = edges.select("src").distinct().count()
-    vertices, clean = preprocess(edges, mat=mat)
-    clean = mat(clean, "clean")
-    init = mat(initial_partition(vertices, clean, mat=mat), "init")
-    mat.release()
-
-    def run():
-        best, cs, wcc, cc, rounds = refine_partition(
-            init, clean, vertex_count, mat=mat
-        )
-        labels = sorted(map(tuple, best.select("vId", "cId").collect()))
-        mat.drop(best)
-        mat.drop(cs)
-        return wcc, rounds, labels
-
-    base = run()
-    for k in (
-        "CDFS_AB_LAZY_OWN_CACHE",
-        "CDFS_AB_NO_TRI_PERSIST",
-        "CDFS_AB_INFER_LANDING_SCHEMA",
-    ):
-        monkeypatch.setenv(k, "1")
-    variant = run()
-    assert variant == base
     mat.cleanup()

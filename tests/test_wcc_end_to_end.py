@@ -50,39 +50,3 @@ def test_invariants_on_random_graph(spark):
     assert sizes.agg(F.sum("count")).first()[0] == len(vids)
     # WCC is a valid average of per-vertex values in [0, 1]
     assert 0.0 <= res.global_wcc <= 1.0
-
-
-def test_materialize_every_2_is_equivalent(spark):
-    """The k=2 landing cadence (refine_partition materialize_every)
-    must be a pure execution-strategy knob: identical communities,
-    identical WCC trace, identical round count vs the per-round
-    default.  Uses the SBM graph so several accept/reject rounds are
-    exercised, including a raw-lineage final state."""
-    import random
-
-    rng = random.Random(42)
-    edges = set()
-    for c in range(3):
-        ids = list(range(c * 20, (c + 1) * 20))
-        for i in ids:
-            for j in ids:
-                if i < j and rng.random() < 0.4:
-                    edges.add((i, j))
-    for _ in range(30):
-        a, b = rng.randrange(60), rng.randrange(60)
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    sym = symmetrize_edges(spark.createDataFrame(sorted(edges), "src LONG, dst LONG"))
-
-    r1 = run_wcc(sym)
-    r2 = run_wcc(sym, materialize_every=2)
-    # float partition-sum order may wiggle the last ulp; the TRACE
-    # (which rounds were accepted, at what value) must coincide
-    assert len(r2.wcc_history) == len(r1.wcc_history)
-    assert all(
-        abs(a - b) < 1e-9 for a, b in zip(r1.wcc_history, r2.wcc_history)
-    )
-    assert r2.iterations == r1.iterations
-    got1 = {(r["vId"], r["cId"]) for r in r1.communities.collect()}
-    got2 = {(r["vId"], r["cId"]) for r in r2.communities.collect()}
-    assert got1 == got2

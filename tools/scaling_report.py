@@ -100,8 +100,8 @@ def main() -> None:
         "following round (the movement pass feeds the vcd aggregate, the stats,",
         "AND the next movement), which costs far more than the one parquet",
         "round-trip it saves — the per-round landing is ~0.5s of the ~4s round.",
-        "`refine_partition(materialize_every=...)` keeps the knob + the",
-        "equivalence test; the default stays k=1.",
+        "The knob and its equivalence test were later removed: every",
+        "round lands on parquet.",
         "",
         "| query | sf0.001 | sf0.01 | sf0.1 | time ratio (100× data) |",
         "|---|---|---|---|---|",
@@ -207,7 +207,7 @@ otherwise.
 
 ## Refinement round floor — measured, no change made (VERDICT r3 #5)
 
-Per-round telemetry (`refine_partition(moves_history=...)`) at sf0.1:
+Per-round telemetry (the loop's moved-vertex Observation) at sf0.1:
 16 accepted rounds, moves [10775, 8822, 7705, 6972, 6487, 6090, 5801,
 5538, 5316, 5138, 4962, 4758, 4659, 4549, 4441, 4329] — a plateau at
 ~22% of |V|, not a die-off — while relative WCC improvement decays to
@@ -243,7 +243,7 @@ own 5-fixed-round approximation).  Pinned in
 
 ## Full-pipeline phase split (round 3, sf0.1, idle local[32])
 
-`tools/profile_wcc.py`: session 5.0s · edge load+materialize 7.6s ·
+Per-phase profile (a since-removed script): session 5.0s · edge load+materialize 7.6s ·
 triangle enumeration 6.0s · preprocess 4.8s · center election 8.8s ·
 initial eval 4.0s · 16 accepted refinement rounds ≈ 60s (movement
 1.2-2.5s + eval 1.5-2.2s per round) → 96.7s total.  The refinement
