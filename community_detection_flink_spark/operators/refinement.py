@@ -324,14 +324,19 @@ def run_wcc(
     all_vertices = edges.select(F.col("src").alias("vId")).distinct()
     vertex_count = all_vertices.count()
     if vertex_count == 0:
-        spark = edges.sparkSession
+        empty = edges.sparkSession.createDataFrame
         return WCCResult(
-            communities=spark.createDataFrame([], "vId LONG, cId LONG"),
-            stats=spark.createDataFrame([], "cId LONG, r INT, a DOUBLE, b LONG, d DOUBLE"),
+            communities=empty([], "vId LONG, cId LONG"),
+            stats=empty([], "cId LONG, r INT, a DOUBLE, b LONG, d DOUBLE"),
             global_wcc=0.0,
             global_cc=0.0,
             vertex_count=0,
             iterations=0,
+            clean_vertices=(
+                empty([], "vId LONG, t INT, vt INT, cc DOUBLE") if keep_internals else None
+            ),
+            clean_edges=edges if keep_internals else None,
+            tri=empty([], "u LONG, v LONG, w LONG") if keep_internals else None,
         )
 
     # One triangle enumeration serves preprocessing AND every refinement

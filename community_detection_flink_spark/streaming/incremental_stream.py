@@ -118,7 +118,6 @@ def run_edge_batches(
     n_batches: int = 1,
     mat: Materializer | None = None,
     tri_full: DataFrame | None = None,
-    refine_scope: str = "affected",
 ) -> WCCState:
     """E2 harness: bulk pipeline then incremental merges
     (``CSVGraph.testStream`` re-expressed).
@@ -140,7 +139,7 @@ def run_edge_batches(
         )
     state = prepare(bulk, mat=mat, tri=tri_bulk)
     for batch in micro_batches(stream, split, max_vertex, n_batches):
-        state = incremental_update(state, batch, mat=mat, refine_scope=refine_scope)
+        state = incremental_update(state, batch, mat=mat)
     state.max_vertex = max_vertex
     return state
 

@@ -363,3 +363,68 @@ def run_wcc_oracle(pairs, max_retries: int = MAX_RETRIES, threshold: float = THR
         "rounds": rounds,
         "wcc_history": history,
     }
+
+
+def incremental_batch(old_pairs, new_pairs, old_labels, rounds):
+    """One incremental batch (insert or delete) with the whole-graph
+    refinement scope (``IncrementalWCC.scala:27-393`` plus the engine's
+    affected-community election, ``operators/incremental.py``).
+
+    ``old_pairs`` / ``new_pairs``: the edge set before / after the
+    batch; ``old_labels``: the carried ``{vId: cId}`` before it.
+    Vertices never disappear: the vertex set is the union of both
+    graphs' vertices.
+
+    * changed vertices = corners of the symmetric difference of the
+      old and new triangle sets; ``affected`` = their old labels (a
+      brand-new vertex's old label is its own id);
+    * the election (``initial_partition``) runs on the subgraph induced
+      by the clean vertices whose pre-election label is in
+      ``affected``, with the full graph's ``vt``/``cc``; every other
+      clean vertex keeps its label and every non-clean vertex gets its
+      own id;
+    * then up to ``rounds`` simultaneous ``best_movement`` passes, no
+      accept test, stopping at a 0-move pass.
+
+    Returns a dict with ``communities`` over all vertices, the final
+    community ``stats`` ``{cId: (r, a, b)}``, ``global_wcc``,
+    ``vertex_count`` and ``rounds``.
+    """
+    old_adj = symmetrize(old_pairs)
+    adj = symmetrize(new_pairs)
+    verts = set(old_adj) | set(adj)
+    vertex_count = len(verts)
+    if vertex_count == 0:
+        return {
+            "communities": {}, "stats": {}, "global_wcc": 0.0,
+            "vertex_count": 0, "rounds": 0,
+        }
+    _, _, _, _, old_tri = preprocess(old_adj)
+    clean_adj, t, vt, cc, tri = preprocess(adj)
+    changed_tri = {tuple(sorted(x)) for x in old_tri} ^ {tuple(sorted(x)) for x in tri}
+    changed = {v for x in changed_tri for v in x}
+    pre = {v: old_labels.get(v, v) for v in clean_adj}
+    affected = {old_labels.get(v, v) for v in changed}
+    elect = {v for v in clean_adj if pre[v] in affected}
+    sub_adj = {v: clean_adj[v] & elect for v in elect}
+    labels = dict(pre)
+    labels.update(initial_partition(sub_adj, vt, cc))
+
+    global_cc = sum(cc[v] for v in sorted(clean_adj)) / float(vertex_count)
+    n_rounds = 0
+    while n_rounds < rounds:
+        stats = community_stats(clean_adj, labels)
+        moved, moves = best_movement(clean_adj, labels, stats, global_cc, vertex_count)
+        n_rounds += 1
+        if moves == 0:
+            break
+        labels = moved
+    stats = community_stats(clean_adj, labels)
+    wcc = global_wcc(clean_adj, labels, t, vt, tri, stats, vertex_count)
+    return {
+        "communities": {v: labels.get(v, v) for v in verts},
+        "stats": stats,
+        "global_wcc": wcc,
+        "vertex_count": vertex_count,
+        "rounds": n_rounds,
+    }

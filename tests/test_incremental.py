@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import math
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+import community_detection_flink_spark.operators.incremental as inc
 from community_detection_flink_spark.sources.edges import symmetrize_edges
 from community_detection_flink_spark.operators.incremental import (
+    INCREMENTAL_ROUNDS,
+    incremental_delete,
     incremental_update,
     prepare,
 )
@@ -17,6 +21,8 @@ from community_detection_flink_spark.streaming.incremental_stream import (
     run_edge_batches,
     split_bulk_stream,
 )
+
+import pywcc_oracle as oracle
 
 
 def _random_graph(n=40, communities=2, p_in=0.5, p_out=0.03, seed=7):
@@ -29,6 +35,51 @@ def _random_graph(n=40, communities=2, p_in=0.5, p_out=0.03, seed=7):
             if rng.random() < p:
                 edges.add((i, j))
     return sorted(edges)
+
+
+def _labels(state):
+    return {r.vId: r.cId for r in state.vertices.select("vId", "cId").collect()}
+
+
+def _assert_matches_oracle(state, want):
+    assert _labels(state) == want["communities"]
+    assert {r.cId: (r.r, r.a, r.b) for r in state.stats.collect()} == want["stats"]
+    assert state.vertex_count == want["vertex_count"]
+    assert math.isclose(state.global_wcc, want["global_wcc"], rel_tol=1e-9)
+
+
+@pytest.mark.parametrize("seed", [5, 19])
+def test_whole_graph_scope_matches_oracle(spark, monkeypatch, seed):
+    """The whole-graph refinement scope of one insert batch and one
+    delete batch equals the plain-Python reference
+    (``pywcc_oracle.incremental_batch``) exactly, label for label."""
+    monkeypatch.setattr(inc, "_SCOPE_FRACTION", -1)  # probe always declines
+    rng = random.Random(seed)
+    old = _random_graph(n=36, communities=3, p_in=0.6, p_out=0.05, seed=seed)
+    pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
+    state = prepare(symmetrize_edges(pairs_df(old)))
+
+    # insert: a clique over three anchors of one part and four new
+    # vertices, plus random edges between existing vertices
+    nodes = sorted(rng.sample(range(12), 3)) + list(range(100, 104))
+    ins = [(u, v) for i, u in enumerate(nodes) for v in nodes[i + 1 :]]
+    ins += [tuple(sorted(rng.sample(range(36), 2))) for _ in range(6)]
+    merged = sorted(set(old) | set(ins))
+    want = oracle.incremental_batch(old, merged, _labels(state), INCREMENTAL_ROUNDS)
+    diag = {}
+    state = incremental_update(state, pairs_df(ins), diag=diag)
+    assert diag["n_scope_vertices"] is None  # whole-graph scope ran
+    _assert_matches_oracle(state, want)
+
+    # delete: the first half of the inserted edges (all in the clique)
+    # and a sample of the old edges
+    dels = ins[: len(ins) // 2] + rng.sample(old, 8)
+    remaining = sorted(set(merged) - set(dels))
+    want = oracle.incremental_batch(merged, remaining, _labels(state), INCREMENTAL_ROUNDS)
+    diag = {}
+    state = incremental_delete(state, pairs_df(dels), diag=diag)
+    assert diag["n_scope_vertices"] is None
+    _assert_matches_oracle(state, want)
 
 
 def test_incremental_triangles_match_batch(spark):

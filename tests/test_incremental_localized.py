@@ -10,7 +10,9 @@ Three claims, each pinned:
   small fraction of the graph (the whole point of the scoped path).
 * PARITY — from a movement-converged prior state, the scoped rounds
   and the reference-shaped whole-graph rounds
-  (``IncrementalWCC.scala:332-393``) produce the same labeling.
+  (``IncrementalWCC.scala:332-393``) produce the same labeling.  The
+  whole-graph scope is forced by setting ``_SCOPE_FRACTION`` below 0,
+  so the scope probe always declines.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import random
 
 from pyspark.sql import functions as F
 
+import community_detection_flink_spark.operators.incremental as inc
 from community_detection_flink_spark.operators.community import (
     community_stats,
     community_adjacency,
@@ -88,25 +91,17 @@ def _wccv_map(df):
     return {r.cId: (r.s, r.n) for r in df.collect()}
 
 
-@pytest.mark.slow
-def test_scoped_splice_stats_exact(spark):
-    """Carried-stat splice == from-scratch recomputation, bit-exact on
-    (r, a, b) and within float-sum noise on the WCC sums."""
-    state = prepare(_graph_df(spark))
-    batch = _anchored_batch(spark, [0, 1, 2], range(100, 110))
-    diag = {}
-    state = incremental_update(state, batch, diag=diag)
-    assert diag["n_scope_vertices"] is not None  # scoped path actually ran
-
+def _assert_splice_exact(state):
+    """Carried stats == from-scratch recomputation, bit-exact on
+    (r, a, b) and within float-sum noise on the WCC sums, and the
+    scalar the next batch consumes is the sum of the carried table."""
     assert _stats_map(state.stats) == _stats_map(_recomputed_stats(state))
-
     got = _wccv_map(state.wccv)
     want = _wccv_map(_recomputed_wccv(state))
     assert set(got) == set(want)
     for c, (s, n) in want.items():
         assert got[c][1] == n
         assert math.isclose(got[c][0], s, rel_tol=1e-9, abs_tol=1e-12)
-    # the scalar the next batch consumes is the sum of the carried table
     assert math.isclose(
         state.global_wcc,
         sum(s for s, _ in want.values()) / state.vertex_count,
@@ -114,20 +109,58 @@ def test_scoped_splice_stats_exact(spark):
     )
 
 
+def _whole_graph_update(monkeypatch, state, batch, **kw):
+    with monkeypatch.context() as m:
+        m.setattr(inc, "_SCOPE_FRACTION", -1)  # the scope probe always declines
+        return incremental_update(state, batch, **kw)
+
+
 def test_scoped_locality(spark):
     """A batch anchored in one community must scope to a small
-    neighborhood — not the graph."""
+    neighborhood — not the graph — and the carried-stat splice must
+    equal a from-scratch recomputation."""
     state = prepare(_graph_df(spark))
     n_vertices = state.vertex_count
     batch = _anchored_batch(spark, [0, 1, 2], range(100, 108))
     diag = {}
-    incremental_update(state, batch, diag=diag)
+    state = incremental_update(state, batch, diag=diag)
     # affected = the anchor community + one singleton label per new
     # vertex; scope = its members + boundary + their communities
     assert diag["n_affected_comms"] <= 8 + 2  # 8 new ids + anchor slack
     assert diag["n_scope_vertices"] < n_vertices  # strictly local
     assert diag["n_scope_vertices"] <= 2 * 6 + 8 + 6  # ≤ ~2 communities + batch
     assert diag["refine_rounds"] >= 1
+    _assert_splice_exact(state)
+
+
+def test_empty_state_grows_by_insert(spark):
+    """``prepare`` of an empty edge set gives an empty state; a delete
+    on it changes nothing, and an insert grows it exactly: carried
+    stats and WCC sums equal a recomputation, and the global WCC is
+    the plain-Python reference's score of the labels."""
+    import pywcc_oracle as oracle
+
+    state = prepare(symmetrize_edges(spark.createDataFrame([], "src LONG, dst LONG")))
+    assert state.vertex_count == 0 and state.tri.count() == 0
+    assert state.wccv.count() == 0
+    state = incremental_delete(
+        state, spark.createDataFrame([(1, 2)], "src LONG, dst LONG")
+    )
+    assert state.vertex_count == 0 and state.global_wcc == 0.0
+
+    clique = [(u, v) for u in range(5) for v in range(u + 1, 5)]
+    state = incremental_update(
+        state, spark.createDataFrame(clique + [(7, 8)], "src LONG, dst LONG")
+    )
+    assert state.vertex_count == 7
+    _assert_splice_exact(state)
+    labels = {r.vId: r.cId for r in state.vertices.collect()}
+    clean_adj, t, vt, _, tri = oracle.preprocess(oracle.symmetrize(clique + [(7, 8)]))
+    clean_labels = {v: labels[v] for v in clean_adj}
+    stats = oracle.community_stats(clean_adj, clean_labels)
+    want = oracle.global_wcc(clean_adj, clean_labels, t, vt, tri, stats, 7)
+    assert want > 0
+    assert math.isclose(state.global_wcc, want, rel_tol=1e-9)
 
 
 def test_localized_batches_shape(spark):
@@ -154,7 +187,7 @@ def test_localized_batches_shape(spark):
 
 
 @pytest.mark.slow
-def test_scoped_matches_full_after_convergence(spark):
+def test_scoped_matches_full_after_convergence(spark, monkeypatch):
     """From a movement-converged prior state, scoped rounds == the
     reference-shaped whole-graph rounds: every out-of-scope vertex is
     at a fixed point of the pass, so the whole-graph pass decides STAY
@@ -163,11 +196,11 @@ def test_scoped_matches_full_after_convergence(spark):
     # drive the prior state to a movement fixed point (the bulk
     # accept-if-improved loop may end one rejected pass early)
     b0 = _anchored_batch(spark, [6, 7, 8], range(200, 206))
-    state = incremental_update(state, b0, rounds=50, refine_scope="full")
+    state = _whole_graph_update(monkeypatch, state, b0, rounds=50)
 
     b1 = _anchored_batch(spark, [0, 1, 2], range(300, 308))
-    scoped = incremental_update(state, b1, refine_scope="affected")
-    full = incremental_update(state, b1, refine_scope="full")
+    scoped = incremental_update(state, b1)
+    full = _whole_graph_update(monkeypatch, state, b1)
 
     got = {r.vId: r.cId for r in scoped.vertices.collect()}
     want = {r.vId: r.cId for r in full.vertices.collect()}
@@ -280,11 +313,7 @@ def test_scoped_vs_full_on_reference_graph(spark, monkeypatch):
     """
     import os
 
-    import community_detection_flink_spark.operators.incremental as inc
-    from community_detection_flink_spark.sources.edges import (
-        load_edges_csv,
-        symmetrize_edges,
-    )
+    from community_detection_flink_spark.sources.edges import load_edges_csv
 
     ref = "/root/reference/test_graph.csv"
     if not os.path.exists(ref):  # reference absent in some environments
@@ -298,17 +327,17 @@ def test_scoped_vs_full_on_reference_graph(spark, monkeypatch):
     # drive toward a movement fixed point so out-of-scope divergence
     # is limited to the global-scalar marginal class
     b0 = _anchored_batch(spark, [0, 1], range(2000, 2006))
-    state = incremental_update(state, b0, rounds=50, refine_scope="full")
+    state = _whole_graph_update(monkeypatch, state, b0, rounds=50)
 
     b1 = _anchored_batch(spark, [2, 3, 4], range(2100, 2110))
     diag = {}
-    scoped = incremental_update(state, b1, refine_scope="affected", diag=diag)
+    scoped = incremental_update(state, b1, diag=diag)
     assert diag["n_scope_vertices"] is not None  # scoped path engaged
 
     # HARD: splice exactness on the reference graph
     assert _stats_map(scoped.stats) == _stats_map(_recomputed_stats(scoped))
 
-    full = incremental_update(state, b1, refine_scope="full")
+    full = _whole_graph_update(monkeypatch, state, b1)
     got = {r.vId: r.cId for r in scoped.vertices.collect()}
     want = {r.vId: r.cId for r in full.vertices.collect()}
     assert set(got) == set(want)

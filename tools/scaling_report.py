@@ -149,7 +149,7 @@ Two findings:
    property of the synthetic workload, not the operator: on a graph
    where batches are localized (the incremental norm), election and
    refinement shrink with the affected set by construction
-   (`incremental.py::_elect_and_refine`, election_scope="affected").
+   (`incremental.py::_elect_and_refine`, affected-communities election).
 2. **The whole-graph floor is reference-faithful**: the reference
    re-runs its election Pregel over the whole triangle subgraph and 5
    whole-graph refinement rounds per batch (IncrementalWCC.scala:
@@ -165,7 +165,7 @@ visible round over round.
 
 ## Scoped (batch-neighborhood) refinement — round 4 (VERDICT r3 #2/#3)
 
-`incremental.py::_refine_scoped` (default `refine_scope="affected"`)
+`incremental.py::_pick_scope` (the batch-neighborhood scope)
 runs the fixed movement rounds over only the candidate set
 M = affected-fragment members ∪ their neighbors, computes per-round
 stats from edges incident to V_R = complete communities of M's
@@ -187,7 +187,7 @@ Measured (idle local[32], round 4):
 | sf0.1 co-purchase, id-range batches | 34.1-36.0s (probe → whole-graph) | global: random 5% batches touch all communities |
 | sf0.1 co-purchase, ANCHORED batches | 28.7-29.5s (probe → whole-graph) | still global — avg degree ≈ 115: one community's 1-hop closure > 50% of the graph |
 | clustered fixture 2000×10 (20k vertices) | **15.6-23.0s** (15.6 in the final r4 bench — 2.3× under the same-session global-batch 36.0s) | **50 / 20,160 vertices in scope**, 41 affected comms (40 = the batch's own new singletons), 3 rounds |
-| clustered fixture 5000×10, scoped vs `refine_scope="full"` | 15.6s / 13.2s vs 14.4s | wall-clock parity at this |E| |
+| clustered fixture 5000×10, scoped vs whole-graph scope | 15.6s / 13.2s vs 14.4s | wall-clock parity at this |E| |
 
 **Finding — the local-mode floor is orchestration, not data**: one
 incremental batch executes ~171 Spark jobs (AQE stage-jobs + landings
