@@ -8,6 +8,12 @@ a DataFrame and every use is a broadcast-hash join (Catalyst broadcasts
 under the threshold; explicit ``F.broadcast`` hints where the side is
 provably small relative to edges).
 
+One path per statistic: every per-labeling value derives from the
+fused ``community_adjacency`` relation ``(vId, c_own, cId, dIn)`` —
+community stats, the intra-community degree of the WCC kernel and the
+movement candidates — and the triangle term of the WCC kernel from
+the STATIC triangle list of the clean graph (``intra_triangle_counts``).
+
 Input conventions:
   * ``vertices``: vId, t, vt, cc, cId
   * ``edges``: doubled symmetric edge set (src, dst)
@@ -25,7 +31,6 @@ from community_detection_flink_spark.functions.wcc_metric import (
     wcc_r_col,
     wcc_v_col,
 )
-from community_detection_flink_spark.operators.triangles import triangles
 
 
 def edges_with_communities(vertices: DataFrame, edges: DataFrame) -> DataFrame:
@@ -39,9 +44,7 @@ def edges_with_communities(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def community_adjacency(
-    vertices: DataFrame, edges: DataFrame, ewc: DataFrame | None = None
-) -> DataFrame:
+def community_adjacency(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """The fused per-labeling relation ``(vId, c_own, cId, dIn)``:
     per-vertex per-neighbor-community edge count WITH the vertex's own
     label — ONE aggregate over the triplets from which every per-round
@@ -60,9 +63,7 @@ def community_adjacency(
     exchange, and the output is ≤ one row per (vertex, neighbor
     community) — far smaller than the edge set it summarizes.
     """
-    if ewc is None:
-        ewc = edges_with_communities(vertices, edges)
-    return ewc.groupBy(
+    return edges_with_communities(vertices, edges).groupBy(
         F.col("src").alias("vId"),
         F.col("c_src").alias("c_own"),
         F.col("c_dst").alias("cId"),
@@ -70,10 +71,7 @@ def community_adjacency(
 
 
 def community_stats(
-    vertices: DataFrame,
-    edges: DataFrame,
-    ewc: DataFrame | None = None,
-    vcd: DataFrame | None = None,
+    vertices: DataFrame, edges: DataFrame, vcd: DataFrame | None = None
 ) -> DataFrame:
     """A3+A4 — per-community size r, internal edges a, external edges b,
     density d = 2a/r² (``DistributedWCC.scala:536-564``,
@@ -84,35 +82,24 @@ def community_stats(
     a boundary undirected edge contributes exactly one directed row
     whose src is inside each of its two communities (no correction = b).
 
-    ``vcd`` (optional, from ``community_adjacency``): compute a/b from
-    the pre-aggregated per-(vertex, community) counts instead of
-    re-scanning the triplets.
+    a/b are sums over ``vcd`` (the labeling's ``community_adjacency``,
+    built here when the caller has none).
     """
+    if vcd is None:
+        vcd = community_adjacency(vertices, edges)
     sizes = vertices.groupBy("cId").agg(F.count("*").cast("int").alias("r"))
-    if vcd is not None:
-        agg = (
-            vcd.groupBy("c_own")
-            .agg(
-                (F.sum(F.when(F.col("cId") == F.col("c_own"), F.col("dIn")).otherwise(0)) / 2.0)
-                .cast("double")
-                .alias("a"),
-                F.sum(F.when(F.col("cId") != F.col("c_own"), F.col("dIn")).otherwise(0))
-                .cast("long")
-                .alias("b"),
-            )
-            .withColumnRenamed("c_own", "cId")
-        )
-    else:
-        if ewc is None:
-            ewc = edges_with_communities(vertices, edges)
-        agg = ewc.groupBy(F.col("c_src").alias("cId")).agg(
-            (F.sum(F.when(F.col("c_src") == F.col("c_dst"), 1).otherwise(0)) / 2.0)
+    agg = (
+        vcd.groupBy("c_own")
+        .agg(
+            (F.sum(F.when(F.col("cId") == F.col("c_own"), F.col("dIn")).otherwise(0)) / 2.0)
             .cast("double")
             .alias("a"),
-            F.sum(F.when(F.col("c_src") != F.col("c_dst"), 1).otherwise(0))
+            F.sum(F.when(F.col("cId") != F.col("c_own"), F.col("dIn")).otherwise(0))
             .cast("long")
             .alias("b"),
         )
+        .withColumnRenamed("c_own", "cId")
+    )
     return sizes.join(agg, "cId", "left").select(
         "cId",
         "r",
@@ -122,18 +109,13 @@ def community_stats(
     )
 
 
-def vertex_community_degrees(
-    vertices: DataFrame, edges: DataFrame, ewc: DataFrame | None = None
-) -> DataFrame:
+def vertex_community_degrees(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """A5 — per-(vertex, community) edge count: ``(vId, cId, dIn)``
-    (``DistributedWCC.scala:348-357``).  Stays a flat table — the
-    reference re-groups into a per-vertex Map; relationally the flat
-    shape is the joinable one."""
-    if ewc is None:
-        ewc = edges_with_communities(vertices, edges)
-    return ewc.groupBy(F.col("src").alias("vId"), F.col("c_dst").alias("cId")).agg(
-        F.count("*").cast("int").alias("dIn")
-    )
+    (``DistributedWCC.scala:348-357``): ``community_adjacency`` without
+    its ``c_own`` column (one own label per vertex, so the rows are the
+    same).  Stays a flat table — the reference re-groups into a
+    per-vertex Map; relationally the flat shape is the joinable one."""
+    return community_adjacency(vertices, edges).select("vId", "cId", "dIn")
 
 
 def intra_triangle_counts(tri: DataFrame, labels: DataFrame) -> DataFrame:
@@ -161,77 +143,55 @@ def intra_triangle_counts(tri: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def global_wcc(
-    vertices: DataFrame,
-    edges: DataFrame,
-    stats: DataFrame,
-    vertex_count: int,
-    mat=None,
-    ewc: DataFrame | None = None,
-    tri: DataFrame | None = None,
-    vcd: DataFrame | None = None,
-) -> float:
-    """A6+A7+A8 — global WCC = Σ_v wccV(v) / |V|
-    (``DistributedWCC.scala:440-507``; kernel ``WCCMetric.scala:16-21``).
+def _wcc_v(
+    vertices: DataFrame, stats: DataFrame, vcd: DataFrame, tri: DataFrame
+) -> DataFrame:
+    """The per-vertex WCC kernel ``(cId, wccV)`` (``WCCMetric.scala:16-21``).
 
     * vtC (same-community neighbor count) = intra-community degree —
       the reference's community-neighbor array length
-      (``DistributedWCC.scala:509-533``).
+      (``DistributedWCC.scala:509-533``) — is ``vcd``'s cId == c_own
+      row: no triplet scan.
     * tC (triangles v closes inside its community) — the reference
-      intersects community-neighbor lists per intra-community edge and
-      halves (``DistributedWCC.scala:462-507``); equivalently we
-      enumerate triangles of the intra-community edge subgraph (all
-      three corners must share the community) with the oriented
-      enumerator and credit each corner.
-
-    ``ewc``: optional pre-joined/cached triplets for ``vertices`` —
-    avoids redoing the two label joins when the caller already built
-    them for the same labeling.  ``tri``: optional STATIC triangle list
-    of the clean graph — switches the tC pass from per-round subgraph
-    re-enumeration to ``intra_triangle_counts`` (three joins + one agg).
-    ``vcd`` (from ``community_adjacency``, wins over ``ewc`` for vtC):
-    the intra-community degree is its cId == c_own row — no triplet
-    scan at all.
+      intersects community-neighbor lists per intra-community edge
+      (``DistributedWCC.scala:462-507``) — comes from the STATIC
+      triangle list ``tri`` (``intra_triangle_counts``).
     """
-    intra = None
-    if vcd is None or tri is None:
-        if ewc is None:
-            ewc = edges_with_communities(vertices, edges)
-        intra = ewc.where(F.col("c_src") == F.col("c_dst")).select("src", "dst")
-        if tri is None and vcd is None and mat is not None:
-            intra = mat.cache(intra, "gwcc-intra")  # feeds vtC and the triangle pass
-    if vcd is not None:
-        vtc = vcd.where(F.col("cId") == F.col("c_own")).select(
-            "vId", F.col("dIn").alias("vtC")
-        )
-    else:
-        vtc = intra.groupBy(F.col("src").alias("vId")).agg(
-            F.count("*").cast("int").alias("vtC")
-        )
-    if tri is not None:
-        tc = intra_triangle_counts(tri, vertices)
-    else:
-        sub = triangles(intra, mat=mat)
-        tc = (
-            sub.select(F.explode(F.array("u", "v", "w")).alias("vId"))
-            .groupBy("vId")
-            .agg(F.count("*").cast("int").alias("tC"))
-        )
-    per_vertex = (
+    vtc = vcd.where(F.col("cId") == F.col("c_own")).select(
+        "vId", F.col("dIn").alias("vtC")
+    )
+    tc = intra_triangle_counts(tri, vertices)
+    return (
         vertices.join(vtc, "vId", "left")
         .join(tc, "vId", "left")
         .join(F.broadcast(stats.select("cId", "r")), "cId", "left")
         .select(
+            "cId",
             wcc_v_col(
                 F.col("t"),
                 F.col("vt"),
                 F.col("r"),
                 F.coalesce("vtC", F.lit(0)),
                 F.coalesce("tC", F.lit(0)),
-            ).alias("wccV")
+            ).alias("wccV"),
         )
     )
-    total = per_vertex.agg(F.sum("wccV").alias("s")).first()["s"]
+
+
+def global_wcc(
+    vertices: DataFrame,
+    stats: DataFrame,
+    vcd: DataFrame,
+    tri: DataFrame,
+    vertex_count: int,
+) -> float:
+    """A6+A7+A8 — global WCC = Σ_v wccV(v) / |V|
+    (``DistributedWCC.scala:440-507``): the sum of the per-vertex
+    kernel over ``vertices`` labeled as in ``stats`` and ``vcd`` (that
+    labeling's ``community_stats`` and ``community_adjacency``), with
+    ``tri`` the static triangle list of the clean graph.
+    """
+    total = _wcc_v(vertices, stats, vcd, tri).agg(F.sum("wccV").alias("s")).first()["s"]
     return float(total or 0.0) / float(vertex_count)
 
 
@@ -245,9 +205,8 @@ def wccv_by_community(
     """Per-community sums of the per-vertex WCC kernel: ``(cId, s,
     n)`` with s = Σ_{v ∈ c} wccV(v) and n the member count.
 
-    The community-sized twin of ``global_wcc`` (same kernel, same
-    vtC/tC derivations from a cached ``community_adjacency`` relation
-    and the STATIC triangle list) — carrying it across incremental
+    The community-sized twin of ``global_wcc`` (the same kernel,
+    grouped by ``cId`` instead of summed) — carrying it across incremental
     batches lets a batch re-evaluate ONLY the communities its
     neighborhood touched and reuse the carried sums for the rest
     (VERDICT r3 #2): Σ over all communities / |V| is the global WCC,
@@ -267,24 +226,8 @@ def wccv_by_community(
         tri = tri.join(
             tri_scope.withColumnsRenamed({"vId": "u"}), "u", "left_semi"
         )
-    vtc = vcd.where(F.col("cId") == F.col("c_own")).select(
-        "vId", F.col("dIn").alias("vtC")
-    )
-    tc = intra_triangle_counts(tri, vertices)
     return (
-        vertices.join(vtc, "vId", "left")
-        .join(tc, "vId", "left")
-        .join(F.broadcast(stats.select("cId", "r")), "cId", "left")
-        .select(
-            "cId",
-            wcc_v_col(
-                F.col("t"),
-                F.col("vt"),
-                F.col("r"),
-                F.coalesce("vtC", F.lit(0)),
-                F.coalesce("tC", F.lit(0)),
-            ).alias("wccV"),
-        )
+        _wcc_v(vertices, stats, vcd, tri)
         .groupBy("cId")
         .agg(
             F.sum("wccV").alias("s"),
@@ -331,13 +274,11 @@ def _movement_kernels(global_cc: float, vertex_count: int) -> tuple[Column, Colu
 
 def best_movement(
     vertices: DataFrame,
-    edges: DataFrame,
     stats: DataFrame,
+    vcd: DataFrame,
     global_cc: float,
     vertex_count: int,
-    mat=None,
-    ewc: DataFrame | None = None,
-    vcd: DataFrame | None = None,
+    mat,
     moves_observation=None,
 ) -> DataFrame:
     """I4 kernel — one simultaneous best-movement pass over all vertices
@@ -345,8 +286,11 @@ def best_movement(
     updated ``cId``.
 
     Relational shape: the per-vertex candidate loop of the reference
-    becomes one row per (vertex, neighbor community) joined against
-    broadcast community stats; argmax via struct-max.
+    becomes one row per (vertex, neighbor community) — the rows of
+    ``vcd``, the labeling's ``community_adjacency`` — joined against
+    broadcast community stats ``stats``; argmax via struct-max.
+    ``mat`` (a ``plans.Materializer``) holds the pass's within-round
+    cache.
 
     Faithfulness note: the reference's candidate scan takes the FIRST
     strictly-better candidate in Scala Map iteration order (arbitrary);
@@ -361,19 +305,10 @@ def best_movement(
     ⇒ identical next decision), so callers break their round loop on
     it instead of paying another evaluate/compare cycle.
     """
-    # vcd + own label in one relation: every downstream branch (degree
+    # vcd carries the own label: every downstream branch (degree
     # totals, own-community row, candidate scan) reads this single
-    # cached table, all keyed on vId — with ewc src-partitioned (see
-    # refine_partition) none of the groupBys below re-shuffle.  The
-    # caller usually hands in the round's shared ``community_adjacency``
-    # (same schema), already cached — zero extra triplet scans here.
-    if vcd is None:
-        vcd = vertex_community_degrees(vertices, edges, ewc=ewc).join(
-            vertices.select("vId", F.col("cId").alias("c_own")), "vId"
-        )
-        if mat is not None:
-            vcd = mat.cache(vcd, "vcd")
-
+    # cached table, all keyed on vId — with the edges src-partitioned
+    # (see refine_partition) none of the groupBys below re-shuffle.
     kernel_r, kernel_i = _movement_kernels(float(global_cc), int(vertex_count))
     # ONE aggregation yields both the total degree and the own-community
     # share (the reference walks a per-vertex map twice,
@@ -420,8 +355,7 @@ def best_movement(
     # concurrently before the lazy cache fills and each recomputes the
     # aggregate, the same race the shared stats broadcast above had.
     # One cheap count job that serializes the fill wins.
-    if mat is not None:
-        own = mat.cache(own, "own")
+    own = mat.cache(own, "own")
 
     cand = (
         vcd.where(F.col("cId") != F.col("c_own"))

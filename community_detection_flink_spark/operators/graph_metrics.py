@@ -317,11 +317,11 @@ def modularity(labels: DataFrame, edges: DataFrame) -> DataFrame:
     alternative to — exposed so users can score ANY labeling.
     """
     lab = labels.select("vId", "cId")
-    ewc = (
+    triplets = (
         edges.join(lab.withColumnsRenamed({"vId": "src", "cId": "c_src"}), "src")
         .join(lab.withColumnsRenamed({"vId": "dst", "cId": "c_dst"}), "dst")
     )
-    per_c = ewc.groupBy("c_src").agg(
+    per_c = triplets.groupBy("c_src").agg(
         (
             F.sum(F.when(F.col("c_src") == F.col("c_dst"), 1).otherwise(0)) / 2.0
         ).alias("a"),

@@ -53,8 +53,7 @@ from community_detection_flink_spark.operators.refinement import (
     movement_rounds,
     run_wcc,
 )
-# module attribute the benchmark's layer tracer wraps (perfbench/spans.py)
-from community_detection_flink_spark.operators.triangles import triangles  # noqa: F401
+from community_detection_flink_spark.operators.triangles import triangles
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
     loop_scope,
@@ -114,27 +113,26 @@ def prepare(
     """Bulk load: full batch pipeline (``IncrementalWCC.prepare`` =
     ``DistributedWCC.run``, ``IncrementalWCC.scala:73-77``).
 
-    ``run_wcc(keep_internals=True)`` hands back the cleaned graph it
-    already computed, so the state build here costs three small joins —
-    no second triangle enumeration.
+    One path: land ``edges``, enumerate their triangles (unless given),
+    land the triangle list and the preprocessed graph, and hand all of
+    it to ``run_wcc`` as ``pre`` — the cleaned graph the state carries
+    is built and landed once, and every landing goes through ``mat``.
 
     ``tri``: optional pre-computed triangle list of ``edges`` (callers
     that already enumerated a supergraph's triangles can filter them
     down instead of re-enumerating — see ``run_edge_batches``)."""
     mat = mat or Materializer(edges.sparkSession)
-    if tri is not None:
-        edges = mat(edges, "inc-edges")
-        tri_m = mat(tri, "inc-tri-bulk")
-        pv, pc = preprocess(edges, mat=mat, tri=tri_m)
-        pc = mat(pc, "inc-pre-clean")
-        pv = mat(pv, "inc-pre-verts")
-        res = run_wcc(edges, keep_internals=True, pre=(tri_m, pv, pc), mat=mat)
-    else:
-        res = run_wcc(edges, keep_internals=True)
-        edges = mat(edges, "inc-edges")
-    clean_e = mat(res.clean_edges, "inc-clean")
+    edges = mat(edges, "inc-edges")
+    if tri is None:
+        tri = triangles(edges, mat=mat)
+    tri = mat(tri, "inc-tri")
+    mat.release()  # oriented-edge cache
+    pv, pc = preprocess(edges, mat=mat, tri=tri)
+    clean_e = mat(pc, "inc-clean")
+    pv = mat(pv, "inc-pre-verts")
+    res = run_wcc(edges, pre=(tri, pv, clean_e), mat=mat)
     vertices = mat(
-        res.communities.join(res.clean_vertices, "vId", "left").select(
+        res.communities.join(pv, "vId", "left").select(
             "vId",
             F.coalesce("t", F.lit(0)).alias("t"),
             F.coalesce("vt", F.lit(0)).alias("vt"),
@@ -143,24 +141,23 @@ def prepare(
         ),
         "inc-vertices",
     )
-    stats = mat(res.stats, "inc-stats")
     # per-community WCC sums, carried so incremental batches can
     # re-evaluate only the communities they touch (one extra
     # community-adjacency pass here, at bulk-load time)
     clean_labeled = vertices.where(F.col("t") > 0)
     vcd = mat.cache(community_adjacency(clean_labeled, clean_e), "prep-vcd")
     wccv = mat(
-        wccv_by_community(clean_labeled, stats, vcd, res.tri), "inc-wccv"
+        wccv_by_community(clean_labeled, res.stats, vcd, tri), "inc-wccv"
     )
     mat.release()
     return WCCState(
         edges=edges,
         clean_edges=clean_e,
         vertices=vertices,
-        stats=stats,
+        stats=res.stats,
         global_wcc=res.global_wcc,
         vertex_count=res.vertex_count,
-        tri=res.tri,
+        tri=tri,
         wccv=wccv,
     )
 

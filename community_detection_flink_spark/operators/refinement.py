@@ -46,12 +46,6 @@ class WCCResult:
     global_cc: float
     vertex_count: int
     iterations: int
-    # populated only with run_wcc(keep_internals=True): the cleaned
-    # graph the pipeline already computed, so callers like the
-    # incremental prepare() don't re-enumerate triangles
-    clean_vertices: DataFrame | None = None  # vId, t, vt, cc
-    clean_edges: DataFrame | None = None  # doubled triangle-edge subgraph
-    tri: DataFrame | None = None  # static triangle list (u, v, w)
     # global-WCC value of the initial partition followed by every
     # ACCEPTED refinement round, in order — strictly increasing by
     # construction of the accept-if-improved loop; recorded so the
@@ -71,17 +65,15 @@ class AcceptIfImproved:
     adjacency and stats caches for the next movement pass.
     """
 
-    def __init__(self, edges, vertex_count, tri, max_retries, threshold, history=None):
-        self.edges, self.vertex_count, self.tri = edges, vertex_count, tri
+    def __init__(self, vertex_count, tri, max_retries, threshold, history=None):
+        self.vertex_count, self.tri = vertex_count, tri
         self.max_retries, self.threshold = max_retries, threshold
         self.retries = max_retries
         self.history = [] if history is None else history
         self.wcc = 0.0
 
     def _eval(self, labels, vcd, cs) -> float:
-        return global_wcc(
-            labels, self.edges, cs, self.vertex_count, vcd=vcd, tri=self.tri
-        )
+        return global_wcc(labels, cs, vcd, self.tri, self.vertex_count)
 
     def begin(self, labels, vcd, cs) -> None:
         self.wcc = self._eval(labels, vcd, cs)
@@ -205,8 +197,8 @@ def movement_rounds(
             movers = cur.join(candidates, "vId", "left_semi")
             movers_vcd = vcd.join(candidates, "vId", "left_semi")
         moved = best_movement(
-            movers, edges, cs, global_cc, vertex_count,
-            mat=mat, vcd=movers_vcd, moves_observation=obs,
+            movers, cs, movers_vcd, global_cc, vertex_count, mat,
+            moves_observation=obs,
         )
         if candidates is not None:
             moved = cur.join(candidates, "vId", "left_anti").unionByName(moved)
@@ -234,10 +226,10 @@ def refine_partition(
     vertices: DataFrame,
     clean_edges: DataFrame,
     vertex_count: int,
+    tri: DataFrame,
     max_retries: int = MAX_RETRIES,
     threshold: float = THRESHOLD,
     mat: Materializer | None = None,
-    tri: DataFrame | None = None,
     history: list | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float, int]:
     """Run the accept-if-improved movement loop (``movement_rounds``
@@ -247,24 +239,20 @@ def refine_partition(
     floor 4): every loop input is a Materializer-landed parquet (true
     file-size stats) or a persisted loop cache, so AQE cannot improve a
     plan here — it only splits each tiny per-round landing into one
-    driver-blocking job per query stage.  MEASURED at sf0.1 / local[32]
-    (tools/count_jobs_batch.py): 26.5 → 11.6 jobs per round (−56%) for
-    identical results (16 rounds, wcc 0.04752) and flat wall.
+    driver-blocking job per query stage.  MEASURED at sf0.1 / local[32]:
+    26.5 → 11.6 jobs per round (−56%) for identical results (16
+    rounds, wcc 0.04752) and flat wall; ``perfbench/run.py --trace 1``
+    reports this loop's jobs as ``refinement.jobs``.
 
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
     round's WCC (driver-side floats the loop computes anyway).
-    ``tri`` (static triangle list of ``clean_edges``) turns the
-    per-round tC pass into three joins + one aggregate (see
-    ``intra_triangle_counts``); computed here if absent.  An already-
-    landed input is not landed again, and is never dropped.
+    ``tri`` (static triangle list of ``clean_edges``) makes the
+    per-round tC pass three joins + one aggregate (see
+    ``intra_triangle_counts``).  An already-landed input is not landed
+    again, and is never dropped.
     """
     mat = mat or Materializer(vertices.sparkSession)
-    if tri is None:
-        # batch-scale triangle enumeration stays ADAPTIVE — only the
-        # landed-parquet loop below goes non-adaptive
-        tri = mat(triangles(clean_edges, mat=mat), "tri-static")
-        mat.release()
     with loop_scope(vertices.sparkSession, clean_edges.count(), 4):
         # the static triangle list is scanned once per round by the WCC
         # eval — persist it for the loop like loop_edges below (r12),
@@ -281,9 +269,7 @@ def refine_partition(
         # vId-keyed joins downstream need no further exchange.
         loop_edges = clean_edges.repartition("src").persist()
         start = vertices if mat.is_landed(vertices) else mat(vertices, "best")
-        policy = AcceptIfImproved(
-            loop_edges, vertex_count, tri, max_retries, threshold, history
-        )
+        policy = AcceptIfImproved(vertex_count, tri, max_retries, threshold, history)
         best, best_vcd, best_cs, rounds = movement_rounds(
             start, loop_edges, global_cc, vertex_count, mat, policy
         )
@@ -300,7 +286,6 @@ def run_wcc(
     edges: DataFrame,
     max_retries: int = MAX_RETRIES,
     threshold: float = THRESHOLD,
-    keep_internals: bool = False,
     pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     mat: Materializer | None = None,
 ) -> WCCResult:
@@ -312,11 +297,17 @@ def run_wcc(
     pruned in preprocessing keep their own singleton community in the
     final result (``DistributedWCC.scala:63-78``).
 
+    One pipeline: land ``edges``, enumerate and land their triangles,
+    land the cleaned graph, elect the initial partition, refine.  What
+    it lands along the way is dropped on return; only the communities
+    and the stats are handed back.
+
     ``pre``: optional already-MATERIALIZED ``(tri, clean_vertices,
-    clean_edges)`` for these edges — callers that preprocessed the
-    graph for other queries (``__spark_entry__._graph``) skip the
-    second triangle enumeration + cleanup.  ``edges`` must itself be
-    materialized in that case (it is re-scanned for the vertex set).
+    clean_edges)`` for these edges, which replaces the first three
+    steps — callers that need the cleaned graph themselves
+    (``__spark_entry__._graph``, the incremental ``prepare``) build it
+    once and keep ownership of it.  ``edges`` must itself be
+    materialized then (it is re-scanned for the vertex set).
     """
     mat = mat or Materializer(edges.sparkSession)
     if pre is None:
@@ -332,11 +323,6 @@ def run_wcc(
             global_cc=0.0,
             vertex_count=0,
             iterations=0,
-            clean_vertices=(
-                empty([], "vId LONG, t INT, vt INT, cc DOUBLE") if keep_internals else None
-            ),
-            clean_edges=edges if keep_internals else None,
-            tri=empty([], "u LONG, v LONG, w LONG") if keep_internals else None,
         )
 
     # One triangle enumeration serves preprocessing AND every refinement
@@ -355,18 +341,17 @@ def run_wcc(
 
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
-        init, clean_edges, vertex_count, max_retries, threshold, mat=mat,
-        tri=tri, history=history,
+        init, clean_edges, vertex_count, tri, max_retries, threshold, mat=mat,
+        history=history,
     )
     # only `edges` (feeds all_vertices), `best`, and `best_cs` survive
-    # into the returned plans — free the pipeline intermediates (the
-    # cleaned graph stays when the caller asked to reuse it, and
-    # caller-owned `pre` artifacts are never touched)
+    # into the returned plans — free the pipeline intermediates
+    # (caller-owned `pre` artifacts are never touched)
     # best IS init when the loop accepted no round (refine_partition no
     # longer re-lands an already-landed input, r13) — the returned
     # communities plan still reads init's files then
     superseded = [init] if best is not init else []
-    if pre is None and not keep_internals:
+    if pre is None:
         superseded += [tri, clean_edges, vertices]
     for df in superseded:
         mat.drop(df)
@@ -381,8 +366,5 @@ def run_wcc(
         global_cc=global_cc,
         vertex_count=vertex_count,
         iterations=rounds,
-        clean_vertices=vertices if keep_internals else None,
-        clean_edges=clean_edges if keep_internals else None,
-        tri=tri if keep_internals else None,
         wcc_history=history,
     )

@@ -109,13 +109,33 @@ def test_incremental_triangles_match_batch(spark):
     )
 
 
+def test_prepare_lands_only_through_its_materializer(
+    spark, golden_edges, tmp_path, monkeypatch
+):
+    """Every table ``prepare`` lands goes through the Materializer it
+    was given: no default checkpoint directory appears in the temp dir."""
+    import tempfile
+
+    from community_detection_flink_spark.plans.iteration import Materializer
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.delenv("CDFS_CHECKPOINT_DIR", raising=False)
+    monkeypatch.setenv("TMPDIR", str(tmp))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    mat = Materializer(spark, base_dir=str(tmp_path / "ckpt"))
+    state = prepare(symmetrize_edges(golden_edges), mat=mat)
+    assert state.vertex_count == 8
+    assert list(tmp.glob("cdfs-ckpt-*")) == []
+
+
 @pytest.mark.slow
 def test_incremental_new_vertices_join(spark, golden_edges):
     """Attach a new 4-clique sharing one vertex with clique B."""
     state = prepare(symmetrize_edges(golden_edges))
-    newc = [(7, 10), (7, 11), (7, 12), (10, 11), (10, 12), (11, 12)]
+    new_clique = [(7, 10), (7, 11), (7, 12), (10, 11), (10, 12), (11, 12)]
     state = incremental_update(
-        state, spark.createDataFrame(newc, "src LONG, dst LONG")
+        state, spark.createDataFrame(new_clique, "src LONG, dst LONG")
     )
     got = {r["vId"]: r["cId"] for r in state.vertices.collect()}
     assert set(got) == set(range(8)) | {10, 11, 12}

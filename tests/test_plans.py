@@ -35,13 +35,15 @@ def test_small_dim_join_broadcasts(spark):
     assert strategies and all(j == "BroadcastHashJoin" for j in strategies)
 
 
-def test_wcc_operators_stay_jvm_side(spark, golden_edges):
+def test_wcc_operators_stay_jvm_side(spark, golden_edges, tmp_path):
     from community_detection_flink_spark.sources.edges import symmetrize_edges
     from community_detection_flink_spark.operators.preprocess import preprocess
     from community_detection_flink_spark.operators.community import (
         best_movement,
+        community_adjacency,
         community_stats,
     )
+    from community_detection_flink_spark.plans.iteration import Materializer
 
     e = symmetrize_edges(golden_edges)
     vertices, clean = preprocess(e)
@@ -50,7 +52,9 @@ def test_wcc_operators_stay_jvm_side(spark, golden_edges):
     part = vertices.withColumn("cId", F.col("vId"))
     cs = community_stats(part, clean)
     assert python_eval_nodes(cs) == []
-    mv = best_movement(part, clean, cs, 0.3, 8)
+    mat = Materializer(spark, base_dir=str(tmp_path))
+    mv = best_movement(part, cs, community_adjacency(part, clean), 0.3, 8, mat)
+    mat.release()
     assert python_eval_nodes(mv) == []
 
 

@@ -41,9 +41,7 @@ def test_movement_plan_broadcasts_stats(spark):
     with no_aqe(spark):
         vcd = mat.cache(community_adjacency(init, loop_edges), "vcd")
         cs = community_stats(init, loop_edges, vcd=vcd).persist()
-        mv = best_movement(
-            init, loop_edges, cs, 0.3, vertex_count, mat=mat, vcd=vcd
-        )
+        mv = best_movement(init, cs, vcd, 0.3, vertex_count, mat)
         strategies = join_strategies(mv)
     mat.release()
     cs.unpersist()

@@ -19,8 +19,8 @@ def test_run_stream_foreachbatch(spark, golden_edges):
     src_dir = tempfile.mkdtemp(prefix="cdfs-stream-src-")
     ckpt = tempfile.mkdtemp(prefix="cdfs-stream-ckpt-")
     # stream = a new 4-clique attached to vertex 7
-    newc = [(7, 10), (7, 11), (7, 12), (10, 11), (10, 12), (11, 12)]
-    sym = symmetrize_edges(spark.createDataFrame(newc, "src LONG, dst LONG"))
+    new_clique = [(7, 10), (7, 11), (7, 12), (10, 11), (10, 12), (11, 12)]
+    sym = symmetrize_edges(spark.createDataFrame(new_clique, "src LONG, dst LONG"))
     sym.write.mode("overwrite").parquet(src_dir)
 
     state0 = prepare(symmetrize_edges(golden_edges))

@@ -8,8 +8,8 @@ could in principle pile one vertex's triplets onto one task; this tool
 MEASURES whether it does, instead of guessing:
 
 1. builds the co-purchase graph at the given sf_dir and runs
-   edges_with_communities → community_adjacency → count with the Spark
-   UI enabled,
+   community_adjacency (two label joins + one aggregate) → count with
+   the Spark UI enabled,
 2. pulls per-task durations of every stage of that job from the REST
    API (/api/v1), and
 3. reports per-stage p50 / p99 / max task-time ratios.
@@ -35,10 +35,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from community_detection_flink_spark import get_spark
-from community_detection_flink_spark.operators.community import (
-    community_adjacency,
-    edges_with_communities,
-)
+from community_detection_flink_spark.operators.community import community_adjacency
 from community_detection_flink_spark.sources.edges import co_purchase_edges
 
 
@@ -110,8 +107,7 @@ def main() -> None:
         "cId", F.col("vId") % 1009
     )
     t0 = time.time()
-    ewc = edges_with_communities(vertices, edges)
-    n = community_adjacency(vertices, edges, ewc=ewc).count()
+    n = community_adjacency(vertices, edges).count()
     dt = time.time() - t0
     print(f"# community_adjacency: {n} rows in {dt:.2f}s")
 
