@@ -109,15 +109,14 @@ def wcc_incremental_split(
     them touching 1712/1712 communities), runs ``n_batches`` LOCALIZED
     batches (VERDICT r3 #3) through the same state — the workload
     shape where the scoped refinement's delta ∝ batch neighborhood
-    shows up.  Returns (rows, t_prepare, t_delta, t_localized, diag)
-    with diag the last localized batch's scope telemetry."""
+    shows up.  Returns (rows, t_prepare, t_delta, t_localized, report)
+    with report the last localized batch's ``WCCState.report``."""
     from pyspark.sql import functions as F
 
     from community_detection_flink_spark.operators.incremental import (
         incremental_update,
         prepare,
     )
-    from community_detection_flink_spark.plans.iteration import Materializer
     from community_detection_flink_spark.streaming.incremental_stream import (
         localized_batches,
         micro_batches,
@@ -126,14 +125,13 @@ def wcc_incremental_split(
 
     e, _, _ = entry_mod._graph(spark, sf_dir)
     tri_full = entry_mod._TRI_CACHE[sf_dir]
-    mat = Materializer(spark)
     t0 = time.time()
     max_vertex = int(e.agg(F.max(F.greatest("src", "dst"))).first()[0])
     bulk, stream, split = split_bulk_stream(e, 0.8)
     tri_bulk = tri_full.where(
         (F.col("u") < split) & (F.col("v") < split) & (F.col("w") < split)
     )
-    state = prepare(bulk, mat=mat, tri=tri_bulk)
+    state = prepare(bulk, tri=tri_bulk)
     state.vertices.count()  # prepare materializes; this pins the cut
     t_prepare = time.time() - t0
     if save_path is not None:
@@ -150,22 +148,16 @@ def wcc_incremental_split(
         save_state(state, save_path)
     t0 = time.time()
     for batch in micro_batches(stream, split, max_vertex, n_batches):
-        state = incremental_update(state, batch, mat=mat)
+        state = incremental_update(state, batch)
     rows = state.vertices.select("vId", "cId").count()
     t_delta = time.time() - t0
     state.max_vertex = max_vertex
     t0 = time.time()
-    diag: dict = {}
-    loc = list(localized_batches(state, n_batches=n_batches))
-    for i, batch in enumerate(loc):
-        # telemetry counts only on the last batch — keeps the timed
-        # loop free of extra jobs
-        state = incremental_update(
-            state, batch, mat=mat, diag=diag if i == len(loc) - 1 else None
-        )
+    for batch in list(localized_batches(state, n_batches=n_batches)):
+        state = incremental_update(state, batch)
     state.vertices.count()
     t_localized = time.time() - t0
-    return rows, t_prepare, t_delta, t_localized, diag
+    return rows, t_prepare, t_delta, t_localized, state.report
 
 
 def wcc_incremental_clustered(spark, n_comms: int = 2000, size: int = 10,
@@ -176,36 +168,29 @@ def wcc_incremental_clustered(spark, n_comms: int = 2000, size: int = 10,
     batch is localized there and the scoped path's win is invisible.
     This is the regime where it shows: each batch anchors to one of
     ``n_comms`` clusters, and the scoped refinement's data volume
-    tracks the batch neighborhood (diag counts prove it), not |E|.
-    Returns (t_prepare, t_localized, diag)."""
+    tracks the batch neighborhood (the last batch's ``WCCState.report``
+    shows it), not |E|.  Returns (t_prepare, t_localized, report)."""
     from community_detection_flink_spark.operators.incremental import (
         incremental_update,
         prepare,
     )
-    from community_detection_flink_spark.plans.iteration import Materializer
     from community_detection_flink_spark.sources.synthetic import clustered_graph
     from community_detection_flink_spark.streaming.incremental_stream import (
         localized_batches,
     )
 
-    mat = Materializer(spark)
     g = clustered_graph(spark, n_comms, size)
     t0 = time.time()
-    state = prepare(g, mat=mat)
+    state = prepare(g)
     state.vertices.count()
     t_prepare = time.time() - t0
     state.max_vertex = n_comms * size - 1
     t0 = time.time()
-    diag: dict = {}
-    loc = list(localized_batches(state, n_batches=n_batches))
-    for i, batch in enumerate(loc):
-        state = incremental_update(
-            state, batch, mat=mat, diag=diag if i == len(loc) - 1 else None
-        )
+    for batch in list(localized_batches(state, n_batches=n_batches)):
+        state = incremental_update(state, batch)
     state.vertices.count()
     t_localized = time.time() - t0
-    diag["n_vertices"] = state.vertex_count
-    return t_prepare, t_localized, diag
+    return t_prepare, t_localized, dict(state.report, n_vertices=state.vertex_count)
 
 
 def wcc_cdc_stream(
@@ -237,7 +222,6 @@ def wcc_cdc_stream(
         load_state,
         prepare,
     )
-    from community_detection_flink_spark.plans.iteration import Materializer
     from community_detection_flink_spark.streaming.incremental_stream import (
         micro_batches,
         run_stream,
@@ -246,7 +230,6 @@ def wcc_cdc_stream(
 
     e, _, _ = entry_mod._graph(spark, sf_dir)
     tri_full = entry_mod._TRI_CACHE[sf_dir]
-    mat = Materializer(spark)
     max_vertex = int(e.agg(F.max(F.greatest("src", "dst"))).first()[0])
     bulk, stream, split = split_bulk_stream(e, 0.8)
     t0 = time.time()
@@ -257,7 +240,7 @@ def wcc_cdc_stream(
         tri_bulk = tri_full.where(
             (F.col("u") < split) & (F.col("v") < split) & (F.col("w") < split)
         )
-        state = prepare(bulk, mat=mat, tri=tri_bulk)
+        state = prepare(bulk, tri=tri_bulk)
         state.vertices.count()
     t_prepare = time.time() - t0
 
@@ -443,7 +426,7 @@ def main() -> None:
             cdc_state_path = _tf.mkdtemp(prefix="cdfs-bench-state-")
             sruns = []
             for i in range(2):
-                n, t_prep_i, t_delta_i, t_loc_i, loc_diag = (
+                n, t_prep_i, t_delta_i, t_loc_i, loc_report = (
                     wcc_incremental_split(
                         spark,
                         sf_dir,
@@ -455,7 +438,7 @@ def main() -> None:
                     f"# {name} run {i + 1}: {n} rows "
                     f"(prepare {t_prep_i:.2f}s + 4-batch delta "
                     f"{t_delta_i:.2f}s + 4-batch localized "
-                    f"{t_loc_i:.2f}s; last localized scope: {loc_diag})",
+                    f"{t_loc_i:.2f}s; last localized scope: {loc_report})",
                     file=sys.stderr,
                     flush=True,
                 )
@@ -521,11 +504,11 @@ def main() -> None:
     # kept so contention is visible.
     cruns = []
     for _ in range(2):
-        t_cprep, t_cloc, cdiag = wcc_incremental_clustered(spark, 2000, 10)
+        t_cprep, t_cloc, creport = wcc_incremental_clustered(spark, 2000, 10)
         cruns.append((t_cprep, t_cloc))
         print(
             f"# wcc_incremental_clustered: prepare {t_cprep:.2f}s + "
-            f"4-batch localized {t_cloc:.2f}s; last scope: {cdiag}",
+            f"4-batch localized {t_cloc:.2f}s; last scope: {creport}",
             file=sys.stderr,
             flush=True,
         )

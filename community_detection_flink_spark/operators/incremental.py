@@ -53,7 +53,10 @@ from community_detection_flink_spark.operators.refinement import (
     movement_rounds,
     run_wcc,
 )
-from community_detection_flink_spark.operators.triangles import triangles
+from community_detection_flink_spark.operators.triangles import (
+    triangle_edges,
+    triangles,
+)
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
     loop_scope,
@@ -93,6 +96,16 @@ class WCCState:
     # batch's final evaluation touch ONLY the communities in the batch
     # neighborhood: every carried term outside it is provably unchanged
     wccv: DataFrame
+    # where every batch of this state's lineage lands (``prepare``'s
+    # Materializer, or a fresh one from ``load_state``); free the
+    # lineage's checkpoint files with ``state.mat.cleanup()``
+    mat: Materializer
+    # what the batch that produced this state did:
+    # ``affected_vertices`` (clean members of the affected
+    # communities), ``scope_vertices`` (|V_R|, ``None`` for the
+    # whole-graph scope) and ``rounds`` (movement rounds run); ``None``
+    # after ``prepare`` or ``load_state``
+    report: dict | None = None
     # highest vertex id seen (set by ``run_edge_batches``) — callers
     # that need the id ceiling read it here instead of re-running an
     # agg job over the edge set
@@ -116,7 +129,9 @@ def prepare(
     One path: land ``edges``, enumerate their triangles (unless given),
     land the triangle list and the preprocessed graph, and hand all of
     it to ``run_wcc`` as ``pre`` — the cleaned graph the state carries
-    is built and landed once, and every landing goes through ``mat``.
+    is built and landed once, and every landing goes through ``mat``
+    (default: a fresh ``Materializer``), which the returned state
+    carries for every later batch.
 
     ``tri``: optional pre-computed triangle list of ``edges`` (callers
     that already enumerated a supergraph's triangles can filter them
@@ -159,6 +174,7 @@ def prepare(
         vertex_count=res.vertex_count,
         tri=tri,
         wccv=wccv,
+        mat=mat,
     )
 
 
@@ -202,13 +218,7 @@ def _new_triangles(full_edges: DataFrame, new_e: DataFrame) -> DataFrame:
     )
 
 
-def incremental_update(
-    state: WCCState,
-    batch_edges: DataFrame,
-    mat: Materializer | None = None,
-    rounds: int = INCREMENTAL_ROUNDS,
-    diag: dict | None = None,
-) -> WCCState:
+def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     """Merge one edge micro-batch and re-partition
     (``IncrementalWCC.run``, ``IncrementalWCC.scala:27-71``).
 
@@ -223,14 +233,9 @@ def incremental_update(
     the reference re-runs its election over the whole triangle
     subgraph and re-scans the whole graph 5×/batch,
     ``IncrementalWCC.scala:185-227, 332-393`` — forbidden at 100 TB).
-
-    ``diag``: optional dict; when given, receives per-batch scope
-    telemetry (``n_affected_comms``, ``n_scope_vertices``,
-    ``n_candidates``, ``refine_rounds``; the two scope sizes are
-    ``None`` for the whole-graph scope) at the cost of a few extra
-    count jobs — for tests and SCALING.md, not the hot path.
+    Every table lands through ``state.mat``.
     """
-    mat = mat or Materializer(state.edges.sparkSession)
+    mat = state.mat
 
     sym = symmetrize_edges(batch_edges)
     new_e = mat(sym.join(state.edges, ["src", "dst"], "left_anti"), "inc-newe")
@@ -258,14 +263,7 @@ def incremental_update(
         .agg(F.count("*").cast("int").alias("dt"))
     )
     # cleaned edge set only grows: add the edges of new triangles
-    tri_half = (
-        tri.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(tri.select(F.col("u").alias("src"), F.col("w").alias("dst")))
-        .unionByName(tri.select(F.col("v").alias("src"), F.col("w").alias("dst")))
-    )
-    tri_edges = tri_half.unionByName(
-        tri_half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).dropDuplicates(["src", "dst"])
+    tri_edges = triangle_edges(tri)
     # a new triangle's edges may already be clean — subtract them with
     # ONE scan of the carried clean set (broadcast semi: tri_edges is
     # batch-sized) instead of a full dedup shuffle, then union the now-
@@ -315,9 +313,8 @@ def incremental_update(
         tri_static = mat(tri_static, "inc-tri-static")
     return _elect_and_refine(
         vertices, clean_new, changed_verts, tri_static, full_edges,
-        vertex_count, global_cc, mat, rounds, state.stats, state.wccv,
+        vertex_count, global_cc, mat, state.stats, state.wccv,
         pending_unions=0 if compact else state.pending_unions + 1,
-        diag=diag,
     )
 
 
@@ -346,18 +343,18 @@ def _elect_and_refine(
     vertex_count: int,
     global_cc: float,
     mat: Materializer,
-    rounds: int,
     old_stats: DataFrame,
     old_wccv: DataFrame,
     pending_unions: int = 0,
-    diag: dict | None = None,
     affected_comms: DataFrame | None = None,
 ) -> WCCState:
     """Shared tail of every incremental batch (insert or delete):
     re-elect centers inside the affected communities, run the fixed
     movement rounds over the scope ``_pick_scope`` chooses — the batch
     neighborhood, or every clean vertex — splice the carried
-    per-community stats/WCC sums, and assemble the next ``WCCState``.
+    per-community stats/WCC sums, and assemble the next ``WCCState``
+    (its ``report`` holds counts the batch computes anyway — no extra
+    job).
 
     Documented divergence: the reference re-runs its election Pregel
     over the WHOLE triangle subgraph every batch
@@ -431,7 +428,8 @@ def _elect_and_refine(
     # or a loop cache.
     with loop_scope(vertices.sparkSession, scope.est_edges, scope.floor):
         cur, cur_vcd, cur_cs, n_rounds = movement_rounds(
-            vr, scope.edges, global_cc, vertex_count, mat, FixedRounds(rounds),
+            vr, scope.edges, global_cc, vertex_count, mat,
+            FixedRounds(INCREMENTAL_ROUNDS),
             candidates=scope.candidates, outer_labels=scope.outer_labels,
         )
 
@@ -474,11 +472,6 @@ def _elect_and_refine(
             ),
             "inc-final",
         )
-        if diag is not None:
-            diag["n_affected_comms"] = affected_comms.count()
-            diag["n_scope_vertices"] = vr_ids.count() if scoped else None
-            diag["n_candidates"] = scope.candidates.count() if scoped else None
-            diag["refine_rounds"] = n_rounds
 
     cur_vcd.unpersist(False)
     cur_cs.unpersist(False)
@@ -496,6 +489,12 @@ def _elect_and_refine(
         vertex_count=vertex_count,
         tri=tri_static,
         wccv=new_wccv,
+        mat=mat,
+        report={
+            "affected_vertices": scope.affected_vertices,
+            "scope_vertices": scope.scope_vertices,
+            "rounds": n_rounds,
+        },
         pending_unions=pending_unions,
     )
 
@@ -509,6 +508,8 @@ class _Scope(NamedTuple):
     outer_labels: DataFrame | None  # fixed labels of dst endpoints outside vr
     est_edges: int  # loop-width sizing
     floor: int  # loop-width floor
+    affected_vertices: int  # the scope probe's clean affected members
+    scope_vertices: int | None  # |V_R|; None = the whole graph
 
 
 def _pick_scope(
@@ -577,7 +578,7 @@ def _pick_scope(
     def whole_graph() -> _Scope:
         return _Scope(
             part, clean_new.repartition("src").persist(),  # see refine_partition
-            None, None, n_clean_edges, 4,
+            None, None, n_clean_edges, 4, n_affected, None,
         )
 
     clean_all = vertices.where(F.col("t") > 0)
@@ -609,7 +610,8 @@ def _pick_scope(
         .first()
     )
     n_clean = int(probe["n"])
-    if int(probe["s"]) > _SCOPE_FRACTION * n_clean:
+    n_affected = int(probe["s"])
+    if n_affected > _SCOPE_FRACTION * n_clean:
         return whole_graph()
     nbr_s = (
         clean_new.join(s_ids.withColumnsRenamed({"vId": "src"}), "src", "left_semi")
@@ -624,7 +626,8 @@ def _pick_scope(
         ),
         "scope-vr",
     )
-    if int(vr_obs.get["n"] or 0) > _SCOPE_FRACTION * n_clean:
+    n_vr = int(vr_obs.get["n"] or 0)
+    if n_vr > _SCOPE_FRACTION * n_clean:
         mat.drop(m_ids)
         mat.drop(vr)
         return whole_graph()
@@ -653,17 +656,13 @@ def _pick_scope(
     # |V_R| (already counted by the probe's Observation) × the graph's
     # mean out-degree from two landed-state counts, no extra edge-scan
     # job.
-    est_edges = int(vr_obs.get["n"] or 0) * n_clean_edges // max(1, n_clean)
-    return _Scope(vr, scope_edges, m_ids, outer_lab, est_edges, 1)
+    est_edges = n_vr * n_clean_edges // max(1, n_clean)
+    return _Scope(
+        vr, scope_edges, m_ids, outer_lab, est_edges, 1, n_affected, n_vr
+    )
 
 
-def incremental_delete(
-    state: WCCState,
-    deleted_edges: DataFrame,
-    mat: Materializer | None = None,
-    rounds: int = INCREMENTAL_ROUNDS,
-    diag: dict | None = None,
-) -> WCCState:
+def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     """Engine extension BEYOND the reference (``IncrementalWCC`` is
     insert-only): remove an edge micro-batch and re-partition.
 
@@ -679,7 +678,7 @@ def incremental_delete(
     pruned vertices (``DistributedWCC.scala:63-78`` semantics).  The
     re-partition is ``_elect_and_refine``, the same as an insert's.
     """
-    mat = mat or Materializer(state.edges.sparkSession)
+    mat = state.mat
 
     sym = symmetrize_edges(deleted_edges)
     # only edges actually present can be deleted
@@ -777,8 +776,7 @@ def incremental_delete(
     )
     return _elect_and_refine(
         vertices, clean_new, changed_verts, tri_new, full_edges,
-        vertex_count, global_cc, mat, rounds, state.stats, state.wccv,
-        diag=diag,
+        vertex_count, global_cc, mat, state.stats, state.wccv,
         affected_comms=affected_old,
     )
 
@@ -815,6 +813,7 @@ def load_state(spark, path: str) -> WCCState:
         vertex_count=int(meta.vertex_count),
         tri=spark.read.parquet(f"{path}/tri"),
         wccv=spark.read.parquet(f"{path}/wccv"),
+        mat=Materializer(spark),
         # json omits null columns: an unset max_vertex leaves no field
         max_vertex=(
             int(meta.max_vertex)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from community_detection_flink_spark.operators.incremental import (
     WCCState,
+    incremental_delete,
     incremental_update,
     prepare,
 )
@@ -128,8 +129,10 @@ def run_edge_batches(
     all three corners below the split — a filter, not a re-enumeration
     (callers like ``__spark_entry__`` that already hold the full list
     for other queries skip the bulk pipeline's heaviest setup step).
+
+    ``mat`` goes to ``prepare``; the bulk load and every micro-batch
+    land through it (``state.mat``).
     """
-    mat = mat or Materializer(edges.sparkSession)
     max_vertex = int(edges.agg(F.max(F.greatest("src", "dst"))).first()[0])
     bulk, stream, split = split_bulk_stream(edges, bulk_to_stream_ratio)
     tri_bulk = None
@@ -139,12 +142,12 @@ def run_edge_batches(
         )
     state = prepare(bulk, mat=mat, tri=tri_bulk)
     for batch in micro_batches(stream, split, max_vertex, n_batches):
-        state = incremental_update(state, batch, mat=mat)
+        state = incremental_update(state, batch)
     state.max_vertex = max_vertex
     return state
 
 
-def apply_cdc_batch(state: WCCState, batch_df: DataFrame, mat=None) -> WCCState:
+def apply_cdc_batch(state: WCCState, batch_df: DataFrame) -> WCCState:
     """Fold ONE CDC micro-batch ``(src, dst, op)`` with op ∈
     {"I", "D", "U"} into the carried state.
 
@@ -166,12 +169,10 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame, mat=None) -> WCCState:
     need sequential replay must split the log into per-op micro-batches
     (``max_files_per_trigger=1`` over per-op files does this).  Unknown
     op codes are an ERROR, not a silent drop.
-    """
-    from community_detection_flink_spark.operators.incremental import (
-        incremental_delete,
-        incremental_update,
-    )
 
+    Each of the (up to three) batches lands through ``state.mat``, and
+    the returned state's ``report`` is the last one's.
+    """
     bad = (
         batch_df.where(
             ~F.col("op").isin("I", "D", "U") | F.col("op").isNull()
@@ -188,12 +189,12 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame, mat=None) -> WCCState:
     ins = batch_df.where("op = 'I'").select("src", "dst")
     dels = batch_df.where("op = 'D'").select("src", "dst")
     if not ups.isEmpty():
-        state = incremental_delete(state, ups, mat=mat)
+        state = incremental_delete(state, ups)
         ins = ins.union(ups)
     if not ins.isEmpty():
-        state = incremental_update(state, ins, mat=mat)
+        state = incremental_update(state, ins)
     if not dels.isEmpty():
-        state = incremental_delete(state, dels, mat=mat)
+        state = incremental_delete(state, dels)
     return state
 
 
@@ -240,7 +241,9 @@ def run_stream(
 
     Each micro-batch DataFrame (src, dst) is folded into the carried
     state; ``on_batch(state, batch_id)`` observes progress.  Returns a
-    ``StreamHandle`` — await/stop it, then read ``handle.state``.
+    ``StreamHandle`` — await/stop it, then read ``handle.state``.  Every
+    batch lands through ``initial_state.mat``, so the stream's
+    checkpoint files live where the state's lineage already does.
 
     ``cdc=True`` reads a change stream instead: schema
     (src, dst, op STRING) with op ∈ {"I", "D", "U"} — U is an upsert
@@ -249,17 +252,16 @@ def run_stream(
     explicit deletes — the natural CDC contract where a batch's deletes
     may refer to edges the same batch inserted or updated.
     """
-    mat = Materializer(spark)
     holder = {"state": initial_state}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         if cdc:
-            holder["state"] = apply_cdc_batch(holder["state"], batch_df, mat=mat)
+            holder["state"] = apply_cdc_batch(holder["state"], batch_df)
         else:
             holder["state"] = incremental_update(
-                holder["state"], batch_df.select("src", "dst"), mat=mat
+                holder["state"], batch_df.select("src", "dst")
             )
         if on_batch is not None:
             on_batch(holder["state"], batch_id)

@@ -66,9 +66,8 @@ def test_whole_graph_scope_matches_oracle(spark, monkeypatch, seed):
     ins += [tuple(sorted(rng.sample(range(36), 2))) for _ in range(6)]
     merged = sorted(set(old) | set(ins))
     want = oracle.incremental_batch(old, merged, _labels(state), INCREMENTAL_ROUNDS)
-    diag = {}
-    state = incremental_update(state, pairs_df(ins), diag=diag)
-    assert diag["n_scope_vertices"] is None  # whole-graph scope ran
+    state = incremental_update(state, pairs_df(ins))
+    assert state.report["scope_vertices"] is None  # whole-graph scope ran
     _assert_matches_oracle(state, want)
 
     # delete: the first half of the inserted edges (all in the clique)
@@ -76,9 +75,8 @@ def test_whole_graph_scope_matches_oracle(spark, monkeypatch, seed):
     dels = ins[: len(ins) // 2] + rng.sample(old, 8)
     remaining = sorted(set(merged) - set(dels))
     want = oracle.incremental_batch(merged, remaining, _labels(state), INCREMENTAL_ROUNDS)
-    diag = {}
-    state = incremental_delete(state, pairs_df(dels), diag=diag)
-    assert diag["n_scope_vertices"] is None
+    state = incremental_delete(state, pairs_df(dels))
+    assert state.report["scope_vertices"] is None
     _assert_matches_oracle(state, want)
 
 
@@ -113,20 +111,52 @@ def test_prepare_lands_only_through_its_materializer(
     spark, golden_edges, tmp_path, monkeypatch
 ):
     """Every table ``prepare`` lands goes through the Materializer it
-    was given: no default checkpoint directory appears in the temp dir."""
+    was given, and so does every later batch of the state — an insert,
+    a delete and a CDC stream batch: no default checkpoint directory
+    appears in the temp dir, and the batches' landings sit under the
+    given base dir."""
+    import os
     import tempfile
 
     from community_detection_flink_spark.plans.iteration import Materializer
+    from community_detection_flink_spark.streaming.incremental_stream import (
+        run_stream,
+    )
 
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     monkeypatch.delenv("CDFS_CHECKPOINT_DIR", raising=False)
     monkeypatch.setenv("TMPDIR", str(tmp))
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
-    mat = Materializer(spark, base_dir=str(tmp_path / "ckpt"))
+    ckpt = tmp_path / "ckpt"
+    mat = Materializer(spark, base_dir=str(ckpt))
     state = prepare(symmetrize_edges(golden_edges), mat=mat)
     assert state.vertex_count == 8
+    prepared = set(os.listdir(ckpt))
+
+    pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
+    clique = [(7, 10), (7, 11), (7, 12), (10, 11), (10, 12), (11, 12)]
+    state = incremental_update(state, pairs_df(clique))
+    state = incremental_delete(state, pairs_df([(11, 12)]))
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame(
+        [(11, 12, "I"), (0, 1, "D")], "src LONG, dst LONG, op STRING"
+    ).coalesce(1).write.parquet(str(src / "b0"))
+    handle = run_stream(
+        spark, str(src / "b0"), state, str(tmp_path / "stream-ckpt"),
+        cdc=True, max_files_per_trigger=1,
+    )
+    handle.await_termination(300)
+    assert handle.query.exception() is None
+
     assert list(tmp.glob("cdfs-ckpt-*")) == []
+    landed = set(os.listdir(ckpt)) - prepared
+    assert {"inc-newe", "del-e"} <= {p.rsplit("-", 1)[0] for p in landed}
+    # one final labeling per batch: the insert, the delete, and the CDC
+    # file's insert and delete
+    assert sum(p.startswith("inc-final") for p in landed) == 4
+    assert handle.state.mat is mat and handle.state.report is not None
 
 
 @pytest.mark.slow

@@ -109,10 +109,11 @@ def _assert_splice_exact(state):
     )
 
 
-def _whole_graph_update(monkeypatch, state, batch, **kw):
+def _whole_graph_update(monkeypatch, state, batch, rounds=inc.INCREMENTAL_ROUNDS):
     with monkeypatch.context() as m:
         m.setattr(inc, "_SCOPE_FRACTION", -1)  # the scope probe always declines
-        return incremental_update(state, batch, **kw)
+        m.setattr(inc, "INCREMENTAL_ROUNDS", rounds)
+        return incremental_update(state, batch)
 
 
 def test_scoped_locality(spark):
@@ -122,14 +123,14 @@ def test_scoped_locality(spark):
     state = prepare(_graph_df(spark))
     n_vertices = state.vertex_count
     batch = _anchored_batch(spark, [0, 1, 2], range(100, 108))
-    diag = {}
-    state = incremental_update(state, batch, diag=diag)
-    # affected = the anchor community + one singleton label per new
-    # vertex; scope = its members + boundary + their communities
-    assert diag["n_affected_comms"] <= 8 + 2  # 8 new ids + anchor slack
-    assert diag["n_scope_vertices"] < n_vertices  # strictly local
-    assert diag["n_scope_vertices"] <= 2 * 6 + 8 + 6  # ≤ ~2 communities + batch
-    assert diag["refine_rounds"] >= 1
+    state = incremental_update(state, batch)
+    report = state.report
+    # affected = the anchor community's members + the new vertices
+    # (singletons); scope = those + boundary + their communities
+    assert report["affected_vertices"] <= 6 + 8  # one 6-vertex community + 8 new
+    assert report["scope_vertices"] < n_vertices  # strictly local
+    assert report["scope_vertices"] <= 2 * 6 + 8 + 6  # ≤ ~2 communities + batch
+    assert report["rounds"] >= 1
     _assert_splice_exact(state)
 
 
@@ -221,9 +222,8 @@ def test_scoped_delete_splice_exact(spark):
         ((F.col("src") >= 100) & (F.col("src") % 2 == 0))
         | ((F.col("dst") >= 100) & (F.col("dst") % 2 == 0))
     )
-    diag = {}
-    state = incremental_delete(state, dels, diag=diag)
-    assert diag["n_scope_vertices"] is not None
+    state = incremental_delete(state, dels)
+    assert state.report["scope_vertices"] is not None
 
     assert _stats_map(state.stats) == _stats_map(_recomputed_stats(state))
     got = _wccv_map(state.wccv)
@@ -252,9 +252,8 @@ def test_scoped_delete_kills_whole_community(spark):
     dels = state.clean_edges.where(
         F.col("src").isin(dead_ids) & F.col("dst").isin(dead_ids)
     )
-    diag = {}
-    state = incremental_delete(state, dels, diag=diag)
-    assert diag["n_scope_vertices"] is not None  # scoped path engaged
+    state = incremental_delete(state, dels)
+    assert state.report["scope_vertices"] is not None  # scoped path engaged
 
     # every member reverted to a singleton
     reverted = {
@@ -330,9 +329,8 @@ def test_scoped_vs_full_on_reference_graph(spark, monkeypatch):
     state = _whole_graph_update(monkeypatch, state, b0, rounds=50)
 
     b1 = _anchored_batch(spark, [2, 3, 4], range(2100, 2110))
-    diag = {}
-    scoped = incremental_update(state, b1, diag=diag)
-    assert diag["n_scope_vertices"] is not None  # scoped path engaged
+    scoped = incremental_update(state, b1)
+    assert scoped.report["scope_vertices"] is not None  # scoped path engaged
 
     # HARD: splice exactness on the reference graph
     assert _stats_map(scoped.stats) == _stats_map(_recomputed_stats(scoped))

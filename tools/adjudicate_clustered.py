@@ -22,8 +22,8 @@ import bench
 spark = get_spark(app_name="cdfs-adjudicate", master="local[32]",
                   shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
-t_prep, t_loc, diag = bench.wcc_incremental_clustered(spark, 2000, 10)
-print(f"RESULT prepare={t_prep:.2f} localized={t_loc:.2f} diag={diag}",
+t_prep, t_loc, report = bench.wcc_incremental_clustered(spark, 2000, 10)
+print(f"RESULT prepare={t_prep:.2f} localized={t_loc:.2f} report={report}",
       flush=True)
 spark.stop()
 """
