@@ -35,7 +35,11 @@ from community_detection_flink_spark.operators.community import (
     edges_with_communities,
     vertex_community_degrees,
 )
-from community_detection_flink_spark.operators.refinement import run_wcc
+from community_detection_flink_spark.operators.refinement import (
+    Graph,
+    load_graph,
+    run_wcc,
+)
 from community_detection_flink_spark.operators import components as C
 from community_detection_flink_spark.operators import dedup as D
 from community_detection_flink_spark.operators import similarity as S
@@ -48,8 +52,7 @@ from community_detection_flink_spark.streaming import windows as W
 # shared graph state (per sf_dir, materialized once per session)
 # ----------------------------------------------------------------------
 
-_GRAPH_CACHE: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
-_TRI_CACHE: dict[str, DataFrame] = {}
+_GRAPH_CACHE: dict[str, Graph] = {}
 _WCC_CACHE: dict[str, object] = {}
 _PAIRS_CACHE: dict[str, DataFrame] = {}
 _IVF_CACHE: dict[str, object] = {}
@@ -310,28 +313,22 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _wcc(spark: SparkSession, sf_dir: str):
-    """Full WCC result, shared by wcc_communities / wcc_stats.  Reuses
-    the session-cached preprocessed graph (one triangle enumeration
-    per sf_dir, not one per query family)."""
+    """Full WCC result, shared by wcc_communities / wcc_stats.  Runs on
+    the session-cached loaded graph (one triangle enumeration per
+    sf_dir, not one per query family)."""
     if sf_dir not in _WCC_CACHE:
-        e, v, ce = _graph(spark, sf_dir)
-        _WCC_CACHE[sf_dir] = run_wcc(e, pre=(_TRI_CACHE[sf_dir], v, ce))
+        _WCC_CACHE[sf_dir] = run_wcc(_graph(spark, sf_dir))
     return _WCC_CACHE[sf_dir]
 
 
-def _graph(spark: SparkSession, sf_dir: str):
-    """(edges, clean_vertices, clean_edges) for the co-purchase graph."""
+def _graph(spark: SparkSession, sf_dir: str) -> Graph:
+    """The co-purchase graph, loaded once per sf_dir per session."""
     if sf_dir not in _GRAPH_CACHE:
-        from community_detection_flink_spark.operators.triangles import triangles
         from community_detection_flink_spark.plans.iteration import Materializer
 
-        mat = Materializer(spark)
-        edges = mat(co_purchase_edges(spark, sf_dir), "entry-edges")
-        tri = mat(triangles(edges, mat=mat), "entry-tri")
-        vertices, clean = preprocess(edges, mat=mat, tri=tri)
-        _GRAPH_CACHE[sf_dir] = (edges, mat(vertices, "entry-cv"), mat(clean, "entry-ce"))
-        _TRI_CACHE[sf_dir] = tri
-        mat.release()  # oriented-edge cache
+        _GRAPH_CACHE[sf_dir] = load_graph(
+            co_purchase_edges(spark, sf_dir), Materializer(spark)
+        )
     return _GRAPH_CACHE[sf_dir]
 
 
@@ -357,40 +354,39 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def g_edges(spark, sf):
-        e, _, _ = _graph(spark, sf)
-        return e
+        return _graph(spark, sf).edges
 
     def g_degrees(spark, sf):
-        e, _, _ = _graph(spark, sf)
+        e = _graph(spark, sf).edges
         return degrees(e).select("vId", F.col("degree").cast("long").alias("degree"))
 
     def g_triangle_counts(spark, sf):
-        e, _, _ = _graph(spark, sf)
+        e = _graph(spark, sf).edges
         return triangle_counts(e).select("vId", F.col("t").cast("long").alias("t"))
 
     def g_vertex_metrics(spark, sf):
-        _, v, _ = _graph(spark, sf)
+        v = _graph(spark, sf).vertices
         return v.select(
             "vId", F.col("t").cast("long").alias("t"),
             F.col("vt").cast("long").alias("vt"), "cc",
         )
 
     def g_community_stats(spark, sf):
-        _, v, ce = _graph(spark, sf)
-        return community_stats(_labeled(v), ce).select(
+        g = _graph(spark, sf)
+        return community_stats(_labeled(g.vertices), g.clean_edges).select(
             "cId", F.col("r").cast("long").alias("r"), "a",
             F.col("b").cast("long").alias("b"), "d",
         )
 
     def g_vertex_community_degrees(spark, sf):
-        _, v, ce = _graph(spark, sf)
-        return vertex_community_degrees(_labeled(v), ce).select(
+        g = _graph(spark, sf)
+        return vertex_community_degrees(_labeled(g.vertices), g.clean_edges).select(
             "vId", "cId", F.col("dIn").cast("long").alias("dIn")
         )
 
     def g_intra_degree(spark, sf):
-        _, v, ce = _graph(spark, sf)
-        ewc = edges_with_communities(_labeled(v), ce)
+        g = _graph(spark, sf)
+        ewc = edges_with_communities(_labeled(g.vertices), g.clean_edges)
         return (
             ewc.where(F.col("c_src") == F.col("c_dst"))
             .groupBy(F.col("src").alias("vId"))
@@ -398,8 +394,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def g_community_triangles(spark, sf):
-        _, v, ce = _graph(spark, sf)
-        ewc = edges_with_communities(_labeled(v), ce)
+        g = _graph(spark, sf)
+        ewc = edges_with_communities(_labeled(g.vertices), g.clean_edges)
         intra = ewc.where(F.col("c_src") == F.col("c_dst")).select("src", "dst")
         tri = triangles(intra)
         return (
@@ -469,9 +465,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             run_edge_batches,
         )
 
-        e, _, _ = _graph(spark, sf)
+        g = _graph(spark, sf)
+        e = g.edges
         state = run_edge_batches(
-            e, bulk_to_stream_ratio=0.8, n_batches=1, tri_full=_TRI_CACHE[sf]
+            e, bulk_to_stream_ratio=0.8, n_batches=1, tri_full=g.tri
         )
         return state.vertices.select("vId", "cId")
 
@@ -488,9 +485,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             run_edge_batches,
         )
 
-        e, _, _ = _graph(spark, sf)
+        g = _graph(spark, sf)
+        e = g.edges
         state = run_edge_batches(
-            e, bulk_to_stream_ratio=0.8, n_batches=1, tri_full=_TRI_CACHE[sf]
+            e, bulk_to_stream_ratio=0.8, n_batches=1, tri_full=g.tri
         )
         # id ceiling carried on the state (edges are symmetric, so the
         # max src run_edge_batches computed IS the global max) — no
@@ -528,21 +526,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
           semi-join deltas: an edge {a,b} dies iff an endpoint is bad
           (≥ thr and even), so a triangle survives iff NONE of its
           three corners is bad — a pure filter of the full-graph
-          triangle list, fed to a fresh ``preprocess`` of the
-          remaining edges."""
+          triangle list, fed to a fresh ``preprocess``."""
         from community_detection_flink_spark.operators.incremental import (
             incremental_delete,
-        )
-        from community_detection_flink_spark.sources.edges import (
-            symmetrize_edges,
         )
         from community_detection_flink_spark.streaming.incremental_stream import (
             run_edge_batches,
         )
 
-        e, _, _ = _graph(spark, sf)
+        g = _graph(spark, sf)
+        e = g.edges
         state = run_edge_batches(
-            e, bulk_to_stream_ratio=0.8, n_batches=1, tri_full=_TRI_CACHE[sf]
+            e, bulk_to_stream_ratio=0.8, n_batches=1, tri_full=g.tri
         )
         thr = int(state.max_vertex * 0.8)
         dels = e.where(
@@ -608,13 +603,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         edge_rows = state.edges.count()
 
         # ---- independent direct recompute of the remaining graph ----
-        remaining = e.join(
-            symmetrize_edges(dels), ["src", "dst"], "left_anti"
-        )
-        tri_direct = _TRI_CACHE[sf].where(
+        tri_direct = g.tri.where(
             ~bad("u") & ~bad("v") & ~bad("w")
         )
-        v_direct, clean_direct = preprocess(remaining, tri=tri_direct)
+        v_direct, clean_direct = preprocess(tri_direct)
         a = state.vertices.select(
             "vId",
             F.col("t").alias("ta"),
@@ -701,17 +693,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the engine's semi-join deltas: a triangle survives iff none of
         its three undirected edges matches the predicate — a pure
         filter of the full-graph triangle list fed to a fresh
-        ``preprocess`` of the remaining edges."""
+        ``preprocess``."""
         from community_detection_flink_spark.operators.incremental import (
             incremental_delete,
             prepare,
         )
-        from community_detection_flink_spark.sources.edges import (
-            symmetrize_edges,
-        )
 
-        e, _, _ = _graph(spark, sf)
-        state = prepare(e, tri=_TRI_CACHE[sf])
+        g = _graph(spark, sf)
+        e = g.edges
+        state = prepare(e, tri=g.tri)
         dels = e.where(
             ((F.col("src") + F.col("dst")) % 7 == 3)
             & (F.col("src") < F.col("dst"))
@@ -759,18 +749,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).count()
 
         # ---- independent direct recompute of the remaining graph ----
-        remaining = e.join(
-            symmetrize_edges(dels), ["src", "dst"], "left_anti"
-        )
-
         def edge_dead(a, b):
             return (F.col(a) + F.col(b)) % 7 == 3
 
-        tri_direct = _TRI_CACHE[sf].where(
+        tri_direct = g.tri.where(
             ~edge_dead("u", "v") & ~edge_dead("u", "w")
             & ~edge_dead("v", "w")
         )
-        v_direct, clean_direct = preprocess(remaining, tri=tri_direct)
+        v_direct, clean_direct = preprocess(tri_direct)
         a = state.vertices.select(
             "vId",
             F.col("t").alias("ta"),
@@ -937,7 +923,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """A1 adjacency lists, exploded to (vId, pos, neighbor) scalar
         rows so the oracle hash-check can canonicalize them (pandas
         cannot sort/hash an array<long> column)."""
-        e, _, _ = _graph(spark, sf)
+        e = _graph(spark, sf).edges
         from community_detection_flink_spark.operators.triangles import adjacency_lists
 
         return (
@@ -1516,7 +1502,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         unrolling past the diameter is exact; VERDICT r3 #4); the
         reach-closure used for ``g_components_paths`` would be
         quadratic on this dense graph."""
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return C.connected_components(edges).select(
             "vId", F.col("comp").alias("component")
         )
@@ -1608,7 +1594,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the same five power-iteration rounds unrolled as CTEs."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.pagerank(edges, iterations=5)
 
     def g_kcore(spark, sf):
@@ -1619,7 +1605,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exactly."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.k_core(edges, k=80)
 
     def rel_pivot_status(spark, sf):
@@ -1940,7 +1926,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         scorer usable on ANY partition, oracle-checked exactly."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         labels = edges.select(F.col("src").alias("vId")).distinct().withColumn(
             "cId", F.col("vId") % 10
         )
@@ -1953,7 +1939,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         depth-capped recursive CTE taking MIN(d) per vertex."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.bfs_distances(edges, max_depth=20)
 
     # ---------------- retrieval + product analytics --------------------
@@ -2221,7 +2207,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         triangle-supported wedges."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.link_scores(edges)
 
     def g_assortativity(spark, sf):
@@ -2230,7 +2216,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         global integer aggregate — bit-exact, single scalar row."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.degree_assortativity(edges)
 
     def ev_transitions(spark, sf):
@@ -2308,7 +2294,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         same 4 rounds as CTEs and hash-matches the labeling."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.label_propagation(edges, rounds=4)
 
     def emb_covariance(spark, sf):
@@ -2368,7 +2354,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         The oracle replays the identical md5 index arithmetic."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.random_walks(edges, walks_per_vertex=2, length=4)
 
     def doc_minhash_quality(spark, sf):
@@ -2443,7 +2429,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Log2-binned degree distribution of the co-purchase graph —
         the heavy-tail fingerprint every graph profile starts with;
         integer bins, exact."""
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         deg = edges.groupBy("src").agg(F.count("*").alias("dg"))
         return (
             deg.select(
@@ -2502,7 +2488,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         thresholds k ∈ {10, 50, 100}, the density φ(k) of the subgraph
         induced on vertices of degree > k — integer counts end-to-end,
         one row per threshold."""
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("dg"))
         out = None
         for kk in (10, 50, 100):
@@ -2677,7 +2663,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pytest."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.k_truss(edges, k=4)
 
     def g_snapshot_edges(spark, sf):
@@ -2748,8 +2734,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         |E|, max/avg degree, triangle count, and global transitivity
         (6·tri / Σ d(d−1) — closed-triplet fraction, exact from
         integer sums).  The graph twin of rel_profile_orders."""
-        edges, _, _ = _graph(spark, sf)
-        tri = _TRI_CACHE[sf]
+        g = _graph(spark, sf)
+        edges, tri = g.edges, g.tri
         deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("dg"))
         dstats = deg.agg(
             F.count("*").cast("long").alias("n_vertices"),
@@ -3091,7 +3077,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         MIN(d) per (landmark, vertex)."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.landmark_distances(edges, n_landmarks=4, max_depth=20)
 
     def g_centrality_approx(spark, sf):
@@ -3102,7 +3088,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         on-some-shortest-path landmark-pair count."""
         from community_detection_flink_spark.operators import graph_metrics as GM
 
-        edges, _, _ = _graph(spark, sf)
+        edges = _graph(spark, sf).edges
         return GM.approx_centrality(edges, n_landmarks=4, max_depth=20)
 
     def rel_q4_order_priority(spark, sf):

@@ -123,8 +123,8 @@ def wcc_incremental_split(
         split_bulk_stream,
     )
 
-    e, _, _ = entry_mod._graph(spark, sf_dir)
-    tri_full = entry_mod._TRI_CACHE[sf_dir]
+    graph = entry_mod._graph(spark, sf_dir)
+    e, tri_full = graph.edges, graph.tri
     t0 = time.time()
     max_vertex = int(e.agg(F.max(F.greatest("src", "dst"))).first()[0])
     bulk, stream, split = split_bulk_stream(e, 0.8)
@@ -228,8 +228,8 @@ def wcc_cdc_stream(
         split_bulk_stream,
     )
 
-    e, _, _ = entry_mod._graph(spark, sf_dir)
-    tri_full = entry_mod._TRI_CACHE[sf_dir]
+    graph = entry_mod._graph(spark, sf_dir)
+    e, tri_full = graph.edges, graph.tri
     max_vertex = int(e.agg(F.max(F.greatest("src", "dst"))).first()[0])
     bulk, stream, split = split_bulk_stream(e, 0.8)
     t0 = time.time()
@@ -364,7 +364,7 @@ def main() -> None:
     # cache-evicted re-runs), the wcc_incremental split phases, and
     # the clustered fixture.
     # Run 1 of a repeated query may include shared session-cache builds
-    # (_graph/_TRI_CACHE); the median therefore reports the
+    # (_graph); the median therefore reports the
     # steady-state cost, which is the per-query signal the
     # round-over-round comparison needs.
     REPEATS = 3
@@ -390,7 +390,6 @@ def main() -> None:
             wruns = []
             for _ in range(2):
                 entry_mod._WCC_CACHE.pop(sf_dir, None)
-                entry_mod._TRI_CACHE.pop(sf_dir, None)
                 entry_mod._GRAPH_CACHE.pop(sf_dir, None)
                 t0 = time.time()
                 n = queries[name](spark, sf_dir).count()

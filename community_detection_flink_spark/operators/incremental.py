@@ -47,16 +47,15 @@ from community_detection_flink_spark.operators.community import (
     wccv_by_community,
 )
 from community_detection_flink_spark.operators.partition import initial_partition
-from community_detection_flink_spark.operators.preprocess import preprocess
+from community_detection_flink_spark.operators.preprocess import preprocess  # noqa: F401 -- perfbench/spans.py LAYERS wraps this name
 from community_detection_flink_spark.operators.refinement import (
     FixedRounds,
+    load_graph,
     movement_rounds,
     run_wcc,
 )
-from community_detection_flink_spark.operators.triangles import (
-    triangle_edges,
-    triangles,
-)
+from community_detection_flink_spark.operators.triangles import triangle_edges
+from community_detection_flink_spark.operators.triangles import triangles  # noqa: F401 -- perfbench/spans.py LAYERS wraps this name
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
     loop_scope,
@@ -126,28 +125,20 @@ def prepare(
     """Bulk load: full batch pipeline (``IncrementalWCC.prepare`` =
     ``DistributedWCC.run``, ``IncrementalWCC.scala:73-77``).
 
-    One path: land ``edges``, enumerate their triangles (unless given),
-    land the triangle list and the preprocessed graph, and hand all of
-    it to ``run_wcc`` as ``pre`` — the cleaned graph the state carries
-    is built and landed once, and every landing goes through ``mat``
-    (default: a fresh ``Materializer``), which the returned state
-    carries for every later batch.
+    One path: ``refinement.load_graph`` lands the edges, their triangle
+    list and the cleaned graph once, and ``run_wcc`` runs on that
+    ``Graph``; the state carries its tables.  Every landing goes
+    through ``mat`` (default: a fresh ``Materializer``), which the
+    returned state carries for every later batch.
 
     ``tri``: optional pre-computed triangle list of ``edges`` (callers
     that already enumerated a supergraph's triangles can filter them
     down instead of re-enumerating — see ``run_edge_batches``)."""
     mat = mat or Materializer(edges.sparkSession)
-    edges = mat(edges, "inc-edges")
-    if tri is None:
-        tri = triangles(edges, mat=mat)
-    tri = mat(tri, "inc-tri")
-    mat.release()  # oriented-edge cache
-    pv, pc = preprocess(edges, mat=mat, tri=tri)
-    clean_e = mat(pc, "inc-clean")
-    pv = mat(pv, "inc-pre-verts")
-    res = run_wcc(edges, pre=(tri, pv, clean_e), mat=mat)
+    graph = load_graph(edges, mat, tri=tri)
+    res = run_wcc(graph, mat=mat)
     vertices = mat(
-        res.communities.join(pv, "vId", "left").select(
+        res.communities.join(graph.vertices, "vId", "left").select(
             "vId",
             F.coalesce("t", F.lit(0)).alias("t"),
             F.coalesce("vt", F.lit(0)).alias("vt"),
@@ -156,23 +147,24 @@ def prepare(
         ),
         "inc-vertices",
     )
+    mat.drop(graph.vertices)  # the state carries its columns in `vertices`
     # per-community WCC sums, carried so incremental batches can
     # re-evaluate only the communities they touch (one extra
     # community-adjacency pass here, at bulk-load time)
     clean_labeled = vertices.where(F.col("t") > 0)
-    vcd = mat.cache(community_adjacency(clean_labeled, clean_e), "prep-vcd")
+    vcd = mat.cache(community_adjacency(clean_labeled, graph.clean_edges), "prep-vcd")
     wccv = mat(
-        wccv_by_community(clean_labeled, res.stats, vcd, tri), "inc-wccv"
+        wccv_by_community(clean_labeled, res.stats, vcd, graph.tri), "inc-wccv"
     )
     mat.release()
     return WCCState(
-        edges=edges,
-        clean_edges=clean_e,
+        edges=graph.edges,
+        clean_edges=graph.clean_edges,
         vertices=vertices,
         stats=res.stats,
         global_wcc=res.global_wcc,
         vertex_count=res.vertex_count,
-        tri=tri,
+        tri=graph.tri,
         wccv=wccv,
         mat=mat,
     )
@@ -406,9 +398,7 @@ def _elect_and_refine(
             elect_verts.select(F.col("vId").alias("src")), "src", "left_semi"
         ).join(elect_verts.select(F.col("vId").alias("dst")), "dst", "left_semi")
     )
-    local = initial_partition(
-        elect_verts, elect_edges, mat=mat, edge_count=n_clean_edges
-    )
+    local = initial_partition(elect_verts, elect_edges, n_clean_edges, mat)
     keep = clean_all.join(
         affected_comms, "cId", "left_anti"
     ).select("vId", "t", "vt", "cc", "cId")

@@ -54,19 +54,19 @@ def _ord(cc_name, vt_name, id_name):
 def initial_partition(
     vertices: DataFrame,
     clean_edges: DataFrame,
+    edge_count: int,
+    mat: Materializer,
     max_iterations: int = MAX_ITERATIONS,
-    mat: Materializer | None = None,
-    edge_count: int | None = None,
 ) -> DataFrame:
     """Return ``vertices`` + ``cId`` column (center election result).
 
-    ``edge_count`` (optional): known (or upper-bound) row count of
-    ``clean_edges``, used only to size the loop's shuffle width.  Pass
-    it when ``clean_edges`` is an unlanded plan — the default
-    ``count()`` would execute the whole plan once just for sizing
-    (r13; the incremental election hands in the carried clean-edge
-    count instead of re-running its scoped semi-joins)."""
-    mat = mat or Materializer(vertices.sparkSession)
+    ``edge_count``: known (or upper-bound) row count of ``clean_edges``,
+    used only to size the loop's shuffle width — the carried count
+    (``refinement.Graph.clean_edge_count``, or the incremental batch's
+    clean-edge count), so no job runs for it.
+
+    The returned plan reads a ``mis-centers`` landing that ``mat`` frees
+    at its next ``release()``: land the partition before that."""
     v = vertices.select("vId", "t", "vt", "cc")
 
     key = v.select("vId", "cc", "vt")
@@ -130,10 +130,8 @@ def initial_partition(
     # multiplies the driver-blocking job count here (see plans.no_aqe;
     # r9 A/B at sf0.1: wall unchanged, per-round job count collapses).
     # Loop width (r11, VERDICT r10 #4): plans.loop_width sized on the
-    # landed clean-edge count (a parquet metadata read — run_wcc lands
-    # clean_edges before calling here).
-    n_edges = clean_edges.count() if edge_count is None else int(edge_count)
-    with loop_scope(vertices.sparkSession, n_edges, 4):
+    # carried clean-edge count.
+    with loop_scope(vertices.sparkSession, edge_count, 4):
         undecided = mat(v.select("vId"), "mis-undec")
         undec_files.append(undecided)
         # r13 MEASURED NEGATIVE (record): chaining TWO rounds per
@@ -183,8 +181,9 @@ def initial_partition(
         for part in center_parts[1:]:
             centers = centers.unionByName(part)
         # land the union while the frontier caches and undecided files
-        # its plan reads are alive, then free all of them
-        centers = mat(centers, "mis-centers")
+        # its plan reads are alive, then free all of them; the returned
+        # plan reads the landing until the caller's release()
+        centers = mat.scratch(centers, "mis-centers")
     for df in frontier_caches:
         df.unpersist(False)
     for df in undec_files:

@@ -18,30 +18,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from community_detection_flink_spark.functions.wcc_metric import cc_col
-from community_detection_flink_spark.operators.triangles import (
-    triangles,
-    triangle_edges,
-)
+from community_detection_flink_spark.operators.triangles import triangle_edges
 
 
-def preprocess(
-    edges: DataFrame, mat=None, tri: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Return ``(vertices, clean_edges)``.
+def preprocess(tri: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Return ``(vertices, clean_edges)`` of the graph whose triangle
+    list (``triangles.triangles``) is ``tri``.
 
     ``vertices``: vId, t, vt, cc — only vertices with t > 0
     (``DistributedWCC.scala:110``).
     ``clean_edges``: doubled-edge set restricted to triangle edges
     (``DistributedWCC.scala:111``).
-
-    ``tri``: optional pre-materialized triangle list (``run_wcc`` shares
-    one enumeration with the refinement loop); enumerated here if
-    absent, with ``mat`` caching it across its two consumers.
     """
-    if tri is None:
-        tri = triangles(edges, mat=mat)
-        if mat is not None:
-            tri = mat.cache(tri, "tri")
     clean_edges = triangle_edges(tri)
 
     t = (

@@ -46,12 +46,67 @@ class WCCResult:
     global_cc: float
     vertex_count: int
     iterations: int
+    # where the returned plans' landings live (the caller's Materializer,
+    # or the one ``run_wcc`` made); free them with ``res.mat.cleanup()``
+    mat: Materializer
     # global-WCC value of the initial partition followed by every
     # ACCEPTED refinement round, in order — strictly increasing by
     # construction of the accept-if-improved loop; recorded so the
     # monotonicity invariant (SURVEY §5.4) is gate-checkable, not just
     # asserted in tests
     wcc_history: list | None = None
+
+
+@dataclass(frozen=True)
+class Graph:
+    """A graph landed by ``load_graph``: its tables, and the two counts
+    that rode their landings."""
+
+    edges: DataFrame  # the symmetrized doubled-edge set
+    tri: DataFrame  # u, v, w — every triangle of ``edges`` once
+    vertices: DataFrame  # vId, t, vt, cc — the clean vertices (t > 0)
+    clean_edges: DataFrame  # the triangle edges, doubled
+    clean_edge_count: int  # |E_clean|
+    cc_sum: float  # Σcc over ``vertices``
+
+
+def load_graph(
+    edges: DataFrame, mat: Materializer, tri: DataFrame | None = None
+) -> Graph:
+    """Land ``edges`` and their cleaned graph once
+    (``DistributedWCC.preprocess``, ``DistributedWCC.scala:88-130``):
+    land the edges, enumerate their triangles (unless ``tri`` is given)
+    and land them, then land ``preprocess``'s clean edges and clean
+    vertices.  One triangle enumeration serves preprocessing AND every
+    later WCC evaluation: the clean edges keep every triangle edge, so
+    triangles(clean) == triangles(full).
+
+    |E_clean| rides the clean-edge landing and Σcc the vertex landing
+    as Observations — no extra job.  Every table lands through ``mat``;
+    freeing them is the caller's.
+
+    ``tri``: a triangle list of ``edges`` the caller already has (e.g.
+    filtered down from a supergraph's, see ``run_edge_batches``).
+    """
+    edges = mat(edges, "edges")
+    if tri is None:
+        tri = triangles(edges, mat=mat)
+    tri = mat(tri, "tri")
+    mat.release()  # oriented-edge cache
+    vertices, clean_edges = preprocess(tri)
+    n_obs, cc_obs = Observation(), Observation()
+    clean_edges = mat(
+        clean_edges.observe(n_obs, F.count(F.lit(1)).alias("n")), "clean-edges"
+    )
+    vertices = mat(vertices.observe(cc_obs, F.sum("cc").alias("s")), "clean-vertices")
+    return Graph(
+        edges=edges,
+        tri=tri,
+        vertices=vertices,
+        clean_edges=clean_edges,
+        clean_edge_count=int(n_obs.get["n"]),
+        cc_sum=float(cc_obs.get["s"] or 0.0),
+    )
 
 
 class AcceptIfImproved:
@@ -224,16 +279,16 @@ def movement_rounds(
 
 def refine_partition(
     vertices: DataFrame,
-    clean_edges: DataFrame,
+    graph: Graph,
     vertex_count: int,
-    tri: DataFrame,
+    mat: Materializer,
     max_retries: int = MAX_RETRIES,
     threshold: float = THRESHOLD,
-    mat: Materializer | None = None,
     history: list | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float, int]:
     """Run the accept-if-improved movement loop (``movement_rounds``
-    with ``AcceptIfImproved``).
+    with ``AcceptIfImproved``) from the labeling ``vertices`` over
+    ``graph``'s clean edges.
 
     Planned NON-adaptive at the loop width (r10, ``plans.loop_scope``,
     floor 4): every loop input is a Materializer-landed parquet (true
@@ -246,32 +301,31 @@ def refine_partition(
 
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
-    round's WCC (driver-side floats the loop computes anyway).
-    ``tri`` (static triangle list of ``clean_edges``) makes the
+    round's WCC (driver-side floats the loop computes anyway).  The
+    loop width and the global CC come from ``graph``'s carried counts.
+    ``graph.tri`` (static triangle list of the clean edges) makes the
     per-round tC pass three joins + one aggregate (see
-    ``intra_triangle_counts``).  An already-landed input is not landed
-    again, and is never dropped.
+    ``intra_triangle_counts``).  ``vertices`` must be a landing of
+    ``mat`` (``run_wcc``'s ``init``); it is never dropped.
     """
-    mat = mat or Materializer(vertices.sparkSession)
-    with loop_scope(vertices.sparkSession, clean_edges.count(), 4):
+    with loop_scope(vertices.sparkSession, graph.clean_edge_count, 4):
         # the static triangle list is scanned once per round by the WCC
         # eval — persist it for the loop like loop_edges below (r12),
         # unless the caller already has (the exit unpersist must never
         # drop a caller's cache)
+        tri = graph.tri
         tri_persisted = not tri.is_cached
         if tri_persisted:
             tri = tri.persist()
-        global_cc_total = vertices.agg(F.sum("cc").alias("s")).first()["s"] or 0.0
-        global_cc = float(global_cc_total) / float(vertex_count)  # DistributedWCC.scala:261-262
+        global_cc = graph.cc_sum / float(vertex_count)  # DistributedWCC.scala:261-262
         # One src-hash shuffle up front, reused every round: the label
         # maps broadcast, so the triplets build preserves this
         # partitioning and the per-src aggregations (vcd, vtC) and
         # vId-keyed joins downstream need no further exchange.
-        loop_edges = clean_edges.repartition("src").persist()
-        start = vertices if mat.is_landed(vertices) else mat(vertices, "best")
+        loop_edges = graph.clean_edges.repartition("src").persist()
         policy = AcceptIfImproved(vertex_count, tri, max_retries, threshold, history)
         best, best_vcd, best_cs, rounds = movement_rounds(
-            start, loop_edges, global_cc, vertex_count, mat, policy
+            vertices, loop_edges, global_cc, vertex_count, mat, policy
         )
         # the returned stats must outlive the caches they derive from
         final_cs = mat(best_cs, "cs-final")
@@ -283,10 +337,9 @@ def refine_partition(
 
 
 def run_wcc(
-    edges: DataFrame,
+    edges: DataFrame | Graph,
     max_retries: int = MAX_RETRIES,
     threshold: float = THRESHOLD,
-    pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     mat: Materializer | None = None,
 ) -> WCCResult:
     """E1/E3 — full batch WCC community detection.
@@ -297,25 +350,28 @@ def run_wcc(
     pruned in preprocessing keep their own singleton community in the
     final result (``DistributedWCC.scala:63-78``).
 
-    One pipeline: land ``edges``, enumerate and land their triangles,
-    land the cleaned graph, elect the initial partition, refine.  What
-    it lands along the way is dropped on return; only the communities
-    and the stats are handed back.
+    One pipeline: ``load_graph``, elect the initial partition, refine.
+    What it lands along the way is dropped on return; the returned
+    communities and stats read landings of ``mat`` (default: a fresh
+    ``Materializer``), which the result carries as ``res.mat``.
 
-    ``pre``: optional already-MATERIALIZED ``(tri, clean_vertices,
-    clean_edges)`` for these edges, which replaces the first three
-    steps — callers that need the cleaned graph themselves
-    (``__spark_entry__._graph``, the incremental ``prepare``) build it
-    once and keep ownership of it.  ``edges`` must itself be
-    materialized then (it is re-scanned for the vertex set).
+    ``edges`` may instead be a ``Graph`` the caller already loaded
+    (``__spark_entry__._graph``, the incremental ``prepare``): it
+    replaces the load step and stays the caller's — ``run_wcc`` frees
+    only what it loaded itself.
     """
-    mat = mat or Materializer(edges.sparkSession)
-    if pre is None:
-        edges = mat(edges, "edges")
-    all_vertices = edges.select(F.col("src").alias("vId")).distinct()
+    loaded = isinstance(edges, Graph)
+    mat = mat or Materializer((edges.edges if loaded else edges).sparkSession)
+    graph = edges if loaded else load_graph(edges, mat)
+    # only `edges` (it feeds all_vertices), `best` and `best_cs` survive
+    # into the returned plans
+    owned = [] if loaded else [graph.tri, graph.clean_edges, graph.vertices]
+    all_vertices = graph.edges.select(F.col("src").alias("vId")).distinct()
     vertex_count = all_vertices.count()
     if vertex_count == 0:
-        empty = edges.sparkSession.createDataFrame
+        for df in owned:
+            mat.drop(df)
+        empty = mat.spark.createDataFrame
         return WCCResult(
             communities=empty([], "vId LONG, cId LONG"),
             stats=empty([], "cId LONG, r INT, a DOUBLE, b LONG, d DOUBLE"),
@@ -323,37 +379,24 @@ def run_wcc(
             global_cc=0.0,
             vertex_count=0,
             iterations=0,
+            mat=mat,
         )
 
-    # One triangle enumeration serves preprocessing AND every refinement
-    # round (tC via the static-list join): clean_edges keeps every
-    # triangle edge, so triangles(clean) == triangles(full).
-    if pre is not None:
-        tri, vertices, clean_edges = pre
-    else:
-        tri = mat(triangles(edges, mat=mat), "tri")
-        mat.release()  # oriented-edge cache
-        vertices, clean_edges = preprocess(edges, mat=mat, tri=tri)
-        clean_edges = mat(clean_edges, "clean-edges")
-        vertices = mat(vertices, "clean-vertices")
-    init = mat(initial_partition(vertices, clean_edges, mat=mat), "init")
-    mat.release()  # MIS "higher" edge cache
+    init = mat(
+        initial_partition(
+            graph.vertices, graph.clean_edges, graph.clean_edge_count, mat
+        ),
+        "init",
+    )
+    mat.release()  # MIS "higher" edge cache and "mis-centers" landing
 
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
-        init, clean_edges, vertex_count, tri, max_retries, threshold, mat=mat,
-        history=history,
+        init, graph, vertex_count, mat, max_retries, threshold, history=history,
     )
-    # only `edges` (feeds all_vertices), `best`, and `best_cs` survive
-    # into the returned plans — free the pipeline intermediates
-    # (caller-owned `pre` artifacts are never touched)
-    # best IS init when the loop accepted no round (refine_partition no
-    # longer re-lands an already-landed input, r13) — the returned
+    # best IS init when the loop accepted no round — the returned
     # communities plan still reads init's files then
-    superseded = [init] if best is not init else []
-    if pre is None:
-        superseded += [tri, clean_edges, vertices]
-    for df in superseded:
+    for df in owned + ([init] if best is not init else []):
         mat.drop(df)
 
     communities = all_vertices.join(best.select("vId", "cId"), "vId", "left").select(
@@ -366,5 +409,6 @@ def run_wcc(
         global_cc=global_cc,
         vertex_count=vertex_count,
         iterations=rounds,
+        mat=mat,
         wcc_history=history,
     )

@@ -237,10 +237,22 @@ class Materializer:
         self._ephemeral.append(df)
         return df
 
+    def scratch(self, df: DataFrame, name: str = "tmp") -> DataFrame:
+        """Parquet landing for a WITHIN-round temporary: a ``cache``
+        whose plan must be truncated.  Like ``cache``'s entries, it is
+        freed at the next ``release()``."""
+        out = self(df, name)
+        self._ephemeral.append(out)
+        return out
+
     def release(self) -> None:
-        """Unpersist all ephemeral caches registered since the last call."""
+        """Free all ephemeral caches and scratch landings registered
+        since the last call."""
         for df in self._ephemeral:
-            df.unpersist(False)
+            if self.is_landed(df):
+                self.drop(df)
+            else:
+                df.unpersist(False)
         self._ephemeral.clear()
 
     def cleanup(self) -> None:

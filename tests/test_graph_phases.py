@@ -13,6 +13,8 @@ from community_detection_flink_spark.operators.triangles import (
 from community_detection_flink_spark.operators.preprocess import preprocess
 from community_detection_flink_spark.operators.partition import initial_partition
 from community_detection_flink_spark.operators.community import community_stats
+from community_detection_flink_spark.operators.refinement import load_graph
+from community_detection_flink_spark.plans.iteration import Materializer
 
 
 def test_symmetrize(spark):
@@ -46,7 +48,7 @@ def test_triangle_counts(golden_edges):
 
 def test_preprocess_drops_bridge(golden_edges):
     e = symmetrize_edges(golden_edges)
-    vertices, clean = preprocess(e)
+    vertices, clean = preprocess(triangles(e))
     vd = {r["vId"]: r for r in vertices.collect()}
     assert set(vd) == set(range(8))
     for v in range(8):
@@ -59,20 +61,32 @@ def test_preprocess_drops_bridge(golden_edges):
     assert len(pairs) == 24  # 2 cliques * 6 undirected edges * 2 dirs
 
 
-def test_initial_partition_elects_max_id(golden_edges):
-    e = symmetrize_edges(golden_edges)
-    vertices, clean = preprocess(e)
-    part = initial_partition(vertices, clean)
+def test_load_graph_carries_counts(spark, golden_edges, tmp_path):
+    """|E_clean| and Σcc ride load_graph's landings; they equal a count
+    and a sum over the landed tables, also for an empty edge set."""
+    mat = Materializer(spark, base_dir=str(tmp_path))
+    g = load_graph(symmetrize_edges(golden_edges), mat)
+    assert g.clean_edge_count == g.clean_edges.count() == 24
+    assert g.cc_sum == g.vertices.agg(F.sum("cc")).first()[0] == 8.0
+    empty = load_graph(spark.createDataFrame([], "src LONG, dst LONG"), mat)
+    assert empty.clean_edges.count() == 0
+    assert (empty.clean_edge_count, empty.cc_sum) == (0, 0.0)
+
+
+def test_initial_partition_elects_max_id(spark, golden_edges, tmp_path):
+    mat = Materializer(spark, base_dir=str(tmp_path))
+    g = load_graph(symmetrize_edges(golden_edges), mat)
+    part = initial_partition(g.vertices, g.clean_edges, g.clean_edge_count, mat)
     got = {r["vId"]: r["cId"] for r in part.collect()}
     # all cc equal, all vt equal → order decided by vId: 3 and 7 centers
     assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
 
 
-def test_community_stats(golden_edges):
-    e = symmetrize_edges(golden_edges)
-    vertices, clean = preprocess(e)
-    part = initial_partition(vertices, clean)
-    stats = {r["cId"]: r for r in community_stats(part, clean).collect()}
+def test_community_stats(spark, golden_edges, tmp_path):
+    mat = Materializer(spark, base_dir=str(tmp_path))
+    g = load_graph(symmetrize_edges(golden_edges), mat)
+    part = initial_partition(g.vertices, g.clean_edges, g.clean_edge_count, mat)
+    stats = {r["cId"]: r for r in community_stats(part, g.clean_edges).collect()}
     assert set(stats) == {3, 7}
     for c in (3, 7):
         assert stats[c]["r"] == 4

@@ -17,6 +17,7 @@ from community_detection_flink_spark.operators.incremental import (
     prepare,
 )
 from community_detection_flink_spark.operators.preprocess import preprocess
+from community_detection_flink_spark.operators.triangles import triangles
 from community_detection_flink_spark.streaming.incremental_stream import (
     run_edge_batches,
     split_bulk_stream,
@@ -95,7 +96,7 @@ def test_incremental_triangles_match_batch(spark):
     merged = symmetrize_edges(
         spark.createDataFrame(all_edges, "src LONG, dst LONG")
     )
-    bv, be = preprocess(merged)
+    bv, be = preprocess(triangles(merged))
     batch_metrics = {r["vId"]: (r["t"], r["vt"]) for r in bv.collect()}
     inc_metrics = {
         r["vId"]: (r["t"], r["vt"])
@@ -151,6 +152,8 @@ def test_prepare_lands_only_through_its_materializer(
     assert handle.query.exception() is None
 
     assert list(tmp.glob("cdfs-ckpt-*")) == []
+    # each election's centers landing is freed once its partition landed
+    assert not any(p.startswith("mis-centers") for p in os.listdir(ckpt))
     landed = set(os.listdir(ckpt)) - prepared
     assert {"inc-newe", "del-e"} <= {p.rsplit("-", 1)[0] for p in landed}
     # one final labeling per batch: the insert, the delete, and the CDC

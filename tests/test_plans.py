@@ -38,6 +38,7 @@ def test_small_dim_join_broadcasts(spark):
 def test_wcc_operators_stay_jvm_side(spark, golden_edges, tmp_path):
     from community_detection_flink_spark.sources.edges import symmetrize_edges
     from community_detection_flink_spark.operators.preprocess import preprocess
+    from community_detection_flink_spark.operators.triangles import triangles
     from community_detection_flink_spark.operators.community import (
         best_movement,
         community_adjacency,
@@ -46,7 +47,7 @@ def test_wcc_operators_stay_jvm_side(spark, golden_edges, tmp_path):
     from community_detection_flink_spark.plans.iteration import Materializer
 
     e = symmetrize_edges(golden_edges)
-    vertices, clean = preprocess(e)
+    vertices, clean = preprocess(triangles(e))
     assert python_eval_nodes(vertices) == []
     assert python_eval_nodes(clean) == []
     part = vertices.withColumn("cId", F.col("vId"))

@@ -43,7 +43,6 @@ HEAVY_ACTION_AT_CONSTRUCTION = {
 
 
 @pytest.mark.slow
-@pytest.mark.slow
 def test_no_array_or_map_output_columns(spark):
     qs = entry_mod.queries()
     offenders = []

@@ -21,7 +21,7 @@ from community_detection_flink_spark.operators.community import (
     community_stats,
 )
 from community_detection_flink_spark.operators.partition import initial_partition
-from community_detection_flink_spark.operators.preprocess import preprocess
+from community_detection_flink_spark.operators.refinement import load_graph
 from community_detection_flink_spark.plans.explain import join_strategies
 from community_detection_flink_spark.plans.iteration import Materializer, no_aqe
 from community_detection_flink_spark.sources.edges import co_purchase_edges
@@ -31,13 +31,13 @@ SF = "/root/testdata/sf0.001"
 
 def test_movement_plan_broadcasts_stats(spark):
     mat = Materializer(spark)
-    edges = mat(co_purchase_edges(spark, SF), "edges")
-    vertex_count = edges.select("src").distinct().count()
-    vertices, clean = preprocess(edges, mat=mat)
-    clean = mat(clean, "clean")
-    init = mat(initial_partition(vertices, clean, mat=mat), "init")
+    g = load_graph(co_purchase_edges(spark, SF), mat)
+    vertex_count = g.edges.select("src").distinct().count()
+    init = mat(
+        initial_partition(g.vertices, g.clean_edges, g.clean_edge_count, mat), "init"
+    )
     mat.release()
-    loop_edges = clean.repartition("src")
+    loop_edges = g.clean_edges.repartition("src")
     with no_aqe(spark):
         vcd = mat.cache(community_adjacency(init, loop_edges), "vcd")
         cs = community_stats(init, loop_edges, vcd=vcd).persist()

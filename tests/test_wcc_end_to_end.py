@@ -17,6 +17,28 @@ def test_bridged_cliques(golden_edges):
     assert res.global_cc == 1.0  # every vertex has cc == 1
 
 
+def test_run_wcc_owns_its_checkpoint_dir(golden_edges, tmp_path, monkeypatch):
+    """Without a Materializer, ``run_wcc`` lands everything under the one
+    it makes, and the result carries it: only the landings the returned
+    plans read are left, and ``res.mat.cleanup()`` frees the dir."""
+    import os
+    import tempfile
+
+    monkeypatch.delenv("CDFS_CHECKPOINT_DIR", raising=False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    res = run_wcc(symmetrize_edges(golden_edges))
+    assert [p.name for p in tmp_path.glob("cdfs-ckpt-*")] == [
+        os.path.basename(res.mat.base)
+    ]
+    live = {p.rsplit("-", 1)[0] for p in os.listdir(res.mat.base)}
+    assert "edges" in live and "cs-final" in live
+    assert live <= {"edges", "init", "moved", "cs-final"}  # no mis-centers
+    got = {r["vId"]: r["cId"] for r in res.communities.collect()}
+    assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
+    res.mat.cleanup()
+    assert list(tmp_path.glob("cdfs-ckpt-*")) == []
+
+
 def test_invariants_on_random_graph(spark):
     """SBM-ish random graph: structural invariants of the result."""
     import random
