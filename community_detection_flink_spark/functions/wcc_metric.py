@@ -1,10 +1,15 @@
-"""WCC metric kernels (SURVEY.md §2.8) as Spark Column expressions.
+"""WCC metric kernels (SURVEY.md §2.8): Spark Column expressions and
+their numpy twins.
 
 Pure math from the DWCC paper (arXiv:1411.0557), mirrored from the
-reference's ``WCCMetric.scala`` — expressed as JVM-side column
-expressions so the whole refinement loop stays inside whole-stage
-codegen (no Python in the hot path).  A plain-Python mirror of each
-kernel is provided for unit tests.
+reference's ``WCCMetric.scala`` — expressed twice:
+
+* as JVM-side column expressions, so the distributed refinement loop
+  stays inside whole-stage codegen (no Python evaluation in it);
+* as numpy twins (``np_*``), the same operations in the same order
+  over float64 arrays, which the small-state tier
+  (``operators/task_tier.py``) runs inside one Arrow-batched pandas
+  task when a loop's whole state fits there.
 
 Faithfulness decisions (documented per SURVEY.md §7):
 
@@ -25,8 +30,7 @@ Faithfulness decisions (documented per SURVEY.md §7):
 
 from __future__ import annotations
 
-import math
-
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -118,58 +122,69 @@ def wcc_r_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
 
 
 # ----------------------------------------------------------------------
-# Plain-Python mirrors (unit-test oracles for the column expressions)
+# numpy twins, for the small-state tier's task (operators/task_tier.py).
+# Each is the column expression above, operation for operation in the
+# same order, over float64 arrays.  NULL is NaN: ``_np_div`` maps /0 to
+# it, and NaN propagates through ``+``/``*`` and fails every ``>``, as
+# NULL does through the Spark kernels.  (Spark would order a computed
+# NaN above every number, but on graph-sized finite inputs the only
+# NaN these formulas make is the /0 one, which is NULL on both sides.)
 # ----------------------------------------------------------------------
 
-def py_cc(t: int, vt: int) -> float:
-    if vt < 2:
-        return 0.0
-    return 2.0 * t / (vt * (vt - 1))
+def _np_div(num, den):
+    """``try_divide``: num / den, NaN where den == 0."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0.0, np.nan, np.true_divide(num, den))
 
 
-def py_wcc_v(t: int, vt: int, r: int, vtC: int, tC: int) -> float:
-    if t == 0:
-        return 0.0
-    return (tC * vt) / (t * (r - 1 + vt - vtC))
+def np_wcc_v(t, vt, r, vtC, tC):
+    t, vt, r, vtC, tC = (np.asarray(x, dtype=np.float64) for x in (t, vt, r, vtC, tC))
+    return np.where(t == 0, 0.0, _np_div(tC * vt, t * (r - 1.0 + vt - vtC)))
 
 
-def _py_theta1(r, d, dIn, dOut, w, q):
-    num = ((r - 1) * d + 1 + q) * (dIn - 1) * d
+def _np_theta1(r, d, dIn, dOut, w, q):
+    num = ((r - 1.0) * d + 1.0 + q) * (dIn - 1.0) * d
     den = (
-        (r + q) * ((r - 1) * (r - 2)) * d ** 3
-        + (dIn - 1) * d
-        + q * (q - 1) * d * w
-        + q * (q - 1) * w
+        (r + q) * ((r - 1.0) * (r - 2.0)) * np.power(d, 3.0)
+        + (dIn - 1.0) * d
+        + q * (q - 1.0) * d * w
+        + q * (q - 1.0) * w
         + dOut
         + w
     )
-    return num / den
+    return _np_div(num, den)
 
 
-def _py_theta2(r, d, w, q):
-    num = (r - 1) * (r - 2) * d ** 3 * ((r - 1) * d + q)
-    den = ((r - 1) * (r - 2) * d ** 3 + q * (q - 1) * w + q * (r - 1) * d * w) * (r + q) * (
-        r - 1 + q
+def _np_theta2(r, d, w, q):
+    num = (r - 1.0) * (r - 2.0) * np.power(d, 3.0) * ((r - 1.0) * d + q)
+    den = (
+        ((r - 1.0) * (r - 2.0) * np.power(d, 3.0) + q * (q - 1.0) * w + q * (r - 1.0) * d * w)
+        * (r + q)
+        * (r - 1.0 + q)
     )
-    return -(num / den)
+    return -_np_div(num, den)
 
 
-def _py_theta3(r, d, dIn, dOut, w):
-    num = (dIn * (dIn - 1) * d) * (dIn + dOut)
-    den = (dIn * (dIn - 1) * d + dOut * (dOut - 1) * w + 2 * dOut * dIn * w) * (r + dOut)
-    return num / den
+def _np_theta3(r, d, dIn, dOut, w):
+    num = (dIn * (dIn - 1.0) * d) * (dIn + dOut)
+    den = (dIn * (dIn - 1.0) * d + dOut * (dOut - 1.0) * w + 2.0 * dOut * dIn * w) * (r + dOut)
+    return _np_div(num, den)
 
 
-def py_wcc_i(r: float, a: float, b: float, dIn: float, dOut: float, w: float, v: float) -> float:
-    d = 2.0 * a / math.pow(r, 2)
-    q = (b - dIn) / r
-    t1 = _py_theta1(r, d, dIn, dOut, w, q)
-    t2 = _py_theta2(r, d, w, q)
-    t3 = _py_theta3(r, d, dIn, dOut, w)
-    return (dIn * t1 + (r - dIn) * t2 + t3) / v
+def np_wcc_i(r, a, b, dIn, dOut, w, v):
+    r, a, b, dIn, dOut, w, v = (
+        np.asarray(x, dtype=np.float64) for x in (r, a, b, dIn, dOut, w, v)
+    )
+    with np.errstate(divide="ignore", invalid="ignore"):
+        d = 2.0 * a / np.power(r, 2.0)
+        q = (b - dIn) / r
+        t1 = _np_theta1(r, d, dIn, dOut, w, q)
+        t2 = _np_theta2(r, d, w, q)
+        t3 = _np_theta3(r, d, dIn, dOut, w)
+        return (dIn * t1 + (r - dIn) * t2 + t3) / v
 
 
-def py_wcc_r(r: float, a: float, b: float, dIn: float, dOut: float, w: float, v: float) -> float:
-    if r == 1:
-        return 0.0
-    return -py_wcc_i(r - 1, a - dIn, b + dIn - dOut, dIn, dOut, w, v)
+def np_wcc_r(r, a, b, dIn, dOut, w, v):
+    r, a, b, dIn, dOut = (np.asarray(x, dtype=np.float64) for x in (r, a, b, dIn, dOut))
+    removed = np_wcc_i(r - 1.0, a - dIn, b + dIn - dOut, dIn, dOut, w, v)
+    return np.where(r == 1, 0.0, -removed)

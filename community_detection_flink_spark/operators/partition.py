@@ -12,11 +12,13 @@ partition over the total vertex order (cc, vt, vId)
     (``DistributedWCC.scala:187-198``).
 
 PySpark has no Pregel (GraphX is JVM-only), so we compute the same
-fixed point with an iterative DataFrame loop — the SURVEY.md M4
-fallback.  Each round decides every vertex whose higher-ordered
-neighborhood is fully decided, so rounds = longest strictly-increasing
-path among undecided chains (small for real graphs); capped at 50 like
-the reference.
+fixed point with one of two loops.  When the clean graph fits one task
+(``operators/task_tier.py``), every round runs inside one Arrow-batched
+pandas task over arrays; otherwise, with an iterative DataFrame loop —
+the SURVEY.md M4 fallback.  Each round decides every vertex whose
+higher-ordered neighborhood is fully decided, so rounds = longest
+strictly-increasing path among undecided chains (small for real
+graphs); capped at 50 like the reference.
 
 Scale discipline: the "is my neighbor higher-ordered?" join is computed
 ONCE (the order never changes); the loop then operates on a FRONTIER —
@@ -32,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from community_detection_flink_spark.operators import task_tier
 from community_detection_flink_spark.plans.iteration import (
     Materializer,
     loop_scope,
@@ -57,17 +60,27 @@ def initial_partition(
     edge_count: int,
     mat: Materializer,
     max_iterations: int = MAX_ITERATIONS,
+    report: dict | None = None,
 ) -> DataFrame:
     """Return ``vertices`` + ``cId`` column (center election result).
 
-    ``edge_count``: known (or upper-bound) row count of ``clean_edges``,
-    used only to size the loop's shuffle width — the carried count
-    (``refinement.Graph.clean_edge_count``, or the incremental batch's
-    clean-edge count), so no job runs for it.
+    ``edge_count``: known (or upper-bound) row count of ``clean_edges``
+    — the carried count (``refinement.Graph.clean_edge_count``, or the
+    incremental batch's clean-edge count), so no job runs for it.  It
+    picks the loop (``task_tier.fits``) and sizes the Spark loop's
+    shuffle width.  ``report``, if given, receives ``election``: the
+    loop that ran, "task" or "spark".
 
-    The returned plan reads a ``mis-centers`` landing that ``mat`` frees
-    at its next ``release()``: land the partition before that."""
+    The task loop's plan is the whole election, run by the caller's
+    landing.  The Spark loop's returned plan reads a ``mis-centers``
+    landing that ``mat`` frees at its next ``release()``: land the
+    partition before that."""
     v = vertices.select("vId", "t", "vt", "cc")
+    loop = "task" if task_tier.fits(edge_count) else "spark"
+    if report is not None:
+        report["election"] = loop
+    if loop == "task":
+        return task_tier.elect(v, clean_edges, max_iterations)
 
     key = v.select("vId", "cc", "vt")
     ew = (

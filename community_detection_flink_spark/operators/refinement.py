@@ -6,14 +6,18 @@ best-movement pass iff it improves global WCC; a relative improvement
 > threshold (0.01) resets the retry budget (maxRetries = 5,
 ``DistributedWCC.scala:27-29``).
 
-Iterative-Spark discipline the reference lacks (its Flink version
-recomputes lineage and forces ``count()``s, ``DistributedWCC.scala:317``):
-every accepted state is materialized through ``plans.Materializer``
-(parquet round-trip — truncates lineage AND resets Catalyst's
-compounding join-size statistics; see ``plans/iteration.py`` for why
-``localCheckpoint`` is pathological here), and superseded state is
-simply dropped.  Only O(1) scalars (the WCC value) ever reach the
-driver.
+Two loops, one protocol (``movement_rounds``): when the loop's state
+fits one task (``operators/task_tier.py``), every round runs inside ONE
+Arrow-batched pandas task with the numpy twins of the kernels and the
+kept labeling lands once; otherwise each round is a chain of Spark
+jobs with the iterative-Spark discipline the reference lacks (its
+Flink version recomputes lineage and forces ``count()``s,
+``DistributedWCC.scala:317``): every accepted state is materialized
+through ``plans.Materializer`` (parquet round-trip — truncates lineage
+AND resets Catalyst's compounding join-size statistics; see
+``plans/iteration.py`` for why ``localCheckpoint`` is pathological
+here), and superseded state is simply dropped.  Either way only O(1)
+scalars (the WCC values, the per-round move counts) reach the driver.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from community_detection_flink_spark.operators import task_tier
 from community_detection_flink_spark.operators.community import (
     best_movement,
     community_adjacency,
@@ -55,6 +60,11 @@ class WCCResult:
     # monotonicity invariant (SURVEY §5.4) is gate-checkable, not just
     # asserted in tests
     wcc_history: list | None = None
+    # what the run did, from values it has anyway (no job): ``rounds``,
+    # ``moves`` (vertices moved in each round) and which loop ran each
+    # phase, ``election`` and ``refinement`` ("task" = the small-state
+    # tier, "spark" = the distributed loop)
+    report: dict | None = None
 
 
 @dataclass(frozen=True)
@@ -68,6 +78,7 @@ class Graph:
     clean_edges: DataFrame  # the triangle edges, doubled
     clean_edge_count: int  # |E_clean|
     cc_sum: float  # Σcc over ``vertices``
+    tri_count: int  # |tri|
 
 
 def load_graph(
@@ -81,9 +92,9 @@ def load_graph(
     later WCC evaluation: the clean edges keep every triangle edge, so
     triangles(clean) == triangles(full).
 
-    |E_clean| rides the clean-edge landing and Σcc the vertex landing
-    as Observations — no extra job.  Every table lands through ``mat``;
-    freeing them is the caller's.
+    |tri| rides the triangle landing, |E_clean| the clean-edge landing
+    and Σcc the vertex landing, as Observations — no extra job.  Every
+    table lands through ``mat``; freeing them is the caller's.
 
     ``tri``: a triangle list of ``edges`` the caller already has (e.g.
     filtered down from a supergraph's, see ``run_edge_batches``).
@@ -91,10 +102,10 @@ def load_graph(
     edges = mat(edges, "edges")
     if tri is None:
         tri = triangles(edges, mat=mat)
-    tri = mat(tri, "tri")
+    t_obs, n_obs, cc_obs = Observation(), Observation(), Observation()
+    tri = mat(tri.observe(t_obs, F.count(F.lit(1)).alias("n")), "tri")
     mat.release()  # oriented-edge cache
     vertices, clean_edges = preprocess(tri)
-    n_obs, cc_obs = Observation(), Observation()
     clean_edges = mat(
         clean_edges.observe(n_obs, F.count(F.lit(1)).alias("n")), "clean-edges"
     )
@@ -106,6 +117,7 @@ def load_graph(
         clean_edges=clean_edges,
         clean_edge_count=int(n_obs.get["n"]),
         cc_sum=float(cc_obs.get["s"] or 0.0),
+        tri_count=int(t_obs.get["n"]),
     )
 
 
@@ -115,10 +127,17 @@ class AcceptIfImproved:
     retry, and a relative gain > ``threshold`` refills the budget.
 
     ``wcc`` is the kept labeling's global WCC.  ``history``, if given,
-    receives it for the input labeling and for every kept round.  Each
-    evaluation is one job, which also fills the labeling's persisted
-    adjacency and stats caches for the next movement pass.
+    receives it for the input labeling and for every kept round.  On
+    the Spark loop each evaluation is one job, which also fills the
+    labeling's persisted adjacency and stats caches for the next
+    movement pass.
+
+    The rule itself is ``start``/``keep`` over WCC floats: the Spark
+    loop's ``begin``/``accept`` evaluate and call it, and the task tier
+    runs it inside its task on a ``rule()`` copy.
     """
+
+    evaluates = True  # the rule reads each round's global WCC
 
     def __init__(self, vertex_count, tri, max_retries, threshold, history=None):
         self.vertex_count, self.tri = vertex_count, tri
@@ -127,18 +146,31 @@ class AcceptIfImproved:
         self.history = [] if history is None else history
         self.wcc = 0.0
 
+    def rule(self) -> AcceptIfImproved:
+        """This policy without its DataFrame: what a task runs."""
+        return AcceptIfImproved(
+            self.vertex_count, None, self.max_retries, self.threshold
+        )
+
     def _eval(self, labels, vcd, cs) -> float:
         return global_wcc(labels, cs, vcd, self.tri, self.vertex_count)
 
     def begin(self, labels, vcd, cs) -> None:
-        self.wcc = self._eval(labels, vcd, cs)
-        self.history.append(self.wcc)
+        self.start(self._eval(labels, vcd, cs))
+
+    def accept(self, labels, vcd, cs) -> bool:
+        return self.keep(self._eval(labels, vcd, cs))
 
     def more(self, rounds: int) -> bool:
         return self.retries > 0
 
-    def accept(self, labels, vcd, cs) -> bool:
-        wcc = self._eval(labels, vcd, cs)
+    def start(self, wcc: float) -> None:
+        """The input labeling's WCC."""
+        self.wcc = wcc
+        self.history.append(wcc)
+
+    def keep(self, wcc: float) -> bool:
+        """Spend a retry on a round of WCC ``wcc``; True iff it is kept."""
         self.retries -= 1
         if not wcc > self.wcc:
             return False
@@ -160,14 +192,24 @@ class FixedRounds:
     ``movement_rounds``' 0-move stop skips them."""
 
     cap: int
+    evaluates = False
+
+    def rule(self) -> FixedRounds:
+        return self
 
     def begin(self, labels, vcd, cs) -> None:
         pass
 
+    def accept(self, labels, vcd, cs) -> bool:
+        return True
+
     def more(self, rounds: int) -> bool:
         return rounds < self.cap
 
-    def accept(self, labels, vcd, cs) -> bool:
+    def start(self, wcc) -> None:
+        pass
+
+    def keep(self, wcc) -> bool:
         return True
 
 
@@ -201,10 +243,21 @@ def movement_rounds(
     vertex_count: int,
     mat: Materializer,
     policy,
+    state_rows: int,
     candidates: DataFrame | None = None,
     outer_labels: DataFrame | None = None,
+    report: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """The movement-round protocol every refinement loop shares.
+    """The movement-round protocol every refinement loop shares, on one
+    of two loops.
+
+    ``state_rows`` — the rows of the loop's state, known without a job
+    (``edges``, plus the policy's triangles when it evaluates WCC) —
+    picks the loop.  Under ``task_tier.TASK_ROWS`` every round runs in
+    one task (``task_tier.run_rounds``): the same protocol below on
+    arrays, the kept labeling landed once as ``moved``, and the policy
+    brought up to date from the WCCs that ride that landing.  Otherwise
+    the rounds run as Spark jobs:
 
     Per labeling, ONE pass over the triplets: the two label joins feed
     the ``community_adjacency`` aggregate ``(vId, c_own, cId, dIn)``,
@@ -231,7 +284,9 @@ def movement_rounds(
     this inside ``plans.loop_scope``.  Returns ``(labels, vcd, cs,
     rounds)`` with the kept labeling's caches still persisted (the
     caller unpersists them after its tail); ``rounds`` counts the
-    landed rounds.  The input labeling is never dropped.
+    movement passes run.  The input labeling is never dropped.
+    ``report``, if given, receives ``moves`` (vertices moved in each
+    round) and ``refinement`` (the loop that ran: "task" or "spark").
     """
 
     def caches(lab: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -241,6 +296,21 @@ def movement_rounds(
         vcd = community_adjacency(both, edges).persist()
         return vcd, community_stats(lab, edges, vcd=vcd).persist()
 
+    report = {} if report is None else report
+    if task_tier.fits(state_rows):
+        cur, moves, wccs = task_tier.run_rounds(
+            labels, edges, global_cc, vertex_count, mat, policy.rule(),
+            candidates, outer_labels, policy.tri if policy.evaluates else None,
+        )
+        if wccs:  # replay the task's decisions: same rule, same state
+            policy.start(wccs[0])
+            for wcc in wccs[1:]:
+                policy.keep(wcc)
+        vcd, cs = caches(cur)
+        report.update(moves=moves, refinement="task")
+        return cur, vcd, cs, len(moves)
+
+    report.update(moves=[], refinement="spark")
     cur = labels
     vcd, cs = caches(cur)
     policy.begin(cur, vcd, cs)
@@ -260,6 +330,7 @@ def movement_rounds(
         nxt = mat(moved, "moved")
         mat.release()
         rounds += 1
+        report["moves"].append(obs.get["moves"])
         if obs.get["moves"] == 0:
             mat.drop(nxt)
             break
@@ -285,6 +356,7 @@ def refine_partition(
     max_retries: int = MAX_RETRIES,
     threshold: float = THRESHOLD,
     history: list | None = None,
+    report: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float, int]:
     """Run the accept-if-improved movement loop (``movement_rounds``
     with ``AcceptIfImproved``) from the labeling ``vertices`` over
@@ -301,8 +373,10 @@ def refine_partition(
 
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
-    round's WCC (driver-side floats the loop computes anyway).  The
-    loop width and the global CC come from ``graph``'s carried counts.
+    round's WCC (driver-side floats the loop computes anyway);
+    ``report``, if given, what ``movement_rounds`` reports.  The loop
+    width, the loop choice and the global CC come from ``graph``'s
+    carried counts.
     ``graph.tri`` (static triangle list of the clean edges) makes the
     per-round tC pass three joins + one aggregate (see
     ``intra_triangle_counts``).  ``vertices`` must be a landing of
@@ -325,7 +399,8 @@ def refine_partition(
         loop_edges = graph.clean_edges.repartition("src").persist()
         policy = AcceptIfImproved(vertex_count, tri, max_retries, threshold, history)
         best, best_vcd, best_cs, rounds = movement_rounds(
-            vertices, loop_edges, global_cc, vertex_count, mat, policy
+            vertices, loop_edges, global_cc, vertex_count, mat, policy,
+            graph.clean_edge_count + graph.tri_count, report=report,
         )
         # the returned stats must outlive the caches they derive from
         final_cs = mat(best_cs, "cs-final")
@@ -382,9 +457,11 @@ def run_wcc(
             mat=mat,
         )
 
+    report: dict = {}
     init = mat(
         initial_partition(
-            graph.vertices, graph.clean_edges, graph.clean_edge_count, mat
+            graph.vertices, graph.clean_edges, graph.clean_edge_count, mat,
+            report=report,
         ),
         "init",
     )
@@ -392,9 +469,10 @@ def run_wcc(
 
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
-        init, graph, vertex_count, mat, max_retries, threshold, history=history,
+        init, graph, vertex_count, mat, max_retries, threshold,
+        history=history, report=report,
     )
-    # best IS init when the loop accepted no round — the returned
+    # best IS init when the Spark loop kept no round — the returned
     # communities plan still reads init's files then
     for df in owned + ([init] if best is not init else []):
         mat.drop(df)
@@ -411,4 +489,5 @@ def run_wcc(
         iterations=rounds,
         mat=mat,
         wcc_history=history,
+        report=dict(report, rounds=rounds),
     )

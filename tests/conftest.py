@@ -5,6 +5,8 @@ import tempfile
 import pytest
 from pyspark.sql import SparkSession
 
+from community_detection_flink_spark.operators import task_tier
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -45,3 +47,19 @@ def golden_edges(spark):
         cliques += [(a, b) for a in ids for b in ids if a < b]
     cliques.append((3, 4))
     return spark.createDataFrame(cliques, "src LONG, dst LONG")
+
+
+@pytest.fixture()
+def each_loop(monkeypatch):
+    """Run a test body once per WCC loop: ``for loop in each_loop():``
+    yields "task" (the small-state tier) and then "spark" (the
+    distributed loop, forced by a 0-row tier threshold).  Tests assert
+    through the run's report that the loop they asked for ran."""
+
+    def loops():
+        yield "task"
+        # undone at the test's teardown, whether or not the body failed
+        monkeypatch.setattr(task_tier, "TASK_ROWS", 0)
+        yield "spark"
+
+    return loops

@@ -73,13 +73,18 @@ def test_load_graph_carries_counts(spark, golden_edges, tmp_path):
     assert (empty.clean_edge_count, empty.cc_sum) == (0, 0.0)
 
 
-def test_initial_partition_elects_max_id(spark, golden_edges, tmp_path):
+def test_initial_partition_elects_max_id(spark, golden_edges, tmp_path, each_loop):
     mat = Materializer(spark, base_dir=str(tmp_path))
     g = load_graph(symmetrize_edges(golden_edges), mat)
-    part = initial_partition(g.vertices, g.clean_edges, g.clean_edge_count, mat)
-    got = {r["vId"]: r["cId"] for r in part.collect()}
-    # all cc equal, all vt equal → order decided by vId: 3 and 7 centers
-    assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
+    for loop in each_loop():
+        report = {}
+        part = initial_partition(
+            g.vertices, g.clean_edges, g.clean_edge_count, mat, report=report
+        )
+        got = {r["vId"]: r["cId"] for r in part.collect()}
+        assert report["election"] == loop
+        # all cc equal, all vt equal → order decided by vId: 3 and 7 centers
+        assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
 
 
 def test_community_stats(spark, golden_edges, tmp_path):

@@ -50,35 +50,39 @@ def _assert_matches_oracle(state, want):
 
 
 @pytest.mark.parametrize("seed", [5, 19])
-def test_whole_graph_scope_matches_oracle(spark, monkeypatch, seed):
+def test_whole_graph_scope_matches_oracle(spark, monkeypatch, seed, each_loop):
     """The whole-graph refinement scope of one insert batch and one
     delete batch equals the plain-Python reference
-    (``pywcc_oracle.incremental_batch``) exactly, label for label."""
+    (``pywcc_oracle.incremental_batch``) exactly, label for label, on
+    both loops."""
     monkeypatch.setattr(inc, "_SCOPE_FRACTION", -1)  # probe always declines
-    rng = random.Random(seed)
     old = _random_graph(n=36, communities=3, p_in=0.6, p_out=0.05, seed=seed)
     pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
-    state = prepare(symmetrize_edges(pairs_df(old)))
+    for loop in each_loop():
+        rng = random.Random(seed)
+        state = prepare(symmetrize_edges(pairs_df(old)))
 
-    # insert: a clique over three anchors of one part and four new
-    # vertices, plus random edges between existing vertices
-    nodes = sorted(rng.sample(range(12), 3)) + list(range(100, 104))
-    ins = [(u, v) for i, u in enumerate(nodes) for v in nodes[i + 1 :]]
-    ins += [tuple(sorted(rng.sample(range(36), 2))) for _ in range(6)]
-    merged = sorted(set(old) | set(ins))
-    want = oracle.incremental_batch(old, merged, _labels(state), INCREMENTAL_ROUNDS)
-    state = incremental_update(state, pairs_df(ins))
-    assert state.report["scope_vertices"] is None  # whole-graph scope ran
-    _assert_matches_oracle(state, want)
+        # insert: a clique over three anchors of one part and four new
+        # vertices, plus random edges between existing vertices
+        nodes = sorted(rng.sample(range(12), 3)) + list(range(100, 104))
+        ins = [(u, v) for i, u in enumerate(nodes) for v in nodes[i + 1 :]]
+        ins += [tuple(sorted(rng.sample(range(36), 2))) for _ in range(6)]
+        merged = sorted(set(old) | set(ins))
+        want = oracle.incremental_batch(old, merged, _labels(state), INCREMENTAL_ROUNDS)
+        state = incremental_update(state, pairs_df(ins))
+        assert state.report["scope_vertices"] is None  # whole-graph scope ran
+        assert (state.report["election"], state.report["refinement"]) == (loop, loop)
+        _assert_matches_oracle(state, want)
 
-    # delete: the first half of the inserted edges (all in the clique)
-    # and a sample of the old edges
-    dels = ins[: len(ins) // 2] + rng.sample(old, 8)
-    remaining = sorted(set(merged) - set(dels))
-    want = oracle.incremental_batch(merged, remaining, _labels(state), INCREMENTAL_ROUNDS)
-    state = incremental_delete(state, pairs_df(dels))
-    assert state.report["scope_vertices"] is None
-    _assert_matches_oracle(state, want)
+        # delete: the first half of the inserted edges (all in the clique)
+        # and a sample of the old edges
+        dels = ins[: len(ins) // 2] + rng.sample(old, 8)
+        remaining = sorted(set(merged) - set(dels))
+        want = oracle.incremental_batch(merged, remaining, _labels(state), INCREMENTAL_ROUNDS)
+        state = incremental_delete(state, pairs_df(dels))
+        assert state.report["scope_vertices"] is None
+        assert (state.report["election"], state.report["refinement"]) == (loop, loop)
+        _assert_matches_oracle(state, want)
 
 
 def test_incremental_triangles_match_batch(spark):

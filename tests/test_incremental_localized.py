@@ -116,22 +116,24 @@ def _whole_graph_update(monkeypatch, state, batch, rounds=inc.INCREMENTAL_ROUNDS
         return incremental_update(state, batch)
 
 
-def test_scoped_locality(spark):
+def test_scoped_locality(spark, each_loop):
     """A batch anchored in one community must scope to a small
     neighborhood — not the graph — and the carried-stat splice must
-    equal a from-scratch recomputation."""
-    state = prepare(_graph_df(spark))
-    n_vertices = state.vertex_count
-    batch = _anchored_batch(spark, [0, 1, 2], range(100, 108))
-    state = incremental_update(state, batch)
-    report = state.report
-    # affected = the anchor community's members + the new vertices
-    # (singletons); scope = those + boundary + their communities
-    assert report["affected_vertices"] <= 6 + 8  # one 6-vertex community + 8 new
-    assert report["scope_vertices"] < n_vertices  # strictly local
-    assert report["scope_vertices"] <= 2 * 6 + 8 + 6  # ≤ ~2 communities + batch
-    assert report["rounds"] >= 1
-    _assert_splice_exact(state)
+    equal a from-scratch recomputation, on both loops."""
+    for loop in each_loop():
+        state = prepare(_graph_df(spark))
+        n_vertices = state.vertex_count
+        batch = _anchored_batch(spark, [0, 1, 2], range(100, 108))
+        state = incremental_update(state, batch)
+        report = state.report
+        # affected = the anchor community's members + the new vertices
+        # (singletons); scope = those + boundary + their communities
+        assert report["affected_vertices"] <= 6 + 8  # one 6-vertex community + 8 new
+        assert report["scope_vertices"] < n_vertices  # strictly local
+        assert report["scope_vertices"] <= 2 * 6 + 8 + 6  # ≤ ~2 communities + batch
+        assert report["rounds"] >= 1
+        assert (report["election"], report["refinement"]) == (loop, loop)
+        _assert_splice_exact(state)
 
 
 def test_empty_state_grows_by_insert(spark):
@@ -211,27 +213,30 @@ def test_scoped_matches_full_after_convergence(spark, monkeypatch):
 
 
 @pytest.mark.slow
-def test_scoped_delete_splice_exact(spark):
+def test_scoped_delete_splice_exact(spark, each_loop):
     """The delete path's scoped splice (pre-delete affected labels,
-    singleton reversions) stays exact against recomputation."""
-    state = prepare(_graph_df(spark))
-    batch = _anchored_batch(spark, [0, 1, 2], range(100, 108))
-    state = incremental_update(state, batch)
-    # delete every batch edge incident to an even new vertex
-    dels = batch.where(
-        ((F.col("src") >= 100) & (F.col("src") % 2 == 0))
-        | ((F.col("dst") >= 100) & (F.col("dst") % 2 == 0))
-    )
-    state = incremental_delete(state, dels)
-    assert state.report["scope_vertices"] is not None
+    singleton reversions) stays exact against recomputation, on both
+    loops."""
+    for loop in each_loop():
+        state = prepare(_graph_df(spark))
+        batch = _anchored_batch(spark, [0, 1, 2], range(100, 108))
+        state = incremental_update(state, batch)
+        # delete every batch edge incident to an even new vertex
+        dels = batch.where(
+            ((F.col("src") >= 100) & (F.col("src") % 2 == 0))
+            | ((F.col("dst") >= 100) & (F.col("dst") % 2 == 0))
+        )
+        state = incremental_delete(state, dels)
+        assert state.report["scope_vertices"] is not None
+        assert (state.report["election"], state.report["refinement"]) == (loop, loop)
 
-    assert _stats_map(state.stats) == _stats_map(_recomputed_stats(state))
-    got = _wccv_map(state.wccv)
-    want = _wccv_map(_recomputed_wccv(state))
-    assert set(got) == set(want)
-    for c, (s, n) in want.items():
-        assert got[c][1] == n
-        assert math.isclose(got[c][0], s, rel_tol=1e-9, abs_tol=1e-12)
+        assert _stats_map(state.stats) == _stats_map(_recomputed_stats(state))
+        got = _wccv_map(state.wccv)
+        want = _wccv_map(_recomputed_wccv(state))
+        assert set(got) == set(want)
+        for c, (s, n) in want.items():
+            assert got[c][1] == n
+            assert math.isclose(got[c][0], s, rel_tol=1e-9, abs_tol=1e-12)
 
 
 @pytest.mark.slow

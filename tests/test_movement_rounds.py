@@ -5,7 +5,8 @@ file is read.  Starting from the reference's own initial partition, the
 fixed-round policy must reproduce, label for label and round for round,
 iterating ``pywcc_oracle.best_movement`` with its 0-move stop; the
 candidate variant with every clean vertex as a candidate must reproduce
-the unscoped run.
+the unscoped run.  Each test runs on both loops (``each_loop``): the
+small-state tier's task and the Spark rounds.
 """
 
 from __future__ import annotations
@@ -80,7 +81,7 @@ def _reference_rounds(clean, labels, global_cc, vertex_count):
     return labels, rounds
 
 
-def _engine_rounds(spark, pairs, candidates_all: bool):
+def _engine_rounds(spark, pairs, candidates_all: bool, loop: str):
     clean, t, vt, cc, labels, global_cc, vertex_count = _setup(pairs)
     mat = Materializer(spark)
     vertices = mat(
@@ -94,11 +95,13 @@ def _engine_rounds(spark, pairs, candidates_all: bool):
         [(v, u) for v in sorted(clean) for u in sorted(clean[v])], "src LONG, dst LONG"
     ).repartition("src").persist()
     candidates = vertices.select("vId") if candidates_all else None
+    report = {}
     try:
-        with loop_scope(spark, edges.count(), 4):
+        n_edges = edges.count()
+        with loop_scope(spark, n_edges, 4):
             cur, vcd, cs, rounds = movement_rounds(
                 vertices, edges, global_cc, vertex_count, mat, FixedRounds(CAP),
-                candidates=candidates,
+                n_edges, candidates=candidates, report=report,
             )
             got = {r["vId"]: r["cId"] for r in cur.select("vId", "cId").collect()}
         vcd.unpersist()
@@ -106,21 +109,25 @@ def _engine_rounds(spark, pairs, candidates_all: bool):
     finally:
         edges.unpersist()
         mat.cleanup()
+    assert report["refinement"] == loop
+    assert len(report["moves"]) == rounds
     return got, rounds
 
 
 @pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_fixed_rounds_match_reference(spark, name):
+def test_fixed_rounds_match_reference(spark, name, each_loop):
     pairs = GRAPHS[name]
     clean, _, _, _, labels, global_cc, vertex_count = _setup(pairs)
     want, want_rounds = _reference_rounds(clean, labels, global_cc, vertex_count)
-    got, rounds = _engine_rounds(spark, pairs, candidates_all=False)
-    assert rounds == want_rounds
-    assert got == want
+    for loop in each_loop():
+        got, rounds = _engine_rounds(spark, pairs, candidates_all=False, loop=loop)
+        assert rounds == want_rounds
+        assert got == want
 
 
-def test_all_candidates_match_unscoped(spark):
+def test_all_candidates_match_unscoped(spark, each_loop):
     pairs = GRAPHS["ring_of_cliques"]
-    unscoped = _engine_rounds(spark, pairs, candidates_all=False)
-    scoped = _engine_rounds(spark, pairs, candidates_all=True)
-    assert scoped == unscoped
+    for loop in each_loop():
+        unscoped = _engine_rounds(spark, pairs, candidates_all=False, loop=loop)
+        scoped = _engine_rounds(spark, pairs, candidates_all=True, loop=loop)
+        assert scoped == unscoped

@@ -59,6 +59,33 @@ def test_wcc_operators_stay_jvm_side(spark, golden_edges, tmp_path):
     assert python_eval_nodes(mv) == []
 
 
+def test_task_tier_is_one_arrow_grouped_task(spark, golden_edges, tmp_path):
+    """The small-state tier's plans (the election, and the movement
+    rounds with their WCC evaluations) each hold exactly one
+    Arrow-batched grouped pandas node and no row-at-a-time
+    BatchEvalPython."""
+    from community_detection_flink_spark.operators import task_tier
+    from community_detection_flink_spark.operators.refinement import (
+        AcceptIfImproved,
+        load_graph,
+    )
+    from community_detection_flink_spark.plans.iteration import Materializer
+    from community_detection_flink_spark.sources.edges import symmetrize_edges
+
+    mat = Materializer(spark, base_dir=str(tmp_path))
+    g = load_graph(symmetrize_edges(golden_edges), mat)
+    init = task_tier.elect(g.vertices, g.clean_edges, 50)
+    moved = task_tier.rounds(
+        mat(init, "init"), g.clean_edges, 0.3, 8,
+        AcceptIfImproved(8, None, 5, 0.01), tri=g.tri,
+    )
+    for df in (init, moved):
+        physical = df._jdf.queryExecution().executedPlan().toString()
+        assert physical.count("FlatMapGroupsInPandas") == 1
+        assert "BatchEvalPython" not in physical
+        assert python_eval_nodes(df) == ["FlatMapGroupsInPandas"]
+
+
 def test_extension_operators_stay_jvm_side(spark):
     from community_detection_flink_spark.operators import dedup as D
     from community_detection_flink_spark.operators import similarity as S

@@ -69,7 +69,7 @@ def test_differential_snap_graph(spark):
 
 
 @pytest.mark.skipif(not os.path.exists(SF001), reason="testdata absent")
-def test_differential_sf001_copurchase(spark):
+def test_differential_sf001_copurchase(spark, each_loop):
     from community_detection_flink_spark.operators.refinement import run_wcc
     from community_detection_flink_spark.sources.edges import co_purchase_edges
 
@@ -92,5 +92,48 @@ def test_differential_sf001_copurchase(spark):
                 pairs.append((a, b))
     ora = run_wcc_oracle(pairs)
 
-    res = run_wcc(co_purchase_edges(spark, SF001))
+    for loop in each_loop():
+        res = run_wcc(co_purchase_edges(spark, SF001))
+        assert (res.report["election"], res.report["refinement"]) == (loop, loop)
+        assert len(res.report["moves"]) == res.iterations
+        _assert_same_result(res, ora)
+
+
+@pytest.mark.slow
+def test_differential_above_task_threshold(spark):
+    """A generated graph whose clean edge set alone reaches
+    ``task_tier.TASK_ROWS`` takes the distributed loop for BOTH the
+    election and the refinement (the report says so), and its labels
+    still equal the oracle's — the Spark loops stay certified on a
+    graph the default threshold sends to them."""
+    import random
+
+    from community_detection_flink_spark.operators import task_tier
+    from community_detection_flink_spark.operators.refinement import run_wcc
+    from community_detection_flink_spark.sources.edges import symmetrize_edges
+
+    # planted clusters of 20 at p_in 0.4 keep ~140 doubled clean edges
+    # each, with sparse random links between clusters
+    size, n_clusters = 20, task_tier.TASK_ROWS // 130 + 1
+    rng = random.Random(8)
+    pairs = set()
+    for c in range(n_clusters):
+        base = c * size
+        pairs |= {
+            (base + i, base + j)
+            for i in range(size)
+            for j in range(i + 1, size)
+            if rng.random() < 0.4
+        }
+    n = n_clusters * size
+    for _ in range(n // 4):
+        u, v = rng.randrange(n), rng.randrange(n)
+        if u != v:
+            pairs.add((min(u, v), max(u, v)))
+    pairs = sorted(pairs)
+    ora = run_wcc_oracle(pairs)
+
+    res = run_wcc(symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG")))
+    assert (res.report["election"], res.report["refinement"]) == ("spark", "spark")
     _assert_same_result(res, ora)
+    res.mat.cleanup()
