@@ -1,15 +1,19 @@
-"""WCC metric kernels (SURVEY.md §2.8): Spark Column expressions and
-their numpy twins.
+"""WCC metric kernels (SURVEY.md §2.8), each formula written once.
 
 Pure math from the DWCC paper (arXiv:1411.0557), mirrored from the
-reference's ``WCCMetric.scala`` — expressed twice:
+reference's ``WCCMetric.scala``.  Each formula (``wcc_v``, ``theta1``-
+``theta3``, ``wcc_i``, ``wcc_r``) takes a ``Backend`` — how to cast an
+operand to float64, divide (NULL/NaN on /0) and select — and runs on
+either of two:
 
-* as JVM-side column expressions, so the distributed refinement loop
-  stays inside whole-stage codegen (no Python evaluation in it);
-* as numpy twins (``np_*``), the same operations in the same order
-  over float64 arrays, which the small-state tier
-  (``operators/task_tier.py``) runs inside one Arrow-batched pandas
-  task when a loop's whole state fits there.
+* ``COLUMNS``: JVM-side column expressions (``*_col``), so the
+  distributed refinement loop stays inside whole-stage codegen (no
+  Python evaluation in it);
+* ``ARRAYS``: float64 numpy arrays (``np_*``), which the small-state
+  tier (``operators/task_tier.py``) runs inside one Arrow-batched
+  pandas task when a loop's whole state fits there.
+
+Both run the same operations in the same order.
 
 Faithfulness decisions (documented per SURVEY.md §7):
 
@@ -30,11 +34,33 @@ Faithfulness decisions (documented per SURVEY.md §7):
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-D = lambda x: F.lit(float(x)) if isinstance(x, (int, float)) else x  # noqa: E731
+
+class Backend(NamedTuple):
+    """What a kernel formula needs from the values it computes over."""
+
+    num: Callable  # an operand as float64
+    div: Callable  # num / den, NULL (NaN) where den == 0
+    where: Callable  # where(cond, constant, otherwise)
+
+
+def _np_div(num, den):
+    """``try_divide`` on arrays: num / den, NaN where den == 0."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0.0, np.nan, np.true_divide(num, den))
+
+
+COLUMNS = Backend(
+    lambda c: c.cast("double"),
+    F.try_divide,
+    lambda cond, yes, no: F.when(cond, F.lit(yes)).otherwise(no),
+)
+ARRAYS = Backend(lambda x: np.asarray(x, dtype=np.float64), _np_div, np.where)
 
 
 def cc_col(t: Column, vt: Column) -> Column:
@@ -46,145 +72,108 @@ def cc_col(t: Column, vt: Column) -> Column:
     )
 
 
-def wcc_v_col(t: Column, vt: Column, r: Column, vtC: Column, tC: Column) -> Column:
+# ----------------------------------------------------------------------
+# The formulas, each written once.  ``k`` is the backend; the guards
+# (t == 0, r == 1) read the operands as given, the arithmetic their
+# ``k.num`` casts.
+# ----------------------------------------------------------------------
+
+def wcc_v(k: Backend, t, vt, r, vtC, tC):
     """Per-vertex WCC against its community (``WCCMetric.scala:16-21``).
 
     wccV = (tC * vt) / (t * (r - 1 + vt - vtC)), 0 when t == 0.
     """
-    num = tC.cast("double") * vt.cast("double")
-    den = t.cast("double") * (r.cast("double") - 1.0 + vt.cast("double") - vtC.cast("double"))
-    return F.when(t == 0, F.lit(0.0)).otherwise(F.try_divide(num, den))
+    f = k.num
+    return k.where(t == 0, 0.0, k.div(f(tC) * f(vt), f(t) * (f(r) - 1.0 + f(vt) - f(vtC))))
 
 
-def _theta1(r, d, dIn, dOut, w, q) -> Column:
+def theta1(k: Backend, r, d, dIn, dOut, w, q):
     num = ((r - 1.0) * d + 1.0 + q) * (dIn - 1.0) * d
     den = (
-        (r + q) * ((r - 1.0) * (r - 2.0)) * F.pow(d, 3.0)
+        (r + q) * ((r - 1.0) * (r - 2.0)) * d ** 3.0
         + (dIn - 1.0) * d
         + q * (q - 1.0) * d * w
         + q * (q - 1.0) * w
         + dOut
         + w
     )
-    return F.try_divide(num, den)
+    return k.div(num, den)
 
 
-def _theta2(r, d, w, q) -> Column:
-    num = (r - 1.0) * (r - 2.0) * F.pow(d, 3.0) * ((r - 1.0) * d + q)
+def theta2(k: Backend, r, d, w, q):
+    num = (r - 1.0) * (r - 2.0) * d ** 3.0 * ((r - 1.0) * d + q)
     den = (
-        ((r - 1.0) * (r - 2.0) * F.pow(d, 3.0) + q * (q - 1.0) * w + q * (r - 1.0) * d * w)
+        ((r - 1.0) * (r - 2.0) * d ** 3.0 + q * (q - 1.0) * w + q * (r - 1.0) * d * w)
         * (r + q)
         * (r - 1.0 + q)
     )
-    return -F.try_divide(num, den)
+    return -k.div(num, den)
 
 
-def _theta3(r, d, dIn, dOut, w) -> Column:
+def theta3(k: Backend, r, d, dIn, dOut, w):
     num = (dIn * (dIn - 1.0) * d) * (dIn + dOut)
     den = (dIn * (dIn - 1.0) * d + dOut * (dOut - 1.0) * w + 2.0 * dOut * dIn * w) * (r + dOut)
-    return F.try_divide(num, den)
+    return k.div(num, den)
 
 
-def wcc_i_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
-              global_cc: Column, vertex_count: Column) -> Column:
+def wcc_i(k: Backend, r, a, b, dIn, dOut, w, v):
     """Closed-form WCC delta of inserting a vertex into a community.
 
     (``WCCMetric.scala:23-30``).  ``r/a/b`` are the community's size /
     internal / external edge counts; ``d`` (density 2a/r²,
     ``CommunityData.scala:13``) is derived here.
     """
-    r = r.cast("double")
-    a = a.cast("double")
-    b = b.cast("double")
-    dIn = dIn.cast("double")
-    dOut = dOut.cast("double")
-    w = global_cc.cast("double")
-    v = vertex_count.cast("double")
-    d = 2.0 * a / F.pow(r, 2.0)
+    r, a, b, dIn, dOut, w, v = map(k.num, (r, a, b, dIn, dOut, w, v))
+    d = 2.0 * a / r ** 2.0
     q = (b - dIn) / r
-    t1 = _theta1(r, d, dIn, dOut, w, q)
-    t2 = _theta2(r, d, w, q)
-    t3 = _theta3(r, d, dIn, dOut, w)
+    t1 = theta1(k, r, d, dIn, dOut, w, q)
+    t2 = theta2(k, r, d, w, q)
+    t3 = theta3(k, r, d, dIn, dOut, w)
     return (dIn * t1 + (r - dIn) * t2 + t3) / v
+
+
+def wcc_r(k: Backend, r, a, b, dIn, dOut, w, v):
+    """WCC delta of removing a vertex from its community
+    (``DistributedWCC.scala:407-419``): -wccI against the community
+    minus the vertex; 0 when the community is a singleton."""
+    f = k.num
+    removed = wcc_i(k, f(r) - 1.0, f(a) - f(dIn), f(b) + f(dIn) - f(dOut), dIn, dOut, w, v)
+    return k.where(r == 1, 0.0, -removed)
+
+
+# ----------------------------------------------------------------------
+# The formulas on each backend: Column expressions for the Spark loops,
+# float64 arrays for the small-state tier's task.  On arrays NULL is
+# NaN: ``_np_div`` maps /0 to it, and NaN propagates through ``+``/``*``
+# and fails every ``>``, as NULL does through the Column kernels.
+# (Spark would order a computed NaN above every number, but on
+# graph-sized finite inputs the only NaN these formulas make is the /0
+# one, which is NULL on both sides.)
+# ----------------------------------------------------------------------
+
+def wcc_v_col(t: Column, vt: Column, r: Column, vtC: Column, tC: Column) -> Column:
+    return wcc_v(COLUMNS, t, vt, r, vtC, tC)
+
+
+def wcc_i_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
+              global_cc: Column, vertex_count: Column) -> Column:
+    return wcc_i(COLUMNS, r, a, b, dIn, dOut, global_cc, vertex_count)
 
 
 def wcc_r_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
               global_cc: Column, vertex_count: Column) -> Column:
-    """WCC delta of removing a vertex from its community
-    (``DistributedWCC.scala:407-419``): -wccI against the community
-    minus the vertex; 0 when the community is a singleton."""
-    removed_r = r.cast("double") - 1.0
-    removed_a = a.cast("double") - dIn.cast("double")
-    removed_b = b.cast("double") + dIn.cast("double") - dOut.cast("double")
-    return F.when(r == 1, F.lit(0.0)).otherwise(
-        -wcc_i_col(removed_r, removed_a, removed_b, dIn, dOut, global_cc, vertex_count)
-    )
-
-
-# ----------------------------------------------------------------------
-# numpy twins, for the small-state tier's task (operators/task_tier.py).
-# Each is the column expression above, operation for operation in the
-# same order, over float64 arrays.  NULL is NaN: ``_np_div`` maps /0 to
-# it, and NaN propagates through ``+``/``*`` and fails every ``>``, as
-# NULL does through the Spark kernels.  (Spark would order a computed
-# NaN above every number, but on graph-sized finite inputs the only
-# NaN these formulas make is the /0 one, which is NULL on both sides.)
-# ----------------------------------------------------------------------
-
-def _np_div(num, den):
-    """``try_divide``: num / den, NaN where den == 0."""
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(den == 0.0, np.nan, np.true_divide(num, den))
+    return wcc_r(COLUMNS, r, a, b, dIn, dOut, global_cc, vertex_count)
 
 
 def np_wcc_v(t, vt, r, vtC, tC):
-    t, vt, r, vtC, tC = (np.asarray(x, dtype=np.float64) for x in (t, vt, r, vtC, tC))
-    return np.where(t == 0, 0.0, _np_div(tC * vt, t * (r - 1.0 + vt - vtC)))
-
-
-def _np_theta1(r, d, dIn, dOut, w, q):
-    num = ((r - 1.0) * d + 1.0 + q) * (dIn - 1.0) * d
-    den = (
-        (r + q) * ((r - 1.0) * (r - 2.0)) * np.power(d, 3.0)
-        + (dIn - 1.0) * d
-        + q * (q - 1.0) * d * w
-        + q * (q - 1.0) * w
-        + dOut
-        + w
-    )
-    return _np_div(num, den)
-
-
-def _np_theta2(r, d, w, q):
-    num = (r - 1.0) * (r - 2.0) * np.power(d, 3.0) * ((r - 1.0) * d + q)
-    den = (
-        ((r - 1.0) * (r - 2.0) * np.power(d, 3.0) + q * (q - 1.0) * w + q * (r - 1.0) * d * w)
-        * (r + q)
-        * (r - 1.0 + q)
-    )
-    return -_np_div(num, den)
-
-
-def _np_theta3(r, d, dIn, dOut, w):
-    num = (dIn * (dIn - 1.0) * d) * (dIn + dOut)
-    den = (dIn * (dIn - 1.0) * d + dOut * (dOut - 1.0) * w + 2.0 * dOut * dIn * w) * (r + dOut)
-    return _np_div(num, den)
+    return wcc_v(ARRAYS, t, vt, r, vtC, tC)
 
 
 def np_wcc_i(r, a, b, dIn, dOut, w, v):
-    r, a, b, dIn, dOut, w, v = (
-        np.asarray(x, dtype=np.float64) for x in (r, a, b, dIn, dOut, w, v)
-    )
     with np.errstate(divide="ignore", invalid="ignore"):
-        d = 2.0 * a / np.power(r, 2.0)
-        q = (b - dIn) / r
-        t1 = _np_theta1(r, d, dIn, dOut, w, q)
-        t2 = _np_theta2(r, d, w, q)
-        t3 = _np_theta3(r, d, dIn, dOut, w)
-        return (dIn * t1 + (r - dIn) * t2 + t3) / v
+        return wcc_i(ARRAYS, r, a, b, dIn, dOut, w, v)
 
 
 def np_wcc_r(r, a, b, dIn, dOut, w, v):
-    r, a, b, dIn, dOut = (np.asarray(x, dtype=np.float64) for x in (r, a, b, dIn, dOut))
-    removed = np_wcc_i(r - 1.0, a - dIn, b + dIn - dOut, dIn, dOut, w, v)
-    return np.where(r == 1, 0.0, -removed)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return wcc_r(ARRAYS, r, a, b, dIn, dOut, w, v)

@@ -46,10 +46,10 @@ from community_detection_flink_spark.operators.community import (
     community_adjacency,
     wccv_by_community,
 )
+from community_detection_flink_spark.operators.movement import FixedRounds
 from community_detection_flink_spark.operators.partition import initial_partition
 from community_detection_flink_spark.operators.preprocess import preprocess  # noqa: F401 -- perfbench/spans.py LAYERS wraps this name
 from community_detection_flink_spark.operators.refinement import (
-    FixedRounds,
     load_graph,
     movement_rounds,
     run_wcc,

@@ -6,12 +6,13 @@ best-movement pass iff it improves global WCC; a relative improvement
 > threshold (0.01) resets the retry budget (maxRetries = 5,
 ``DistributedWCC.scala:27-29``).
 
-Two loops, one protocol (``movement_rounds``): when the loop's state
-fits one task (``operators/task_tier.py``), every round runs inside ONE
-Arrow-batched pandas task with the numpy twins of the kernels and the
-kept labeling lands once; otherwise each round is a chain of Spark
-jobs with the iterative-Spark discipline the reference lacks (its
-Flink version recomputes lineage and forces ``count()``s,
+Two loops, one protocol (``movement.protocol``, run by
+``movement_rounds``): when the loop's state fits one task
+(``operators/task_tier.py``), every round runs inside ONE Arrow-batched
+pandas task with the array form of the kernels and the kept labeling
+lands once; otherwise each round is a chain of Spark jobs with the
+iterative-Spark discipline the reference lacks (its Flink version
+recomputes lineage and forces ``count()``s,
 ``DistributedWCC.scala:317``): every accepted state is materialized
 through ``plans.Materializer`` (parquet round-trip — truncates lineage
 AND resets Catalyst's compounding join-size statistics; see
@@ -34,6 +35,7 @@ from community_detection_flink_spark.operators.community import (
     community_stats,
     global_wcc,
 )
+from community_detection_flink_spark.operators.movement import AcceptIfImproved, protocol
 from community_detection_flink_spark.operators.partition import initial_partition
 from community_detection_flink_spark.operators.preprocess import preprocess
 from community_detection_flink_spark.operators.triangles import triangles
@@ -121,98 +123,6 @@ def load_graph(
     )
 
 
-class AcceptIfImproved:
-    """Batch accept policy (``DistributedWCC.scala:258-329``): a round
-    is kept iff it improves global WCC; every evaluated round spends a
-    retry, and a relative gain > ``threshold`` refills the budget.
-
-    ``wcc`` is the kept labeling's global WCC.  ``history``, if given,
-    receives it for the input labeling and for every kept round.  On
-    the Spark loop each evaluation is one job, which also fills the
-    labeling's persisted adjacency and stats caches for the next
-    movement pass.
-
-    The rule itself is ``start``/``keep`` over WCC floats: the Spark
-    loop's ``begin``/``accept`` evaluate and call it, and the task tier
-    runs it inside its task on a ``rule()`` copy.
-    """
-
-    evaluates = True  # the rule reads each round's global WCC
-
-    def __init__(self, vertex_count, tri, max_retries, threshold, history=None):
-        self.vertex_count, self.tri = vertex_count, tri
-        self.max_retries, self.threshold = max_retries, threshold
-        self.retries = max_retries
-        self.history = [] if history is None else history
-        self.wcc = 0.0
-
-    def rule(self) -> AcceptIfImproved:
-        """This policy without its DataFrame: what a task runs."""
-        return AcceptIfImproved(
-            self.vertex_count, None, self.max_retries, self.threshold
-        )
-
-    def _eval(self, labels, vcd, cs) -> float:
-        return global_wcc(labels, cs, vcd, self.tri, self.vertex_count)
-
-    def begin(self, labels, vcd, cs) -> None:
-        self.start(self._eval(labels, vcd, cs))
-
-    def accept(self, labels, vcd, cs) -> bool:
-        return self.keep(self._eval(labels, vcd, cs))
-
-    def more(self, rounds: int) -> bool:
-        return self.retries > 0
-
-    def start(self, wcc: float) -> None:
-        """The input labeling's WCC."""
-        self.wcc = wcc
-        self.history.append(wcc)
-
-    def keep(self, wcc: float) -> bool:
-        """Spend a retry on a round of WCC ``wcc``; True iff it is kept."""
-        self.retries -= 1
-        if not wcc > self.wcc:
-            return False
-        # Scala's newWcc/bestWcc - 1 > threshold is Infinity > 0.01
-        # when bestWcc == 0, so an improvement from 0 also resets the
-        # retry budget (DistributedWCC.scala:309-312).
-        if self.wcc <= 0 or (wcc / self.wcc - 1.0) > self.threshold:
-            self.retries = self.max_retries
-        self.wcc = wcc
-        self.history.append(wcc)
-        return True
-
-
-@dataclass(frozen=True)
-class FixedRounds:
-    """Incremental accept policy (``IncrementalWCC.scala:332-393``):
-    every round is kept, at most ``cap`` of them, no WCC test.  The
-    reference runs the rounds after a fixed point as identity passes;
-    ``movement_rounds``' 0-move stop skips them."""
-
-    cap: int
-    evaluates = False
-
-    def rule(self) -> FixedRounds:
-        return self
-
-    def begin(self, labels, vcd, cs) -> None:
-        pass
-
-    def accept(self, labels, vcd, cs) -> bool:
-        return True
-
-    def more(self, rounds: int) -> bool:
-        return rounds < self.cap
-
-    def start(self, wcc) -> None:
-        pass
-
-    def keep(self, wcc) -> bool:
-        return True
-
-
 # r13 MEASURED NEGATIVE (why these rounds never land light): landing
 # the round states via localCheckpoint instead of parquet was 2.7-3x
 # SLOWER at sf0.1 (interleaved A/B, plans/r13/ab_refine_light_NEGATIVE_
@@ -244,36 +154,32 @@ def movement_rounds(
     mat: Materializer,
     policy,
     state_rows: int,
+    tri: DataFrame | None = None,
     candidates: DataFrame | None = None,
     outer_labels: DataFrame | None = None,
     report: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """The movement-round protocol every refinement loop shares, on one
-    of two loops.
+    """The movement rounds every refinement loop shares: the movement
+    protocol (``movement.protocol``) under ``policy`` (``AcceptIfImproved``
+    or ``FixedRounds``), on one of two loops.
 
     ``state_rows`` — the rows of the loop's state, known without a job
-    (``edges``, plus the policy's triangles when it evaluates WCC) —
-    picks the loop.  Under ``task_tier.TASK_ROWS`` every round runs in
-    one task (``task_tier.run_rounds``): the same protocol below on
-    arrays, the kept labeling landed once as ``moved``, and the policy
-    brought up to date from the WCCs that ride that landing.  Otherwise
-    the rounds run as Spark jobs:
+    (``edges``, plus ``tri`` when the policy evaluates WCC) — picks the
+    loop.  Under ``task_tier.TASK_ROWS`` every round runs in one task
+    (``task_tier.run_rounds``): the protocol over arrays, the kept
+    labeling landed once as ``moved``, and ``policy`` brought up to date
+    from the WCCs that ride that landing.  Otherwise the protocol runs
+    over landed labelings, each round a chain of Spark jobs:
 
     Per labeling, ONE pass over the triplets: the two label joins feed
     the ``community_adjacency`` aggregate ``(vId, c_own, cId, dIn)``,
     persisted with the ``community_stats`` derived from it; they serve
-    the policy's evaluation and the next movement pass (whose two
-    stats broadcasts read the cache).  Each round runs
-    ``best_movement``, lands the result on parquet with the moved-
-    vertex count riding the landing as an Observation, and stops at a
-    0-move pass (a fixed point: identical labels ⇒ identical stats ⇒
-    identical decisions).  Otherwise ``policy.accept`` keeps the round
-    — its caches replace the previous labeling's, whose landing is
-    dropped — or rejects it, which drops the round and ends the loop.
-
-    ``policy`` has ``begin(labels, vcd, cs)`` (called once for the
-    input), ``more(rounds)`` and ``accept(labels, vcd, cs)`` — see
-    ``AcceptIfImproved`` and ``FixedRounds``.
+    the WCC evaluation (``global_wcc`` over ``tri``, one job that also
+    fills them) and the next movement pass (whose two stats broadcasts
+    read the cache).  Each move runs ``best_movement`` and lands the
+    result on parquet with the moved-vertex count riding the landing as
+    an Observation.  A labeling the protocol frees loses its caches and,
+    unless it is the input, its landing.
 
     ``candidates`` (a ``vId`` set): only these vertices move; the rest
     of ``labels`` is carried into every round unchanged.
@@ -289,33 +195,15 @@ def movement_rounds(
     round) and ``refinement`` (the loop that ran: "task" or "spark").
     """
 
-    def caches(lab: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def caches(lab: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         both = lab
         if outer_labels is not None:
             both = lab.select("vId", "cId").unionByName(outer_labels)
         vcd = community_adjacency(both, edges).persist()
-        return vcd, community_stats(lab, edges, vcd=vcd).persist()
+        return lab, vcd, community_stats(lab, edges, vcd=vcd).persist()
 
-    report = {} if report is None else report
-    if task_tier.fits(state_rows):
-        cur, moves, wccs = task_tier.run_rounds(
-            labels, edges, global_cc, vertex_count, mat, policy.rule(),
-            candidates, outer_labels, policy.tri if policy.evaluates else None,
-        )
-        if wccs:  # replay the task's decisions: same rule, same state
-            policy.start(wccs[0])
-            for wcc in wccs[1:]:
-                policy.keep(wcc)
-        vcd, cs = caches(cur)
-        report.update(moves=moves, refinement="task")
-        return cur, vcd, cs, len(moves)
-
-    report.update(moves=[], refinement="spark")
-    cur = labels
-    vcd, cs = caches(cur)
-    policy.begin(cur, vcd, cs)
-    rounds = 0
-    while policy.more(rounds):
+    def move(state):
+        cur, vcd, cs = state
         obs = Observation()
         movers, movers_vcd = cur, vcd
         if candidates is not None:
@@ -329,23 +217,37 @@ def movement_rounds(
             moved = cur.join(candidates, "vId", "left_anti").unionByName(moved)
         nxt = mat(moved, "moved")
         mat.release()
-        rounds += 1
-        report["moves"].append(obs.get["moves"])
-        if obs.get["moves"] == 0:
-            mat.drop(nxt)
-            break
-        nxt_vcd, nxt_cs = caches(nxt)
-        if not policy.accept(nxt, nxt_vcd, nxt_cs):
-            nxt_vcd.unpersist(False)
-            nxt_cs.unpersist(False)
-            mat.drop(nxt)
-            break
-        vcd.unpersist(False)
-        cs.unpersist(False)
-        if cur is not labels:
-            mat.drop(cur)
-        cur, vcd, cs = nxt, nxt_vcd, nxt_cs
-    return cur, vcd, cs, rounds
+        n_moved = obs.get["moves"]
+        # a 0-move labeling is only freed: it gets no caches
+        return (caches(nxt) if n_moved else (nxt,)), n_moved
+
+    def evaluate(state):
+        lab, vcd, cs = state
+        return global_wcc(lab, cs, vcd, tri, vertex_count)
+
+    def free(state):
+        for df in state[1:]:
+            df.unpersist(False)
+        if state[0] is not labels:
+            mat.drop(state[0])
+
+    if task_tier.fits(state_rows):
+        loop = "task"
+        cur, moves, wccs = task_tier.run_rounds(
+            labels, edges, global_cc, vertex_count, mat, policy,
+            candidates, outer_labels, tri,
+        )
+        if wccs:  # replay the task's decisions: same rule, same state
+            policy.start(wccs[0])
+            for wcc in wccs[1:]:
+                policy.keep(wcc)
+        state = caches(cur)
+    else:
+        loop = "spark"
+        state, moves, _ = protocol(policy, caches(labels), move, evaluate, free)
+    if report is not None:
+        report.update(moves=moves, refinement=loop)
+    return (*state, len(moves))
 
 
 def refine_partition(
@@ -362,14 +264,16 @@ def refine_partition(
     with ``AcceptIfImproved``) from the labeling ``vertices`` over
     ``graph``'s clean edges.
 
-    Planned NON-adaptive at the loop width (r10, ``plans.loop_scope``,
-    floor 4): every loop input is a Materializer-landed parquet (true
-    file-size stats) or a persisted loop cache, so AQE cannot improve a
-    plan here — it only splits each tiny per-round landing into one
-    driver-blocking job per query stage.  MEASURED at sf0.1 / local[32]:
-    26.5 → 11.6 jobs per round (−56%) for identical results (16
-    rounds, wcc 0.04752) and flat wall; ``perfbench/run.py --trace 1``
-    reports this loop's jobs as ``refinement.jobs``.
+    The Spark loop is planned NON-adaptive at the loop width (r10,
+    ``plans.loop_scope``, floor 4): every loop input is a
+    Materializer-landed parquet (true file-size stats) or a persisted
+    loop cache, so AQE cannot improve a plan here — it only splits each
+    tiny per-round landing into one driver-blocking job per query
+    stage.  MEASURED at sf0.1 / local[32]: 26.5 → 11.6 jobs per round
+    (−56%) for identical results (16 rounds, wcc 0.04752) and flat
+    wall.  ``perfbench/run.py --trace 1`` charges this loop's jobs to
+    ``iteration.landing``: each one runs inside a ``Materializer``
+    landing (the task's one job inside ``moved``'s).
 
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
@@ -397,10 +301,10 @@ def refine_partition(
         # partitioning and the per-src aggregations (vcd, vtC) and
         # vId-keyed joins downstream need no further exchange.
         loop_edges = graph.clean_edges.repartition("src").persist()
-        policy = AcceptIfImproved(vertex_count, tri, max_retries, threshold, history)
+        policy = AcceptIfImproved(max_retries, threshold, history)
         best, best_vcd, best_cs, rounds = movement_rounds(
             vertices, loop_edges, global_cc, vertex_count, mat, policy,
-            graph.clean_edge_count + graph.tri_count, report=report,
+            graph.clean_edge_count + graph.tri_count, tri=tri, report=report,
         )
         # the returned stats must outlive the caches they derive from
         final_cs = mat(best_cs, "cs-final")

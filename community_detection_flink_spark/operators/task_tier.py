@@ -8,12 +8,13 @@ far more than the work: the rounds are bound by per-job latency, not by
 compute.  When a loop's state is under ``TASK_ROWS`` rows, its inputs
 are packed into one tagged table and go through ONE grouped
 ``applyInPandas`` over a constant key (the ``gapply`` pattern): one
-task runs every round with the numpy twins of the Spark kernels
-(``functions/wcc_metric.py``), the same operations in the same order,
-and emits the loop's result for the caller's ``Materializer`` to land
-— one job instead of a chain per round.  Computing locally when the
-state is small instead of running global rounds is REPOSE's
-local-index idea (ICDE 2021).
+task runs every round — the election's, or the movement protocol
+(``operators/movement.py``) that the Spark loop also runs — with the
+kernel formulas on float64 arrays (``functions/wcc_metric.py``), and
+emits the loop's result for the caller's ``Materializer`` to land — one
+job instead of a chain per round.  Computing locally when the state is
+small instead of running global rounds is REPOSE's local-index idea
+(ICDE 2021).
 
 The tier is chosen in exactly two places, ``initial_partition`` and
 ``movement_rounds``, on a row count known without a job: the carried
@@ -43,6 +44,7 @@ from community_detection_flink_spark.functions.wcc_metric import (
     np_wcc_r,
     np_wcc_v,
 )
+from community_detection_flink_spark.operators.movement import protocol
 
 # Loops whose state has fewer rows than this run in one task.  Measured
 # on 4 cores (plans/r14/crossover.txt): ``run_wcc`` on the task loop
@@ -274,15 +276,14 @@ def rounds(
     edges: DataFrame,
     global_cc: float,
     vertex_count: int,
-    rule,
+    policy,
     candidates: DataFrame | None = None,
     outer_labels: DataFrame | None = None,
     tri: DataFrame | None = None,
 ) -> DataFrame:
-    """Every round of ``movement_rounds`` in one task: begin, then move
-    while ``rule.more``, stop at a 0-move pass or when ``rule.keep``
-    rejects the round.  ``rule`` is the policy's accept rule (no
-    DataFrames); when it evaluates, ``tri`` is the static triangle list
+    """Every round of ``movement_rounds`` in one task: the movement
+    protocol (``movement.protocol``) over arrays, on a copy of
+    ``policy``.  When it evaluates, ``tri`` is the static triangle list
     its WCC reads.
 
     The plan's rows are the kept labeling plus one row whose ``info``
@@ -293,22 +294,7 @@ def rounds(
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         st = _Rounds(pdf, global_cc, vertex_count, scoped)
-        cur = st.labels
-        wccs = [st.wcc(cur)] if rule.evaluates else []
-        if wccs:
-            rule.start(wccs[0])
-        moves = []
-        while rule.more(len(moves)):
-            nxt, n_moved = st.move(cur)
-            moves.append(n_moved)
-            if n_moved == 0:
-                break
-            wcc = st.wcc(nxt) if rule.evaluates else None
-            if wcc is not None:
-                wccs.append(wcc)
-            if not rule.keep(wcc):
-                break
-            cur = nxt
+        cur, moves, wccs = protocol(policy, st.labels, st.move, st.wcc, lambda lab: None)
         n = st.n
         out = pd.DataFrame({"vId": st.vid, "t": st.t, "vt": st.vt, "cc": st.cc,
                             "cId": cur[:n], "info": None})
@@ -327,7 +313,7 @@ def rounds(
         parts.append(_part(_CANDIDATE, candidates, a="vId"))
     if outer_labels is not None:
         parts.append(_part(_OUTER, outer_labels, a="vId", b="cId"))
-    if rule.evaluates:
+    if policy.evaluates:
         parts.append(_part(_TRIANGLE, tri, a="u", b="v", c="w"))
     return _one_task(parts, task, _LABELING + ", info STRING")
 
@@ -338,7 +324,7 @@ def run_rounds(
     global_cc: float,
     vertex_count: int,
     mat,
-    rule,
+    policy,
     candidates: DataFrame | None = None,
     outer_labels: DataFrame | None = None,
     tri: DataFrame | None = None,
@@ -348,7 +334,7 @@ def run_rounds(
     labeling, moves, wccs)``."""
     obs = Observation()
     landed = mat(
-        rounds(labels, edges, global_cc, vertex_count, rule,
+        rounds(labels, edges, global_cc, vertex_count, policy,
                candidates, outer_labels, tri)
         .observe(obs, F.max("info").alias("info"))
         .where(F.col("info").isNull())

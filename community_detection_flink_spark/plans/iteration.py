@@ -14,8 +14,9 @@ A parquet round-trip is the scale-correct alternative: executors write
 and read in parallel (never the driver), the re-read plan is a fresh
 scan whose stats are the ACTUAL file sizes, lineage depth stays O(1)
 forever, and on a real cluster the directory can point at HDFS/S3
-(``CDFS_CHECKPOINT_DIR``).  The reference has no equivalent discipline
-— it recomputes lineage and forces ``count()``s
+(``CDFS_CHECKPOINT_DIR``: a root under which each ``Materializer``
+lands in a fresh directory of its own).  The reference has no
+equivalent discipline — it recomputes lineage and forces ``count()``s
 (``DistributedWCC.scala:317``, commented-out unpersists at 313,318).
 """
 
@@ -24,6 +25,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -130,10 +132,14 @@ class Materializer:
 
     def __init__(self, spark, base_dir: str | None = None):
         self.spark = spark
-        self.base = (
-            base_dir
-            or os.environ.get("CDFS_CHECKPOINT_DIR")
-            or tempfile.mkdtemp(prefix="cdfs-ckpt-")
+        root = os.environ.get("CDFS_CHECKPOINT_DIR")
+        # each instance lands under a directory of its own: instances
+        # sharing a root would overwrite each other's landings, and one's
+        # cleanup() would delete the others'
+        self.base = base_dir or (
+            os.path.join(root, f"cdfs-ckpt-{uuid.uuid4().hex}")
+            if root
+            else tempfile.mkdtemp(prefix="cdfs-ckpt-")
         )
         self._i = 0
         self._ephemeral: list[DataFrame] = []

@@ -15,10 +15,8 @@ import random
 
 import pytest
 
-from community_detection_flink_spark.operators.refinement import (
-    FixedRounds,
-    movement_rounds,
-)
+from community_detection_flink_spark.operators.movement import FixedRounds
+from community_detection_flink_spark.operators.refinement import movement_rounds
 from community_detection_flink_spark.plans.iteration import Materializer, loop_scope
 
 import pywcc_oracle as oracle

@@ -65,10 +65,8 @@ def test_task_tier_is_one_arrow_grouped_task(spark, golden_edges, tmp_path):
     Arrow-batched grouped pandas node and no row-at-a-time
     BatchEvalPython."""
     from community_detection_flink_spark.operators import task_tier
-    from community_detection_flink_spark.operators.refinement import (
-        AcceptIfImproved,
-        load_graph,
-    )
+    from community_detection_flink_spark.operators.movement import AcceptIfImproved
+    from community_detection_flink_spark.operators.refinement import load_graph
     from community_detection_flink_spark.plans.iteration import Materializer
     from community_detection_flink_spark.sources.edges import symmetrize_edges
 
@@ -77,7 +75,7 @@ def test_task_tier_is_one_arrow_grouped_task(spark, golden_edges, tmp_path):
     init = task_tier.elect(g.vertices, g.clean_edges, 50)
     moved = task_tier.rounds(
         mat(init, "init"), g.clean_edges, 0.3, 8,
-        AcceptIfImproved(8, None, 5, 0.01), tri=g.tri,
+        AcceptIfImproved(5, 0.01), tri=g.tri,
     )
     for df in (init, moved):
         physical = df._jdf.queryExecution().executedPlan().toString()

@@ -5,7 +5,9 @@
   decides a join strategy;
 * the explicit-schema landing read-back is bit-identical to an
   inferred read of the same files (schema AND rows), nested types
-  included.
+  included;
+* Materializers sharing a checkpoint root never touch each other's
+  landings.
 """
 
 from __future__ import annotations
@@ -64,3 +66,25 @@ def test_materializer_explicit_schema_read_is_bit_identical(spark):
         map(tuple, inferred.collect())
     )
     mat.cleanup()
+
+
+def test_materializers_share_a_checkpoint_root(spark, tmp_path, monkeypatch):
+    """Two Materializers under one ``CDFS_CHECKPOINT_DIR`` land in
+    directories of their own: the second's landing of the same name
+    leaves the first's rows readable, and one's ``cleanup()`` leaves
+    the other's files."""
+    monkeypatch.setenv("CDFS_CHECKPOINT_DIR", str(tmp_path))
+    first, second = Materializer(spark), Materializer(spark)
+    a = first(spark.range(5), "edges")
+    second(spark.range(7, 9), "edges")
+    assert sorted(r.id for r in a.collect()) == [0, 1, 2, 3, 4]
+    assert first.base != second.base
+    assert {os.path.dirname(first.base), os.path.dirname(second.base)} == {
+        str(tmp_path)
+    }
+    second.cleanup()
+    assert not os.path.exists(second.base)
+    assert glob.glob(os.path.join(first.base, "edges-*"))
+    assert sorted(r.id for r in a.collect()) == [0, 1, 2, 3, 4]
+    first.cleanup()
+    assert os.listdir(tmp_path) == []

@@ -17,26 +17,51 @@ def test_bridged_cliques(golden_edges):
     assert res.global_cc == 1.0  # every vertex has cc == 1
 
 
-def test_run_wcc_owns_its_checkpoint_dir(golden_edges, tmp_path, monkeypatch):
+# Spark jobs ``run_wcc`` runs on the golden graph when both WCC loops
+# take the Spark path: load, election rounds, movement rounds and their
+# WCC evaluations, each landing.  Pinned so a change that adds a job to
+# the distributed loops shows here.
+SPARK_LOOP_JOBS = 51
+
+
+def test_run_wcc_owns_its_checkpoint_dir(
+    spark, golden_edges, tmp_path, monkeypatch, each_loop
+):
     """Without a Materializer, ``run_wcc`` lands everything under the one
     it makes, and the result carries it: only the landings the returned
-    plans read are left, and ``res.mat.cleanup()`` frees the dir."""
+    plans read are left (one labeling at most), and ``res.mat.cleanup()``
+    frees the dir.  On the Spark loops, the run takes the pinned number
+    of jobs."""
     import os
     import tempfile
+    import uuid
 
     monkeypatch.delenv("CDFS_CHECKPOINT_DIR", raising=False)
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    res = run_wcc(symmetrize_edges(golden_edges))
-    assert [p.name for p in tmp_path.glob("cdfs-ckpt-*")] == [
-        os.path.basename(res.mat.base)
-    ]
-    live = {p.rsplit("-", 1)[0] for p in os.listdir(res.mat.base)}
-    assert "edges" in live and "cs-final" in live
-    assert live <= {"edges", "init", "moved", "cs-final"}  # no mis-centers
-    got = {r["vId"]: r["cId"] for r in res.communities.collect()}
-    assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
-    res.mat.cleanup()
-    assert list(tmp_path.glob("cdfs-ckpt-*")) == []
+    sc = spark.sparkContext
+    for loop in each_loop():
+        group = f"run-wcc-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "run_wcc on the golden graph")
+        try:
+            res = run_wcc(symmetrize_edges(golden_edges))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert res.report["election"] == res.report["refinement"] == loop
+        if loop == "spark":
+            assert jobs == SPARK_LOOP_JOBS
+        assert [p.name for p in tmp_path.glob("cdfs-ckpt-*")] == [
+            os.path.basename(res.mat.base)
+        ]
+        landings = [p.rsplit("-", 1)[0] for p in os.listdir(res.mat.base)]
+        live = set(landings)
+        assert "edges" in live and "cs-final" in live
+        assert live <= {"edges", "init", "moved", "cs-final"}  # no mis-*
+        assert landings.count("moved") <= 1
+        got = {r["vId"]: r["cId"] for r in res.communities.collect()}
+        assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
+        res.mat.cleanup()
+        assert list(tmp_path.glob("cdfs-ckpt-*")) == []
 
 
 def test_invariants_on_random_graph(spark):
