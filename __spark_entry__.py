@@ -836,7 +836,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         (``sources.synthetic.clustered_graph``) because that is the
         regime where the scoped path actually engages: the co-purchase
         graph is dense small-world (avg degree ≈ 115), every batch
-        neighborhood closes over >50% of it, and the scope probe
+        neighborhood closes over >50% of it, and the scope rule
         correctly falls back to whole-graph rounds there.  The splice
         algebra behind the returned labels is exactness-pinned by
         tests/test_incremental_localized.py; scope telemetry is

@@ -12,10 +12,12 @@ exact — every divergence documented:
   approximation that under/over-counts when a triangle has multiple
   new edges): here EXACT — every new triangle contains ≥1 new edge, so
   enumerating common neighbors of each new edge and deduping on the
-  canonical (sorted) corner triple counts each new triangle once.
-  Edge inserts only (like the reference; no deletions), so triangle
-  counts and the cleaned edge set only grow:
-  ``clean_new = clean_old ∪ edges-of-new-triangles``.
+  canonical (sorted) corner triple counts each new triangle once.  An
+  insert only grows triangle counts and the cleaned edge set:
+  ``clean_new = clean_old ∪ edges-of-new-triangles``.  Deletes (beyond
+  the reference, which is insert-only) drop the carried triangles with
+  a deleted edge, and a clean edge survives iff a remaining triangle
+  contains it (``incremental_delete``).
 * ``vt`` (``IncrementalWCC.scala:163-178`` increments by a 0/1 flag):
   here exactly the cleaned-graph degree, consistent with the batch
   path (``DistributedWCC.scala:125-129``).
@@ -65,10 +67,10 @@ from community_detection_flink_spark.sources.edges import symmetrize_edges
 
 INCREMENTAL_ROUNDS = 5  # IncrementalWCC.scala:382 (fixed, no convergence test)
 COMPACT_EVERY = 8  # batches between parquet compactions of the lazy edge unions
-# scoped refinement runs only when the batch neighborhood is at most
-# this fraction of the clean graph; beyond it the whole-graph rounds
-# have the better constant (see _pick_scope's scope probe); a value
-# below 0 forces the whole-graph scope
+# scoped refinement runs only when the clean members of the affected
+# communities, and then V_R, are at most this fraction of the clean
+# vertices; beyond it the whole-graph rounds have the better constant
+# (see _pick_scope); a value below 0 forces the whole-graph scope
 _SCOPE_FRACTION = 0.5
 
 
@@ -158,11 +160,10 @@ def prepare(
     # re-evaluate only the communities they touch (one extra
     # community-adjacency pass here, at bulk-load time)
     clean_labeled = vertices.where(F.col("t") > 0)
-    vcd = mat.cache(community_adjacency(clean_labeled, graph.clean_edges), "prep-vcd")
+    vcd = community_adjacency(clean_labeled, graph.clean_edges)
     wccv = mat(
         wccv_by_community(clean_labeled, res.stats, vcd, graph.tri), "inc-wccv"
     )
-    mat.release()
     return WCCState(
         edges=graph.edges,
         clean_edges=graph.clean_edges,
@@ -285,7 +286,7 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     )
 
     all_verts = old_verts.unionByName(new_verts).distinct()
-    vertices, vertex_count, global_cc = _land_vertices(
+    vertex_table = (
         all_verts.join(state.vertices.drop("vt", "cc"), "vId", "left")
         .join(delta_t, "vId", "left")
         .join(vt_new, "vId", "left")
@@ -295,16 +296,9 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
             F.coalesce("vt_new", F.lit(0)).alias("vt"),
             F.coalesce("cId", F.col("vId")).alias("cId"),
         )
-        .withColumn("cc", cc_col(F.col("t"), F.col("vt"))),
-        mat,
+        .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
     )
 
-    # t changes exactly at corners of new triangles; vt changes at
-    # endpoints of newly-cleaned edges — all of which are corners
-    # too (a new clean edge is an edge of some new triangle)
-    changed_verts = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct()
-    )
     # the delta is DISJOINT from the carried list (every new triangle
     # has a new edge), so the union stays LAZY like edges/clean_edges —
     # landing it would rewrite the ENTIRE O(|T|) triangle list every
@@ -313,53 +307,72 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     tri_static = state.tri.unionByName(tri.select("u", "v", "w"))
     if compact:
         tri_static = mat(tri_static, "inc-tri-static")
-    return _elect_and_refine(
-        vertices, clean_new, n_clean_edges, changed_verts, tri_static,
-        full_edges, vertex_count, global_cc, mat, state.stats, state.wccv,
+    return _elect_and_refine(state, _land_vertices(
+        vertex_table, mat, edges=full_edges, tri=tri_static,
+        clean_edges=clean_new, clean_edge_count=n_clean_edges,
+        # t changes exactly at corners of new triangles; vt changes at
+        # endpoints of newly-cleaned edges — all of which are corners
+        # too (a new clean edge is an edge of some new triangle)
+        changed=tri.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct(),
         pending_unions=0 if compact else state.pending_unions + 1,
-    )
+    ))
 
 
-def _land_vertices(
-    vertices: DataFrame, mat: Materializer
-) -> tuple[DataFrame, int, float]:
-    """Land a batch's vertex table; |V| and Σcc (the global CC,
+class _Merge(NamedTuple):
+    """What a batch's merge hands the shared tail
+    (``_elect_and_refine``): the merged tables, and the counts their
+    landings carried — no batch counts anything again."""
+
+    vertices: DataFrame  # landed (vId, t, vt, cc, cId), pre-election labels
+    vertex_count: int  # |V|
+    clean_vertex_count: int  # vertices with t > 0
+    global_cc: float
+    edges: DataFrame
+    clean_edges: DataFrame
+    clean_edge_count: int
+    tri: DataFrame
+    changed: DataFrame  # vIds whose t or vt changed
+    # None: the changed vertices' labels in ``vertices`` (see
+    # ``_elect_and_refine`` for why a delete passes its own)
+    affected_comms: DataFrame | None = None
+    pending_unions: int = 0
+
+
+def _land_vertices(vertices: DataFrame, mat: Materializer, **merge) -> _Merge:
+    """Land a batch's vertex table and build its ``_Merge`` from it and
+    ``merge``; |V|, the clean-vertex count and Σcc (the global CC,
     ``IncrementalWCC.scala:109``) ride the landing as an Observation —
     zero extra jobs.  An empty graph (a delete or self-loop-only batch
     on an empty state) has global CC 0."""
     obs = Observation()
     vertices = mat(
-        vertices.observe(obs, F.count(F.lit(1)).alias("n"), F.sum("cc").alias("s")),
+        vertices.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col("t") > 0).alias("clean"),
+            F.sum("cc").alias("s"),
+        ),
         "inc-verts",
     )
-    vertex_count = int(obs.get["n"])
-    return vertices, vertex_count, float(obs.get["s"] or 0.0) / max(vertex_count, 1)
+    n = int(obs.get["n"])
+    return _Merge(
+        vertices, n, int(obs.get["clean"]),
+        float(obs.get["s"] or 0.0) / max(n, 1), **merge,
+    )
 
 
-def _elect_and_refine(
-    vertices: DataFrame,
-    clean_new: DataFrame,
-    n_clean_edges: int,
-    changed_verts: DataFrame,
-    tri_static: DataFrame,
-    full_edges: DataFrame,
-    vertex_count: int,
-    global_cc: float,
-    mat: Materializer,
-    old_stats: DataFrame,
-    old_wccv: DataFrame,
-    pending_unions: int = 0,
-    affected_comms: DataFrame | None = None,
-) -> WCCState:
+def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
     """Shared tail of every incremental batch (insert or delete):
     re-elect centers inside the affected communities, run the fixed
     movement rounds over the scope ``_pick_scope`` chooses — the batch
-    neighborhood, or every clean vertex — splice the carried
+    neighborhood, or every clean vertex — splice ``state``'s carried
     per-community stats/WCC sums, and assemble the next ``WCCState``
     (its ``report`` holds counts the batch computes anyway — no extra
-    job).  ``n_clean_edges`` is |clean_new|, carried (no count job): it
-    picks the election's loop and sizes its width, and the whole-graph
-    scope's.
+    job).  Every count the tail branches on rode a landing:
+    ``merge.clean_edge_count`` picks the election's loop and sizes its
+    width, and the whole-graph scope's; the clean-vertex count (from
+    ``inc-verts``) and the affected-member count (from ``inc-part``)
+    pick the scope.  The tail runs no driver-side query.
 
     Documented divergence: the reference re-runs its election Pregel
     over the WHOLE triangle subgraph every batch
@@ -368,12 +381,13 @@ def _elect_and_refine(
     keeps its label, and the movement rounds still move any boundary
     vertex the local election placed suboptimally.
 
-    ``affected_comms``: optional override of the affected-community
-    set.  The default derives it from ``vertices``' labels of the
-    changed vertices — correct for inserts (new vertices carry their
-    own id as label).  The DELETE path must pass the PRE-delete labels
+    ``merge.affected_comms``: optional override of the
+    affected-community set.  The default derives it from
+    ``merge.vertices``' labels of the changed vertices — correct for
+    inserts (new vertices carry their own id as label).  The DELETE
+    path must pass the PRE-delete labels
     instead: a vertex reverted to a singleton (t → 0) already carries
-    ``cId = vId`` in ``vertices``, which would hide its former
+    ``cId = vId`` in ``merge.vertices``, which would hide its former
     community from the affected set even though that community lost a
     member and its boundary edges — the carried-stats splice (and the
     election) must see it.
@@ -389,14 +403,14 @@ def _elect_and_refine(
     clean vertex, so every carried row is dropped and the splice
     reduces to the fresh tables.
     """
+    mat, vertices, clean_new = state.mat, merge.vertices, merge.clean_edges
+    affected_comms = merge.affected_comms
     if affected_comms is None:
         affected_comms = (
-            vertices.join(changed_verts, "vId", "left_semi")
+            vertices.join(merge.changed, "vId", "left_semi")
             .select("cId")
             .distinct()
         )
-    # the scoped election's true edge count is ≤ |clean_new|; the loop
-    # choice and width sizing take that bound
     report: dict = {}
     clean_all = vertices.where(F.col("t") > 0)
     # center election on the affected part of the cleaned subgraph
@@ -408,17 +422,26 @@ def _elect_and_refine(
             elect_verts.select(F.col("vId").alias("src")), "src", "left_semi"
         ).join(elect_verts.select(F.col("vId").alias("dst")), "dst", "left_semi")
     )
+    # the scoped election's true edge count is ≤ |clean_new|; the loop
+    # choice and width sizing take that bound
     local = initial_partition(
-        elect_verts, elect_edges, n_clean_edges, mat, report=report
+        elect_verts, elect_edges, merge.clean_edge_count, mat, report=report
     )
     keep = clean_all.join(
         affected_comms, "cId", "left_anti"
     ).select("vId", "t", "vt", "cc", "cId")
+    # the elected side holds exactly the clean members of the affected
+    # communities: its row count rides the landing
+    aff_obs = Observation()
     with no_aqe(vertices.sparkSession):
-        part = mat(local.unionByName(keep), "inc-part")
+        part = mat(
+            local.observe(aff_obs, F.count(F.lit(1)).alias("n")).unionByName(keep),
+            "inc-part",
+        )
     mat.release()
+    n_affected = int(aff_obs.get["n"])
 
-    scope = _pick_scope(vertices, part, clean_new, affected_comms, mat, n_clean_edges)
+    scope = _pick_scope(merge, part, elect_verts.select("vId"), n_affected, mat)
     vr = scope.labels
     vr_ids = vr.select("vId")
     scoped = scope.candidates is not None
@@ -430,7 +453,7 @@ def _elect_and_refine(
     # or a loop cache.
     with loop_scope(vertices.sparkSession, scope.n_edges, scope.floor):
         cur, cur_vcd, cur_cs, n_rounds = movement_rounds(
-            vr, scope.edges, global_cc, vertex_count, mat,
+            vr, scope.edges, merge.global_cc, merge.vertex_count, mat,
             FixedRounds(INCREMENTAL_ROUNDS), scope.n_edges,
             candidates=scope.candidates, outer_labels=scope.outer_labels,
             report=report,
@@ -443,25 +466,25 @@ def _elect_and_refine(
             .distinct()
         )
         new_stats = mat(
-            old_stats.select("cId", "r", "a", "b", "d")
+            state.stats.select("cId", "r", "a", "b", "d")
             .join(dropped_old, "cId", "left_anti")
             .unionByName(cur_cs.select("cId", "r", "a", "b", "d")),
             "inc-cs",
         )
         wccv_scope = wccv_by_community(
-            cur, cur_cs, cur_vcd, tri_static, tri_scope=vr_ids if scoped else None
+            cur, cur_cs, cur_vcd, merge.tri, tri_scope=vr_ids if scoped else None
         )
         # the WCC total rides the splice landing as an Observation — no
         # separate aggregation job
         wccv_obs = Observation()
         new_wccv = mat(
-            old_wccv.select("cId", "s", "n")
+            state.wccv.select("cId", "s", "n")
             .join(dropped_old, "cId", "left_anti")
             .unionByName(wccv_scope.select("cId", "s", "n"))
             .observe(wccv_obs, F.sum("s").alias("total")),
             "inc-wccv",
         )
-        wcc = float(wccv_obs.get["total"] or 0.0) / max(vertex_count, 1)
+        wcc = float(wccv_obs.get["total"] or 0.0) / max(merge.vertex_count, 1)
 
         # merge the refined scope back over the untouched remainder
         r_comms = vr.select("cId").distinct()
@@ -484,23 +507,23 @@ def _elect_and_refine(
     for df in (scope.candidates, scope.outer_labels, part, cur, vr):
         mat.drop(df)
     return WCCState(
-        edges=full_edges,
+        edges=merge.edges,
         clean_edges=clean_new,
         vertices=final_vertices,
         stats=new_stats,
         global_wcc=wcc,
-        vertex_count=vertex_count,
-        clean_edge_count=n_clean_edges,
-        tri=tri_static,
+        vertex_count=merge.vertex_count,
+        clean_edge_count=merge.clean_edge_count,
+        tri=merge.tri,
         wccv=new_wccv,
         mat=mat,
         report=dict(
             report,
-            affected_vertices=scope.affected_vertices,
+            affected_vertices=n_affected,
             scope_vertices=scope.scope_vertices,
             rounds=n_rounds,
         ),
-        pending_unions=pending_unions,
+        pending_unions=merge.pending_unions,
     )
 
 
@@ -513,24 +536,22 @@ class _Scope(NamedTuple):
     outer_labels: DataFrame | None  # fixed labels of dst endpoints outside vr
     n_edges: int  # rows of ``edges``: loop choice and width sizing
     floor: int  # loop-width floor
-    affected_vertices: int  # the scope probe's clean affected members
     scope_vertices: int | None  # |V_R|; None = the whole graph
 
 
 def _pick_scope(
-    vertices: DataFrame,      # pre-election labeling (vId,t,vt,cc,cId)
+    merge: _Merge,            # merge.vertices: pre-election labeling
     part: DataFrame,          # post-election labeling, same schema
-    clean_new: DataFrame,
-    affected_comms: DataFrame,  # PRE-election labels of changed vertices
+    affected_ids: DataFrame,  # clean members of the affected communities
+    n_affected: int,          # and their count
     mat: Materializer,
-    n_clean_edges: int,
 ) -> _Scope:
     """The batch-neighborhood scope (VERDICT r3 #2): the vertices a
     batch can influence, so the movement rounds and the final
     evaluation touch only them and the carried per-community
-    stats/WCC sums cover everything else.  When the scope probe finds
-    the neighborhood larger than ``_SCOPE_FRACTION`` of the clean
-    graph, the scope is the whole graph instead (every clean vertex
+    stats/WCC sums cover everything else.  When the affected members,
+    or else V_R, are more than ``_SCOPE_FRACTION`` of the clean
+    vertices, the scope is the whole graph instead (every clean vertex
     moves), which has the better constant for global batches.
 
     Scope construction (all sets distributed, nothing driver-side):
@@ -580,44 +601,30 @@ def _pick_scope(
     and every changed edge/triangle is incident to one).
     """
 
+    clean_new = merge.clean_edges
+
     def whole_graph() -> _Scope:
         return _Scope(
             part, clean_new.repartition("src").persist(),  # see refine_partition
-            None, None, n_clean_edges, 4, n_affected, None,
+            None, None, merge.clean_edge_count, 4, None,
         )
 
-    clean_all = vertices.where(F.col("t") > 0)
-    affected_ids = clean_all.join(
-        affected_comms, "cId", "left_semi"
-    ).select("vId")
+    # A batch is only worth scoping when its neighborhood is a small
+    # fraction of the graph; otherwise the scoped machinery is the full
+    # path plus overhead (measured 49.5s vs 30.4s per batch at sf0.1 on
+    # dense small-world graphs with uniformly-random batches).  Two
+    # checks, cheapest first: the affected members (the relabeled set),
+    # whose count and the clean-vertex count rode the inc-part and
+    # inc-verts landings; then V_R, counted by the scope-vr landing
+    # after the one edge scan that builds the candidate set.
+    n_clean = merge.clean_vertex_count
+    if n_affected > _SCOPE_FRACTION * n_clean:
+        return whole_graph()
     # post-election labels of relabeled vertices = ALL fragments the
     # election carved out of affected communities (not just fragments
     # containing a changed vertex — every fragment needs fresh stats)
     aff_new = part.join(affected_ids, "vId", "left_semi").select("cId").distinct()
     s_ids = part.join(aff_new, "cId", "left_semi").select("vId")
-
-    # ---- scope probe (two stages, cheapest first) --------------------
-    # A batch is only worth scoping when its neighborhood is a small
-    # fraction of the graph; otherwise the scoped machinery is the full
-    # path plus overhead (measured 49.5s vs 30.4s per batch at sf0.1 on
-    # dense small-world graphs with uniformly-random batches).  Stage 1
-    # checks the affected members alone (the relabeled set == the
-    # affected pre-election members, so ONE vertex-sized left-join
-    # aggregate yields both counts — no edge scan); stage 2 checks V_R
-    # after the one edge scan that builds the candidate set.
-    probe = (
-        clean_all.join(
-            affected_comms.select("cId").withColumn("_aff", F.lit(1)),
-            "cId",
-            "left",
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.count("_aff").alias("s"))
-        .first()
-    )
-    n_clean = int(probe["n"])
-    n_affected = int(probe["s"])
-    if n_affected > _SCOPE_FRACTION * n_clean:
-        return whole_graph()
     nbr_s = (
         clean_new.join(s_ids.withColumnsRenamed({"vId": "src"}), "src", "left_semi")
         .select(F.col("dst").alias("vId"))
@@ -661,8 +668,7 @@ def _pick_scope(
     # edge count, Σvt over V_R (vt is the clean degree, so this is
     # |scope_edges|), which rode the scope-vr landing — no edge-scan job.
     return _Scope(
-        vr, scope_edges, m_ids, outer_lab, int(vr_obs.get["e"] or 0), 1,
-        n_affected, n_vr,
+        vr, scope_edges, m_ids, outer_lab, int(vr_obs.get["e"] or 0), 1, n_vr,
     )
 
 
@@ -756,7 +762,7 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     )
 
     t_new = (F.col("t") - F.coalesce("dt", F.lit(0))).cast("int")
-    vertices, vertex_count, global_cc = _land_vertices(
+    vertex_table = (
         state.vertices.drop("vt", "cc")
         .join(dt, "vId", "left")
         .join(vt_new, "vId", "left")
@@ -767,25 +773,21 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
             # losing the last triangle reverts to a singleton community
             F.when(t_new > 0, F.col("cId")).otherwise(F.col("vId")).alias("cId"),
         )
-        .withColumn("cc", cc_col(F.col("t"), F.col("vt"))),
-        mat,
+        .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
     )
 
     changed_verts = (
         dead.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct()
     )
-    # PRE-delete labels (see _elect_and_refine: a reverted singleton's
-    # new cId = vId would hide its former community from the set)
-    affected_old = (
-        state.vertices.join(changed_verts, "vId", "left_semi")
+    return _elect_and_refine(state, _land_vertices(
+        vertex_table, mat, edges=full_edges, tri=tri_new, changed=changed_verts,
+        clean_edges=clean_new, clean_edge_count=int(clean_obs.get["n"]),
+        # PRE-delete labels (see _elect_and_refine: a reverted
+        # singleton's new cId = vId would hide its former community)
+        affected_comms=state.vertices.join(changed_verts, "vId", "left_semi")
         .select("cId")
-        .distinct()
-    )
-    return _elect_and_refine(
-        vertices, clean_new, int(clean_obs.get["n"]), changed_verts, tri_new,
-        full_edges, vertex_count, global_cc, mat, state.stats, state.wccv,
-        affected_comms=affected_old,
-    )
+        .distinct(),
+    ))
 
 
 def save_state(state: WCCState, path: str) -> None:

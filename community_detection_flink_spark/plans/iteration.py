@@ -27,6 +27,7 @@ import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
@@ -49,6 +50,16 @@ def _as_nullable(dt):
     if isinstance(dt, MapType):
         return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
     return dt
+
+
+def rmtree_local(path: str) -> None:
+    """Delete the directory ``path`` names if it is local: a plain
+    absolute path or a ``file:`` URI (``CDFS_CHECKPOINT_DIR=file:///…``).
+    Other filesystems are left alone."""
+    if path.startswith("file:"):
+        path = unquote(urlparse(path).path)
+    if path.startswith("/") and os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @contextmanager
@@ -212,8 +223,7 @@ class Materializer:
             except Exception:
                 pass  # best-effort, like the rmtree below
             return
-        if entry[1].startswith("/") and os.path.isdir(entry[1]):
-            shutil.rmtree(entry[1], ignore_errors=True)
+        rmtree_local(entry[1])
 
     def is_landed(self, df: DataFrame) -> bool:
         """True iff ``df`` is a PARQUET landing this materializer
@@ -263,5 +273,4 @@ class Materializer:
 
     def cleanup(self) -> None:
         """Best-effort removal of the checkpoint dir (local paths only)."""
-        if self.base.startswith(("/", "file:")) and os.path.isdir(self.base):
-            shutil.rmtree(self.base, ignore_errors=True)
+        rmtree_local(self.base)

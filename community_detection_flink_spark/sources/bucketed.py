@@ -54,12 +54,11 @@ def write_bucketed(
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     import os
-    import shutil
 
-    wh = (spark.conf.get("spark.sql.warehouse.dir", "") or "").removeprefix("file:")
-    loc = os.path.join(wh, table.lower())
-    if loc.startswith("/") and os.path.isdir(loc):  # local paths only
-        shutil.rmtree(loc, ignore_errors=True)
+    from community_detection_flink_spark.plans.iteration import rmtree_local
+
+    wh = spark.conf.get("spark.sql.warehouse.dir", "") or ""
+    rmtree_local(os.path.join(wh, table.lower()))
     writer = (
         df.write.mode("overwrite")
         .format("parquet")

@@ -30,12 +30,21 @@ from community_detection_flink_spark.operators.incremental import (
 from community_detection_flink_spark.plans.iteration import Materializer
 
 
+def _max_vertex(edges: DataFrame) -> int:
+    return int(edges.agg(F.max(F.greatest("src", "dst"))).first()[0])
+
+
 def split_bulk_stream(
     edges: DataFrame, bulk_to_stream_ratio: float = 0.8
 ) -> tuple[DataFrame, DataFrame, float]:
     """Bulk/stream split by vertex-id threshold (``CSVGraph.scala:70-77``):
     bulk = both endpoints below split, stream = any endpoint at/above."""
-    max_vertex = edges.agg(F.max(F.greatest("src", "dst"))).first()[0]
+    return _split_at(edges, _max_vertex(edges), bulk_to_stream_ratio)
+
+
+def _split_at(
+    edges: DataFrame, max_vertex: int, bulk_to_stream_ratio: float
+) -> tuple[DataFrame, DataFrame, float]:
     split = math.floor(max_vertex * bulk_to_stream_ratio)
     bulk = edges.where((F.col("src") < split) & (F.col("dst") < split))
     stream = edges.where((F.col("src") >= split) | (F.col("dst") >= split))
@@ -83,7 +92,7 @@ def localized_batches(
     spark = state.vertices.sparkSession
     base = state.max_vertex
     if base is None:
-        base = int(state.edges.agg(F.max(F.greatest("src", "dst"))).first()[0])
+        base = _max_vertex(state.edges)
     anchor_comms = [
         r["cId"]
         for r in state.stats.where(F.col("r").between(5, 60))
@@ -133,8 +142,8 @@ def run_edge_batches(
     ``mat`` goes to ``prepare``; the bulk load and every micro-batch
     land through it (``state.mat``).
     """
-    max_vertex = int(edges.agg(F.max(F.greatest("src", "dst"))).first()[0])
-    bulk, stream, split = split_bulk_stream(edges, bulk_to_stream_ratio)
+    max_vertex = _max_vertex(edges)
+    bulk, stream, split = _split_at(edges, max_vertex, bulk_to_stream_ratio)
     tri_bulk = None
     if tri_full is not None:
         tri_bulk = tri_full.where(
@@ -171,29 +180,26 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame) -> WCCState:
     op codes are an ERROR, not a silent drop.
 
     Each of the (up to three) batches lands through ``state.mat``, and
-    the returned state's ``report`` is the last one's.
+    the returned state's ``report`` is the last one's.  One aggregate
+    over the batch's op column (its distinct values) both validates it
+    and picks the batches that run.
     """
-    bad = (
-        batch_df.where(
-            ~F.col("op").isin("I", "D", "U") | F.col("op").isNull()
-        )
-        .limit(1)
-        .collect()
-    )
+    ops = {r["op"] for r in batch_df.select("op").distinct().collect()}
+    bad = ops - {"I", "D", "U"}
     if bad:
         raise ValueError(
-            f"apply_cdc_batch: unknown op {bad[0]['op']!r} — "
+            f"apply_cdc_batch: unknown op {min(bad, key=str)!r} — "
             "expected one of 'I', 'D', 'U'"
         )
     ups = batch_df.where("op = 'U'").select("src", "dst")
     ins = batch_df.where("op = 'I'").select("src", "dst")
     dels = batch_df.where("op = 'D'").select("src", "dst")
-    if not ups.isEmpty():
+    if "U" in ops:
         state = incremental_delete(state, ups)
         ins = ins.union(ups)
-    if not ins.isEmpty():
+    if "I" in ops or "U" in ops:
         state = incremental_update(state, ins)
-    if not dels.isEmpty():
+    if "D" in ops:
         state = incremental_delete(state, dels)
     return state
 

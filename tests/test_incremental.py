@@ -55,7 +55,7 @@ def test_whole_graph_scope_matches_oracle(spark, monkeypatch, seed, each_loop):
     delete batch equals the plain-Python reference
     (``pywcc_oracle.incremental_batch``) exactly, label for label, on
     both loops."""
-    monkeypatch.setattr(inc, "_SCOPE_FRACTION", -1)  # probe always declines
+    monkeypatch.setattr(inc, "_SCOPE_FRACTION", -1)  # always the whole graph
     old = _random_graph(n=36, communities=3, p_in=0.6, p_out=0.05, seed=seed)
     pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
     for loop in each_loop():
@@ -164,6 +164,51 @@ def test_prepare_lands_only_through_its_materializer(
     # file's insert and delete
     assert sum(p.startswith("inc-final") for p in landed) == 4
     assert handle.state.mat is mat and handle.state.report is not None
+
+
+# Spark jobs of one batch on the golden graph (default loops): a scoped
+# insert (a new triangle beside the graph), a delete and a CDC batch of
+# both.  Every count these batches branch on rides one of their
+# landings, so a driver-side query added to the batch path shows here.
+BATCH_JOBS = {"insert": 68, "delete": 67, "cdc": 137}
+
+
+def test_incremental_batches_run_the_pinned_jobs(spark, golden_edges):
+    import uuid
+
+    from community_detection_flink_spark.streaming.incremental_stream import (
+        apply_cdc_batch,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(batch):
+        group = f"inc-batch-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "one incremental batch")
+        try:
+            out = batch()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
+    state = prepare(symmetrize_edges(golden_edges))
+    got = {}
+    state, got["insert"] = jobs(
+        lambda: incremental_update(state, pairs_df([(20, 21), (20, 22), (21, 22)]))
+    )
+    assert state.report["scope_vertices"] == 3  # the scoped path ran
+    state, got["delete"] = jobs(lambda: incremental_delete(state, pairs_df([(0, 1)])))
+    cdc = spark.createDataFrame(
+        [(20, 23, "I"), (21, 23, "I"), (4, 5, "D")], "src LONG, dst LONG, op STRING"
+    )
+    state, got["cdc"] = jobs(lambda: apply_cdc_batch(state, cdc))
+    assert got == BATCH_JOBS
+    assert state.report["election"] == state.report["refinement"] == "task"
+    assert _labels(state) == {
+        0: 1, 1: 1, 2: 1, 3: 1, 4: 5, 5: 5, 6: 5, 7: 5,
+        20: 23, 21: 23, 22: 23, 23: 23,
+    }
 
 
 @pytest.mark.slow

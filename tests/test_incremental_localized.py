@@ -12,7 +12,7 @@ Three claims, each pinned:
   and the reference-shaped whole-graph rounds
   (``IncrementalWCC.scala:332-393``) produce the same labeling.  The
   whole-graph scope is forced by setting ``_SCOPE_FRACTION`` below 0,
-  so the scope probe always declines.
+  so the scope rule always declines.
 """
 
 from __future__ import annotations
@@ -111,7 +111,7 @@ def _assert_splice_exact(state):
 
 def _whole_graph_update(monkeypatch, state, batch, rounds=inc.INCREMENTAL_ROUNDS):
     with monkeypatch.context() as m:
-        m.setattr(inc, "_SCOPE_FRACTION", -1)  # the scope probe always declines
+        m.setattr(inc, "_SCOPE_FRACTION", -1)  # the scope rule always declines
         m.setattr(inc, "INCREMENTAL_ROUNDS", rounds)
         return incremental_update(state, batch)
 

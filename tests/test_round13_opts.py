@@ -88,3 +88,21 @@ def test_materializers_share_a_checkpoint_root(spark, tmp_path, monkeypatch):
     assert sorted(r.id for r in a.collect()) == [0, 1, 2, 3, 4]
     first.cleanup()
     assert os.listdir(tmp_path) == []
+
+
+def test_materializer_frees_file_uri_landings(spark, tmp_path, monkeypatch):
+    """With a ``file:`` URI as ``CDFS_CHECKPOINT_DIR``, ``drop`` deletes
+    a superseded landing's files and ``cleanup`` the whole dir, as they
+    do for a plain path."""
+    monkeypatch.setenv("CDFS_CHECKPOINT_DIR", f"file://{tmp_path}")
+    mat = Materializer(spark)
+    kept = mat(spark.range(3), "kept")
+    dropped = mat(spark.range(5), "dropped")
+    assert sorted(p.name.rsplit("-", 1)[0] for p in tmp_path.glob("*/*")) == [
+        "dropped", "kept",
+    ]
+    mat.drop(dropped)
+    assert [p.name.rsplit("-", 1)[0] for p in tmp_path.glob("*/*")] == ["kept"]
+    assert kept.count() == 3
+    mat.cleanup()
+    assert os.listdir(tmp_path) == []
