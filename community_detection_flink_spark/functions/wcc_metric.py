@@ -1,10 +1,10 @@
 """WCC metric kernels (SURVEY.md §2.8), each formula written once.
 
 Pure math from the DWCC paper (arXiv:1411.0557), mirrored from the
-reference's ``WCCMetric.scala``.  Each formula (``wcc_v``, ``theta1``-
-``theta3``, ``wcc_i``, ``wcc_r``) takes a ``Backend`` — how to cast an
-operand to float64, divide (NULL/NaN on /0) and select — and runs on
-either of two:
+reference's ``WCCMetric.scala``.  Each formula (``cc``, ``wcc_v``,
+``theta1``-``theta3``, ``wcc_i``, ``wcc_r``) takes a ``Backend`` — how
+to cast an operand to float64, divide (NULL/NaN on /0) and select — and
+runs on either of two:
 
 * ``COLUMNS``: JVM-side column expressions (``*_col``), so the
   distributed refinement loop stays inside whole-stage codegen (no
@@ -63,20 +63,19 @@ COLUMNS = Backend(
 ARRAYS = Backend(lambda x: np.asarray(x, dtype=np.float64), _np_div, np.where)
 
 
-def cc_col(t: Column, vt: Column) -> Column:
-    """Local clustering coefficient 2t/(vt(vt-1)), 0 if vt<2.
-
-    (``VertexData.scala:16-22``)."""
-    return F.when(vt < 2, F.lit(0.0)).otherwise(
-        2.0 * t.cast("double") / (vt.cast("double") * (vt.cast("double") - 1.0))
-    )
-
-
 # ----------------------------------------------------------------------
 # The formulas, each written once.  ``k`` is the backend; the guards
 # (t == 0, r == 1) read the operands as given, the arithmetic their
 # ``k.num`` casts.
 # ----------------------------------------------------------------------
+
+def cc(k: Backend, t, vt):
+    """Local clustering coefficient 2t/(vt(vt-1)), 0 if vt<2
+    (``VertexData.scala:16-22``).  The guard makes the plain division
+    safe, so it is not ``k.div``."""
+    f = k.num
+    return k.where(vt < 2, 0.0, 2.0 * f(t) / (f(vt) * (f(vt) - 1.0)))
+
 
 def wcc_v(k: Backend, t, vt, r, vtC, tC):
     """Per-vertex WCC against its community (``WCCMetric.scala:16-21``).
@@ -151,6 +150,10 @@ def wcc_r(k: Backend, r, a, b, dIn, dOut, w, v):
 # one, which is NULL on both sides.)
 # ----------------------------------------------------------------------
 
+def cc_col(t: Column, vt: Column) -> Column:
+    return cc(COLUMNS, t, vt)
+
+
 def wcc_v_col(t: Column, vt: Column, r: Column, vtC: Column, tC: Column) -> Column:
     return wcc_v(COLUMNS, t, vt, r, vtC, tC)
 
@@ -163,6 +166,11 @@ def wcc_i_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
 def wcc_r_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
               global_cc: Column, vertex_count: Column) -> Column:
     return wcc_r(COLUMNS, r, a, b, dIn, dOut, global_cc, vertex_count)
+
+
+def np_cc(t, vt):
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return cc(ARRAYS, t, vt)
 
 
 def np_wcc_v(t, vt, r, vtC, tC):

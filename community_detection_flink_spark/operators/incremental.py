@@ -113,9 +113,11 @@ class WCCState:
     # the rounds (``election``/``refinement``: "task" or "spark");
     # ``None`` after ``prepare`` or ``load_state``
     report: dict | None = None
-    # highest vertex id seen (set by ``run_edge_batches``) — callers
-    # that need the id ceiling read it here instead of re-running an
-    # agg job over the edge set
+    # highest vertex id seen (set by ``run_edge_batches``, then carried
+    # by every batch: an insert raises it to its new edges' max, which
+    # rides the ``inc-newe`` landing) — callers that need the id ceiling
+    # read it here instead of re-running an agg job over the edge set;
+    # ``None`` (unknown) stays ``None``
     max_vertex: int | None = None
     # batches since ``edges``/``clean_edges`` were last parquet-landed:
     # inserts extend both as LAZY unions of disjoint deltas (no O(|E|)
@@ -238,7 +240,17 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     mat = state.mat
 
     sym = symmetrize_edges(batch_edges)
-    new_e = mat(sym.join(state.edges, ["src", "dst"], "left_anti"), "inc-newe")
+    # the batch's highest new vertex id rides the landing: the next
+    # state's id ceiling
+    new_obs = Observation()
+    new_e = mat(
+        sym.join(state.edges, ["src", "dst"], "left_anti")
+        .observe(new_obs, F.max("src").alias("m")),
+        "inc-newe",
+    )
+    max_vertex = state.max_vertex
+    if max_vertex is not None and new_obs.get["m"] is not None:
+        max_vertex = max(max_vertex, int(new_obs.get["m"]))
     # new_e is anti-joined against the carried set, so the union is
     # DISJOINT — no dedup shuffle, no O(|E|) rewrite per batch.  The
     # union stays lazy (a scan of the carried parquet roots plus this
@@ -315,6 +327,7 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         # too (a new clean edge is an edge of some new triangle)
         changed=tri.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct(),
         pending_unions=0 if compact else state.pending_unions + 1,
+        max_vertex=max_vertex,
     ))
 
 
@@ -336,6 +349,8 @@ class _Merge(NamedTuple):
     # ``_elect_and_refine`` for why a delete passes its own)
     affected_comms: DataFrame | None = None
     pending_unions: int = 0
+    # the next state's id ceiling (``WCCState.max_vertex``)
+    max_vertex: int | None = None
 
 
 def _land_vertices(vertices: DataFrame, mat: Materializer, **merge) -> _Merge:
@@ -524,6 +539,7 @@ def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
             rounds=n_rounds,
         ),
         pending_unions=merge.pending_unions,
+        max_vertex=merge.max_vertex,
     )
 
 
@@ -784,6 +800,8 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
         clean_edges=clean_new, clean_edge_count=int(clean_obs.get["n"]),
         # PRE-delete labels (see _elect_and_refine: a reverted
         # singleton's new cId = vId would hide its former community)
+        # a delete adds no vertex and removes none: the ceiling carries
+        max_vertex=state.max_vertex,
         affected_comms=state.vertices.join(changed_verts, "vId", "left_semi")
         .select("cId")
         .distinct(),

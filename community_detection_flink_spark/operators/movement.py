@@ -113,3 +113,12 @@ def protocol(rule, labels, move, evaluate, free):
         free(cur)
         cur = nxt
     return cur, moves, wccs
+
+
+def replay(rule, wccs) -> None:
+    """Bring ``rule`` up to date with the WCCs a ``protocol`` run on a
+    copy of it evaluated (a task's): same rule, same decisions."""
+    if wccs:
+        rule.start(wccs[0])
+        for wcc in wccs[1:]:
+            rule.keep(wcc)

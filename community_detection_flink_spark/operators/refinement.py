@@ -35,8 +35,15 @@ from community_detection_flink_spark.operators.community import (
     community_stats,
     global_wcc,
 )
-from community_detection_flink_spark.operators.movement import AcceptIfImproved, protocol
-from community_detection_flink_spark.operators.partition import initial_partition
+from community_detection_flink_spark.operators.movement import (
+    AcceptIfImproved,
+    protocol,
+    replay,
+)
+from community_detection_flink_spark.operators.partition import (
+    MAX_ITERATIONS,
+    initial_partition,
+)
 from community_detection_flink_spark.operators.preprocess import preprocess
 from community_detection_flink_spark.operators.triangles import triangles
 from community_detection_flink_spark.plans.iteration import Materializer, loop_scope
@@ -64,15 +71,15 @@ class WCCResult:
     wcc_history: list | None = None
     # what the run did, from values it has anyway (no job): ``rounds``,
     # ``moves`` (vertices moved in each round) and which loop ran each
-    # phase, ``election`` and ``refinement`` ("task" = the small-state
-    # tier, "spark" = the distributed loop)
+    # phase, ``graph`` (the load), ``election`` and ``refinement``
+    # ("task" = the small-state tier, "spark" = the distributed loop)
     report: dict | None = None
 
 
 @dataclass(frozen=True)
 class Graph:
-    """A graph landed by ``load_graph``: its tables, and the two counts
-    that rode their landings."""
+    """A graph landed by ``load_graph``: its tables, the counts that
+    rode their landings, and the loop that loaded it."""
 
     edges: DataFrame  # the symmetrized doubled-edge set
     tri: DataFrame  # u, v, w — every triangle of ``edges`` once
@@ -81,6 +88,8 @@ class Graph:
     clean_edge_count: int  # |E_clean|
     cc_sum: float  # Σcc over ``vertices``
     tri_count: int  # |tri|
+    vertex_count: int  # |V|: the distinct vertices of ``edges``
+    loop: str  # "task" (the small-state tier) or "spark"
 
 
 def load_graph(
@@ -88,20 +97,28 @@ def load_graph(
 ) -> Graph:
     """Land ``edges`` and their cleaned graph once
     (``DistributedWCC.preprocess``, ``DistributedWCC.scala:88-130``):
-    land the edges, enumerate their triangles (unless ``tri`` is given)
-    and land them, then land ``preprocess``'s clean edges and clean
-    vertices.  One triangle enumeration serves preprocessing AND every
-    later WCC evaluation: the clean edges keep every triangle edge, so
+    land the edges, enumerate their triangles (unless ``tri`` is given),
+    and derive ``preprocess``'s clean edges and clean vertices.  One
+    triangle enumeration serves preprocessing AND every later WCC
+    evaluation: the clean edges keep every triangle edge, so
     triangles(clean) == triangles(full).
 
-    |tri| rides the triangle landing, |E_clean| the clean-edge landing
-    and Σcc the vertex landing, as Observations — no extra job.  Every
-    table lands through ``mat``; freeing them is the caller's.
+    |E| rides the ``edges`` landing as an Observation and picks the
+    loop.  Under ``task_tier.TASK_ROWS`` one pandas task does the rest
+    (``task_tier.load_graph``): triangles, clean edges and clean
+    vertices land with ONE split landing, which carries |tri|,
+    |E_clean|, Σcc and |V|.  Otherwise Spark enumerates the triangles
+    and lands them (|tri| riding), then the clean edges (|E_clean|) and
+    the clean vertices (Σcc), and one job counts |V|.  Every table
+    lands through ``mat``; freeing them is the caller's.
 
     ``tri``: a triangle list of ``edges`` the caller already has (e.g.
     filtered down from a supergraph's, see ``run_edge_batches``).
     """
-    edges = mat(edges, "edges")
+    e_obs = Observation()
+    edges = mat(edges.observe(e_obs, F.count(F.lit(1)).alias("n")), "edges")
+    if task_tier.fits(int(e_obs.get["n"])):
+        return Graph(edges=edges, loop="task", **task_tier.load_graph(edges, mat, tri))
     if tri is None:
         tri = triangles(edges, mat=mat)
     t_obs, n_obs, cc_obs = Observation(), Observation(), Observation()
@@ -120,6 +137,8 @@ def load_graph(
         clean_edge_count=int(n_obs.get["n"]),
         cc_sum=float(cc_obs.get["s"] or 0.0),
         tri_count=int(t_obs.get["n"]),
+        vertex_count=edges.select("src").distinct().count(),
+        loop="spark",
     )
 
 
@@ -237,10 +256,7 @@ def movement_rounds(
             labels, edges, global_cc, vertex_count, mat, policy,
             candidates, outer_labels, tri,
         )
-        if wccs:  # replay the task's decisions: same rule, same state
-            policy.start(wccs[0])
-            for wcc in wccs[1:]:
-                policy.keep(wcc)
+        replay(policy, wccs)
         state = caches(cur)
     else:
         loop = "spark"
@@ -251,7 +267,7 @@ def movement_rounds(
 
 
 def refine_partition(
-    vertices: DataFrame,
+    vertices: DataFrame | None,
     graph: Graph,
     vertex_count: int,
     mat: Materializer,
@@ -264,6 +280,13 @@ def refine_partition(
     with ``AcceptIfImproved``) from the labeling ``vertices`` over
     ``graph``'s clean edges.
 
+    ``vertices`` None: the loop starts from ``initial_partition``'s
+    labeling, elected here.  When the clean graph's |E_clean| + |tri|
+    fits one task, the election and every round run in that ONE task
+    (``task_tier.run_wcc``), whose kept labeling and stats land once.
+    Otherwise the election lands as ``init`` (freed here once a round
+    supersedes it) and the rounds run as ``movement_rounds`` picks.
+
     The Spark loop is planned NON-adaptive at the loop width (r10,
     ``plans.loop_scope``, floor 4): every loop input is a
     Materializer-landed parquet (true file-size stats) or a persisted
@@ -273,19 +296,39 @@ def refine_partition(
     (−56%) for identical results (16 rounds, wcc 0.04752) and flat
     wall.  ``perfbench/run.py --trace 1`` charges this loop's jobs to
     ``iteration.landing``: each one runs inside a ``Materializer``
-    landing (the task's one job inside ``moved``'s).
+    landing (a task's one job inside its landing).
 
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
     round's WCC (driver-side floats the loop computes anyway);
-    ``report``, if given, what ``movement_rounds`` reports.  The loop
-    width, the loop choice and the global CC come from ``graph``'s
-    carried counts.
+    ``report``, if given, what ``initial_partition`` and
+    ``movement_rounds`` report (``election``, ``refinement``,
+    ``moves``).  The loop width, the loop choice and the global CC come
+    from ``graph``'s carried counts.
     ``graph.tri`` (static triangle list of the clean edges) makes the
     per-round tC pass three joins + one aggregate (see
-    ``intra_triangle_counts``).  ``vertices`` must be a landing of
-    ``mat`` (``run_wcc``'s ``init``); it is never dropped.
+    ``intra_triangle_counts``).  A given ``vertices`` must be a landing
+    of ``mat``; it is never dropped.
     """
+    policy = AcceptIfImproved(max_retries, threshold, history)
+    global_cc = graph.cc_sum / float(vertex_count)  # DistributedWCC.scala:261-262
+    elected = vertices is None
+    if elected and task_tier.fits(graph.clean_edge_count + graph.tri_count):
+        best, best_cs, moves = task_tier.run_wcc(
+            graph, global_cc, vertex_count, mat, policy, MAX_ITERATIONS
+        )
+        if report is not None:
+            report.update(election="task", refinement="task", moves=moves)
+        return best, best_cs, policy.wcc, global_cc, len(moves)
+    if elected:
+        vertices = mat(
+            initial_partition(
+                graph.vertices, graph.clean_edges, graph.clean_edge_count, mat,
+                report=report,
+            ),
+            "init",
+        )
+        mat.release()  # MIS "higher" edge cache and "mis-centers" landing
     with loop_scope(vertices.sparkSession, graph.clean_edge_count, 4):
         # the static triangle list is scanned once per round by the WCC
         # eval — persist it for the loop like loop_edges below (r12),
@@ -295,13 +338,11 @@ def refine_partition(
         tri_persisted = not tri.is_cached
         if tri_persisted:
             tri = tri.persist()
-        global_cc = graph.cc_sum / float(vertex_count)  # DistributedWCC.scala:261-262
         # One src-hash shuffle up front, reused every round: the label
         # maps broadcast, so the triplets build preserves this
         # partitioning and the per-src aggregations (vcd, vtC) and
         # vId-keyed joins downstream need no further exchange.
         loop_edges = graph.clean_edges.repartition("src").persist()
-        policy = AcceptIfImproved(max_retries, threshold, history)
         best, best_vcd, best_cs, rounds = movement_rounds(
             vertices, loop_edges, global_cc, vertex_count, mat, policy,
             graph.clean_edge_count + graph.tri_count, tri=tri, report=report,
@@ -312,6 +353,10 @@ def refine_partition(
             df.unpersist(False)
         if tri_persisted:
             tri.unpersist(False)
+    # best IS the input when the loop kept no round — the returned
+    # plans still read its files then
+    if elected and best is not vertices:
+        mat.drop(vertices)
     return best, final_cs, policy.wcc, global_cc, rounds
 
 
@@ -329,10 +374,15 @@ def run_wcc(
     pruned in preprocessing keep their own singleton community in the
     final result (``DistributedWCC.scala:63-78``).
 
-    One pipeline: ``load_graph``, elect the initial partition, refine.
-    What it lands along the way is dropped on return; the returned
-    communities and stats read landings of ``mat`` (default: a fresh
-    ``Materializer``), which the result carries as ``res.mat``.
+    One pipeline: ``load_graph``, then ``refine_partition`` from the
+    elected initial partition.  On a graph under
+    ``task_tier.TASK_ROWS`` that is three landings: the edges, the
+    graph task's split landing and the WCC task's (kept labels and
+    their stats).  What it lands along the way is dropped on return;
+    the returned communities and stats read landings of ``mat``
+    (default: a fresh ``Materializer``), which the result carries as
+    ``res.mat``.  ``res.report`` says which loop loaded the graph
+    (``graph``), elected and refined.
 
     ``edges`` may instead be a ``Graph`` the caller already loaded
     (``__spark_entry__._graph``, the incremental ``prepare``): it
@@ -346,7 +396,7 @@ def run_wcc(
     # into the returned plans
     owned = [] if loaded else [graph.tri, graph.clean_edges, graph.vertices]
     all_vertices = graph.edges.select(F.col("src").alias("vId")).distinct()
-    vertex_count = all_vertices.count()
+    vertex_count = graph.vertex_count
     if vertex_count == 0:
         for df in owned:
             mat.drop(df)
@@ -361,24 +411,13 @@ def run_wcc(
             mat=mat,
         )
 
-    report: dict = {}
-    init = mat(
-        initial_partition(
-            graph.vertices, graph.clean_edges, graph.clean_edge_count, mat,
-            report=report,
-        ),
-        "init",
-    )
-    mat.release()  # MIS "higher" edge cache and "mis-centers" landing
-
+    report: dict = {"graph": graph.loop}
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
-        init, graph, vertex_count, mat, max_retries, threshold,
+        None, graph, vertex_count, mat, max_retries, threshold,
         history=history, report=report,
     )
-    # best IS init when the Spark loop kept no round — the returned
-    # communities plan still reads init's files then
-    for df in owned + ([init] if best is not init else []):
+    for df in owned:
         mat.drop(df)
 
     communities = all_vertices.join(best.select("vId", "cId"), "vId", "left").select(

@@ -1,27 +1,39 @@
-"""Small-state tier: a WCC loop whose state fits one task runs all its
-rounds inside ONE executor task (ROADMAP item 3).
+"""Small-state tier: WCC work whose state fits one task runs inside ONE
+executor task (ROADMAP items 3 and 8).
 
-The MIS election (``partition.initial_partition``) and the movement
-rounds (``refinement.movement_rounds``) run each round as a chain of
-Spark jobs and a parquet landing.  On a small graph that chain costs
-far more than the work: the rounds are bound by per-job latency, not by
-compute.  When a loop's state is under ``TASK_ROWS`` rows, its inputs
-are packed into one tagged table and go through ONE grouped
-``applyInPandas`` over a constant key (the ``gapply`` pattern): one
-task runs every round — the election's, or the movement protocol
-(``operators/movement.py``) that the Spark loop also runs — with the
-kernel formulas on float64 arrays (``functions/wcc_metric.py``), and
-emits the loop's result for the caller's ``Materializer`` to land — one
-job instead of a chain per round.  Computing locally when the state is
-small instead of running global rounds is REPOSE's local-index idea
-(ICDE 2021).
+The triangle enumeration and preprocessing (``refinement.load_graph``),
+the MIS election (``partition.initial_partition``) and the movement
+rounds (``refinement.movement_rounds``) run as chains of Spark jobs and
+parquet landings.  On a small graph those chains cost far more than the
+work: they are bound by per-job latency, not by compute.  When the
+state is under ``TASK_ROWS`` rows, its inputs are packed into one
+tagged table and go through ONE grouped ``applyInPandas`` over a
+constant key (the ``gapply`` pattern): one task builds the graph over
+arrays (``_SmallGraph``) and runs the work with the kernel formulas on
+float64 arrays (``functions/wcc_metric.py``) — the election's rounds,
+the movement protocol (``operators/movement.py``) that the Spark loop
+also runs, or the triangle kernel — and emits the result for the
+caller's ``Materializer`` to land, split by tag when it is several
+tables.  Computing locally when the state is small instead of running
+global rounds is REPOSE's local-index idea (ICDE 2021).
 
-The tier is chosen in exactly two places, ``initial_partition`` and
-``movement_rounds``, on a row count known without a job: the carried
-|E_clean| (``refinement.Graph``, ``incremental.WCCState``) and the
-triangle count that rides ``load_graph``'s ``tri`` landing.  Above the
-threshold the Spark loops run unchanged.  Nothing O(V) reaches the
-driver: the executors land the task's output, and only the per-round
+Four tasks, each chosen on a row count known without a job:
+
+* ``load_graph`` (``refinement.load_graph``): triangles, ``t``/``vt``/
+  ``cc`` and the clean edges of a graph whose |E| (riding its ``edges``
+  landing) fits.  The gate bounds the task's INPUT edges, not its
+  triangle output, which a dense graph can make larger (up to
+  O(|E|^1.5) rows);
+* ``run_wcc`` (``refinement.refine_partition`` with no labeling): the
+  election AND every accept-if-improved round, when the clean graph's
+  |E_clean| + |tri| fits;
+* ``elect`` (``initial_partition``) and ``run_rounds``
+  (``movement_rounds``) on their own, for callers with a labeling of
+  their own (the incremental batches), on the carried |E_clean| and the
+  scope's edge count.
+
+Above the threshold the Spark paths run unchanged.  Nothing O(V)
+reaches the driver: the executors land the task's output, and only its
 counters ride that landing as an Observation.
 
 Like every Arrow-batched operator of the package, the task's code runs
@@ -40,33 +52,38 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from community_detection_flink_spark.functions.wcc_metric import (
+    np_cc,
     np_wcc_i,
     np_wcc_r,
     np_wcc_v,
 )
-from community_detection_flink_spark.operators.movement import protocol
+from community_detection_flink_spark.operators.movement import protocol, replay
 
-# Loops whose state has fewer rows than this run in one task.  Measured
-# on 4 cores (plans/r14/crossover.txt): ``run_wcc`` on the task loop
-# beat the Spark loop at every size up to 3.96M rows (4-5x on small
-# graphs, 1.8x there, the lead shrinking with size), with ~1.1 GB peak
-# RSS in the one Python worker; the crossover lies above and this is
-# the largest state measured.
+# State under this many rows runs in one task.  Measured on 4 cores
+# (plans/r14/crossover.txt): ``run_wcc`` on the task tier beat the Spark
+# loops at every size up to 3.96M rows (4-5x on small graphs; with the
+# graph task fused in, 2.2x there at ~1.3 GB peak RSS in the one Python
+# worker); the crossover lies above and this is the largest state
+# measured.
 TASK_ROWS = 4_000_000
 
 
 def fits(rows: int) -> bool:
-    """True iff a loop state of ``rows`` rows takes the task tier."""
+    """True iff a state of ``rows`` rows takes the task tier."""
     return rows < TASK_ROWS
 
 
 # The packed input: one row per vertex, edge, candidate, outer label or
 # triangle, tagged by ``k``; unused fields are 0 (never NULL, so the
-# Arrow → pandas conversion keeps every id an exact int64).
+# Arrow → pandas conversion keeps every id an exact int64).  The graph
+# task's output uses the same fields under a string tag.
 _FIELDS = (("a", "long"), ("b", "long"), ("c", "long"), ("t", "int"),
            ("vt", "int"), ("cc", "double"))
 _SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE = range(6)
 _LABELING = "vId LONG, t INT, vt INT, cc DOUBLE, cId LONG"
+_PACKED = ", ".join(f"{name} {ty}" for name, ty in _FIELDS)
+# rows per chunk of the triangle kernel's wedge arrays (bounds its memory)
+_WEDGES = 1 << 22
 
 
 def _part(tag: int, df: DataFrame, **cols: str) -> DataFrame:
@@ -81,6 +98,12 @@ def _part(tag: int, df: DataFrame, **cols: str) -> DataFrame:
     )
 
 
+def _sentinel(df: DataFrame) -> DataFrame:
+    """One packed row whatever the inputs hold, so the task (and its
+    counters) runs on an empty input too."""
+    return _part(_SENTINEL, df.sparkSession.range(1))
+
+
 def _one_task(parts: list[DataFrame], task, schema: str) -> DataFrame:
     """Union ``parts`` and run ``task`` over all of their rows in one
     pandas task (one group, one constant key)."""
@@ -88,6 +111,37 @@ def _one_task(parts: list[DataFrame], task, schema: str) -> DataFrame:
     for p in parts[1:]:
         packed = packed.unionByName(p)
     return packed.groupBy(F.lit(0).alias("_g")).applyInPandas(task, schema)
+
+
+def _tagged(columns: list[str], parts: dict, info: dict) -> pd.DataFrame:
+    """A task's output: the rows of each ``parts`` table under its tag
+    (``k``), 0 in the fields it leaves out, then one row whose ``info``
+    holds ``info`` as JSON (``info`` is NULL on every other row)."""
+    frames = []
+    for tag, cols in parts.items():
+        n = len(next(iter(cols.values())))
+        frames.append(pd.DataFrame(
+            {"k": tag, **{c: cols.get(c, np.zeros(n, np.int64)) for c in columns},
+             "info": None}
+        ))
+    frames.append(pd.DataFrame(
+        {"k": "info", **{c: [0] for c in columns}, "info": [json.dumps(info)]}
+    ))
+    return pd.concat(frames, ignore_index=True)
+
+
+def _land(mat, plan: DataFrame, name: str, split: dict | None = None):
+    """Land a task's ``plan`` through ``mat`` as ``name`` (split by tag
+    when ``split`` is given, see ``Materializer.__call__``); its info
+    row rides the landing as an Observation.  Returns ``(landing,
+    info)``."""
+    obs = Observation()
+    rows = (
+        plan.observe(obs, F.max("info").alias("info"))
+        .where(F.col("info").isNull())
+        .drop("info")
+    )
+    return mat(rows, name, split=split), json.loads(obs.get["info"])
 
 
 def _index(ids: np.ndarray, keys: np.ndarray) -> np.ndarray:
@@ -101,27 +155,166 @@ def _index(ids: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return np.where(ids[hit] == keys, hit, -1)
 
 
-def _edges(ids: np.ndarray, src: np.ndarray, dst: np.ndarray):
-    """Edge endpoints as positions in ``ids``; edges with an unknown
-    endpoint drop out, as in the Spark kernels' label joins."""
-    s, d = _index(ids, src), _index(ids, dst)
-    keep = (s >= 0) & (d >= 0)
-    return s[keep], d[keep]
+def _csr(s: np.ndarray, n: int) -> np.ndarray:
+    """Row pointers of edges sorted by source position ``s``: the
+    out-edges of ``i`` are rows ``ptr[i]:ptr[i + 1]``."""
+    return np.concatenate([[0], np.cumsum(np.bincount(s, minlength=n))])
+
+
+class _SmallGraph:
+    """A task's labeled graph over arrays, unpacked once and shared by
+    the election and the movement rounds.
+
+    Positions ``[0, n)`` are the labeling's vertices in ascending id,
+    with their ``t``/``vt``/``cc``; the positions after them are the
+    fixed outer labels' vertices.  ``labels`` holds every position's
+    input label.  The edges are ``(s, d)`` position pairs sorted by
+    ``(s, d)`` with row pointers ``ptr`` (a CSR); an edge with an
+    unknown endpoint drops out, as in the Spark kernels' label joins.
+    ``tri``: the triangles' corner positions, those inside the
+    labeling; ``candidates``: the positions of the candidate rows."""
+
+    def __init__(self, pdf: pd.DataFrame):
+        k = pdf["k"].to_numpy()
+        v = pdf[k == _VERTEX].sort_values("a")
+        o = pdf[k == _OUTER].sort_values("a")
+        self.vid = v["a"].to_numpy()
+        self.n = len(self.vid)
+        self.ids = np.concatenate([self.vid, o["a"].to_numpy()])
+        self.labels = np.concatenate([v["b"].to_numpy(), o["b"].to_numpy()])
+        self.t, self.vt, self.cc = (v[c].to_numpy() for c in ("t", "vt", "cc"))
+        e = pdf[k == _EDGE]
+        s, d = _index(self.ids, e["a"].to_numpy()), _index(self.ids, e["b"].to_numpy())
+        keep = (s >= 0) & (d >= 0)
+        order = np.lexsort((d[keep], s[keep]))
+        self.s, self.d = s[keep][order], d[keep][order]
+        self.ptr = _csr(self.s, len(self.ids))
+        tri = pdf[k == _TRIANGLE]
+        corners = [_index(self.vid, tri[c].to_numpy()) for c in ("a", "b", "c")]
+        inside = (corners[0] >= 0) & (corners[1] >= 0) & (corners[2] >= 0)
+        self.tri = [c[inside] for c in corners]
+        m = _index(self.vid, pdf[k == _CANDIDATE]["a"].to_numpy())
+        self.candidates = m[m >= 0]
+
+
+# ----------------------------------------------------------------------
+# The graph: triangles and preprocessing
+# ----------------------------------------------------------------------
+
+def _triangles(ids: np.ndarray, src: np.ndarray, dst: np.ndarray):
+    """Every triangle of the edge rows ``(src, dst)`` once, as corner
+    positions in ``ids`` (their distinct sources, ascending) ``(u, v,
+    w)``: ``triangles.triangles``' rows over arrays.  Each edge is
+    oriented from its lower (degree, id) endpoint to its higher one
+    (``triangles._oriented``: the degree counts the rows per source, and
+    an edge whose dst is no source has none and drops out); a triangle
+    is the oriented edge (u, v) plus a w that both orient to.  The
+    wedges (u, v, w) of an oriented path u → v → w go through in chunks
+    of about ``_WEDGES`` rows; a wedge closes iff u → w is an oriented
+    edge."""
+    n = len(ids)
+    s, d = np.searchsorted(ids, src), _index(ids, dst)
+    deg = np.bincount(s, minlength=n)
+    s, d = s[d >= 0], d[d >= 0]
+    rank = np.empty(n, np.int64)
+    rank[np.lexsort((ids, deg))] = np.arange(n)
+    up = rank[s] < rank[d]
+    key = np.unique(s[up] * n + d[up])  # oriented edges, sorted (u, v)
+    eu, ev = key // n, key % n
+    ptr = _csr(eu, n)
+    wedges = ptr[ev + 1] - ptr[ev]  # per oriented edge (u, v): v's out-edges
+    ends = np.cumsum(wedges)
+    out = [], [], []
+    lo = 0
+    while lo < len(key):
+        hi = max(int(np.searchsorted(ends, ends[lo] - wedges[lo] + _WEDGES, "right")), lo + 1)
+        c = wedges[lo:hi]
+        first = np.repeat(ptr[ev[lo:hi]] - (np.cumsum(c) - c), c)
+        edge = np.repeat(np.arange(lo, hi), c)
+        w = ev[first + np.arange(len(edge))]
+        u = eu[edge]
+        q = u * n + w
+        at = np.minimum(np.searchsorted(key, q), len(key) - 1)
+        closed = key[at] == q
+        for acc, x in zip(out, (u, ev[edge], w)):
+            acc.append(x[closed])
+        lo = hi
+    return [np.concatenate(x) if x else np.zeros(0, np.int64) for x in out]
+
+
+def load_graph(edges: DataFrame, mat, tri: DataFrame | None = None) -> dict:
+    """``refinement.load_graph`` after the ``edges`` landing, in one
+    task: the triangles of ``edges`` (``_triangles``, unless ``tri``
+    gives them), each vertex's ``t``, the doubled clean edges (the
+    triangle edges), the clean vertices' ``vt`` (clean degree) and
+    ``cc``.  ``tri``, the clean vertices and the clean edges land
+    through ``mat`` with one split landing (``graph``); |tri|,
+    |E_clean|, Σcc (summed in ascending vId order) and |V| ride it.
+    Returns ``Graph``'s fields but ``edges`` and ``loop``."""
+
+    given = tri is not None
+
+    def task(pdf: pd.DataFrame) -> pd.DataFrame:
+        k = pdf["k"].to_numpy()
+        e = pdf[k == _EDGE]
+        src, dst = e["a"].to_numpy(), e["b"].to_numpy()
+        ids = np.unique(src)
+        n = len(ids)
+        if given:
+            tr = pdf[k == _TRIANGLE]
+            u, v, w = (_index(ids, tr[c].to_numpy()) for c in ("a", "b", "c"))
+        else:
+            u, v, w = _triangles(ids, src, dst)
+        t = np.bincount(np.concatenate([u, v, w]), minlength=n)
+        pairs = np.unique(np.concatenate(
+            [a * n + b for a, b in ((u, v), (u, w), (v, w), (v, u), (w, u), (w, v))]
+        ))
+        cs, cd = pairs // n, pairs % n
+        vt = np.bincount(cs, minlength=n)
+        clean = np.flatnonzero(t > 0)
+        cc = np_cc(t[clean], vt[clean])
+        parts = {
+            "tri": dict(a=ids[u], b=ids[v], c=ids[w]),
+            "vertices": dict(a=ids[clean], t=t[clean], vt=vt[clean], cc=cc),
+            "clean-edges": dict(a=ids[cs], b=ids[cd]),
+        }
+        info = dict(tri=len(u), clean_edges=len(cs), cc_sum=sum(cc.tolist()), vertices=n)
+        return _tagged([name for name, _ in _FIELDS], parts, info)
+
+    parts = [_sentinel(edges), _part(_EDGE, edges, a="src", b="dst")]
+    if given:
+        parts.append(_part(_TRIANGLE, tri, a="u", b="v", c="w"))
+    plan = _one_task(parts, task, f"k STRING, {_PACKED}, info STRING")
+    landed, info = _land(mat, plan, "graph", split={
+        "tri": [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")],
+        "vertices": [F.col("a").alias("vId"), "t", "vt", "cc"],
+        "clean-edges": [F.col("a").alias("src"), F.col("b").alias("dst")],
+    })
+    return dict(
+        tri=landed["tri"],
+        vertices=landed["vertices"],
+        clean_edges=landed["clean-edges"],
+        tri_count=info["tri"],
+        clean_edge_count=info["clean_edges"],
+        cc_sum=info["cc_sum"],
+        vertex_count=info["vertices"],
+    )
 
 
 # ----------------------------------------------------------------------
 # The MIS election
 # ----------------------------------------------------------------------
 
-def _elect(vid, vt, cc, src, dst, max_iterations: int) -> np.ndarray:
-    """``initial_partition``'s loop over arrays: the same frontier
-    rounds (capped at ``max_iterations``) over the total order
+def _elect(g: _SmallGraph, max_iterations: int) -> np.ndarray:
+    """``initial_partition``'s loop over ``g``'s labeling: the same
+    frontier rounds (capped at ``max_iterations``) over the total order
     ``(cc, vt, vId)``, then each vertex adopts its highest-ordered
     higher center neighbor.  Returns the ``cId`` of every vertex."""
-    n = len(vid)
+    n, vid = g.n, g.vid
     rank = np.empty(n, np.int64)
-    rank[np.lexsort((vid, vt, cc))] = np.arange(n)
-    s, d = _edges(vid, src, dst)
+    rank[np.lexsort((vid, g.vt, g.cc))] = np.arange(n)
+    inner = (g.s < n) & (g.d < n)
+    s, d = g.s[inner], g.d[inner]
     up = rank[d] > rank[s]
     hs, hd = s[up], d[up]  # the "higher" edges: dst outranks src
     center = np.zeros(n, bool)
@@ -155,11 +348,9 @@ def elect(vertices: DataFrame, edges: DataFrame, max_iterations: int) -> DataFra
     computed in one task; the caller lands it."""
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = pdf["k"].to_numpy()
-        v, e = pdf[k == _VERTEX], pdf[k == _EDGE]
-        vid, t, vt, cc = (v[c].to_numpy() for c in ("a", "t", "vt", "cc"))
-        cid = _elect(vid, vt, cc, e["a"].to_numpy(), e["b"].to_numpy(), max_iterations)
-        return pd.DataFrame({"vId": vid, "t": t, "vt": vt, "cc": cc, "cId": cid})
+        g = _SmallGraph(pdf)
+        return pd.DataFrame({"vId": g.vid, "t": g.t, "vt": g.vt, "cc": g.cc,
+                             "cId": _elect(g, max_iterations)})
 
     return _one_task(
         [
@@ -176,55 +367,43 @@ def elect(vertices: DataFrame, edges: DataFrame, max_iterations: int) -> DataFra
 # ----------------------------------------------------------------------
 
 class _Rounds:
-    """``movement_rounds``' state over arrays.  Positions ``[0, n)``
-    are the labeling's vertices, the rest the fixed outer labels; the
-    edges are (src, dst) position pairs, the triangles corner position
-    triples inside the labeling."""
+    """``movement_rounds``' state over ``g`` (see ``_SmallGraph``):
+    the movable positions, each position's labeled degree, and the two
+    global scalars the kernels read."""
 
-    def __init__(self, pdf: pd.DataFrame, global_cc: float, vertex_count: int,
+    def __init__(self, g: _SmallGraph, global_cc: float, vertex_count: int,
                  scoped: bool):
-        k = pdf["k"].to_numpy()
-        v, o = pdf[k == _VERTEX], pdf[k == _OUTER]
-        self.vid = v["a"].to_numpy()
-        self.n = n = len(self.vid)
-        self.ids = np.concatenate([self.vid, o["a"].to_numpy()])
-        self.labels = np.concatenate([v["b"].to_numpy(), o["b"].to_numpy()])
-        self.t, self.vt, self.cc = (v[c].to_numpy() for c in ("t", "vt", "cc"))
-        e = pdf[k == _EDGE]
-        self.s, self.d = _edges(self.ids, e["a"].to_numpy(), e["b"].to_numpy())
-        tri = pdf[k == _TRIANGLE]
-        corners = [_index(self.vid, tri[c].to_numpy()) for c in ("a", "b", "c")]
-        inside = (corners[0] >= 0) & (corners[1] >= 0) & (corners[2] >= 0)
-        self.tri = [c[inside] for c in corners]
-        self.movable = np.zeros(len(self.ids), bool)
+        self.g, self.n, self.ids = g, g.n, g.ids
+        self.movable = np.zeros(len(g.ids), bool)
         if scoped:
-            m = _index(self.vid, pdf[k == _CANDIDATE]["a"].to_numpy())
-            self.movable[m[m >= 0]] = True
+            self.movable[g.candidates] = True
         else:
-            self.movable[:n] = True
+            self.movable[: g.n] = True
         # degTot: a vertex's labeled edges, whatever the labeling
-        self.deg = np.bincount(self.s, minlength=len(self.ids))
+        self.deg = np.diff(g.ptr)
         self.w, self.v = float(global_cc), float(vertex_count)
 
-    def _stats(self, lab: np.ndarray):
+    def stats(self, lab: np.ndarray):
         """``community_stats`` and the own-community degree (vtC /
         dIn_own) of ``lab``: communities are dense indices into
         ``comms`` (ascending cId), ``r`` counts the labeling's members
         only, so a community without one has no stats (r == 0)."""
+        s, d = self.g.s, self.g.d
         comms, ci = np.unique(lab, return_inverse=True)
         m = len(comms)
-        cs, cd = ci[self.s], ci[self.d]
+        cs, cd = ci[s], ci[d]
         intra = cs == cd
         r = np.bincount(ci[: self.n], minlength=m)
         a = np.bincount(cs[intra], minlength=m) / 2.0
-        b = np.bincount(cs[~intra], minlength=m).astype(np.float64)
-        own = np.bincount(self.s[intra], minlength=len(lab))
+        b = np.bincount(cs[~intra], minlength=m)
+        own = np.bincount(s[intra], minlength=len(lab))
         return comms, ci, cd, intra, r, a, b, own
 
     def move(self, lab: np.ndarray) -> tuple[np.ndarray, int]:
         """``community.best_movement`` over ``lab``: the new labeling
         and its number of moved vertices."""
-        comms, ci, cd, intra, r, a, b, own = self._stats(lab)
+        comms, ci, cd, intra, r, a, b, own = self.stats(lab)
+        s = self.g.s
         m = max(len(comms), 1)
         movers = self.movable & (self.deg > 0)
         i = np.flatnonzero(movers)
@@ -233,8 +412,8 @@ class _Rounds:
         wcc_r[i] = np_wcc_r(r[c_own], a[c_own], b[c_own], own[i],
                             self.deg[i] - own[i], self.w, self.v)
         # candidates: (mover, other neighbor community with stats, r > 1)
-        x = ~intra & movers[self.s]
-        key, d_in = np.unique(self.s[x] * m + cd[x], return_counts=True)
+        x = ~intra & movers[s]
+        key, d_in = np.unique(s[x] * m + cd[x], return_counts=True)
         cv, cc = key // m, key % m
         ok = r[cc] > 1
         cv, cc, d_in = cv[ok], cc[ok], d_in[ok]
@@ -261,13 +440,12 @@ class _Rounds:
 
     def wcc(self, lab: np.ndarray) -> float:
         """``community.global_wcc`` of ``lab``."""
-        _, ci, _, _, r, _, _, own = self._stats(lab)
-        u, v, w = self.tri
+        g, n = self.g, self.n
+        _, ci, _, _, r, _, _, own = self.stats(lab)
+        u, v, w = g.tri
         same = (lab[u] == lab[v]) & (lab[v] == lab[w])
-        t_c = np.bincount(np.concatenate([u[same], v[same], w[same]]),
-                          minlength=self.n)
-        n = self.n
-        wcc_v = np_wcc_v(self.t, self.vt, r[ci[:n]], own[:n], t_c)
+        t_c = np.bincount(np.concatenate([u[same], v[same], w[same]]), minlength=n)
+        wcc_v = np_wcc_v(g.t, g.vt, r[ci[:n]], own[:n], t_c)
         return math.fsum(wcc_v[~np.isnan(wcc_v)]) / self.v
 
 
@@ -293,19 +471,18 @@ def rounds(
     scoped = candidates is not None
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _Rounds(pdf, global_cc, vertex_count, scoped)
-        cur, moves, wccs = protocol(policy, st.labels, st.move, st.wcc, lambda lab: None)
-        n = st.n
-        out = pd.DataFrame({"vId": st.vid, "t": st.t, "vt": st.vt, "cc": st.cc,
+        g = _SmallGraph(pdf)
+        st = _Rounds(g, global_cc, vertex_count, scoped)
+        cur, moves, wccs = protocol(policy, g.labels, st.move, st.wcc, lambda lab: None)
+        n = g.n
+        out = pd.DataFrame({"vId": g.vid, "t": g.t, "vt": g.vt, "cc": g.cc,
                             "cId": cur[:n], "info": None})
         info = pd.DataFrame({"vId": [0], "t": [0], "vt": [0], "cc": [0.0], "cId": [0],
                              "info": [json.dumps({"moves": moves, "wccs": wccs})]})
         return pd.concat([out, info], ignore_index=True)
 
     parts = [
-        # one row whatever the inputs hold, so the task (and its
-        # counters) runs on an empty labeling too
-        _part(_SENTINEL, labels.sparkSession.range(1)),
+        _sentinel(labels),
         _part(_VERTEX, labels, a="vId", b="cId", t="t", vt="vt", cc="cc"),
         _part(_EDGE, edges, a="src", b="dst"),
     ]
@@ -332,14 +509,58 @@ def run_rounds(
     """Land ``rounds``' kept labeling through ``mat`` as ``moved``; its
     counters ride the landing as an Observation.  Returns ``(landed
     labeling, moves, wccs)``."""
-    obs = Observation()
-    landed = mat(
+    landed, info = _land(
+        mat,
         rounds(labels, edges, global_cc, vertex_count, policy,
-               candidates, outer_labels, tri)
-        .observe(obs, F.max("info").alias("info"))
-        .where(F.col("info").isNull())
-        .drop("info"),
+               candidates, outer_labels, tri),
         "moved",
     )
-    info = json.loads(obs.get["info"])
     return landed, info["moves"], info["wccs"]
+
+
+# ----------------------------------------------------------------------
+# The whole batch WCC: election and accept-if-improved rounds
+# ----------------------------------------------------------------------
+
+def run_wcc(graph, global_cc: float, vertex_count: int, mat, policy,
+            max_iterations: int) -> tuple[DataFrame, DataFrame, list[int]]:
+    """``initial_partition`` then ``movement_rounds`` under ``policy``
+    (``AcceptIfImproved``) over ``graph`` (a ``refinement.Graph``), in
+    ONE task: the election and the protocol share one ``_SmallGraph``.
+    The kept labeling ``(vId, t, vt, cc, cId)`` and its
+    ``community_stats`` ``(cId, r, a, b, d)`` land through ``mat`` with
+    one split landing (``wcc``); the moves and the WCCs ride it, and
+    ``policy`` is brought up to date from the WCCs.  Returns
+    ``(labeling, stats, moves)``."""
+
+    columns = ["vId", "cId", "t", "vt", "cc", "r", "a", "b", "d"]
+
+    def task(pdf: pd.DataFrame) -> pd.DataFrame:
+        g = _SmallGraph(pdf)
+        st = _Rounds(g, global_cc, vertex_count, scoped=False)
+        cur, moves, wccs = protocol(policy, _elect(g, max_iterations), st.move, st.wcc,
+                                    lambda lab: None)
+        comms, _, _, _, r, a, b, _ = st.stats(cur)
+        parts = {
+            "labels": dict(vId=g.vid, t=g.t, vt=g.vt, cc=g.cc, cId=cur),
+            "stats": dict(cId=comms, r=r, a=a, b=b, d=2.0 * a / r.astype(np.float64) ** 2.0),
+        }
+        return _tagged(columns, parts, {"moves": moves, "wccs": wccs})
+
+    plan = _one_task(
+        [
+            _sentinel(graph.vertices),
+            _part(_VERTEX, graph.vertices, a="vId", t="t", vt="vt", cc="cc"),
+            _part(_EDGE, graph.clean_edges, a="src", b="dst"),
+            _part(_TRIANGLE, graph.tri, a="u", b="v", c="w"),
+        ],
+        task,
+        "k STRING, vId LONG, cId LONG, t INT, vt INT, cc DOUBLE, r INT, a DOUBLE, "
+        "b LONG, d DOUBLE, info STRING",
+    )
+    landed, info = _land(mat, plan, "wcc", split={
+        "labels": ["vId", "t", "vt", "cc", "cId"],
+        "stats": ["cId", "r", "a", "b", "d"],
+    })
+    replay(policy, info["wccs"])
+    return landed["labels"], landed["stats"], info["moves"]

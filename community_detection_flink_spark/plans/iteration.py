@@ -158,10 +158,26 @@ class Materializer:
         # the df (prevents id reuse after GC) so drop() can delete the
         # files of a superseded state
         self._by_df: dict[int, tuple[DataFrame, str]] = {}
+        # a split landing's tag directory -> the landing's directory,
+        # freed with its last live tag
+        self._split_root: dict[str, str] = {}
 
     def __call__(
-        self, df: DataFrame, name: str = "state", light: bool = False
-    ) -> DataFrame:
+        self,
+        df: DataFrame,
+        name: str = "state",
+        light: bool = False,
+        split: dict | None = None,
+    ):
+        """Land ``df`` and return its landing.
+
+        ``split`` (``{tag: [column, ...]}``, names or Columns): ``df``
+        is a tagged plan whose ``k`` column holds the tags.  It lands
+        with ONE write, partitioned by ``k``, and the call returns
+        ``{tag: landing}``: each tag's columns, read from the tag's own
+        directory, so ``drop`` frees exactly that landing (and the
+        write's directory with its last tag).  A tag with no rows reads
+        as an empty table of its columns."""
         if light:
             # LIGHT landing (r13): ``localCheckpoint(eager=True)`` —
             # one job, no file write/commit/read-back, plan truncated
@@ -183,6 +199,8 @@ class Materializer:
             return out
         path = os.path.join(self.base, f"{name}-{self._i:04d}")
         self._i += 1
+        if split is not None:
+            return self._land_split(df, path, split)
         df.write.mode("overwrite").parquet(path)
         # read back with the KNOWN schema (r12): schema inference runs a
         # 1-task footer-read job per landing — pure driver latency that
@@ -192,6 +210,24 @@ class Materializer:
         # inference reports).
         out = self.spark.read.schema(_as_nullable(df.schema)).parquet(path)
         self._by_df[id(out)] = (out, path)
+        return out
+
+    def _land_split(self, df: DataFrame, path: str, split: dict) -> dict:
+        df.write.mode("overwrite").partitionBy("k").parquet(path)
+        schema = _as_nullable(df.drop("k").schema)
+        jvm, conf = self.spark._jvm, self.spark._jsc.hadoopConfiguration()
+        out = {}
+        for tag, cols in split.items():
+            part = os.path.join(path, f"k={tag}")
+            jpath = jvm.org.apache.hadoop.fs.Path(part)
+            if jpath.getFileSystem(conf).exists(jpath):
+                landed = self.spark.read.schema(schema).parquet(part)
+            else:
+                landed = self.spark.createDataFrame([], schema)
+            landed = landed.select(*cols)
+            self._by_df[id(landed)] = (landed, part)
+            self._split_root[part] = path
+            out[tag] = landed
         return out
 
     PARQUET_EVERY = 4  # light-landing loops re-land on parquet this often
@@ -224,6 +260,9 @@ class Materializer:
                 pass  # best-effort, like the rmtree below
             return
         rmtree_local(entry[1])
+        root = self._split_root.pop(entry[1], None)
+        if root is not None and root not in self._split_root.values():
+            rmtree_local(root)
 
     def is_landed(self, df: DataFrame) -> bool:
         """True iff ``df`` is a PARQUET landing this materializer

@@ -13,9 +13,15 @@ reproducible everywhere).
 Used by ``tests/test_similarity_recall.py`` (floors) and ``bench.py``
 (per-round reported numbers) — NOT a query input: gate queries read
 only the driver-provided parquet tables.
+
+``adversarial_graph`` is the graph-side counterpart for certification:
+small raw edge lists, seeded, built to hit the WCC pipeline's edge
+cases (see ``ADVERSARIAL``).
 """
 
 from __future__ import annotations
+
+import random
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,3 +120,156 @@ def skewed_sources(
         )
         .alias("source"),
     )
+
+
+def _cliques(sizes, start=0):
+    """Disjoint cliques of ``sizes`` on consecutive ids from ``start``;
+    returns their edges and their member lists."""
+    edges, members = [], []
+    for size in sizes:
+        ids = list(range(start, start + size))
+        edges += [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+        members.append(ids)
+        start += size
+    return edges, members
+
+
+def _planted(rng, n_blocks, size, p_in, p_out):
+    n = n_blocks * size
+    return [
+        (i, j)
+        for i in range(n)
+        for j in range(i + 1, n)
+        if rng.random() < (p_in if i // size == j // size else p_out)
+    ]
+
+
+def _bridged_cliques(rng):
+    """Cliques of 3-6 chained by triangle-free bridges, plus one
+    bridge pair that closes a triangle across two cliques."""
+    edges, members = _cliques([rng.randint(3, 6) for _ in range(rng.randint(3, 6))])
+    for a, b in zip(members, members[1:]):
+        edges.append((a[-1], b[0]))
+    a, b = members[0], members[1]
+    edges += [(a[0], b[1]), (a[1], b[1])]
+    return edges
+
+
+def _stars(rng):
+    """Triangle-free stars, and a windmill (triangles sharing a hub)."""
+    edges, v = [], 0
+    for _ in range(rng.randint(2, 4)):
+        hub, v = v, v + 1
+        for _ in range(rng.randint(3, 8)):
+            edges.append((hub, v))
+            v += 1
+    hub, v = v, v + 1
+    for _ in range(rng.randint(3, 6)):
+        edges += [(hub, v), (hub, v + 1), (v, v + 1)]
+        v += 2
+    return edges
+
+
+def _ties(rng):
+    """Structures whose vertices share one (cc, vt): a ring of cliques
+    with a hub between neighbors (each hub's two candidate communities
+    score the same), and a circulant ring i ~ i±1, i±2."""
+    m, size = rng.randint(3, 5), rng.randint(3, 5)
+    edges, members = _cliques([size] * m)
+    hub = m * size
+    for c in range(m):
+        for i in range(2):
+            edges += [(members[c][i], hub + c), (members[(c + 1) % m][i], hub + c)]
+    start, n = hub + m, rng.randint(7, 12)
+    edges += [(start + i, start + (i + off) % n) for i in range(n) for off in (1, 2)]
+    return edges
+
+
+def _components(rng):
+    """Many small components: triangles, 4-cliques, paths and a
+    triangle with a tail."""
+    edges, v = [], 0
+    for _ in range(rng.randint(10, 20)):
+        kind = rng.randrange(4)
+        if kind == 0:
+            edges += [(v, v + 1), (v + 1, v + 2), (v, v + 2)]
+            v += 3
+        elif kind == 1:
+            edges += _cliques([4], v)[0]
+            v += 4
+        elif kind == 2:
+            edges += [(v + i, v + i + 1) for i in range(3)]
+            v += 4
+        else:
+            edges += [(v, v + 1), (v + 1, v + 2), (v, v + 2), (v + 2, v + 3)]
+            v += 4
+    return edges
+
+
+def _isolated(rng):
+    """A planted core with pendant vertices and triangle-free paths
+    hanging off it (every one of them is pruned to a singleton), and
+    vertices whose only edge is a self-loop (they vanish)."""
+    edges = _planted(rng, 2, 8, 0.7, 0.05)
+    v = 16
+    for _ in range(rng.randint(4, 8)):
+        edges.append((rng.randrange(16), v))
+        edges.append((v, v + 1))
+        v += 2
+    edges += [(v + i, v + i) for i in range(3)]
+    return edges
+
+
+def _self_loops(rng):
+    edges = _planted(rng, 3, 7, 0.6, 0.05)
+    return edges + [(x, x) for x in range(21) if rng.random() < 0.5]
+
+
+def _duplicates(rng):
+    """Each edge repeated and reversed."""
+    edges = _planted(rng, 3, 6, 0.7, 0.08)
+    out = []
+    for a, b in edges:
+        out += [(a, b)] * rng.randint(1, 3) + [(b, a)] * rng.randint(0, 2)
+    rng.shuffle(out)
+    return out
+
+
+def _triangle_free(rng):
+    """Paths, a star and an even cycle: every vertex is pruned, so the
+    clean graph is empty although the graph is not."""
+    n = rng.randint(6, 12)
+    edges = [(i, i + 1) for i in range(n)] + [(n + 1, n + 2 + i) for i in range(4)]
+    start = n + 6
+    return edges + [(start + i, start + (i + 1) % 6) for i in range(6)]
+
+
+ADVERSARIAL = {
+    "empty": lambda rng: [],
+    "triangle_free": _triangle_free,
+    "single_triangle": lambda rng: [(0, 1), (1, 2), (2, 0)],
+    "bridged_cliques": _bridged_cliques,
+    "stars": _stars,
+    "ties": _ties,
+    "components": _components,
+    "isolated": _isolated,
+    "self_loops": _self_loops,
+    "duplicates": _duplicates,
+    "planted": lambda rng: _planted(rng, 4, 10, 0.5, 0.03),
+}
+
+
+def adversarial_graph(kind: str, seed: int) -> list[tuple[int, int]]:
+    """The raw edge pairs of one adversarial graph: ``ADVERSARIAL[kind]``
+    built from ``random.Random(seed)``, its vertex ids then relabeled by
+    a seeded injection into ``[0, 10·|V|)``, so the ties between equal
+    (cc, vt) fall to different ids under different seeds.  Pairs may be
+    directed, duplicated or self-loops, as raw input is; feed them
+    through ``sources.edges.symmetrize_edges``.  Fully determined by
+    ``(kind, seed)``."""
+    rng = random.Random(f"{kind}-{seed}")
+    edges = ADVERSARIAL[kind](rng)
+    ids = sorted({x for e in edges for x in e})
+    new = rng.sample(range(10 * max(len(ids), 1)), len(ids))
+    relabel = dict(zip(ids, new))
+    return [(relabel[a], relabel[b]) for a, b in edges]

@@ -261,15 +261,13 @@ def run_stream(
     holder = {"state": initial_state}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        before = holder["state"]
         if cdc:
-            holder["state"] = apply_cdc_batch(holder["state"], batch_df)
-        else:
-            holder["state"] = incremental_update(
-                holder["state"], batch_df.select("src", "dst")
-            )
-        if on_batch is not None:
+            # its op aggregate finds an empty batch: no ops, no batch
+            holder["state"] = apply_cdc_batch(before, batch_df)
+        elif not batch_df.isEmpty():
+            holder["state"] = incremental_update(before, batch_df.select("src", "dst"))
+        if on_batch is not None and holder["state"] is not before:
             on_batch(holder["state"], batch_id)
 
     schema = "src LONG, dst LONG, op STRING" if cdc else "src LONG, dst LONG"

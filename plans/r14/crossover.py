@@ -11,14 +11,17 @@ interleaved task / spark pairs, the side that runs first alternating
 per pair.  Each loop is forced through the tier threshold: 0 rows for
 the Spark loop (as the tests force it), no limit for the task loop.  Each line gives the loop state's rows (doubled clean
 edges + triangles, what ``refine_partition`` compares to
-``task_tier.TASK_ROWS``), the wall time of each run, and whether the two
-loops' labels are identical.
+``task_tier.TASK_ROWS``), the wall time of each run, the peak resident
+memory of Spark's Python workers during it (sampled every 0.2 s from
+``/proc``; the task side's one task runs in one of them), and whether
+the two loops' labels are identical.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,9 +37,34 @@ from community_detection_flink_spark.sources.edges import symmetrize_edges  # no
 PAIRS = 2
 
 
+def _worker_rss_mb() -> float:
+    """The largest resident set among Spark's Python workers now."""
+    peak = 0
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"pyspark.daemon" not in f.read():
+                    continue
+            with open(f"/proc/{pid}/status") as f:
+                for line in f:
+                    if line.startswith("VmRSS:"):
+                        peak = max(peak, int(line.split()[1]))
+        except OSError:
+            pass
+    return peak / 1024
+
+
 def run(spark, edges, loop: str):
     threshold = task_tier.TASK_ROWS
     task_tier.TASK_ROWS = sys.maxsize if loop == "task" else 0
+    peak, done = [0.0], threading.Event()
+
+    def sample():
+        while not done.wait(0.2):
+            peak[0] = max(peak[0], _worker_rss_mb())
+
+    sampler = threading.Thread(target=sample, daemon=True)
+    sampler.start()
     try:
         t0 = time.perf_counter()
         res = refinement.run_wcc(edges)
@@ -44,9 +72,12 @@ def run(spark, edges, loop: str):
         wall = time.perf_counter() - t0
         got = {r["vId"]: r["cId"] for r in labels.collect()}
         assert res.report["refinement"] == res.report["election"] == loop
+        assert res.report["graph"] == loop
         res.mat.cleanup()
-        return wall, got, res.iterations
+        return wall, got, res.iterations, peak[0]
     finally:
+        done.set()
+        sampler.join()
         task_tier.TASK_ROWS = threshold
 
 
@@ -75,10 +106,11 @@ def main(scales):
             order = ("task", "spark") if p % 2 == 0 else ("spark", "task")
             out = {}
             for loop in order:
-                wall, got, rounds = run(spark, edges, loop)
+                wall, got, rounds, rss = run(spark, edges, loop)
                 times[loop].append(wall)
                 out[loop] = (got, rounds)
-                print(f"k={k} pair{p} {loop}: {wall:.2f}s rounds={rounds}", flush=True)
+                print(f"k={k} pair{p} {loop}: {wall:.2f}s rounds={rounds} "
+                      f"worker_rss={rss:.0f}MB", flush=True)
             same &= out["task"] == out["spark"]
         edges.unpersist()
         print(

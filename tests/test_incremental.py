@@ -248,3 +248,53 @@ def test_split_bulk_stream_partitions_edges(spark, golden_edges):
     bulk, stream, split = split_bulk_stream(sym, 0.8)
     assert bulk.count() + stream.count() == sym.count()
     assert bulk.where((F.col("src") >= split) | (F.col("dst") >= split)).count() == 0
+
+
+def test_max_vertex_survives_batches(spark, golden_edges):
+    """The id ceiling ``run_edge_batches`` sets is carried by every
+    batch: an insert raises it to its new vertices' max, a delete and
+    a CDC batch keep it (or raise it with their inserts).  An unknown
+    ceiling stays unknown."""
+    from community_detection_flink_spark.streaming.incremental_stream import (
+        apply_cdc_batch,
+    )
+
+    pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
+    state = prepare(symmetrize_edges(golden_edges))
+    assert state.max_vertex is None
+    unknown = incremental_update(state, pairs_df([(30, 31), (30, 32), (31, 32)]))
+    assert unknown.max_vertex is None
+
+    state.max_vertex = 7
+    state = incremental_update(state, pairs_df([(20, 21), (20, 22), (21, 22)]))
+    assert state.max_vertex == 22
+    state = incremental_delete(state, pairs_df([(0, 1)]))
+    assert state.max_vertex == 22
+    state = apply_cdc_batch(state, spark.createDataFrame(
+        [(20, 23, "I"), (21, 23, "I"), (4, 5, "D")], "src LONG, dst LONG, op STRING"
+    ))
+    assert state.max_vertex == 23
+
+
+def test_empty_cdc_micro_batch_leaves_state_unchanged(spark, golden_edges, tmp_path):
+    """An empty CDC micro-batch runs no batch: ``run_stream`` keeps the
+    state it carries and reports no batch to ``on_batch``."""
+    from community_detection_flink_spark.streaming.incremental_stream import (
+        apply_cdc_batch,
+        run_stream,
+    )
+
+    schema = "src LONG, dst LONG, op STRING"
+    state = prepare(symmetrize_edges(golden_edges))
+    assert apply_cdc_batch(state, spark.createDataFrame([], schema)) is state
+    src = tmp_path / "src"
+    spark.createDataFrame([], schema).coalesce(1).write.parquet(str(src / "b0"))
+    seen = []
+    handle = run_stream(
+        spark, str(src / "b0"), state, str(tmp_path / "stream-ckpt"),
+        on_batch=lambda s, i: seen.append(i), cdc=True, max_files_per_trigger=1,
+    )
+    handle.await_termination(120)
+    assert handle.query.exception() is None
+    assert handle.query.lastProgress is not None  # the empty batch ran
+    assert handle.state is state and seen == []

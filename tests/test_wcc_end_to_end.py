@@ -22,6 +22,13 @@ def test_bridged_cliques(golden_edges):
 # WCC evaluations, each landing.  Pinned so a change that adds a job to
 # the distributed loops shows here.
 SPARK_LOOP_JOBS = 51
+# ... and on the small-state tier: the edges landing, the graph task's
+# landing and the WCC task's.
+TASK_LOOP_JOBS = 6
+# the landings each loop may leave for the returned plans to read, and
+# the one that holds the returned stats
+LIVE = {"task": {"edges", "wcc"}, "spark": {"edges", "init", "moved", "cs-final"}}
+STATS = {"task": "wcc", "spark": "cs-final"}
 
 
 def test_run_wcc_owns_its_checkpoint_dir(
@@ -30,8 +37,8 @@ def test_run_wcc_owns_its_checkpoint_dir(
     """Without a Materializer, ``run_wcc`` lands everything under the one
     it makes, and the result carries it: only the landings the returned
     plans read are left (one labeling at most), and ``res.mat.cleanup()``
-    frees the dir.  On the Spark loops, the run takes the pinned number
-    of jobs."""
+    frees the dir.  Each loop takes its pinned number of jobs, and one
+    loop loads the graph, elects and refines."""
     import os
     import tempfile
     import uuid
@@ -47,16 +54,16 @@ def test_run_wcc_owns_its_checkpoint_dir(
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert res.report["election"] == res.report["refinement"] == loop
-        if loop == "spark":
-            assert jobs == SPARK_LOOP_JOBS
+        assert res.report["graph"] == res.report["election"] == loop
+        assert res.report["refinement"] == loop
+        assert jobs == (SPARK_LOOP_JOBS if loop == "spark" else TASK_LOOP_JOBS)
         assert [p.name for p in tmp_path.glob("cdfs-ckpt-*")] == [
             os.path.basename(res.mat.base)
         ]
         landings = [p.rsplit("-", 1)[0] for p in os.listdir(res.mat.base)]
         live = set(landings)
-        assert "edges" in live and "cs-final" in live
-        assert live <= {"edges", "init", "moved", "cs-final"}  # no mis-*
+        assert "edges" in live and STATS[loop] in live
+        assert live <= LIVE[loop]  # no mis-*, no graph tables
         assert landings.count("moved") <= 1
         got = {r["vId"]: r["cId"] for r in res.communities.collect()}
         assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}

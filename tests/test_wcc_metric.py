@@ -19,16 +19,21 @@ from community_detection_flink_spark.functions import wcc_metric as m
 
 
 def test_cc_formula(spark):
+    """``cc`` both ways: the Column result equals the array twin bit
+    for bit on every row."""
     from pyspark.sql import functions as F
 
     def cc(t, vt):
         df = spark.createDataFrame([(t, vt)], "t INT, vt INT")
-        return df.select(m.cc_col(F.col("t"), F.col("vt"))).first()[0]
+        got = df.select(m.cc_col(F.col("t"), F.col("vt"))).first()[0]
+        assert got == float(m.np_cc(t, vt))
+        return got
 
     assert cc(0, 0) == 0.0
     assert cc(5, 1) == 0.0  # vt < 2 guard (VertexData.scala:16-22)
     assert cc(3, 3) == 1.0  # clique vertex
     assert cc(1, 3) == pytest.approx(1.0 / 3.0)
+    assert 0.0 < cc(7, 9) < 1.0
 
 
 def test_wcc_v():
