@@ -1,7 +1,7 @@
 """WCC metric kernels (SURVEY.md §2.8), each formula written once.
 
 Pure math from the DWCC paper (arXiv:1411.0557), mirrored from the
-reference's ``WCCMetric.scala``.  Each formula (``cc``, ``wcc_v``,
+reference's ``WCCMetric.scala``.  Each formula (``cc``, ``density``, ``wcc_v``,
 ``theta1``-``theta3``, ``wcc_i``, ``wcc_r``) takes a ``Backend`` — how
 to cast an operand to float64, divide (NULL/NaN on /0) and select — and
 runs on either of two:
@@ -77,6 +77,13 @@ def cc(k: Backend, t, vt):
     return k.where(vt < 2, 0.0, 2.0 * f(t) / (f(vt) * (f(vt) - 1.0)))
 
 
+def density(k: Backend, r, a):
+    """Community density 2a/r² (``CommunityData.scala:13``) from its
+    size ``r`` and internal edge count ``a``."""
+    f = k.num
+    return 2.0 * f(a) / f(r) ** 2.0
+
+
 def wcc_v(k: Backend, t, vt, r, vtC, tC):
     """Per-vertex WCC against its community (``WCCMetric.scala:16-21``).
 
@@ -119,11 +126,11 @@ def wcc_i(k: Backend, r, a, b, dIn, dOut, w, v):
     """Closed-form WCC delta of inserting a vertex into a community.
 
     (``WCCMetric.scala:23-30``).  ``r/a/b`` are the community's size /
-    internal / external edge counts; ``d`` (density 2a/r²,
-    ``CommunityData.scala:13``) is derived here.
+    internal / external edge counts; ``d`` (``density``) is derived
+    here.
     """
+    d = density(k, r, a)
     r, a, b, dIn, dOut, w, v = map(k.num, (r, a, b, dIn, dOut, w, v))
-    d = 2.0 * a / r ** 2.0
     q = (b - dIn) / r
     t1 = theta1(k, r, d, dIn, dOut, w, q)
     t2 = theta2(k, r, d, w, q)
@@ -154,6 +161,10 @@ def cc_col(t: Column, vt: Column) -> Column:
     return cc(COLUMNS, t, vt)
 
 
+def density_col(r: Column, a: Column) -> Column:
+    return density(COLUMNS, r, a)
+
+
 def wcc_v_col(t: Column, vt: Column, r: Column, vtC: Column, tC: Column) -> Column:
     return wcc_v(COLUMNS, t, vt, r, vtC, tC)
 
@@ -171,6 +182,10 @@ def wcc_r_col(r: Column, a: Column, b: Column, dIn: Column, dOut: Column,
 def np_cc(t, vt):
     with np.errstate(divide="ignore", invalid="ignore"):
         return cc(ARRAYS, t, vt)
+
+
+def np_density(r, a):
+    return density(ARRAYS, r, a)
 
 
 def np_wcc_v(t, vt, r, vtC, tC):

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from community_detection_flink_spark.functions.wcc_metric import (
+    density_col,
     wcc_i_col,
     wcc_r_col,
     wcc_v_col,
@@ -105,7 +106,7 @@ def community_stats(
         "r",
         F.coalesce("a", F.lit(0.0)).alias("a"),
         F.coalesce("b", F.lit(0)).alias("b"),
-        (2.0 * F.coalesce("a", F.lit(0.0)) / F.pow(F.col("r").cast("double"), 2.0)).alias("d"),
+        density_col(F.col("r"), F.coalesce("a", F.lit(0.0))).alias("d"),
     )
 
 

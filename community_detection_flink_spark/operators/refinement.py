@@ -92,6 +92,14 @@ class Graph:
     loop: str  # "task" (the small-state tier) or "spark"
 
 
+def _counted(df: DataFrame, mat: Materializer, name: str) -> tuple[DataFrame, int]:
+    """Land ``df`` through ``mat`` as ``name``; its row count rides the
+    landing as an Observation."""
+    obs = Observation()
+    landed = mat(df.observe(obs, F.count(F.lit(1)).alias("n")), name)
+    return landed, int(obs.get["n"])
+
+
 def load_graph(
     edges: DataFrame, mat: Materializer, tri: DataFrame | None = None
 ) -> Graph:
@@ -103,11 +111,14 @@ def load_graph(
     evaluation: the clean edges keep every triangle edge, so
     triangles(clean) == triangles(full).
 
-    |E| rides the ``edges`` landing as an Observation and picks the
-    loop.  Under ``task_tier.TASK_ROWS`` one pandas task does the rest
-    (``task_tier.load_graph``): triangles, clean edges and clean
-    vertices land with ONE split landing, which carries |tri|,
-    |E_clean|, Σcc and |V|.  Otherwise Spark enumerates the triangles
+    |E| rides the ``edges`` landing as an Observation (and |tri| a given
+    ``tri``'s, landed first).  When |E| + |tri| fits
+    ``task_tier.TASK_ROWS``, one pandas task does the rest
+    (``task_tier.load_graph``): clean edges, clean vertices and the
+    triangles it enumerates land with ONE split landing, which carries
+    |tri|, |E_clean|, Σcc and |V|.  The task counts the triangles as it
+    enumerates them and gives up once |E| + |tri| stops fitting, so a
+    triangle-dense graph loads on Spark: Spark enumerates the triangles
     and lands them (|tri| riding), then the clean edges (|E_clean|) and
     the clean vertices (Σcc), and one job counts |V|.  Every table
     lands through ``mat``; freeing them is the caller's.
@@ -115,28 +126,29 @@ def load_graph(
     ``tri``: a triangle list of ``edges`` the caller already has (e.g.
     filtered down from a supergraph's, see ``run_edge_batches``).
     """
-    e_obs = Observation()
-    edges = mat(edges.observe(e_obs, F.count(F.lit(1)).alias("n")), "edges")
-    if task_tier.fits(int(e_obs.get["n"])):
-        return Graph(edges=edges, loop="task", **task_tier.load_graph(edges, mat, tri))
+    edges, n_edges = _counted(edges, mat, "edges")
+    tri_count = 0
+    if tri is not None:
+        tri, tri_count = _counted(tri, mat, "tri")
+    if task_tier.fits(n_edges + tri_count):
+        loaded = task_tier.load_graph(edges, n_edges, mat, tri)
+        if loaded is not None:
+            return Graph(edges=edges, loop="task", **loaded)
     if tri is None:
-        tri = triangles(edges, mat=mat)
-    t_obs, n_obs, cc_obs = Observation(), Observation(), Observation()
-    tri = mat(tri.observe(t_obs, F.count(F.lit(1)).alias("n")), "tri")
+        tri, tri_count = _counted(triangles(edges, mat=mat), mat, "tri")
     mat.release()  # oriented-edge cache
     vertices, clean_edges = preprocess(tri)
-    clean_edges = mat(
-        clean_edges.observe(n_obs, F.count(F.lit(1)).alias("n")), "clean-edges"
-    )
+    clean_edges, clean_edge_count = _counted(clean_edges, mat, "clean-edges")
+    cc_obs = Observation()
     vertices = mat(vertices.observe(cc_obs, F.sum("cc").alias("s")), "clean-vertices")
     return Graph(
         edges=edges,
         tri=tri,
         vertices=vertices,
         clean_edges=clean_edges,
-        clean_edge_count=int(n_obs.get["n"]),
+        clean_edge_count=clean_edge_count,
         cc_sum=float(cc_obs.get["s"] or 0.0),
-        tri_count=int(t_obs.get["n"]),
+        tri_count=tri_count,
         vertex_count=edges.select("src").distinct().count(),
         loop="spark",
     )
@@ -267,25 +279,22 @@ def movement_rounds(
 
 
 def refine_partition(
-    vertices: DataFrame | None,
     graph: Graph,
-    vertex_count: int,
     mat: Materializer,
     max_retries: int = MAX_RETRIES,
     threshold: float = THRESHOLD,
     history: list | None = None,
     report: dict | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float, int]:
-    """Run the accept-if-improved movement loop (``movement_rounds``
-    with ``AcceptIfImproved``) from the labeling ``vertices`` over
-    ``graph``'s clean edges.
+    """Elect ``initial_partition``'s labeling over ``graph``'s clean
+    graph, then run the accept-if-improved movement loop
+    (``movement_rounds`` with ``AcceptIfImproved``) from it.
 
-    ``vertices`` None: the loop starts from ``initial_partition``'s
-    labeling, elected here.  When the clean graph's |E_clean| + |tri|
-    fits one task, the election and every round run in that ONE task
-    (``task_tier.run_wcc``), whose kept labeling and stats land once.
-    Otherwise the election lands as ``init`` (freed here once a round
-    supersedes it) and the rounds run as ``movement_rounds`` picks.
+    When the clean graph's |E_clean| + |tri| fits one task, the election
+    and every round run in that ONE task (``task_tier.run_wcc``), whose
+    kept labeling and stats land once.  Otherwise the election lands as
+    ``init`` (freed here once a round supersedes it) and the rounds run
+    as ``movement_rounds`` picks.
 
     The Spark loop is planned NON-adaptive at the loop width (r10,
     ``plans.loop_scope``, floor 4): every loop input is a
@@ -303,32 +312,30 @@ def refine_partition(
     round's WCC (driver-side floats the loop computes anyway);
     ``report``, if given, what ``initial_partition`` and
     ``movement_rounds`` report (``election``, ``refinement``,
-    ``moves``).  The loop width, the loop choice and the global CC come
-    from ``graph``'s carried counts.
+    ``moves``).  The loop width, the loop choice, |V| and the global CC
+    come from ``graph``'s carried counts.
     ``graph.tri`` (static triangle list of the clean edges) makes the
     per-round tC pass three joins + one aggregate (see
-    ``intra_triangle_counts``).  A given ``vertices`` must be a landing
-    of ``mat``; it is never dropped.
+    ``intra_triangle_counts``).
     """
     policy = AcceptIfImproved(max_retries, threshold, history)
+    vertex_count = graph.vertex_count
     global_cc = graph.cc_sum / float(vertex_count)  # DistributedWCC.scala:261-262
-    elected = vertices is None
-    if elected and task_tier.fits(graph.clean_edge_count + graph.tri_count):
+    if task_tier.fits(graph.clean_edge_count + graph.tri_count):
         best, best_cs, moves = task_tier.run_wcc(
-            graph, global_cc, vertex_count, mat, policy, MAX_ITERATIONS
+            graph, global_cc, mat, policy, MAX_ITERATIONS
         )
         if report is not None:
             report.update(election="task", refinement="task", moves=moves)
         return best, best_cs, policy.wcc, global_cc, len(moves)
-    if elected:
-        vertices = mat(
-            initial_partition(
-                graph.vertices, graph.clean_edges, graph.clean_edge_count, mat,
-                report=report,
-            ),
-            "init",
-        )
-        mat.release()  # MIS "higher" edge cache and "mis-centers" landing
+    vertices = mat(
+        initial_partition(
+            graph.vertices, graph.clean_edges, graph.clean_edge_count, mat,
+            report=report,
+        ),
+        "init",
+    )
+    mat.release()  # MIS "higher" edge cache and "mis-centers" landing
     with loop_scope(vertices.sparkSession, graph.clean_edge_count, 4):
         # the static triangle list is scanned once per round by the WCC
         # eval — persist it for the loop like loop_edges below (r12),
@@ -355,7 +362,7 @@ def refine_partition(
             tri.unpersist(False)
     # best IS the input when the loop kept no round — the returned
     # plans still read its files then
-    if elected and best is not vertices:
+    if best is not vertices:
         mat.drop(vertices)
     return best, final_cs, policy.wcc, global_cc, rounds
 
@@ -396,8 +403,7 @@ def run_wcc(
     # into the returned plans
     owned = [] if loaded else [graph.tri, graph.clean_edges, graph.vertices]
     all_vertices = graph.edges.select(F.col("src").alias("vId")).distinct()
-    vertex_count = graph.vertex_count
-    if vertex_count == 0:
+    if graph.vertex_count == 0:
         for df in owned:
             mat.drop(df)
         empty = mat.spark.createDataFrame
@@ -414,8 +420,7 @@ def run_wcc(
     report: dict = {"graph": graph.loop}
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
-        None, graph, vertex_count, mat, max_retries, threshold,
-        history=history, report=report,
+        graph, mat, max_retries, threshold, history=history, report=report,
     )
     for df in owned:
         mat.drop(df)
@@ -428,7 +433,7 @@ def run_wcc(
         stats=best_cs,
         global_wcc=best_wcc,
         global_cc=global_cc,
-        vertex_count=vertex_count,
+        vertex_count=graph.vertex_count,
         iterations=rounds,
         mat=mat,
         wcc_history=history,

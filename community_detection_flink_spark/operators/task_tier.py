@@ -17,16 +17,19 @@ caller's ``Materializer`` to land, split by tag when it is several
 tables.  Computing locally when the state is small instead of running
 global rounds is REPOSE's local-index idea (ICDE 2021).
 
-Four tasks, each chosen on a row count known without a job:
+Four tasks, each chosen on row counts that ride earlier landings:
 
 * ``load_graph`` (``refinement.load_graph``): triangles, ``t``/``vt``/
   ``cc`` and the clean edges of a graph whose |E| (riding its ``edges``
-  landing) fits.  The gate bounds the task's INPUT edges, not its
-  triangle output, which a dense graph can make larger (up to
-  O(|E|^1.5) rows);
-* ``run_wcc`` (``refinement.refine_partition`` with no labeling): the
-  election AND every accept-if-improved round, when the clean graph's
-  |E_clean| + |tri| fits;
+  landing) plus |tri| fits.  |tri| is only known once the triangles
+  are enumerated (a caller's given list lands first with its count
+  riding): the kernel counts them as it goes and stops as soon as |E|
+  + |tri| no longer fits, and the graph then loads on Spark.  So the
+  task holds at most ``TASK_ROWS`` input and triangle rows, whatever
+  the graph's density (a dense graph has up to O(|E|^1.5) triangles);
+* ``run_wcc`` (``refinement.refine_partition``): the election AND every
+  accept-if-improved round, when the clean graph's |E_clean| + |tri|
+  fits — always so after the graph task, as |E_clean| <= |E|;
 * ``elect`` (``initial_partition``) and ``run_rounds``
   (``movement_rounds``) on their own, for callers with a labeling of
   their own (the incremental batches), on the carried |E_clean| and the
@@ -53,6 +56,7 @@ from pyspark.sql import functions as F
 
 from community_detection_flink_spark.functions.wcc_metric import (
     np_cc,
+    np_density,
     np_wcc_i,
     np_wcc_r,
     np_wcc_v,
@@ -63,8 +67,9 @@ from community_detection_flink_spark.operators.movement import protocol, replay
 # (plans/r14/crossover.txt): ``run_wcc`` on the task tier beat the Spark
 # loops at every size up to 3.96M rows (4-5x on small graphs; with the
 # graph task fused in, 2.2x there at ~1.3 GB peak RSS in the one Python
-# worker); the crossover lies above and this is the largest state
-# measured.
+# worker; 1.2x at 3.96M rows of disjoint 45-cliques, 88% of them
+# triangles, at ~1.05 GB); the crossover lies above and this is the
+# largest state measured.
 TASK_ROWS = 4_000_000
 
 
@@ -81,6 +86,7 @@ _FIELDS = (("a", "long"), ("b", "long"), ("c", "long"), ("t", "int"),
            ("vt", "int"), ("cc", "double"))
 _SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE = range(6)
 _LABELING = "vId LONG, t INT, vt INT, cc DOUBLE, cId LONG"
+_LABELING_COLUMNS = ["vId", "t", "vt", "cc", "cId"]
 _PACKED = ", ".join(f"{name} {ty}" for name, ty in _FIELDS)
 # rows per chunk of the triangle kernel's wedge arrays (bounds its memory)
 _WEDGES = 1 << 22
@@ -131,9 +137,10 @@ def _tagged(columns: list[str], parts: dict, info: dict) -> pd.DataFrame:
 
 
 def _land(mat, plan: DataFrame, name: str, split: dict | None = None):
-    """Land a task's ``plan`` through ``mat`` as ``name`` (split by tag
-    when ``split`` is given, see ``Materializer.__call__``); its info
-    row rides the landing as an Observation.  Returns ``(landing,
+    """Land a task's tagged ``plan`` (see ``_tagged``) through ``mat``
+    as ``name``: split by tag when ``split`` is given (see
+    ``Materializer.__call__``), else its one table without the tag.  Its
+    info row rides the landing as an Observation.  Returns ``(landing,
     info)``."""
     obs = Observation()
     rows = (
@@ -141,6 +148,8 @@ def _land(mat, plan: DataFrame, name: str, split: dict | None = None):
         .where(F.col("info").isNull())
         .drop("info")
     )
+    if split is None:
+        rows = rows.drop("k")
     return mat(rows, name, split=split), json.loads(obs.get["info"])
 
 
@@ -155,12 +164,6 @@ def _index(ids: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return np.where(ids[hit] == keys, hit, -1)
 
 
-def _csr(s: np.ndarray, n: int) -> np.ndarray:
-    """Row pointers of edges sorted by source position ``s``: the
-    out-edges of ``i`` are rows ``ptr[i]:ptr[i + 1]``."""
-    return np.concatenate([[0], np.cumsum(np.bincount(s, minlength=n))])
-
-
 class _SmallGraph:
     """A task's labeled graph over arrays, unpacked once and shared by
     the election and the movement rounds.
@@ -168,9 +171,9 @@ class _SmallGraph:
     Positions ``[0, n)`` are the labeling's vertices in ascending id,
     with their ``t``/``vt``/``cc``; the positions after them are the
     fixed outer labels' vertices.  ``labels`` holds every position's
-    input label.  The edges are ``(s, d)`` position pairs sorted by
-    ``(s, d)`` with row pointers ``ptr`` (a CSR); an edge with an
-    unknown endpoint drops out, as in the Spark kernels' label joins.
+    input label.  The edges are ``(s, d)`` position pairs; an edge
+    with an unknown endpoint drops out, as in the Spark kernels' label
+    joins.
     ``tri``: the triangles' corner positions, those inside the
     labeling; ``candidates``: the positions of the candidate rows."""
 
@@ -186,9 +189,7 @@ class _SmallGraph:
         e = pdf[k == _EDGE]
         s, d = _index(self.ids, e["a"].to_numpy()), _index(self.ids, e["b"].to_numpy())
         keep = (s >= 0) & (d >= 0)
-        order = np.lexsort((d[keep], s[keep]))
-        self.s, self.d = s[keep][order], d[keep][order]
-        self.ptr = _csr(self.s, len(self.ids))
+        self.s, self.d = s[keep], d[keep]
         tri = pdf[k == _TRIANGLE]
         corners = [_index(self.vid, tri[c].to_numpy()) for c in ("a", "b", "c")]
         inside = (corners[0] >= 0) & (corners[1] >= 0) & (corners[2] >= 0)
@@ -201,11 +202,12 @@ class _SmallGraph:
 # The graph: triangles and preprocessing
 # ----------------------------------------------------------------------
 
-def _triangles(ids: np.ndarray, src: np.ndarray, dst: np.ndarray):
+def _triangles(ids: np.ndarray, src: np.ndarray, dst: np.ndarray, cap: int):
     """Every triangle of the edge rows ``(src, dst)`` once, as corner
     positions in ``ids`` (their distinct sources, ascending) ``(u, v,
-    w)``: ``triangles.triangles``' rows over arrays.  Each edge is
-    oriented from its lower (degree, id) endpoint to its higher one
+    w)``: ``triangles.triangles``' rows over arrays — or None as soon as
+    there are ``cap`` or more of them.  Each edge is oriented from its
+    lower (degree, id) endpoint to its higher one
     (``triangles._oriented``: the degree counts the rows per source, and
     an edge whose dst is no source has none and drops out); a triangle
     is the oriented edge (u, v) plus a w that both orient to.  The
@@ -221,11 +223,11 @@ def _triangles(ids: np.ndarray, src: np.ndarray, dst: np.ndarray):
     up = rank[s] < rank[d]
     key = np.unique(s[up] * n + d[up])  # oriented edges, sorted (u, v)
     eu, ev = key // n, key % n
-    ptr = _csr(eu, n)
+    ptr = np.concatenate([[0], np.cumsum(np.bincount(eu, minlength=n))])  # CSR
     wedges = ptr[ev + 1] - ptr[ev]  # per oriented edge (u, v): v's out-edges
     ends = np.cumsum(wedges)
     out = [], [], []
-    lo = 0
+    found, lo = 0, 0
     while lo < len(key):
         hi = max(int(np.searchsorted(ends, ends[lo] - wedges[lo] + _WEDGES, "right")), lo + 1)
         c = wedges[lo:hi]
@@ -236,23 +238,48 @@ def _triangles(ids: np.ndarray, src: np.ndarray, dst: np.ndarray):
         q = u * n + w
         at = np.minimum(np.searchsorted(key, q), len(key) - 1)
         closed = key[at] == q
+        found += int(np.count_nonzero(closed))
+        if found >= cap:
+            return None
         for acc, x in zip(out, (u, ev[edge], w)):
             acc.append(x[closed])
         lo = hi
     return [np.concatenate(x) if x else np.zeros(0, np.int64) for x in out]
 
 
-def load_graph(edges: DataFrame, mat, tri: DataFrame | None = None) -> dict:
-    """``refinement.load_graph`` after the ``edges`` landing, in one
-    task: the triangles of ``edges`` (``_triangles``, unless ``tri``
-    gives them), each vertex's ``t``, the doubled clean edges (the
-    triangle edges), the clean vertices' ``vt`` (clean degree) and
-    ``cc``.  ``tri``, the clean vertices and the clean edges land
-    through ``mat`` with one split landing (``graph``); |tri|,
-    |E_clean|, Σcc (summed in ascending vId order) and |V| ride it.
-    Returns ``Graph``'s fields but ``edges`` and ``loop``."""
+def _clean_edges(n: int, s: np.ndarray, d: np.ndarray, u, v, w):
+    """The doubled clean edges ``(cs, cd)``: every edge ``(s, d)`` (as
+    positions below ``n``, -1 for an unknown endpoint) that is a side of
+    a triangle ``(u, v, w)``, in both directions.  Each side is marked
+    on the edges' distinct undirected keys, so the memory is O(|E|)
+    beside the triangles (every side of a triangle is one of the
+    edges)."""
+    ok = d >= 0
+    lo, hi = np.minimum(s[ok], d[ok]), np.maximum(s[ok], d[ok])
+    key = np.unique(lo * n + hi)
+    covered = np.zeros(len(key), bool)
+    for a, b in ((u, v), (u, w), (v, w)):
+        covered[np.searchsorted(key, np.minimum(a, b) * n + np.maximum(a, b))] = True
+    a, b = key[covered] // n, key[covered] % n
+    return np.concatenate([a, b]), np.concatenate([b, a])
+
+
+def load_graph(edges: DataFrame, n_edges: int, mat,
+               tri: DataFrame | None = None) -> dict | None:
+    """``refinement.load_graph`` after the ``edges`` landing (|E| =
+    ``n_edges``), in one task: the triangles of ``edges``
+    (``_triangles``, unless the landed ``tri`` gives them), each
+    vertex's ``t``, the doubled clean edges (the triangle edges), the
+    clean vertices' ``vt`` (clean degree) and ``cc``.  The clean
+    vertices, the clean edges and the enumerated triangles land through
+    ``mat`` with one split landing (``graph``); |tri|, |E_clean|, Σcc
+    (summed in ascending vId order) and |V| ride it.  Returns
+    ``Graph``'s fields but ``edges`` and ``loop``, or None (nothing
+    left landed) when the enumeration found |E| + |tri| not to fit."""
 
     given = tri is not None
+    cap = TASK_ROWS - n_edges  # triangles the task may hold
+    columns = [name for name, _ in _FIELDS]
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         k = pdf["k"].to_numpy()
@@ -264,34 +291,41 @@ def load_graph(edges: DataFrame, mat, tri: DataFrame | None = None) -> dict:
             tr = pdf[k == _TRIANGLE]
             u, v, w = (_index(ids, tr[c].to_numpy()) for c in ("a", "b", "c"))
         else:
-            u, v, w = _triangles(ids, src, dst)
+            found = _triangles(ids, src, dst, cap)
+            if found is None:
+                return _tagged(columns, {}, {"tri": None})
+            u, v, w = found
         t = np.bincount(np.concatenate([u, v, w]), minlength=n)
-        pairs = np.unique(np.concatenate(
-            [a * n + b for a, b in ((u, v), (u, w), (v, w), (v, u), (w, u), (w, v))]
-        ))
-        cs, cd = pairs // n, pairs % n
+        cs, cd = _clean_edges(n, np.searchsorted(ids, src), _index(ids, dst), u, v, w)
         vt = np.bincount(cs, minlength=n)
         clean = np.flatnonzero(t > 0)
         cc = np_cc(t[clean], vt[clean])
         parts = {
-            "tri": dict(a=ids[u], b=ids[v], c=ids[w]),
             "vertices": dict(a=ids[clean], t=t[clean], vt=vt[clean], cc=cc),
             "clean-edges": dict(a=ids[cs], b=ids[cd]),
         }
+        if not given:
+            parts["tri"] = dict(a=ids[u], b=ids[v], c=ids[w])
         info = dict(tri=len(u), clean_edges=len(cs), cc_sum=sum(cc.tolist()), vertices=n)
-        return _tagged([name for name, _ in _FIELDS], parts, info)
+        return _tagged(columns, parts, info)
 
     parts = [_sentinel(edges), _part(_EDGE, edges, a="src", b="dst")]
-    if given:
-        parts.append(_part(_TRIANGLE, tri, a="u", b="v", c="w"))
-    plan = _one_task(parts, task, f"k STRING, {_PACKED}, info STRING")
-    landed, info = _land(mat, plan, "graph", split={
-        "tri": [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")],
+    split = {
         "vertices": [F.col("a").alias("vId"), "t", "vt", "cc"],
         "clean-edges": [F.col("a").alias("src"), F.col("b").alias("dst")],
-    })
+    }
+    if given:
+        parts.append(_part(_TRIANGLE, tri, a="u", b="v", c="w"))
+    else:
+        split["tri"] = [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")]
+    plan = _one_task(parts, task, f"k STRING, {_PACKED}, info STRING")
+    landed, info = _land(mat, plan, "graph", split)
+    if info["tri"] is None:
+        for df in landed.values():
+            mat.drop(df)
+        return None
     return dict(
-        tri=landed["tri"],
+        tri=tri if given else landed["tri"],
         vertices=landed["vertices"],
         clean_edges=landed["clean-edges"],
         tri_count=info["tri"],
@@ -380,7 +414,7 @@ class _Rounds:
         else:
             self.movable[: g.n] = True
         # degTot: a vertex's labeled edges, whatever the labeling
-        self.deg = np.diff(g.ptr)
+        self.deg = np.bincount(g.s, minlength=len(g.ids))
         self.w, self.v = float(global_cc), float(vertex_count)
 
     def stats(self, lab: np.ndarray):
@@ -464,9 +498,9 @@ def rounds(
     ``policy``.  When it evaluates, ``tri`` is the static triangle list
     its WCC reads.
 
-    The plan's rows are the kept labeling plus one row whose ``info``
-    (JSON) holds the moves of every round and the evaluated WCCs (the
-    input's, then each moved round's); ``info`` is NULL on the others.
+    The plan (``_tagged``) holds the kept labeling under tag ``moved``
+    and an info row with the moves of every round and the evaluated
+    WCCs (the input's, then each moved round's).
     """
     scoped = candidates is not None
 
@@ -474,12 +508,8 @@ def rounds(
         g = _SmallGraph(pdf)
         st = _Rounds(g, global_cc, vertex_count, scoped)
         cur, moves, wccs = protocol(policy, g.labels, st.move, st.wcc, lambda lab: None)
-        n = g.n
-        out = pd.DataFrame({"vId": g.vid, "t": g.t, "vt": g.vt, "cc": g.cc,
-                            "cId": cur[:n], "info": None})
-        info = pd.DataFrame({"vId": [0], "t": [0], "vt": [0], "cc": [0.0], "cId": [0],
-                             "info": [json.dumps({"moves": moves, "wccs": wccs})]})
-        return pd.concat([out, info], ignore_index=True)
+        labels = dict(vId=g.vid, t=g.t, vt=g.vt, cc=g.cc, cId=cur[: g.n])
+        return _tagged(_LABELING_COLUMNS, {"moved": labels}, {"moves": moves, "wccs": wccs})
 
     parts = [
         _sentinel(labels),
@@ -492,7 +522,7 @@ def rounds(
         parts.append(_part(_OUTER, outer_labels, a="vId", b="cId"))
     if policy.evaluates:
         parts.append(_part(_TRIANGLE, tri, a="u", b="v", c="w"))
-    return _one_task(parts, task, _LABELING + ", info STRING")
+    return _one_task(parts, task, f"k STRING, {_LABELING}, info STRING")
 
 
 def run_rounds(
@@ -522,7 +552,7 @@ def run_rounds(
 # The whole batch WCC: election and accept-if-improved rounds
 # ----------------------------------------------------------------------
 
-def run_wcc(graph, global_cc: float, vertex_count: int, mat, policy,
+def run_wcc(graph, global_cc: float, mat, policy,
             max_iterations: int) -> tuple[DataFrame, DataFrame, list[int]]:
     """``initial_partition`` then ``movement_rounds`` under ``policy``
     (``AcceptIfImproved``) over ``graph`` (a ``refinement.Graph``), in
@@ -533,7 +563,9 @@ def run_wcc(graph, global_cc: float, vertex_count: int, mat, policy,
     ``policy`` is brought up to date from the WCCs.  Returns
     ``(labeling, stats, moves)``."""
 
-    columns = ["vId", "cId", "t", "vt", "cc", "r", "a", "b", "d"]
+    columns = _LABELING_COLUMNS + ["r", "a", "b", "d"]
+    stats_columns = ["cId", "r", "a", "b", "d"]
+    vertex_count = graph.vertex_count
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         g = _SmallGraph(pdf)
@@ -543,7 +575,7 @@ def run_wcc(graph, global_cc: float, vertex_count: int, mat, policy,
         comms, _, _, _, r, a, b, _ = st.stats(cur)
         parts = {
             "labels": dict(vId=g.vid, t=g.t, vt=g.vt, cc=g.cc, cId=cur),
-            "stats": dict(cId=comms, r=r, a=a, b=b, d=2.0 * a / r.astype(np.float64) ** 2.0),
+            "stats": dict(cId=comms, r=r, a=a, b=b, d=np_density(r, a)),
         }
         return _tagged(columns, parts, {"moves": moves, "wccs": wccs})
 
@@ -555,12 +587,10 @@ def run_wcc(graph, global_cc: float, vertex_count: int, mat, policy,
             _part(_TRIANGLE, graph.tri, a="u", b="v", c="w"),
         ],
         task,
-        "k STRING, vId LONG, cId LONG, t INT, vt INT, cc DOUBLE, r INT, a DOUBLE, "
+        "k STRING, vId LONG, t INT, vt INT, cc DOUBLE, cId LONG, r INT, a DOUBLE, "
         "b LONG, d DOUBLE, info STRING",
     )
-    landed, info = _land(mat, plan, "wcc", split={
-        "labels": ["vId", "t", "vt", "cc", "cId"],
-        "stats": ["cId", "r", "a", "b", "d"],
-    })
+    landed, info = _land(mat, plan, "wcc", {"labels": _LABELING_COLUMNS,
+                                            "stats": stats_columns})
     replay(policy, info["wccs"])
     return landed["labels"], landed["stats"], info["moves"]

@@ -2,6 +2,8 @@
 loop vs the Spark loop, on co-purchase graphs of rising size.
 
     python3 plans/r14/crossover.py [SCALE ...] > plans/r14/crossover.txt
+    python3 plans/r14/crossover.py --cliques N [N ...]
+    python3 plans/r14/crossover.py --abort N [N ...]
 
 One Spark session (local[4], 4 shuffle partitions, as perfbench runs),
 warmed by one discarded run.  For each scale k the graph is
@@ -15,6 +17,14 @@ edges + triangles, what ``refine_partition`` compares to
 memory of Spark's Python workers during it (sampled every 0.2 s from
 ``/proc``; the task side's one task runs in one of them), and whether
 the two loops' labels are identical.
+
+``--cliques``: the triangle-densest family, N disjoint 45-cliques
+(|tri| = 7.2 |E|), run at the tier's real gate ("gate": each phase
+takes the loop its counts pick, reported per run) against the Spark
+loop.  ``--abort``: on N disjoint 45-cliques, only the graph task of
+``load_graph`` on a graph whose triangles do not fit: its wall time and
+peak worker RSS until it gives up (the cost a triangle-dense graph pays
+before it loads on Spark).
 """
 
 from __future__ import annotations
@@ -54,9 +64,9 @@ def _worker_rss_mb() -> float:
     return peak / 1024
 
 
-def run(spark, edges, loop: str):
-    threshold = task_tier.TASK_ROWS
-    task_tier.TASK_ROWS = sys.maxsize if loop == "task" else 0
+def _sampled(fn):
+    """``fn()``'s result, its wall time and the Python workers' peak
+    RSS while it ran."""
     peak, done = [0.0], threading.Event()
 
     def sample():
@@ -67,21 +77,43 @@ def run(spark, edges, loop: str):
     sampler.start()
     try:
         t0 = time.perf_counter()
-        res = refinement.run_wcc(edges)
-        labels = res.mat(res.communities, "labels")
-        wall = time.perf_counter() - t0
-        got = {r["vId"]: r["cId"] for r in labels.collect()}
-        assert res.report["refinement"] == res.report["election"] == loop
-        assert res.report["graph"] == loop
-        res.mat.cleanup()
-        return wall, got, res.iterations, peak[0]
+        out = fn()
+        return out, time.perf_counter() - t0, peak[0]
     finally:
         done.set()
         sampler.join()
+
+
+def run(spark, edges, loop: str):
+    """``run_wcc`` on ``loop``: "task" and "spark" force every phase
+    through the threshold, "gate" keeps it."""
+    threshold = task_tier.TASK_ROWS
+    task_tier.TASK_ROWS = {"task": sys.maxsize, "spark": 0}.get(loop, threshold)
+
+    def wcc():
+        res = refinement.run_wcc(edges)
+        labels = res.mat(res.communities, "labels")
+        got = {r["vId"]: r["cId"] for r in labels.collect()}
+        return res, got
+
+    try:
+        (res, got), wall, rss = _sampled(wcc)
+    finally:
         task_tier.TASK_ROWS = threshold
+    report = res.report
+    if loop != "gate":
+        assert report["refinement"] == report["election"] == report["graph"] == loop
+    res.mat.cleanup()
+    return wall, got, res.iterations, rss, f"{report['graph']}/{report['refinement']}"
 
 
-def main(scales):
+def cliques(n: int, size: int = 45) -> list[tuple[int, int]]:
+    """``n`` disjoint ``size``-cliques, undirected pairs."""
+    return [(c * size + i, c * size + j)
+            for c in range(n) for i in range(size) for j in range(i + 1, size)]
+
+
+def _session():
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
@@ -90,10 +122,65 @@ def main(scales):
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _edges(spark, pairs):
+    return symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG")).persist()
+
+
+def main_cliques(counts):
+    spark = _session()
+    for n in counts:
+        pairs = cliques(n)
+        edges = _edges(spark, pairs)
+        rows = 2 * len(pairs) + n * 14190  # |E| + |tri| of n 45-cliques
+        if n == counts[0]:
+            run(spark, edges, "gate")  # JVM and Python-worker warm-up
+        times = {"gate": [], "spark": []}
+        same = True
+        for p in range(PAIRS):
+            order = ("gate", "spark") if p % 2 == 0 else ("spark", "gate")
+            out = {}
+            for loop in order:
+                wall, got, rounds, rss, loops = run(spark, edges, loop)
+                times[loop].append(wall)
+                out[loop] = (got, rounds)
+                print(f"cliques={n} pair{p} {loop} ({loops}): {wall:.2f}s rounds={rounds} "
+                      f"worker_rss={rss:.0f}MB", flush=True)
+            same &= out["gate"] == out["spark"]
+        edges.unpersist()
+        print(
+            f"cliques={n} edges={len(pairs)} E+tri={rows} "
+            f"gate={min(times['gate']):.2f}s spark={min(times['spark']):.2f}s "
+            f"(min of {PAIRS}) identical={same}",
+            flush=True,
+        )
+    spark.stop()
+
+
+def main_abort(counts):
+    spark = _session()
+    for n in counts:
+        pairs = cliques(n)
+        edges = _edges(spark, pairs)
+        mat = Materializer(spark)
+        landed, n_edges = refinement._counted(edges, mat, "edges")
+        for p in range(PAIRS):
+            out, wall, rss = _sampled(lambda: task_tier.load_graph(landed, n_edges, mat))
+            assert out is None
+            print(f"cliques={n} edges={len(pairs)} tri={n * 14190} pair{p} graph task "
+                  f"gives up: {wall:.2f}s worker_rss={rss:.0f}MB", flush=True)
+        mat.cleanup()
+        edges.unpersist()
+    spark.stop()
+
+
+def main(scales):
+    spark = _session()
     for k in scales:
         pairs = gen.co_purchase(200 * k, 300 * k, structure_seed=10)
-        edges = symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG"))
-        edges = edges.persist()
+        edges = _edges(spark, pairs)
         mat = Materializer(spark)
         g = refinement.load_graph(edges, mat)
         rows = g.clean_edge_count + g.tri_count
@@ -106,7 +193,7 @@ def main(scales):
             order = ("task", "spark") if p % 2 == 0 else ("spark", "task")
             out = {}
             for loop in order:
-                wall, got, rounds, rss = run(spark, edges, loop)
+                wall, got, rounds, rss, _ = run(spark, edges, loop)
                 times[loop].append(wall)
                 out[loop] = (got, rounds)
                 print(f"k={k} pair{p} {loop}: {wall:.2f}s rounds={rounds} "
@@ -123,4 +210,8 @@ def main(scales):
 
 
 if __name__ == "__main__":
-    main([int(a) for a in sys.argv[1:]] or [1, 4, 16, 64])
+    mode = {"--cliques": main_cliques, "--abort": main_abort}.get(sys.argv[1:2] and sys.argv[1])
+    if mode is not None:
+        mode([int(a) for a in sys.argv[2:]])
+    else:
+        main([int(a) for a in sys.argv[1:]] or [1, 4, 16, 64])

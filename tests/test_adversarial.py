@@ -5,7 +5,8 @@ vertices, self-loops, duplicate edges, the empty graph, a triangle-free
 graph and a single triangle, two seeds each.
 
 * The small-state tier's triangle kernel emits the rows Spark's
-  ``triangles()`` emits, and the plain-Python reference's triangles.
+  ``triangles()`` emits, and the plain-Python reference's triangles;
+  it stops at its cap, and the graph then loads on Spark.
 * ``run_wcc`` equals ``pywcc_oracle.run_wcc_oracle`` in labels, rounds
   and WCC history: on the task tier graph by graph, and on both loops
   (``each_loop``) over the disjoint union of all of them (one run per
@@ -14,12 +15,15 @@ graph and a single triangle, two seeds each.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
 from community_detection_flink_spark.operators import task_tier
-from community_detection_flink_spark.operators.refinement import run_wcc
+from community_detection_flink_spark.operators.refinement import load_graph, run_wcc
 from community_detection_flink_spark.operators.triangles import triangles
+from community_detection_flink_spark.plans.iteration import Materializer
 from community_detection_flink_spark.sources.edges import symmetrize_edges
 from community_detection_flink_spark.sources.synthetic import (
     ADVERSARIAL,
@@ -45,12 +49,16 @@ def _doubled(pairs):
     return sorted((u, v) for u in adj for v in adj[u])
 
 
-def _kernel_rows(pairs):
+def _kernel(pairs, cap=task_tier.TASK_ROWS):
     doubled = _doubled(pairs)
     src = np.array([e[0] for e in doubled], np.int64)
     dst = np.array([e[1] for e in doubled], np.int64)
     ids = np.unique(src)
-    u, v, w = task_tier._triangles(ids, src, dst)
+    return ids, task_tier._triangles(ids, src, dst, cap)
+
+
+def _kernel_rows(pairs):
+    ids, (u, v, w) = _kernel(pairs)
     return set(zip(ids[u].tolist(), ids[v].tolist(), ids[w].tolist()))
 
 
@@ -71,6 +79,14 @@ def test_triangle_kernel_matches_spark(spark):
     got = {tuple(r) for r in triangles(edges).collect()}
     assert got == _kernel_rows(union)
     assert len(got) == sum(len(_kernel_rows(p)) for p in GRAPHS.values())
+
+
+def test_triangle_kernel_stops_at_its_cap():
+    pairs = GRAPHS["bridged_cliques-1"]
+    n_tri = len(_kernel_rows(pairs))
+    assert n_tri > 1
+    assert _kernel(pairs, n_tri)[1] is None
+    assert len(_kernel(pairs, n_tri + 1)[1][0]) == n_tri
 
 
 def _assert_same(res, ora):
@@ -106,3 +122,39 @@ def test_run_wcc_matches_oracle_on_the_union(spark, each_loop):
         assert res.report["refinement"] == loop
         _assert_same(res, ora)
         res.mat.cleanup()
+
+
+def test_graph_task_gate_counts_the_triangles(spark, monkeypatch):
+    """|E| fits but |E| + |tri| does not: the graph task gives up, the
+    graph loads on Spark with nothing of the task left landed, and the
+    result is the oracle's (one more row of room takes the task, see
+    the kernel's cap above and the per-graph runs)."""
+    pairs = GRAPHS["bridged_cliques-1"]
+    monkeypatch.setattr(task_tier, "TASK_ROWS", len(_doubled(pairs)) + len(_kernel_rows(pairs)))
+    res = run_wcc(symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG")))
+    assert res.report["graph"] == "spark"
+    _assert_same(res, oracle.run_wcc_oracle(pairs))
+    assert "graph" not in {p.rsplit("-", 1)[0] for p in os.listdir(res.mat.base)}
+    res.mat.cleanup()
+
+
+def test_given_triangles_load_alike_on_both_loops(spark, monkeypatch):
+    """``load_graph(tri=...)`` gates on |E| + the given list's count,
+    and the task loads the tables and counts Spark's ``preprocess``
+    derives from that list."""
+    pairs = GRAPHS["bridged_cliques-1"]
+    edges = symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG"))
+    n_edges, n_tri = len(_doubled(pairs)), len(_kernel_rows(pairs))
+    mat = Materializer(spark)
+    got = {}
+    for limit, loop in ((n_edges + n_tri + 1, "task"), (n_edges + n_tri, "spark")):
+        monkeypatch.setattr(task_tier, "TASK_ROWS", limit)
+        got[loop] = g = load_graph(edges, mat, tri=triangles(edges))
+        assert g.loop == loop and g.tri_count == n_tri
+    task, want = got["task"], got["spark"]
+    assert (task.clean_edge_count, task.vertex_count) == (want.clean_edge_count, want.vertex_count)
+    assert task.cc_sum == pytest.approx(want.cc_sum, abs=1e-12)
+    for table in ("tri", "vertices", "clean_edges"):
+        assert sorted(map(tuple, getattr(task, table).collect())) == \
+            sorted(map(tuple, getattr(want, table).collect()))
+    mat.cleanup()
