@@ -28,8 +28,20 @@ exact — every divergence documented:
   like the reference (``IncrementalWCC.scala:332-393`` — contrast the
   batch path's converging loop), over one of two scopes: the batch
   neighborhood, or every clean vertex when the neighborhood is most of
-  the graph.  Either way the carried per-community stats/WCC sums are
-  spliced, so the final evaluation reads only the scope.
+  the graph (``movement.ScopeRule``).  Either way the carried
+  per-community stats/WCC sums are spliced, so the final evaluation
+  reads only the scope.
+* Two loops run that one batch.  When the carried state (|V| +
+  |E_clean| + |tri|) fits the small-state tier, the WHOLE batch runs in
+  one task (``task_tier.incremental_batch``): the merge over arrays,
+  then the same election, scope rule and rounds over one shared
+  in-task graph, the stats and WCC sums of every community recomputed
+  (below the tier the task reads the whole state anyway, so a splice
+  saves nothing), and one split landing — an insert lands only its
+  deltas, a delete also rewrites its edge set.  Otherwise the merge
+  runs as joins and landings and the tail (``_elect_and_refine``) as
+  the election, ``_pick_scope`` and ``movement_rounds``, each on the
+  loop its own state fits.
 * The reference returns the PRE-batch community stats
   (``IncrementalWCC.scala:69`` quirk); we return the freshly computed
   stats — the honest value.
@@ -48,8 +60,12 @@ from community_detection_flink_spark.operators.community import (
     community_adjacency,
     wccv_by_community,
 )
-from community_detection_flink_spark.operators.movement import FixedRounds
-from community_detection_flink_spark.operators.partition import initial_partition
+from community_detection_flink_spark.operators import task_tier
+from community_detection_flink_spark.operators.movement import FixedRounds, ScopeRule
+from community_detection_flink_spark.operators.partition import (
+    MAX_ITERATIONS,
+    initial_partition,
+)
 from community_detection_flink_spark.operators.preprocess import preprocess  # noqa: F401 -- perfbench/spans.py LAYERS wraps this name
 from community_detection_flink_spark.operators.refinement import (
     load_graph,
@@ -69,8 +85,9 @@ INCREMENTAL_ROUNDS = 5  # IncrementalWCC.scala:382 (fixed, no convergence test)
 COMPACT_EVERY = 8  # batches between parquet compactions of the lazy edge unions
 # scoped refinement runs only when the clean members of the affected
 # communities, and then V_R, are at most this fraction of the clean
-# vertices; beyond it the whole-graph rounds have the better constant
-# (see _pick_scope); a value below 0 forces the whole-graph scope
+# vertices (``movement.ScopeRule``); beyond it the whole-graph rounds
+# have the better constant (see _pick_scope); a value below 0 forces the
+# whole-graph scope
 _SCOPE_FRACTION = 0.5
 
 
@@ -89,6 +106,11 @@ class WCCState:
     # ``Graph.clean_edge_count``, plus each insert's disjoint delta, or
     # a delete's count of its rewritten set (both ride their landings)
     clean_edge_count: int
+    # |tri|, carried the same way: prepare's ``Graph.tri_count``, plus
+    # each insert's new triangles, or a delete's count of the survivors.
+    # |V| + |E_clean| + |tri| is the state a batch's one task reads
+    # (``task_tier.fits``)
+    tri_count: int
     # static triangle list (u, v, w) of clean_edges, maintained
     # incrementally: every new triangle contains ≥1 new edge, so the
     # per-batch delta from ``_new_triangles`` is DISJOINT from the
@@ -174,6 +196,7 @@ def prepare(
         global_wcc=res.global_wcc,
         vertex_count=res.vertex_count,
         clean_edge_count=graph.clean_edge_count,
+        tri_count=graph.tri_count,
         tri=graph.tri,
         wccv=wccv,
         mat=mat,
@@ -235,11 +258,15 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     the reference re-runs its election over the whole triangle
     subgraph and re-scans the whole graph 5×/batch,
     ``IncrementalWCC.scala:185-227, 332-393`` — forbidden at 100 TB).
-    Every table lands through ``state.mat``.
+    A state that fits the small-state tier runs all of it in one task
+    instead (``_in_one_task``).  Every table lands through ``state.mat``.
     """
     mat = state.mat
 
     sym = symmetrize_edges(batch_edges)
+    done = _in_one_task(state, sym, delete=False)
+    if done is not None:
+        return done
     # the batch's highest new vertex id rides the landing: the next
     # state's id ceiling
     new_obs = Observation()
@@ -248,17 +275,9 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         .observe(new_obs, F.max("src").alias("m")),
         "inc-newe",
     )
-    max_vertex = state.max_vertex
-    if max_vertex is not None and new_obs.get["m"] is not None:
-        max_vertex = max(max_vertex, int(new_obs.get["m"]))
     # new_e is anti-joined against the carried set, so the union is
-    # DISJOINT — no dedup shuffle, no O(|E|) rewrite per batch.  The
-    # union stays lazy (a scan of the carried parquet roots plus this
-    # batch's delta file) and is compacted every COMPACT_EVERY batches.
+    # DISJOINT — no dedup shuffle, no O(|E|) rewrite per batch
     full_edges = state.edges.unionByName(new_e)
-    compact = state.pending_unions + 1 >= COMPACT_EVERY
-    if compact:
-        full_edges = mat(full_edges, "inc-edges")
 
     # distributed border/new classification (J5; reference collects maps)
     batch_verts = (
@@ -268,7 +287,11 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     new_verts = batch_verts.join(old_verts, "vId", "left_anti")
 
     # exact triangle delta
-    tri = mat(_new_triangles(full_edges, new_e), "inc-tri")
+    tri_obs = Observation()
+    tri = mat(
+        _new_triangles(full_edges, new_e).observe(tri_obs, F.count(F.lit(1)).alias("n")),
+        "inc-tri",
+    )
     delta_t = (
         tri.select(F.explode(F.array("u", "v", "w")).alias("vId"))
         .groupBy("vId")
@@ -289,11 +312,7 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         .observe(add_obs, F.count(F.lit(1)).alias("n")),
         "inc-clean-add",
     )
-    clean_new = state.clean_edges.unionByName(clean_add)
-    n_clean_edges = state.clean_edge_count + int(add_obs.get["n"])
-    if compact:
-        clean_new = mat(clean_new, "inc-clean")
-    vt_new = clean_new.groupBy(F.col("src").alias("vId")).agg(
+    vt_new = state.clean_edges.unionByName(clean_add).groupBy(F.col("src").alias("vId")).agg(
         F.count("*").cast("int").alias("vt_new")
     )
 
@@ -311,24 +330,104 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
     )
 
-    # the delta is DISJOINT from the carried list (every new triangle
-    # has a new edge), so the union stays LAZY like edges/clean_edges —
-    # landing it would rewrite the ENTIRE O(|T|) triangle list every
-    # batch for no lineage benefit (both sides are parquet-backed);
-    # compacted on the same COMPACT_EVERY cadence as the edge sets
-    tri_static = state.tri.unionByName(tri.select("u", "v", "w"))
-    if compact:
-        tri_static = mat(tri_static, "inc-tri-static")
+    edges, clean_new, tri_static, pending = _extend(state, new_e, clean_add, tri)
     return _elect_and_refine(state, _land_vertices(
-        vertex_table, mat, edges=full_edges, tri=tri_static,
-        clean_edges=clean_new, clean_edge_count=n_clean_edges,
+        vertex_table, mat, edges=edges, tri=tri_static,
+        tri_count=state.tri_count + int(tri_obs.get["n"]),
+        clean_edges=clean_new,
+        clean_edge_count=state.clean_edge_count + int(add_obs.get["n"]),
         # t changes exactly at corners of new triangles; vt changes at
         # endpoints of newly-cleaned edges — all of which are corners
         # too (a new clean edge is an edge of some new triangle)
         changed=tri.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct(),
-        pending_unions=0 if compact else state.pending_unions + 1,
-        max_vertex=max_vertex,
+        pending_unions=pending,
+        max_vertex=_raised(state.max_vertex, new_obs.get["m"]),
     ))
+
+
+def _raised(max_vertex: int | None, batch_max) -> int | None:
+    """The id ceiling after an insert whose new edges' highest id is
+    ``batch_max`` (None: no new edge); an unknown ceiling stays
+    unknown."""
+    if max_vertex is None or batch_max is None:
+        return max_vertex
+    return max(max_vertex, int(batch_max))
+
+
+def _extend(state: WCCState, new_e: DataFrame, clean_add: DataFrame, tri: DataFrame):
+    """The carried edges, clean edges and triangles extended by an
+    insert's new rows (each DISJOINT from its carried set, so a plain
+    union), and the next ``pending_unions``.  The unions stay LAZY (a
+    scan of the carried parquet roots plus this batch's delta files):
+    landing them would rewrite the ENTIRE O(|E|) and O(|T|) sets every
+    batch for no lineage benefit.  Every ``COMPACT_EVERY`` batches they
+    land, so scan fan-out and plan depth stay bounded."""
+    tables = (
+        state.edges.unionByName(new_e),
+        state.clean_edges.unionByName(clean_add),
+        state.tri.unionByName(tri.select("u", "v", "w")),
+    )
+    if state.pending_unions + 1 < COMPACT_EVERY:
+        return (*tables, state.pending_unions + 1)
+    names = ("inc-edges", "inc-clean", "inc-tri-static")
+    return (*(state.mat(df, name) for df, name in zip(tables, names)), 0)
+
+
+def _in_one_task(state: WCCState, batch: DataFrame, delete: bool) -> WCCState | None:
+    """The whole batch (the merge of the symmetrized ``batch`` and
+    ``_elect_and_refine``'s tail) in one task, when the carried |V| +
+    |E_clean| + |tri| fits the small-state tier
+    (``task_tier.incremental_batch``): one split landing, and for a
+    delete one more, the rewritten edge set.  The task recomputes the
+    stats and WCC sums of every community instead of splicing them (it
+    reads the whole state anyway), and lands only an insert's deltas, so
+    the lazy unions and their compaction stay as on Spark (``_extend``).
+    None when the state does not fit, or an insert's new triangles
+    would take it past the tier; the batch then runs on Spark."""
+    rows = state.vertex_count + state.clean_edge_count + state.tri_count
+    if not task_tier.fits(rows):
+        return None
+    out = task_tier.incremental_batch(
+        state, batch, delete, rows, FixedRounds(INCREMENTAL_ROUNDS),
+        ScopeRule(_SCOPE_FRACTION), MAX_ITERATIONS,
+    )
+    if out is None:
+        return None
+    landed, info = out
+    if delete:
+        # deleting an absent edge changes nothing: no semi-join first
+        edges = state.mat(
+            state.edges.join(F.broadcast(batch), ["src", "dst"], "left_anti"), "inc-edges"
+        )
+        clean, tri, pending = landed["clean-edges"], landed["tri"], 0
+        clean_count, tri_count = info["clean_edges"], info["tri"]
+    else:
+        edges, clean, tri, pending = _extend(
+            state, landed["edges"], landed["clean-edges"], landed["tri"]
+        )
+        clean_count = state.clean_edge_count + info["clean_edges"]
+        tri_count = state.tri_count + info["tri"]
+    moves = info["moves"]
+    return WCCState(
+        edges=edges,
+        clean_edges=clean,
+        vertices=landed["vertices"],
+        stats=landed["stats"],
+        global_wcc=info["wcc"],
+        vertex_count=info["vertices"],
+        clean_edge_count=clean_count,
+        tri_count=tri_count,
+        tri=tri,
+        wccv=landed["wccv"],
+        mat=state.mat,
+        report=dict(
+            election="task", refinement="task", moves=moves, rounds=len(moves),
+            affected_vertices=info["affected_vertices"],
+            scope_vertices=info["scope_vertices"],
+        ),
+        pending_unions=pending,
+        max_vertex=_raised(state.max_vertex, info["max_vertex"]),
+    )
 
 
 class _Merge(NamedTuple):
@@ -344,6 +443,7 @@ class _Merge(NamedTuple):
     clean_edges: DataFrame
     clean_edge_count: int
     tri: DataFrame
+    tri_count: int
     changed: DataFrame  # vIds whose t or vt changed
     # None: the changed vertices' labels in ``vertices`` (see
     # ``_elect_and_refine`` for why a delete passes its own)
@@ -377,13 +477,17 @@ def _land_vertices(vertices: DataFrame, mat: Materializer, **merge) -> _Merge:
 
 
 def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
-    """Shared tail of every incremental batch (insert or delete):
-    re-elect centers inside the affected communities, run the fixed
-    movement rounds over the scope ``_pick_scope`` chooses — the batch
-    neighborhood, or every clean vertex — splice ``state``'s carried
-    per-community stats/WCC sums, and assemble the next ``WCCState``
-    (its ``report`` holds counts the batch computes anyway — no extra
-    job).  Every count the tail branches on rode a landing:
+    """Shared tail of every incremental batch (insert or delete) on
+    the Spark loop: re-elect centers inside the affected communities,
+    run the fixed movement rounds over the scope ``_pick_scope`` chooses
+    — the batch neighborhood, or every clean vertex — splice
+    ``state``'s carried per-community stats/WCC sums, and assemble the
+    next ``WCCState`` (its ``report`` holds counts the batch computes
+    anyway — no extra job).  The other loop of a batch, one task for a
+    state under the small-state tier (``_in_one_task``), runs this tail
+    over arrays after its merge and recomputes the stats and WCC sums
+    instead of splicing them; the tests assert both loops agree.  Every
+    count the tail branches on rode a landing:
     ``merge.clean_edge_count`` picks the election's loop and sizes its
     width, and the whole-graph scope's; the clean-vertex count (from
     ``inc-verts``) and the affected-member count (from ``inc-part``)
@@ -529,6 +633,7 @@ def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
         global_wcc=wcc,
         vertex_count=merge.vertex_count,
         clean_edge_count=merge.clean_edge_count,
+        tri_count=merge.tri_count,
         tri=merge.tri,
         wccv=new_wccv,
         mat=mat,
@@ -629,12 +734,13 @@ def _pick_scope(
     # fraction of the graph; otherwise the scoped machinery is the full
     # path plus overhead (measured 49.5s vs 30.4s per batch at sf0.1 on
     # dense small-world graphs with uniformly-random batches).  Two
-    # checks, cheapest first: the affected members (the relabeled set),
-    # whose count and the clean-vertex count rode the inc-part and
-    # inc-verts landings; then V_R, counted by the scope-vr landing
-    # after the one edge scan that builds the candidate set.
-    n_clean = merge.clean_vertex_count
-    if n_affected > _SCOPE_FRACTION * n_clean:
+    # checks (``movement.ScopeRule``), cheapest first: the affected
+    # members (the relabeled set), whose count and the clean-vertex
+    # count rode the inc-part and inc-verts landings; then V_R, counted
+    # by the scope-vr landing after the one edge scan that builds the
+    # candidate set.
+    rule, n_clean = ScopeRule(_SCOPE_FRACTION), merge.clean_vertex_count
+    if not rule.scoped(n_affected, n_clean):
         return whole_graph()
     # post-election labels of relabeled vertices = ALL fragments the
     # election carved out of affected communities (not just fragments
@@ -655,7 +761,7 @@ def _pick_scope(
         "scope-vr",
     )
     n_vr = int(vr_obs.get["n"] or 0)
-    if n_vr > _SCOPE_FRACTION * n_clean:
+    if not rule.scoped(n_affected, n_clean, n_vr):
         mat.drop(m_ids)
         mat.drop(vr)
         return whole_graph()
@@ -702,11 +808,16 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     one whose last triangle dies reverts to a singleton community
     (t = 0 ⇒ cId = vId), the same rule the batch pipeline applies to
     pruned vertices (``DistributedWCC.scala:63-78`` semantics).  The
-    re-partition is ``_elect_and_refine``, the same as an insert's.
+    re-partition is ``_elect_and_refine``, the same as an insert's.  A
+    state that fits the small-state tier runs all of it in one task
+    instead (``_in_one_task``).
     """
     mat = state.mat
 
     sym = symmetrize_edges(deleted_edges)
+    done = _in_one_task(state, sym, delete=True)
+    if done is not None:
+        return done
     # only edges actually present can be deleted
     del_e = mat(sym.join(state.edges, ["src", "dst"], "left_semi"), "del-e")
     full_edges = mat(
@@ -743,7 +854,12 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
         dead_parts[0].unionByName(dead_parts[1]).unionByName(dead_parts[2]).distinct(),
         "del-dead-tri",
     )
-    tri_new = mat(tri_all.join(dead, ["u", "v", "w"], "left_anti"), "inc-tri-static")
+    tri_obs = Observation()
+    tri_new = mat(
+        tri_all.join(dead, ["u", "v", "w"], "left_anti")
+        .observe(tri_obs, F.count(F.lit(1)).alias("n")),
+        "inc-tri-static",
+    )
 
     # exact t delta: each dead triangle un-counts once per corner
     dt = (
@@ -796,7 +912,8 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
         dead.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct()
     )
     return _elect_and_refine(state, _land_vertices(
-        vertex_table, mat, edges=full_edges, tri=tri_new, changed=changed_verts,
+        vertex_table, mat, edges=full_edges, tri=tri_new,
+        tri_count=int(tri_obs.get["n"]), changed=changed_verts,
         clean_edges=clean_new, clean_edge_count=int(clean_obs.get["n"]),
         # PRE-delete labels (see _elect_and_refine: a reverted
         # singleton's new cId = vId would hide its former community)
@@ -824,15 +941,19 @@ def save_state(state: WCCState, path: str) -> None:
     state.wccv.write.mode("overwrite").parquet(f"{path}/wccv")
     spark.createDataFrame(
         [(state.global_wcc, state.vertex_count, state.clean_edge_count,
-          state.max_vertex)],
+          state.tri_count, state.max_vertex)],
         "global_wcc DOUBLE, vertex_count LONG, clean_edge_count LONG, "
-        "max_vertex LONG",
+        "tri_count LONG, max_vertex LONG",
     ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
 
 
 def load_state(spark, path: str) -> WCCState:
-    """Restore a ``WCCState`` written by ``save_state``."""
+    """Restore a ``WCCState`` written by ``save_state``.  A manifest
+    written before ``tri_count`` was kept has its count taken once, from
+    the saved triangles."""
     meta = spark.read.json(f"{path}/meta").first()
+    fields = meta.__fields__
+    tri = spark.read.parquet(f"{path}/tri")
     return WCCState(
         edges=spark.read.parquet(f"{path}/edges"),
         clean_edges=spark.read.parquet(f"{path}/clean_edges"),
@@ -841,13 +962,14 @@ def load_state(spark, path: str) -> WCCState:
         global_wcc=float(meta.global_wcc),
         vertex_count=int(meta.vertex_count),
         clean_edge_count=int(meta.clean_edge_count),
-        tri=spark.read.parquet(f"{path}/tri"),
+        tri_count=int(meta.tri_count) if "tri_count" in fields else tri.count(),
+        tri=tri,
         wccv=spark.read.parquet(f"{path}/wccv"),
         mat=Materializer(spark),
         # json omits null columns: an unset max_vertex leaves no field
         max_vertex=(
             int(meta.max_vertex)
-            if "max_vertex" in meta.__fields__ and meta.max_vertex is not None
+            if "max_vertex" in fields and meta.max_vertex is not None
             else None
         ),
     )

@@ -1,4 +1,5 @@
-"""The movement protocol both WCC loops run, and its two accept policies.
+"""The movement protocol both WCC loops run, its two accept policies, and
+the incremental batch's scope rule.
 
 A refinement loop starts from a labeling, moves every vertex to its
 best community in simultaneous passes (``community.best_movement``)
@@ -7,8 +8,8 @@ here, over plain values: ``protocol`` takes the labeling and three
 callbacks, so the small-state tier's task runs it over numpy arrays
 (``task_tier.rounds``) and the Spark loop over landed labelings and
 their caches (``refinement.movement_rounds``).  The policies are
-pure rules over WCC floats; they hold no DataFrame, so a task can run
-a pickled copy.
+pure rules over WCC floats, and the scope rule over counts; they hold
+no DataFrame, so a task can run a pickled copy.
 """
 
 from __future__ import annotations
@@ -74,6 +75,25 @@ class FixedRounds:
 
     def keep(self, wcc) -> bool:
         return True
+
+
+@dataclass(frozen=True)
+class ScopeRule:
+    """Which scope an incremental batch's rounds run over
+    (``incremental._pick_scope``): the batch neighborhood V_R only when
+    the clean members of the affected communities, and then V_R, are at
+    most ``fraction`` of the clean vertices; otherwise the whole graph.
+    A pure rule over counts, like the policies above, so the Spark
+    tail and the small-state task run one copy."""
+
+    fraction: float
+
+    def scoped(self, n_affected: int, n_clean: int, n_vr: int | None = None) -> bool:
+        """False iff a check fails; ``n_vr`` unknown (None) passes the
+        second check, so the cheap first check can run alone."""
+        if n_affected > self.fraction * n_clean:
+            return False
+        return n_vr is None or n_vr <= self.fraction * n_clean
 
 
 def protocol(rule, labels, move, evaluate, free):

@@ -1,5 +1,5 @@
 """Small-state tier: WCC work whose state fits one task runs inside ONE
-executor task (ROADMAP items 3 and 8).
+executor task (ROADMAP items 3, 7 and 8).
 
 The triangle enumeration and preprocessing (``refinement.load_graph``),
 the MIS election (``partition.initial_partition``) and the movement
@@ -17,7 +17,7 @@ caller's ``Materializer`` to land, split by tag when it is several
 tables.  Computing locally when the state is small instead of running
 global rounds is REPOSE's local-index idea (ICDE 2021).
 
-Four tasks, each chosen on row counts that ride earlier landings:
+Five tasks, each chosen on row counts that ride earlier landings:
 
 * ``load_graph`` (``refinement.load_graph``): triangles, ``t``/``vt``/
   ``cc`` and the clean edges of a graph whose |E| (riding its ``edges``
@@ -30,9 +30,16 @@ Four tasks, each chosen on row counts that ride earlier landings:
 * ``run_wcc`` (``refinement.refine_partition``): the election AND every
   accept-if-improved round, when the clean graph's |E_clean| + |tri|
   fits — always so after the graph task, as |E_clean| <= |E|;
+* ``incremental_batch`` (``incremental_update``/``incremental_delete``):
+  a whole incremental batch — the merge (new or dead edges and
+  triangles, ``t``/``vt``/``cc``, a delete's singletons), the
+  affected-community election, the scope rule, the fixed rounds, and
+  the stats and WCC sums of every community — when the carried |V| +
+  |E_clean| + |tri| fits; like the graph task, an insert gives up when
+  its new triangles stop fitting, and the batch then runs on Spark;
 * ``elect`` (``initial_partition``) and ``run_rounds``
-  (``movement_rounds``) on their own, for callers with a labeling of
-  their own (the incremental batches), on the carried |E_clean| and the
+  (``movement_rounds``) on their own, for the Spark tail of an
+  incremental batch above that gate, on the carried |E_clean| and the
   scope's edge count.
 
 Above the threshold the Spark paths run unchanged.  Nothing O(V)
@@ -78,13 +85,14 @@ def fits(rows: int) -> bool:
     return rows < TASK_ROWS
 
 
-# The packed input: one row per vertex, edge, candidate, outer label or
-# triangle, tagged by ``k``; unused fields are 0 (never NULL, so the
-# Arrow → pandas conversion keeps every id an exact int64).  The graph
-# task's output uses the same fields under a string tag.
+# The packed input: one row per vertex, edge, candidate, outer label,
+# triangle, batch edge or incident carried edge, tagged by ``k``; unused
+# fields are 0 (never NULL, so the Arrow → pandas conversion keeps every
+# id an exact int64).  The graph task's output uses the same fields
+# under a string tag.
 _FIELDS = (("a", "long"), ("b", "long"), ("c", "long"), ("t", "int"),
            ("vt", "int"), ("cc", "double"))
-_SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE = range(6)
+_SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE, _BATCH, _INCIDENT = range(8)
 _LABELING = "vId LONG, t INT, vt INT, cc DOUBLE, cId LONG"
 _LABELING_COLUMNS = ["vId", "t", "vt", "cc", "cId"]
 _PACKED = ", ".join(f"{name} {ty}" for name, ty in _FIELDS)
@@ -164,38 +172,74 @@ def _index(ids: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return np.where(ids[hit] == keys, hit, -1)
 
 
+_NONE = np.zeros(0, np.int64)
+
+
 class _SmallGraph:
-    """A task's labeled graph over arrays, unpacked once and shared by
-    the election and the movement rounds.
+    """A task's labeled graph over arrays, built once and shared by the
+    election, the movement rounds and the evaluation.
 
-    Positions ``[0, n)`` are the labeling's vertices in ascending id,
-    with their ``t``/``vt``/``cc``; the positions after them are the
-    fixed outer labels' vertices.  ``labels`` holds every position's
-    input label.  The edges are ``(s, d)`` position pairs; an edge
-    with an unknown endpoint drops out, as in the Spark kernels' label
-    joins.
-    ``tri``: the triangles' corner positions, those inside the
-    labeling; ``candidates``: the positions of the candidate rows."""
+    Positions ``[0, n)`` are the labeling's vertices in ascending id
+    (``vid``), with their ``t``/``vt``/``cc``; the positions after them
+    are the fixed outer labels' vertices (``ids`` holds them all).
+    ``labels`` holds every position's input label.  The edges are
+    ``(s, d)`` position pairs; ``tri``: the triangles' corner
+    positions, those inside the labeling; ``candidates``: the candidate
+    positions."""
 
-    def __init__(self, pdf: pd.DataFrame):
+    def __init__(self, ids, n, labels, t, vt, cc, s, d, tri, candidates):
+        self.ids, self.n, self.vid, self.labels = ids, n, ids[:n], labels
+        self.t, self.vt, self.cc = t, vt, cc
+        self.s, self.d, self.tri, self.candidates = s, d, tri, candidates
+
+    @classmethod
+    def of_ids(cls, vid, labels, t, vt, cc, src, dst, tri=(_NONE,) * 3,
+               candidates=_NONE, outer=_NONE, outer_labels=_NONE) -> _SmallGraph:
+        """The graph of id arrays (``vid`` and ``outer`` ascending); an
+        edge with an unknown endpoint, a triangle with a corner outside
+        ``vid`` and an unknown candidate drop out, as in the Spark
+        kernels' label joins."""
+        ids = np.concatenate([vid, outer])
+        s, d = _index(ids, src), _index(ids, dst)
+        keep = (s >= 0) & (d >= 0)
+        corners = [_index(vid, c) for c in tri]
+        inside = (corners[0] >= 0) & (corners[1] >= 0) & (corners[2] >= 0)
+        m = _index(vid, candidates)
+        return cls(ids, len(vid), np.concatenate([labels, outer_labels]), t, vt, cc,
+                   s[keep], d[keep], [c[inside] for c in corners], m[m >= 0])
+
+    @classmethod
+    def unpack(cls, pdf: pd.DataFrame) -> _SmallGraph:
+        """The graph a packed task input holds (see ``_part``)."""
         k = pdf["k"].to_numpy()
         v = pdf[k == _VERTEX].sort_values("a")
         o = pdf[k == _OUTER].sort_values("a")
-        self.vid = v["a"].to_numpy()
-        self.n = len(self.vid)
-        self.ids = np.concatenate([self.vid, o["a"].to_numpy()])
-        self.labels = np.concatenate([v["b"].to_numpy(), o["b"].to_numpy()])
-        self.t, self.vt, self.cc = (v[c].to_numpy() for c in ("t", "vt", "cc"))
-        e = pdf[k == _EDGE]
-        s, d = _index(self.ids, e["a"].to_numpy()), _index(self.ids, e["b"].to_numpy())
-        keep = (s >= 0) & (d >= 0)
-        self.s, self.d = s[keep], d[keep]
-        tri = pdf[k == _TRIANGLE]
-        corners = [_index(self.vid, tri[c].to_numpy()) for c in ("a", "b", "c")]
-        inside = (corners[0] >= 0) & (corners[1] >= 0) & (corners[2] >= 0)
-        self.tri = [c[inside] for c in corners]
-        m = _index(self.vid, pdf[k == _CANDIDATE]["a"].to_numpy())
-        self.candidates = m[m >= 0]
+        e, tri = pdf[k == _EDGE], pdf[k == _TRIANGLE]
+        return cls.of_ids(
+            v["a"].to_numpy(), v["b"].to_numpy(), *(v[c].to_numpy() for c in ("t", "vt", "cc")),
+            e["a"].to_numpy(), e["b"].to_numpy(), [tri[c].to_numpy() for c in ("a", "b", "c")],
+            pdf[k == _CANDIDATE]["a"].to_numpy(), o["a"].to_numpy(), o["b"].to_numpy(),
+        )
+
+    def restrict(self, inner: np.ndarray, labels: np.ndarray, outer: bool = False,
+                 candidates: np.ndarray | None = None) -> _SmallGraph:
+        """The subgraph of this graph's labeled vertices at the mask
+        ``inner``, labeled by ``labels`` (one per labeled vertex), over
+        the edges whose src is inside: with ``outer``, every dst outside
+        is a fixed outer label, else those edges drop out.
+        ``candidates``: a mask of the candidates.  Its triangles are
+        left out (no caller evaluates a WCC on it)."""
+        s, d = self.s[inner[self.s]], self.d[inner[self.s]]
+        out = np.zeros(self.n, bool)
+        if outer:
+            out[d] = True
+            out &= ~inner
+        return _SmallGraph.of_ids(
+            self.vid[inner], labels[inner], self.t[inner], self.vt[inner], self.cc[inner],
+            self.ids[s], self.ids[d],
+            candidates=_NONE if candidates is None else self.vid[candidates],
+            outer=self.vid[out], outer_labels=labels[out],
+        )
 
 
 # ----------------------------------------------------------------------
@@ -382,7 +426,7 @@ def elect(vertices: DataFrame, edges: DataFrame, max_iterations: int) -> DataFra
     computed in one task; the caller lands it."""
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = _SmallGraph(pdf)
+        g = _SmallGraph.unpack(pdf)
         return pd.DataFrame({"vId": g.vid, "t": g.t, "vt": g.vt, "cc": g.cc,
                              "cId": _elect(g, max_iterations)})
 
@@ -472,14 +516,20 @@ class _Rounds:
         out[movers] = new_c[movers]
         return out, int(np.count_nonzero(out[: self.n] != lab[: self.n]))
 
-    def wcc(self, lab: np.ndarray) -> float:
-        """``community.global_wcc`` of ``lab``."""
+    def wcc_v(self, lab: np.ndarray):
+        """``community._wcc_v`` of ``lab``: each labeled vertex's WCC
+        kernel (NaN where Spark's is NULL), and ``stats(lab)``."""
         g, n = self.g, self.n
-        _, ci, _, _, r, _, _, own = self.stats(lab)
+        stats = self.stats(lab)
+        _, ci, _, _, r, _, _, own = stats
         u, v, w = g.tri
         same = (lab[u] == lab[v]) & (lab[v] == lab[w])
         t_c = np.bincount(np.concatenate([u[same], v[same], w[same]]), minlength=n)
-        wcc_v = np_wcc_v(g.t, g.vt, r[ci[:n]], own[:n], t_c)
+        return np_wcc_v(g.t, g.vt, r[ci[:n]], own[:n], t_c), stats
+
+    def wcc(self, lab: np.ndarray) -> float:
+        """``community.global_wcc`` of ``lab``."""
+        wcc_v, _ = self.wcc_v(lab)
         return math.fsum(wcc_v[~np.isnan(wcc_v)]) / self.v
 
 
@@ -505,7 +555,7 @@ def rounds(
     scoped = candidates is not None
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = _SmallGraph(pdf)
+        g = _SmallGraph.unpack(pdf)
         st = _Rounds(g, global_cc, vertex_count, scoped)
         cur, moves, wccs = protocol(policy, g.labels, st.move, st.wcc, lambda lab: None)
         labels = dict(vId=g.vid, t=g.t, vt=g.vt, cc=g.cc, cId=cur[: g.n])
@@ -568,7 +618,7 @@ def run_wcc(graph, global_cc: float, mat, policy,
     vertex_count = graph.vertex_count
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = _SmallGraph(pdf)
+        g = _SmallGraph.unpack(pdf)
         st = _Rounds(g, global_cc, vertex_count, scoped=False)
         cur, moves, wccs = protocol(policy, _elect(g, max_iterations), st.move, st.wcc,
                                     lambda lab: None)
@@ -594,3 +644,220 @@ def run_wcc(graph, global_cc: float, mat, policy,
                                             "stats": stats_columns})
     replay(policy, info["wccs"])
     return landed["labels"], landed["stats"], info["moves"]
+
+
+# ----------------------------------------------------------------------
+# The incremental batch: merge, election, scope and fixed rounds
+# ----------------------------------------------------------------------
+
+def _undirected(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """The key ``min * n + max`` of each position pair (a, b)."""
+    return np.minimum(a, b) * n + np.maximum(a, b)
+
+
+def _sides(tri, n: int) -> list[np.ndarray]:
+    """The undirected keys of the three sides of each triangle."""
+    u, v, w = tri
+    return [_undirected(u, v, n), _undirected(u, w, n), _undirected(v, w, n)]
+
+
+def _through(adj: np.ndarray, half: np.ndarray, n: int) -> np.ndarray:
+    """``incremental._new_triangles`` over arrays: every triangle of the
+    doubled edge keys ``adj`` (``src * n + dst``, sorted) with a side
+    among ``half`` (``u * n + v``, u < v), once, as rows of ascending
+    corner positions.  The common neighbours of a side's ends close
+    its triangles; each side walks the list of its lower-degree end."""
+    src = adj // n
+    ptr = np.concatenate([[0], np.cumsum(np.bincount(src, minlength=n))])
+    u, v = half // n, half % n
+    swap = ptr[u + 1] - ptr[u] > ptr[v + 1] - ptr[v]
+    a, b = np.where(swap, v, u), np.where(swap, u, v)
+    c = ptr[a + 1] - ptr[a]
+    side = np.repeat(np.arange(len(a)), c)
+    w = adj[np.repeat(ptr[a] - (np.cumsum(c) - c), c) + np.arange(len(side))] % n
+    q = b[side] * n + w
+    closed = adj[np.minimum(np.searchsorted(adj, q), len(adj) - 1)] == q
+    corners = np.stack([a[side][closed], b[side][closed], w[closed]], axis=1)
+    return np.unique(np.sort(corners, axis=1), axis=0)
+
+
+def _insert(vid, lab, t, clean, tri, batch, incident, cap):
+    """``incremental_update``'s merge over arrays.  ``batch``: the
+    symmetrized batch; ``incident``: every carried edge whose src is a
+    batch endpoint, which holds every carried batch edge and every
+    carried edge a new triangle needs.  Returns the merged graph (see
+    ``_delete``), or None when the new triangles number ``cap`` or
+    more."""
+    ids = np.union1d(vid, batch[0])
+    n = len(ids)
+    at = np.searchsorted
+    labels = ids.copy()
+    labels[at(ids, vid)] = lab
+    t_new = np.zeros(n, np.int64)
+    t_new[at(ids, vid)] = t
+    old = np.unique(at(ids, incident[0]) * n + at(ids, incident[1]))
+    new = np.setdiff1d(np.unique(at(ids, batch[0]) * n + at(ids, batch[1])), old)
+    found = _through(np.union1d(old, new), new[new // n < new % n], n)
+    if len(found) >= cap:
+        return None
+    u, v, w = found.T
+    t_new += np.bincount(found.ravel(), minlength=n)
+    carried = np.sort(at(ids, clean[0]) * n + at(ids, clean[1]))
+    sides = np.concatenate([x for a, b in ((u, v), (u, w), (v, w)) for x in (a * n + b, b * n + a)])
+    add = np.setdiff1d(np.unique(sides), carried)
+    keys = np.concatenate([carried, add])
+    tri_all = [np.concatenate([at(ids, c), x]) for c, x in zip(tri, (u, v, w))]
+    parts = {
+        "edges": dict(a=ids[new // n], b=ids[new % n]),
+        "tri": dict(a=ids[u], b=ids[v], c=ids[w]),
+        "clean-edges": dict(a=ids[add // n], b=ids[add % n]),
+    }
+    info = dict(clean_edges=len(add), tri=len(found),
+                max_vertex=int(ids[new // n].max()) if len(new) else None)
+    return (ids, labels, labels, t_new, keys // n, keys % n, tri_all, np.unique(found),
+            parts, info)
+
+
+def _delete(vid, lab, t, clean, tri, batch):
+    """``incremental_delete``'s merge over arrays: the triangles with a
+    deleted side die, the clean edges that only they held go, and a
+    vertex left without a triangle reverts to a singleton.  Returns
+    ``(ids, carried labels, merged labels, t, clean src, clean dst,
+    triangles, changed, parts, info)``: positions in ``ids`` (every
+    vertex, ascending), the merged labels before the election, the
+    changed vertices (corners of changed triangles), and the tables and
+    counts to land (here the rewritten clean edges and triangles)."""
+    ids, n = vid, len(vid)
+    s, d = _index(ids, batch[0]), _index(ids, batch[1])
+    ok = (s >= 0) & (d >= 0)
+    gone = np.unique(_undirected(s[ok], d[ok], n))
+    corners = [_index(ids, c) for c in tri]
+    sides = _sides(corners, n)
+    dead = np.isin(sides[0], gone) | np.isin(sides[1], gone) | np.isin(sides[2], gone)
+    dead_corners = np.concatenate([c[dead] for c in corners])
+    t_new = t - np.bincount(dead_corners, minlength=n)
+    candidates = np.unique(np.concatenate([x[dead] for x in sides]))
+    alive = np.unique(np.concatenate([x[~dead] for x in sides]))
+    gone = np.union1d(np.setdiff1d(candidates, alive), gone)
+    cs, cd = _index(ids, clean[0]), _index(ids, clean[1])
+    keep = ~np.isin(_undirected(cs, cd, n), gone)
+    parts = {
+        "tri": dict(a=tri[0][~dead], b=tri[1][~dead], c=tri[2][~dead]),
+        "clean-edges": dict(a=clean[0][keep], b=clean[1][keep]),
+    }
+    info = dict(clean_edges=int(keep.sum()), tri=int((~dead).sum()), max_vertex=None)
+    return (ids, lab, np.where(t_new > 0, lab, ids), t_new, cs[keep], cd[keep],
+            [c[~dead] for c in corners], np.unique(dead_corners), parts, info)
+
+
+def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
+                max_iterations):
+    """``incremental._elect_and_refine`` over one shared graph of the
+    clean vertices: the election inside the affected communities, the
+    scope ``rule`` picks (``incremental._pick_scope``'s sets), the
+    rounds under ``policy``, then the stats and WCC sums of every
+    community of the final labels."""
+    n = len(ids)
+    vt = np.bincount(cs, minlength=n)
+    cc = np_cc(t, vt)
+    global_cc = sum(cc.tolist()) / max(n, 1)  # ascending vId order
+    clean = np.flatnonzero(t > 0)
+    at = np.full(n, -1)
+    at[clean] = np.arange(len(clean))
+    g = _SmallGraph(ids[clean], len(clean), labels[clean], t[clean], vt[clean], cc[clean],
+                    at[cs], at[cd], [at[c] for c in tri], _NONE)
+    # the election: the clean members of the communities the changed
+    # vertices carried
+    elect = np.isin(g.labels, carried[changed])
+    part = g.labels.copy()
+    part[elect] = _elect(g.restrict(elect, g.labels), max_iterations)
+    # S: the elected fragments' members; M = S ∪ nbr(S); V_R: the
+    # members of M's communities
+    s_set = np.isin(part, part[elect])
+    m = s_set.copy()
+    m[g.d[s_set[g.s]]] = True
+    vr = np.isin(part, part[m])
+    n_affected, n_vr = int(elect.sum()), int(vr.sum())
+    scoped = rule.scoped(n_affected, len(clean), n_vr)
+    r = g.restrict(vr, part, outer=True, candidates=m) if scoped else g
+    rounds = _Rounds(r, global_cc, n, scoped)
+    cur, moves, _ = protocol(policy, r.labels if scoped else part, rounds.move, rounds.wcc,
+                             lambda lab: None)
+    final = part.copy()
+    final[vr if scoped else slice(None)] = cur[: r.n]
+    wcc_v, (comms, ci, _, _, size, a, b, _) = _Rounds(g, global_cc, n, False).wcc_v(final)
+    ok = ~np.isnan(wcc_v)
+    cid = ids.copy()
+    cid[clean] = final
+    parts = {
+        "vertices": dict(a=ids, b=cid, t=t, vt=vt, cc=cc),
+        "stats": dict(a=comms, t=size, cc=a, b=b, d=np_density(size, a)),
+        "wccv": dict(a=comms, b=size,
+                     cc=np.bincount(ci, np.where(ok, wcc_v, 0.0), minlength=len(comms))),
+    }
+    info = dict(vertices=n, wcc=math.fsum(wcc_v[ok]) / max(n, 1), affected_vertices=n_affected,
+                scope_vertices=n_vr if scoped else None, moves=moves)
+    return parts, info
+
+
+def incremental_batch(state, batch: DataFrame, delete: bool, rows: int, policy, rule,
+                      max_iterations: int) -> tuple[dict, dict] | None:
+    """One incremental batch on ``state`` (an ``incremental.WCCState``
+    of ``rows`` vertex, clean-edge and triangle rows) in ONE task: the
+    merge of the symmetrized ``batch`` (deleted when ``delete``, else
+    inserted), then the tail.  The task reads the carried vertices,
+    clean edges and triangles, the batch and, for an insert, the carried
+    edges from the batch's endpoints, and lands with one split landing
+    (``inc-batch``): the final vertices, the stats and WCC sums of every
+    community, and an insert's new edges, triangles and clean edges or a
+    delete's rewritten triangles and clean edges.  The counts ride it.
+    Returns ``(landings, info)``, or None (nothing left landed) when an
+    insert's new triangles would take the state past ``TASK_ROWS``."""
+
+    cap = TASK_ROWS - rows
+    columns = [name for name, _ in _FIELDS] + ["d"]
+
+    def task(pdf: pd.DataFrame) -> pd.DataFrame:
+        k = pdf["k"].to_numpy()
+        v = pdf[k == _VERTEX].sort_values("a")
+
+        def rows_of(tag, *cols):
+            return [pdf[k == tag][c].to_numpy() for c in cols]
+
+        args = (v["a"].to_numpy(), v["b"].to_numpy(), v["t"].to_numpy(),
+                rows_of(_EDGE, "a", "b"), rows_of(_TRIANGLE, "a", "b", "c"),
+                rows_of(_BATCH, "a", "b"))
+        merged = _delete(*args) if delete else _insert(*args, rows_of(_INCIDENT, "a", "b"), cap)
+        if merged is None:
+            return _tagged(columns, {}, {"tri": None})
+        *graph, parts, info = merged
+        tail, tail_info = _batch_tail(*graph, policy, rule, max_iterations)
+        return _tagged(columns, {**parts, **tail}, {**info, **tail_info})
+
+    parts = [
+        _sentinel(batch),
+        _part(_VERTEX, state.vertices, a="vId", b="cId", t="t"),
+        _part(_EDGE, state.clean_edges, a="src", b="dst"),
+        _part(_TRIANGLE, state.tri, a="u", b="v", c="w"),
+        _part(_BATCH, batch, a="src", b="dst"),
+    ]
+    edges = [F.col("a").alias("src"), F.col("b").alias("dst")]
+    split = {
+        "vertices": [F.col("a").alias("vId"), "t", "vt", "cc", F.col("b").alias("cId")],
+        "stats": [F.col("a").alias("cId"), F.col("t").alias("r"), F.col("cc").alias("a"),
+                  "b", "d"],
+        "wccv": [F.col("a").alias("cId"), F.col("cc").alias("s"), F.col("b").alias("n")],
+        "tri": [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")],
+        "clean-edges": edges,
+    }
+    if not delete:
+        incident = state.edges.join(F.broadcast(batch.select("src")), "src", "left_semi")
+        parts.append(_part(_INCIDENT, incident, a="src", b="dst"))
+        split["edges"] = edges
+    plan = _one_task(parts, task, f"k STRING, {_PACKED}, d DOUBLE, info STRING")
+    landed, info = _land(state.mat, plan, "inc-batch", split)
+    if info["tri"] is None:
+        for df in landed.values():
+            state.mat.drop(df)
+        return None
+    return landed, info

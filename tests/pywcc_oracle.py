@@ -230,8 +230,10 @@ def initial_partition(clean_adj, vt, cc):
 def community_stats(clean_adj, labels):
     """computeCommunityStats (DistributedWCC.scala:536-564):
     {cId: (r, a, b)} with a = internal undirected edges, b = external
-    undirected edges incident to the community."""
-    r = Counter(labels.values())
+    undirected edges incident to the community.  The members are
+    ``clean_adj``'s keys; a neighbour outside them counts by its label in
+    ``labels``."""
+    r = Counter(labels[v] for v in clean_adj)
     a = Counter()
     b = Counter()
     for v, nbrs in clean_adj.items():
@@ -264,12 +266,15 @@ def global_wcc(clean_adj, labels, t, vt, tri, stats, vertex_count):
     return total / float(vertex_count)
 
 
-def best_movement(clean_adj, labels, stats, global_cc, vertex_count):
-    """One simultaneous pass (DistributedWCC.scala:331-419).  Returns
-    (new_labels, moves)."""
-    new_labels = {}
+def best_movement(clean_adj, labels, stats, global_cc, vertex_count, movers=None):
+    """One simultaneous pass (DistributedWCC.scala:331-419) of the
+    vertices ``movers`` (default: every vertex of ``clean_adj``); the
+    others keep their labels, and a community without ``stats`` is no
+    target.  Returns (new_labels, moves)."""
+    new_labels = dict(labels)
     moves = 0
-    for v, nbrs in clean_adj.items():
+    for v in clean_adj if movers is None else sorted(movers):
+        nbrs = clean_adj[v]
         own = labels[v]
         vc = Counter(labels[u] for u in nbrs)
         deg_tot = sum(vc.values())
@@ -282,7 +287,7 @@ def best_movement(clean_adj, labels, stats, global_cc, vertex_count):
         best_c = None
         if wccR is not None:
             for c, dIn in vc.items():
-                if c == own:
+                if c == own or c not in stats:
                     continue
                 rc, ac, bc = stats[c]
                 if rc <= 1:
@@ -365,15 +370,15 @@ def run_wcc_oracle(pairs, max_retries: int = MAX_RETRIES, threshold: float = THR
     }
 
 
-def incremental_batch(old_pairs, new_pairs, old_labels, rounds):
-    """One incremental batch (insert or delete) with the whole-graph
-    refinement scope (``IncrementalWCC.scala:27-393`` plus the engine's
-    affected-community election, ``operators/incremental.py``).
+def incremental_batch(old_pairs, new_pairs, old_labels, rounds, scope_fraction=None):
+    """One incremental batch (insert or delete) (``IncrementalWCC.scala:27-393``
+    plus the engine's affected-community election and refinement scope,
+    as ``operators/incremental.py`` documents them).
 
     ``old_pairs`` / ``new_pairs``: the edge set before / after the
     batch; ``old_labels``: the carried ``{vId: cId}`` before it.
-    Vertices never disappear: the vertex set is the union of both
-    graphs' vertices.
+    Vertices never disappear: the vertex set is the carried labels'
+    vertices and both graphs' vertices.
 
     * changed vertices = corners of the symmetric difference of the
       old and new triangle sets; ``affected`` = their old labels (a
@@ -383,21 +388,34 @@ def incremental_batch(old_pairs, new_pairs, old_labels, rounds):
       ``affected``, with the full graph's ``vt``/``cc``; every other
       clean vertex keeps its label and every non-clean vertex gets its
       own id;
+    * the scope: S = the clean vertices whose post-election label is
+      one an elected vertex carries; M = S and every clean neighbour of
+      S (the candidates); R = the labels of M; V_R = every clean vertex
+      labeled in R.  The rounds run over V_R when the elected vertices,
+      and then V_R, are at most ``scope_fraction`` of the clean
+      vertices; otherwise (and always when ``scope_fraction`` is None)
+      over every clean vertex;
     * then up to ``rounds`` simultaneous ``best_movement`` passes, no
-      accept test, stopping at a 0-move pass.
+      accept test, stopping at a 0-move pass.  Over V_R only the
+      candidates move, a pass's community stats count V_R's members and
+      their edges (a neighbour outside V_R keeps its label), and only a
+      community with such stats is a target.
 
     Returns a dict with ``communities`` over all vertices, the final
-    community ``stats`` ``{cId: (r, a, b)}``, ``global_wcc``,
-    ``vertex_count`` and ``rounds``.
+    community ``stats`` ``{cId: (r, a, b)}`` over every clean vertex,
+    ``global_wcc``, ``vertex_count``, ``rounds``,
+    ``affected_vertices`` (the elected vertices) and
+    ``scope_vertices`` (|V_R|, None for the whole graph).
     """
     old_adj = symmetrize(old_pairs)
     adj = symmetrize(new_pairs)
-    verts = set(old_adj) | set(adj)
+    verts = set(old_labels) | set(old_adj) | set(adj)
     vertex_count = len(verts)
     if vertex_count == 0:
         return {
             "communities": {}, "stats": {}, "global_wcc": 0.0,
-            "vertex_count": 0, "rounds": 0,
+            "vertex_count": 0, "rounds": 0, "affected_vertices": 0,
+            "scope_vertices": None if scope_fraction is None else 0,
         }
     _, _, _, _, old_tri = preprocess(old_adj)
     clean_adj, t, vt, cc, tri = preprocess(adj)
@@ -410,11 +428,22 @@ def incremental_batch(old_pairs, new_pairs, old_labels, rounds):
     labels = dict(pre)
     labels.update(initial_partition(sub_adj, vt, cc))
 
+    elected = {labels[v] for v in elect}
+    s_set = {v for v in clean_adj if labels[v] in elected}
+    m = s_set | {u for v in s_set for u in clean_adj[v]}
+    r_labels = {labels[v] for v in m}
+    vr = {v for v in clean_adj if labels[v] in r_labels}
+    limit = None if scope_fraction is None else scope_fraction * len(clean_adj)
+    scoped = limit is not None and len(elect) <= limit and len(vr) <= limit
+    members, movers = ({v: clean_adj[v] for v in vr}, m) if scoped else (clean_adj, None)
+
     global_cc = sum(cc[v] for v in sorted(clean_adj)) / float(vertex_count)
     n_rounds = 0
     while n_rounds < rounds:
-        stats = community_stats(clean_adj, labels)
-        moved, moves = best_movement(clean_adj, labels, stats, global_cc, vertex_count)
+        stats = community_stats(members, labels)
+        moved, moves = best_movement(
+            clean_adj, labels, stats, global_cc, vertex_count, movers
+        )
         n_rounds += 1
         if moves == 0:
             break
@@ -427,4 +456,6 @@ def incremental_batch(old_pairs, new_pairs, old_labels, rounds):
         "global_wcc": wcc,
         "vertex_count": vertex_count,
         "rounds": n_rounds,
+        "affected_vertices": len(elect),
+        "scope_vertices": len(vr) if scoped else None,
     }

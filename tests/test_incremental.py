@@ -159,21 +159,28 @@ def test_prepare_lands_only_through_its_materializer(
     # each election's centers landing is freed once its partition landed
     assert not any(p.startswith("mis-centers") for p in os.listdir(ckpt))
     landed = set(os.listdir(ckpt)) - prepared
-    assert {"inc-newe", "del-e"} <= {p.rsplit("-", 1)[0] for p in landed}
-    # one final labeling per batch: the insert, the delete, and the CDC
-    # file's insert and delete
-    assert sum(p.startswith("inc-final") for p in landed) == 4
+    # each batch runs in one task: one split landing per batch (the
+    # insert, the delete, and the CDC file's insert and delete), and
+    # each delete's rewritten edge set
+    assert {p.rsplit("-", 1)[0] for p in landed} == {"inc-batch", "inc-edges"}
+    assert sum(p.startswith("inc-batch") for p in landed) == 4
     assert handle.state.mat is mat and handle.state.report is not None
 
 
-# Spark jobs of one batch on the golden graph (default loops): a scoped
-# insert (a new triangle beside the graph), a delete and a CDC batch of
-# both.  Every count these batches branch on rides one of their
-# landings, so a driver-side query added to the batch path shows here.
-BATCH_JOBS = {"insert": 68, "delete": 67, "cdc": 137}
+# Spark jobs of one batch on the golden graph, per loop: a scoped insert
+# (a new triangle beside the graph), a delete and a CDC batch of both.
+# Every count these batches branch on rides one of their landings, so a
+# driver-side query added to the batch path shows here.  On the task
+# loop each batch is one task and one split landing (a delete also lands
+# its rewritten edge set); on the Spark loop (``TASK_ROWS = 0``) the
+# merge and the tail run as joins, landings and the distributed rounds.
+BATCH_JOBS = {
+    "task": {"insert": 4, "delete": 6, "cdc": 12},
+    "spark": {"insert": 93, "delete": 103, "cdc": 209},
+}
 
 
-def test_incremental_batches_run_the_pinned_jobs(spark, golden_edges):
+def test_incremental_batches_run_the_pinned_jobs(spark, golden_edges, each_loop):
     import uuid
 
     from community_detection_flink_spark.streaming.incremental_stream import (
@@ -192,23 +199,24 @@ def test_incremental_batches_run_the_pinned_jobs(spark, golden_edges):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
-    state = prepare(symmetrize_edges(golden_edges))
-    got = {}
-    state, got["insert"] = jobs(
-        lambda: incremental_update(state, pairs_df([(20, 21), (20, 22), (21, 22)]))
-    )
-    assert state.report["scope_vertices"] == 3  # the scoped path ran
-    state, got["delete"] = jobs(lambda: incremental_delete(state, pairs_df([(0, 1)])))
-    cdc = spark.createDataFrame(
-        [(20, 23, "I"), (21, 23, "I"), (4, 5, "D")], "src LONG, dst LONG, op STRING"
-    )
-    state, got["cdc"] = jobs(lambda: apply_cdc_batch(state, cdc))
-    assert got == BATCH_JOBS
-    assert state.report["election"] == state.report["refinement"] == "task"
-    assert _labels(state) == {
-        0: 1, 1: 1, 2: 1, 3: 1, 4: 5, 5: 5, 6: 5, 7: 5,
-        20: 23, 21: 23, 22: 23, 23: 23,
-    }
+    for loop in each_loop():
+        state = prepare(symmetrize_edges(golden_edges))
+        got = {}
+        state, got["insert"] = jobs(
+            lambda: incremental_update(state, pairs_df([(20, 21), (20, 22), (21, 22)]))
+        )
+        assert state.report["scope_vertices"] == 3  # the scoped path ran
+        state, got["delete"] = jobs(lambda: incremental_delete(state, pairs_df([(0, 1)])))
+        cdc = spark.createDataFrame(
+            [(20, 23, "I"), (21, 23, "I"), (4, 5, "D")], "src LONG, dst LONG, op STRING"
+        )
+        state, got["cdc"] = jobs(lambda: apply_cdc_batch(state, cdc))
+        assert got == BATCH_JOBS[loop]
+        assert state.report["election"] == state.report["refinement"] == loop
+        assert _labels(state) == {
+            0: 1, 1: 1, 2: 1, 3: 1, 4: 5, 5: 5, 6: 5, 7: 5,
+            20: 23, 21: 23, 22: 23, 23: 23,
+        }
 
 
 @pytest.mark.slow
@@ -274,6 +282,30 @@ def test_max_vertex_survives_batches(spark, golden_edges):
         [(20, 23, "I"), (21, 23, "I"), (4, 5, "D")], "src LONG, dst LONG, op STRING"
     ))
     assert state.max_vertex == 23
+
+
+def test_insert_past_the_tier_runs_on_spark(spark, golden_edges, monkeypatch):
+    """An insert whose new triangles would take the state past
+    ``TASK_ROWS`` gives up its one task, leaves nothing of it landed, and
+    runs the Spark merge and tail instead, with the same result."""
+    import os
+
+    from community_detection_flink_spark.operators import task_tier
+
+    state = prepare(symmetrize_edges(golden_edges))
+    batch = spark.createDataFrame([(20, 21), (20, 22), (21, 22)], "src LONG, dst LONG")
+    want = incremental_update(state, batch)
+
+    def landings(name):
+        return sum(p.rsplit("-", 1)[0] == name for p in os.listdir(state.mat.base))
+
+    rows = state.vertex_count + state.clean_edge_count + state.tri_count
+    monkeypatch.setattr(task_tier, "TASK_ROWS", rows + 1)  # room for no triangle
+    got = incremental_update(state, batch)
+    assert landings("inc-batch") == 1 and landings("inc-newe") == 1
+    assert _labels(got) == _labels(want)
+    assert (got.tri_count, got.clean_edge_count) == (want.tri_count, want.clean_edge_count)
+    assert math.isclose(got.global_wcc, want.global_wcc, rel_tol=1e-12)
 
 
 def test_empty_cdc_micro_batch_leaves_state_unchanged(spark, golden_edges, tmp_path):

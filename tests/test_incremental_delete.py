@@ -90,6 +90,36 @@ def test_delete_absent_edge_is_noop(spark, golden_edges):
     assert got.tri.count() == base.tri.count()
 
 
+def test_state_manifest_keeps_tri_count(spark, golden_edges, tmp_path):
+    """``save_state`` keeps the carried triangle count in its manifest,
+    and a manifest written without it loads with the count taken once
+    from the saved triangles; the loaded state's next batch carries it
+    on."""
+    from community_detection_flink_spark.operators.incremental import (
+        load_state,
+        save_state,
+    )
+
+    base = prepare(symmetrize_edges(golden_edges))
+    assert base.tri_count == 8  # two 4-cliques
+    path = str(tmp_path / "state")
+    save_state(base, path)
+    meta = spark.read.json(f"{path}/meta")
+    assert meta.first().tri_count == 8
+    assert load_state(spark, path).tri_count == 8
+
+    older = meta.drop("tri_count")
+    spark.createDataFrame(older.collect(), older.schema).coalesce(1).write.mode(
+        "overwrite"
+    ).json(f"{path}/meta")
+    loaded = load_state(spark, path)
+    assert loaded.tri_count == 8
+    got = incremental_delete(
+        loaded, spark.createDataFrame([(5, 6)], "src LONG, dst LONG")
+    )
+    assert got.tri_count == got.tri.count() == 6
+
+
 @pytest.mark.slow
 def test_state_save_load_roundtrip(spark, golden_edges, tmp_path):
     from community_detection_flink_spark.operators.incremental import (
