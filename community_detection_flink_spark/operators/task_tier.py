@@ -655,12 +655,6 @@ def _undirected(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
     return np.minimum(a, b) * n + np.maximum(a, b)
 
 
-def _sides(tri, n: int) -> list[np.ndarray]:
-    """The undirected keys of the three sides of each triangle."""
-    u, v, w = tri
-    return [_undirected(u, v, n), _undirected(u, w, n), _undirected(v, w, n)]
-
-
 def _through(adj: np.ndarray, half: np.ndarray, n: int) -> np.ndarray:
     """``incremental._new_triangles`` over arrays: every triangle of the
     doubled edge keys ``adj`` (``src * n + dst``, sorted) with a side
@@ -732,7 +726,8 @@ def _delete(vid, lab, t, clean, tri, batch):
     ok = (s >= 0) & (d >= 0)
     gone = np.unique(_undirected(s[ok], d[ok], n))
     corners = [_index(ids, c) for c in tri]
-    sides = _sides(corners, n)
+    u, v, w = corners
+    sides = [_undirected(u, v, n), _undirected(u, w, n), _undirected(v, w, n)]
     dead = np.isin(sides[0], gone) | np.isin(sides[1], gone) | np.isin(sides[2], gone)
     dead_corners = np.concatenate([c[dead] for c in corners])
     t_new = t - np.bincount(dead_corners, minlength=n)
