@@ -32,8 +32,8 @@ exact — every divergence documented:
   per-community stats/WCC sums are spliced, so the final evaluation
   reads only the scope.
 * Two loops run that one batch.  When the carried state (|V| +
-  |E_clean| + |tri|) fits the small-state tier, the WHOLE batch runs in
-  one task (``task_tier.incremental_batch``): the merge over arrays,
+  |E_clean| + |tri|) is under the small-state tier's batch gate
+  (``task_tier.batch_limit()``), the WHOLE batch runs in one task (``task_tier.incremental_batch``): the merge over arrays,
   then the same election, scope rule and rounds over one shared
   in-task graph, the stats and WCC sums of every community recomputed
   (below the tier the task reads the whole state anyway, so a splice
@@ -109,7 +109,7 @@ class WCCState:
     # |tri|, carried the same way: prepare's ``Graph.tri_count``, plus
     # each insert's new triangles, or a delete's count of the survivors.
     # |V| + |E_clean| + |tri| is the state a batch's one task reads
-    # (``task_tier.fits``)
+    # (``task_tier.batch_limit``)
     tri_count: int
     # static triangle list (u, v, w) of clean_edges, maintained
     # incrementally: every new triangle contains ≥1 new edge, so the
@@ -376,16 +376,17 @@ def _extend(state: WCCState, new_e: DataFrame, clean_add: DataFrame, tri: DataFr
 def _in_one_task(state: WCCState, batch: DataFrame, delete: bool) -> WCCState | None:
     """The whole batch (the merge of the symmetrized ``batch`` and
     ``_elect_and_refine``'s tail) in one task, when the carried |V| +
-    |E_clean| + |tri| fits the small-state tier
+    |E_clean| + |tri| is under ``task_tier.batch_limit()``
     (``task_tier.incremental_batch``): one split landing, and for a
     delete one more, the rewritten edge set.  The task recomputes the
     stats and WCC sums of every community instead of splicing them (it
     reads the whole state anyway), and lands only an insert's deltas, so
     the lazy unions and their compaction stay as on Spark (``_extend``).
-    None when the state does not fit, or an insert's new triangles
-    would take it past the tier; the batch then runs on Spark."""
+    None when the state does not fit, or the batch (with an insert's
+    incident edges and new triangles) would take it past the limit; the
+    batch then runs on Spark."""
     rows = state.vertex_count + state.clean_edge_count + state.tri_count
-    if not task_tier.fits(rows):
+    if rows >= task_tier.batch_limit():
         return None
     out = task_tier.incremental_batch(
         state, batch, delete, rows, FixedRounds(INCREMENTAL_ROUNDS),

@@ -35,8 +35,11 @@ Five tasks, each chosen on row counts that ride earlier landings:
   triangles, ``t``/``vt``/``cc``, a delete's singletons), the
   affected-community election, the scope rule, the fixed rounds, and
   the stats and WCC sums of every community — when the carried |V| +
-  |E_clean| + |tri| fits; like the graph task, an insert gives up when
-  its new triangles stop fitting, and the batch then runs on Spark;
+  |E_clean| + |tri| is under ``batch_limit()`` (its own measured gate
+  ``BATCH_ROWS``, and ``TASK_ROWS``); like the graph task, it gives up
+  when the batch, an insert's incident edges or its new triangles
+  (closed in bounded wedge chunks) stop fitting, and the batch then
+  runs on Spark;
 * ``elect`` (``initial_partition``) and ``run_rounds``
   (``movement_rounds``) on their own, for the Spark tail of an
   incremental batch above that gate, on the carried |E_clean| and the
@@ -83,6 +86,22 @@ TASK_ROWS = 4_000_000
 def fits(rows: int) -> bool:
     """True iff a state of ``rows`` rows takes the task tier."""
     return rows < TASK_ROWS
+
+
+# An incremental batch's own gate on its carried |V| + |E_clean| +
+# |tri|: its task reads the whole state however small the batch, where
+# the Spark merge reads the batch's neighbourhood.  Measured on 4 cores
+# (plans/r14/crossover.txt, ``--batch``; 21-edge insert, 10-edge
+# delete): the task beat the Spark merge on both up to 3.04M rows
+# (4-5x on small states; the delete 16.0 s vs 17.4 s there, at ~1.4 GB
+# worker peak) and lost the delete at 4.06M rows (18.4 s vs 18.0 s, ~1.7
+# GB); this is the largest state where it won, rounded up.
+BATCH_ROWS = 3_100_000
+
+
+def batch_limit() -> int:
+    """The rows an incremental batch's task may hold: below both gates."""
+    return min(TASK_ROWS, BATCH_ROWS)
 
 
 # The packed input: one row per vertex, edge, candidate, outer label,
@@ -291,6 +310,11 @@ def _triangles(ids: np.ndarray, src: np.ndarray, dst: np.ndarray, cap: int):
     return [np.concatenate(x) if x else np.zeros(0, np.int64) for x in out]
 
 
+def _undirected(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """The key ``min * n + max`` of each position pair (a, b)."""
+    return np.minimum(a, b) * n + np.maximum(a, b)
+
+
 def _clean_edges(n: int, s: np.ndarray, d: np.ndarray, u, v, w):
     """The doubled clean edges ``(cs, cd)``: every edge ``(s, d)`` (as
     positions below ``n``, -1 for an unknown endpoint) that is a side of
@@ -299,11 +323,10 @@ def _clean_edges(n: int, s: np.ndarray, d: np.ndarray, u, v, w):
     beside the triangles (every side of a triangle is one of the
     edges)."""
     ok = d >= 0
-    lo, hi = np.minimum(s[ok], d[ok]), np.maximum(s[ok], d[ok])
-    key = np.unique(lo * n + hi)
+    key = np.unique(_undirected(s[ok], d[ok], n))
     covered = np.zeros(len(key), bool)
     for a, b in ((u, v), (u, w), (v, w)):
-        covered[np.searchsorted(key, np.minimum(a, b) * n + np.maximum(a, b))] = True
+        covered[np.searchsorted(key, _undirected(a, b, n))] = True
     a, b = key[covered] // n, key[covered] % n
     return np.concatenate([a, b]), np.concatenate([b, a])
 
@@ -650,38 +673,56 @@ def run_wcc(graph, global_cc: float, mat, policy,
 # The incremental batch: merge, election, scope and fixed rounds
 # ----------------------------------------------------------------------
 
-def _undirected(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
-    """The key ``min * n + max`` of each position pair (a, b)."""
-    return np.minimum(a, b) * n + np.maximum(a, b)
-
-
-def _through(adj: np.ndarray, half: np.ndarray, n: int) -> np.ndarray:
+def _through(adj: np.ndarray, half: np.ndarray, n: int, cap: int):
     """``incremental._new_triangles`` over arrays: every triangle of the
     doubled edge keys ``adj`` (``src * n + dst``, sorted) with a side
-    among ``half`` (``u * n + v``, u < v), once, as rows of ascending
-    corner positions.  The common neighbours of a side's ends close
-    its triangles; each side walks the list of its lower-degree end."""
-    src = adj // n
-    ptr = np.concatenate([[0], np.cumsum(np.bincount(src, minlength=n))])
+    among ``half`` (``u * n + v``, u < v, sorted), once, as rows of
+    ascending corner positions — or None as soon as there are ``cap``
+    or more of them.  The common neighbours of a side's ends close its
+    triangles: each side walks the list of its lower-degree end, in
+    chunks of about ``_WEDGES`` wedges, like ``_triangles``; a triangle
+    with several sides in ``half`` is kept at its lowest one."""
+    ptr = np.concatenate([[0], np.cumsum(np.bincount(adj // n, minlength=n))])
     u, v = half // n, half % n
     swap = ptr[u + 1] - ptr[u] > ptr[v + 1] - ptr[v]
     a, b = np.where(swap, v, u), np.where(swap, u, v)
-    c = ptr[a + 1] - ptr[a]
-    side = np.repeat(np.arange(len(a)), c)
-    w = adj[np.repeat(ptr[a] - (np.cumsum(c) - c), c) + np.arange(len(side))] % n
-    q = b[side] * n + w
-    closed = adj[np.minimum(np.searchsorted(adj, q), len(adj) - 1)] == q
-    corners = np.stack([a[side][closed], b[side][closed], w[closed]], axis=1)
-    return np.unique(np.sort(corners, axis=1), axis=0)
+    wedges = ptr[a + 1] - ptr[a]
+    ends = np.cumsum(wedges)
+
+    def lower(keys, side):  # keys that are sides in half below ``side``
+        at = np.searchsorted(half, keys)
+        return (at < side) & (half[np.minimum(at, len(half) - 1)] == keys)
+
+    out = []
+    found, lo = 0, 0
+    while lo < len(half):
+        hi = max(int(np.searchsorted(ends, ends[lo] - wedges[lo] + _WEDGES, "right")), lo + 1)
+        c = wedges[lo:hi]
+        side = np.repeat(np.arange(lo, hi), c)
+        w = adj[np.repeat(ptr[a[lo:hi]] - (np.cumsum(c) - c), c) + np.arange(len(side))] % n
+        q = b[side] * n + w
+        closed = adj[np.minimum(np.searchsorted(adj, q), len(adj) - 1)] == q
+        side, w = side[closed], w[closed]
+        first = ~(lower(_undirected(a[side], w, n), side) | lower(_undirected(b[side], w, n), side))
+        side, w = side[first], w[first]
+        found += len(side)
+        if found >= cap:
+            return None
+        out.append(np.sort(np.stack([a[side], b[side], w], axis=1), axis=1))
+        lo = hi
+    return np.concatenate(out) if out else np.zeros((0, 3), np.int64)
 
 
-def _insert(vid, lab, t, clean, tri, batch, incident, cap):
+def _insert(vid, lab, t, clean, tri, batch, cap, incident):
     """``incremental_update``'s merge over arrays.  ``batch``: the
     symmetrized batch; ``incident``: every carried edge whose src is a
-    batch endpoint, which holds every carried batch edge and every
-    carried edge a new triangle needs.  Returns the merged graph (see
-    ``_delete``), or None when the new triangles number ``cap`` or
-    more."""
+    batch endpoint, which holds every carried batch edge and every side
+    of a new triangle.  Returns the merged graph (see ``_delete``), or
+    None when the batch, the incident edges and the new triangles
+    number ``cap`` or more rows."""
+    cap -= len(batch[0]) + len(incident[0])
+    if cap <= 0:
+        return None
     ids = np.union1d(vid, batch[0])
     n = len(ids)
     at = np.searchsorted
@@ -691,14 +732,15 @@ def _insert(vid, lab, t, clean, tri, batch, incident, cap):
     t_new[at(ids, vid)] = t
     old = np.unique(at(ids, incident[0]) * n + at(ids, incident[1]))
     new = np.setdiff1d(np.unique(at(ids, batch[0]) * n + at(ids, batch[1])), old)
-    found = _through(np.union1d(old, new), new[new // n < new % n], n)
-    if len(found) >= cap:
+    adj = np.union1d(old, new)
+    found = _through(adj, new[new // n < new % n], n, cap)
+    if found is None:
         return None
     u, v, w = found.T
     t_new += np.bincount(found.ravel(), minlength=n)
     carried = np.sort(at(ids, clean[0]) * n + at(ids, clean[1]))
-    sides = np.concatenate([x for a, b in ((u, v), (u, w), (v, w)) for x in (a * n + b, b * n + a)])
-    add = np.setdiff1d(np.unique(sides), carried)
+    cs, cd = _clean_edges(n, adj // n, adj % n, u, v, w)
+    add = np.setdiff1d(cs * n + cd, carried)
     keys = np.concatenate([carried, add])
     tri_all = [np.concatenate([at(ids, c), x]) for c, x in zip(tri, (u, v, w))]
     parts = {
@@ -712,7 +754,7 @@ def _insert(vid, lab, t, clean, tri, batch, incident, cap):
             parts, info)
 
 
-def _delete(vid, lab, t, clean, tri, batch):
+def _delete(vid, lab, t, clean, tri, batch, cap):
     """``incremental_delete``'s merge over arrays: the triangles with a
     deleted side die, the clean edges that only they held go, and a
     vertex left without a triangle reverts to a singleton.  Returns
@@ -720,7 +762,10 @@ def _delete(vid, lab, t, clean, tri, batch):
     triangles, changed, parts, info)``: positions in ``ids`` (every
     vertex, ascending), the merged labels before the election, the
     changed vertices (corners of changed triangles), and the tables and
-    counts to land (here the rewritten clean edges and triangles)."""
+    counts to land (here the rewritten clean edges and triangles) — or
+    None when the batch numbers ``cap`` or more rows."""
+    if len(batch[0]) >= cap:
+        return None
     ids, n = vid, len(vid)
     s, d = _index(ids, batch[0]), _index(ids, batch[1])
     ok = (s >= 0) & (d >= 0)
@@ -806,10 +851,13 @@ def incremental_batch(state, batch: DataFrame, delete: bool, rows: int, policy, 
     (``inc-batch``): the final vertices, the stats and WCC sums of every
     community, and an insert's new edges, triangles and clean edges or a
     delete's rewritten triangles and clean edges.  The counts ride it.
-    Returns ``(landings, info)``, or None (nothing left landed) when an
-    insert's new triangles would take the state past ``TASK_ROWS``."""
+    Returns ``(landings, info)``, or None (nothing left landed) when
+    the rows the task holds beside the state — the batch, an insert's
+    incident edges and new triangles — would take it past
+    ``batch_limit()``; an insert closes its wedges in bounded chunks
+    (``_through``), so it gives up before it holds more."""
 
-    cap = TASK_ROWS - rows
+    cap = batch_limit() - rows
     columns = [name for name, _ in _FIELDS] + ["d"]
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -821,8 +869,8 @@ def incremental_batch(state, batch: DataFrame, delete: bool, rows: int, policy, 
 
         args = (v["a"].to_numpy(), v["b"].to_numpy(), v["t"].to_numpy(),
                 rows_of(_EDGE, "a", "b"), rows_of(_TRIANGLE, "a", "b", "c"),
-                rows_of(_BATCH, "a", "b"))
-        merged = _delete(*args) if delete else _insert(*args, rows_of(_INCIDENT, "a", "b"), cap)
+                rows_of(_BATCH, "a", "b"), cap)
+        merged = _delete(*args) if delete else _insert(*args, rows_of(_INCIDENT, "a", "b"))
         if merged is None:
             return _tagged(columns, {}, {"tri": None})
         *graph, parts, info = merged

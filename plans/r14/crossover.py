@@ -4,6 +4,7 @@ loop vs the Spark loop, on co-purchase graphs of rising size.
     python3 plans/r14/crossover.py [SCALE ...] > plans/r14/crossover.txt
     python3 plans/r14/crossover.py --cliques N [N ...]
     python3 plans/r14/crossover.py --abort N [N ...]
+    python3 plans/r14/crossover.py --batch SCALE [SCALE ...]
 
 One Spark session (local[4], 4 shuffle partitions, as perfbench runs),
 warmed by one discarded run.  For each scale k the graph is
@@ -25,6 +26,16 @@ loop.  ``--abort``: on N disjoint 45-cliques, only the graph task of
 ``load_graph`` on a graph whose triangles do not fit: its wall time and
 peak worker RSS until it gives up (the cost a triangle-dense graph pays
 before it loads on Spark).
+
+``--batch``: one small incremental batch on a prepared co-purchase
+state of scale k — an insert of a 7-clique over 5 carried vertices and
+2 new ones (21 edges), and a delete of 10 carried edges — on three
+loops: "task" (the whole batch in one task, both gates lifted),
+"merge" (``task_tier.BATCH_ROWS = 0``: the Spark merge, its tail at the
+real tier gate, as above the batch gate) and "spark" (``TASK_ROWS =
+0``).  Each line gives the state's rows (|V| + |E_clean| + |tri|, what
+``incremental._in_one_task`` compares to ``task_tier.batch_limit()``),
+the batch's wall time and the Python workers' peak RSS.
 """
 
 from __future__ import annotations
@@ -40,7 +51,7 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 import gen  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-from community_detection_flink_spark.operators import refinement, task_tier  # noqa: E402
+from community_detection_flink_spark.operators import incremental, refinement, task_tier  # noqa: E402
 from community_detection_flink_spark.plans.iteration import Materializer  # noqa: E402
 from community_detection_flink_spark.sources.edges import symmetrize_edges  # noqa: E402
 
@@ -176,6 +187,70 @@ def main_abort(counts):
     spark.stop()
 
 
+def _batch_run(state, op, batch, loop: str):
+    """``op`` (``incremental_update`` or ``incremental_delete``) of
+    ``batch`` on ``state`` on ``loop`` (see ``--batch``)."""
+    saved = task_tier.TASK_ROWS, task_tier.BATCH_ROWS
+    task_tier.TASK_ROWS, task_tier.BATCH_ROWS = {
+        "task": (sys.maxsize, sys.maxsize),
+        "merge": (saved[0], 0),
+        "spark": (0, saved[1]),
+    }[loop]
+    try:
+        out, wall, rss = _sampled(lambda: op(state, batch))
+    finally:
+        task_tier.TASK_ROWS, task_tier.BATCH_ROWS = saved
+    got = {r["vId"]: r["cId"] for r in out.vertices.select("vId", "cId").collect()}
+    return wall, got, rss, out.report["scope_vertices"]
+
+
+def main_batch(scales):
+    import random
+
+    spark = _session()
+    for k in scales:
+        pairs = gen.co_purchase(200 * k, 300 * k, structure_seed=10)
+        edges = _edges(spark, pairs)
+        state = incremental.prepare(edges)
+        rows = state.vertex_count + state.clean_edge_count + state.tri_count
+        rng = random.Random(k)
+        old = rng.sample(sorted({u for p in pairs for u in p}), 5)
+        top = max(max(p) for p in pairs)
+        clique = old + [top + 1, top + 2]
+        to_df = lambda ps: spark.createDataFrame(ps, "src LONG, dst LONG")  # noqa: E731
+        batches = {
+            "insert": (incremental.incremental_update,
+                       to_df([(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]])),
+            "delete": (incremental.incremental_delete, to_df(rng.sample(pairs, 10))),
+        }
+        if k == scales[0]:
+            for loop in ("task", "merge"):  # JVM and Python-worker warm-up
+                _batch_run(state, *batches["insert"], loop)
+        for name, (op, batch) in batches.items():
+            loops = ("task", "merge", "spark")
+            times = {loop: [] for loop in loops}
+            same = True
+            for p in range(PAIRS):
+                order = loops if p % 2 == 0 else loops[::-1]
+                out = {}
+                for loop in order:
+                    wall, got, rss, scope = _batch_run(state, op, batch, loop)
+                    times[loop].append(wall)
+                    out[loop] = got
+                    print(f"k={k} {name} pair{p} {loop}: {wall:.2f}s scope={scope} "
+                          f"worker_rss={rss:.0f}MB", flush=True)
+                same &= out["task"] == out["merge"] == out["spark"]
+            print(
+                f"k={k} {name} rows={rows} "
+                + " ".join(f"{loop}={min(times[loop]):.2f}s" for loop in loops)
+                + f" (min of {PAIRS}) identical={same}",
+                flush=True,
+            )
+        state.mat.cleanup()
+        edges.unpersist()
+    spark.stop()
+
+
 def main(scales):
     spark = _session()
     for k in scales:
@@ -210,7 +285,8 @@ def main(scales):
 
 
 if __name__ == "__main__":
-    mode = {"--cliques": main_cliques, "--abort": main_abort}.get(sys.argv[1:2] and sys.argv[1])
+    mode = {"--cliques": main_cliques, "--abort": main_abort, "--batch": main_batch}.get(
+        sys.argv[1:2] and sys.argv[1])
     if mode is not None:
         mode([int(a) for a in sys.argv[2:]])
     else:

@@ -113,13 +113,13 @@ def test_incremental_triangles_match_batch(spark):
 
 
 def test_prepare_lands_only_through_its_materializer(
-    spark, golden_edges, tmp_path, monkeypatch
+    spark, golden_edges, tmp_path, monkeypatch, each_loop
 ):
     """Every table ``prepare`` lands goes through the Materializer it
     was given, and so does every later batch of the state — an insert,
-    a delete and a CDC stream batch: no default checkpoint directory
-    appears in the temp dir, and the batches' landings sit under the
-    given base dir."""
+    a delete and a CDC stream batch, on both loops: no default
+    checkpoint directory appears in the temp dir, and the batches'
+    landings sit under the given base dir."""
     import os
     import tempfile
 
@@ -133,38 +133,47 @@ def test_prepare_lands_only_through_its_materializer(
     monkeypatch.delenv("CDFS_CHECKPOINT_DIR", raising=False)
     monkeypatch.setenv("TMPDIR", str(tmp))
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
-    ckpt = tmp_path / "ckpt"
-    mat = Materializer(spark, base_dir=str(ckpt))
-    state = prepare(symmetrize_edges(golden_edges), mat=mat)
-    assert state.vertex_count == 8
-    prepared = set(os.listdir(ckpt))
-
     pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
     clique = [(7, 10), (7, 11), (7, 12), (10, 11), (10, 12), (11, 12)]
-    state = incremental_update(state, pairs_df(clique))
-    state = incremental_delete(state, pairs_df([(11, 12)]))
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [(11, 12, "I"), (0, 1, "D")], "src LONG, dst LONG, op STRING"
-    ).coalesce(1).write.parquet(str(src / "b0"))
-    handle = run_stream(
-        spark, str(src / "b0"), state, str(tmp_path / "stream-ckpt"),
-        cdc=True, max_files_per_trigger=1,
-    )
-    handle.await_termination(300)
-    assert handle.query.exception() is None
+    for loop in each_loop():
+        ckpt = tmp_path / f"ckpt-{loop}"
+        mat = Materializer(spark, base_dir=str(ckpt))
+        state = prepare(symmetrize_edges(golden_edges), mat=mat)
+        assert state.vertex_count == 8
+        prepared = set(os.listdir(ckpt))
 
-    assert list(tmp.glob("cdfs-ckpt-*")) == []
-    # each election's centers landing is freed once its partition landed
-    assert not any(p.startswith("mis-centers") for p in os.listdir(ckpt))
-    landed = set(os.listdir(ckpt)) - prepared
-    # each batch runs in one task: one split landing per batch (the
-    # insert, the delete, and the CDC file's insert and delete), and
-    # each delete's rewritten edge set
-    assert {p.rsplit("-", 1)[0] for p in landed} == {"inc-batch", "inc-edges"}
-    assert sum(p.startswith("inc-batch") for p in landed) == 4
-    assert handle.state.mat is mat and handle.state.report is not None
+        state = incremental_update(state, pairs_df(clique))
+        state = incremental_delete(state, pairs_df([(11, 12)]))
+        src = tmp_path / f"src-{loop}"
+        src.mkdir()
+        spark.createDataFrame(
+            [(11, 12, "I"), (0, 1, "D")], "src LONG, dst LONG, op STRING"
+        ).coalesce(1).write.parquet(str(src / "b0"))
+        handle = run_stream(
+            spark, str(src / "b0"), state, str(tmp_path / f"stream-ckpt-{loop}"),
+            cdc=True, max_files_per_trigger=1,
+        )
+        handle.await_termination(300)
+        assert handle.query.exception() is None
+
+        assert list(tmp.glob("cdfs-ckpt-*")) == []
+        # each election's centers landing is freed once its partition landed
+        assert not any(p.startswith("mis-centers") for p in os.listdir(ckpt))
+        landed = set(os.listdir(ckpt)) - prepared
+        names = {p.rsplit("-", 1)[0] for p in landed}
+        if loop == "task":
+            # each batch runs in one task: one split landing per batch
+            # (the insert, the delete, and the CDC file's insert and
+            # delete), and each delete's rewritten edge set
+            assert names == {"inc-batch", "inc-edges"}
+            final = "inc-batch"
+        else:
+            assert {"inc-newe", "del-e"} <= names
+            final = "inc-final"
+        # one final labeling per batch
+        assert sum(p.startswith(final) for p in landed) == 4
+        assert handle.state.mat is mat and handle.state.report is not None
+        assert handle.state.report["refinement"] == loop
 
 
 # Spark jobs of one batch on the golden graph, per loop: a scoped insert
@@ -284,10 +293,15 @@ def test_max_vertex_survives_batches(spark, golden_edges):
     assert state.max_vertex == 23
 
 
-def test_insert_past_the_tier_runs_on_spark(spark, golden_edges, monkeypatch):
-    """An insert whose new triangles would take the state past
-    ``TASK_ROWS`` gives up its one task, leaves nothing of it landed, and
-    runs the Spark merge and tail instead, with the same result."""
+@pytest.mark.parametrize("room, fits", [(6, False), (7, False), (8, True)])
+def test_insert_past_the_tier_runs_on_spark(spark, golden_edges, monkeypatch, room, fits):
+    """The insert task holds the state, the batch and the incident edges
+    and its new triangles below the limit.  Here the batch is 6 rows
+    (symmetrized), no carried edge touches it, and it closes 1 triangle:
+    with ``room`` rows beside the state, at 6 the batch alone does not
+    fit, at 7 its triangle does not, at 8 it fits.  An insert that does
+    not fit gives up its one task, leaves nothing of it landed, and runs
+    the Spark merge and tail instead, with the same result."""
     import os
 
     from community_detection_flink_spark.operators import task_tier
@@ -300,12 +314,40 @@ def test_insert_past_the_tier_runs_on_spark(spark, golden_edges, monkeypatch):
         return sum(p.rsplit("-", 1)[0] == name for p in os.listdir(state.mat.base))
 
     rows = state.vertex_count + state.clean_edge_count + state.tri_count
-    monkeypatch.setattr(task_tier, "TASK_ROWS", rows + 1)  # room for no triangle
+    monkeypatch.setattr(task_tier, "TASK_ROWS", rows + room)
     got = incremental_update(state, batch)
-    assert landings("inc-batch") == 1 and landings("inc-newe") == 1
+    assert landings("inc-batch") == 1 + fits and landings("inc-newe") == 1 - fits
     assert _labels(got) == _labels(want)
     assert (got.tri_count, got.clean_edge_count) == (want.tri_count, want.clean_edge_count)
     assert math.isclose(got.global_wcc, want.global_wcc, rel_tol=1e-12)
+
+
+def test_new_triangles_close_in_chunks(monkeypatch):
+    """``task_tier._through`` finds every triangle through the new sides
+    once, whatever the wedge chunk size, and gives up at its cap."""
+    import itertools
+    import random
+
+    import numpy as np
+
+    from community_detection_flink_spark.operators import task_tier
+
+    rng = random.Random(3)
+    n = 40
+    und = {(a, b) for a, b in itertools.combinations(range(n), 2) if rng.random() < 0.3}
+    new = {e for e in und if rng.random() < 0.2}
+    adj = np.array(sorted(a * n + b for u, v in und for a, b in ((u, v), (v, u))))
+    half = np.array(sorted(a * n + b for a, b in new))
+    want = {
+        t for t in itertools.combinations(range(n), 3)
+        if all(e in und for e in itertools.combinations(t, 2))
+        and any(e in new for e in itertools.combinations(t, 2))
+    }
+    for chunk in (1, 7, 1 << 22):
+        monkeypatch.setattr(task_tier, "_WEDGES", chunk)
+        got = task_tier._through(adj, half, n, len(want) + 1)
+        assert len(got) == len(want) and set(map(tuple, got.tolist())) == want
+        assert task_tier._through(adj, half, n, len(want)) is None
 
 
 def test_empty_cdc_micro_batch_leaves_state_unchanged(spark, golden_edges, tmp_path):
