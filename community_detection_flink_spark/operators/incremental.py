@@ -33,11 +33,12 @@ exact — every divergence documented:
   reads only the scope.
 * Two loops run that one batch.  When the carried state (|V| +
   |E_clean| + |tri|) is under the small-state tier's batch gate
-  (``task_tier.batch_limit()``), the WHOLE batch runs in one task (``task_tier.incremental_batch``): the merge over arrays,
-  then the same election, scope rule and rounds over one shared
-  in-task graph, the stats and WCC sums of every community recomputed
-  (below the tier the task reads the whole state anyway, so a splice
-  saves nothing), and one split landing — an insert lands only its
+  (``task_tier.batch_limit()``), the WHOLE batch runs in one task
+  (``task_tier.incremental_batch``): the merge over arrays, then the
+  same election, scope rule and rounds over one shared in-task graph,
+  the stats and WCC sums of every community recomputed (below the gate
+  the task reads the whole state anyway, so a splice saves nothing),
+  and one split landing — an insert lands only its
   deltas, a delete also rewrites its edge set.  Otherwise the merge
   runs as joins and landings and the tail (``_elect_and_refine``) as
   the election, ``_pick_scope`` and ``movement_rounds``, each on the
