@@ -39,7 +39,10 @@ exact — every divergence documented:
   the stats and WCC sums of every community recomputed (below the gate
   the task reads the whole state anyway, so a splice saves nothing),
   and one split landing — an insert lands only its
-  deltas, a delete also rewrites its edge set.  Otherwise the merge
+  deltas, a delete also rewrites its edge set.  A batch of several
+  steps (``incremental_steps``: a CDC micro-batch's U-deletes, inserts
+  and deletes) runs all of them in that one task, each step on the
+  arrays the one before returned.  Otherwise the merge
   runs as joins and landings and the tail (``_elect_and_refine``) as
   the election, ``_pick_scope`` and ``movement_rounds``, each on the
   loop its own state fits.
@@ -133,7 +136,9 @@ class WCCState:
     # communities), ``scope_vertices`` (|V_R|, ``None`` for the
     # whole-graph scope), ``rounds`` (movement rounds run), ``moves``
     # (vertices moved per round) and the loop that ran the election and
-    # the rounds (``election``/``refinement``: "task" or "spark");
+    # the rounds (``election``/``refinement``: "task" or "spark"); for a
+    # batch of several steps (``incremental_steps``) those of its last
+    # step, and ``steps`` holds every step's ``op`` and counts;
     # ``None`` after ``prepare`` or ``load_state``
     report: dict | None = None
     # highest vertex id seen (set by ``run_edge_batches``, then carried
@@ -264,10 +269,10 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     """
     mat = state.mat
 
-    sym = symmetrize_edges(batch_edges)
-    done = _in_one_task(state, sym, delete=False)
+    done = _in_one_task(state, [("insert", batch_edges)])
     if done is not None:
         return done
+    sym = symmetrize_edges(batch_edges)
     # the batch's highest new vertex id rides the landing: the next
     # state's id ceiling
     new_obs = Observation()
@@ -332,7 +337,7 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     )
 
     edges, clean_new, tri_static, pending = _extend(state, new_e, clean_add, tri)
-    return _elect_and_refine(state, _land_vertices(
+    return _elect_and_refine(state, "insert", _land_vertices(
         vertex_table, mat, edges=edges, tri=tri_static,
         tri_count=state.tri_count + int(tri_obs.get["n"]),
         clean_edges=clean_new,
@@ -374,42 +379,51 @@ def _extend(state: WCCState, new_e: DataFrame, clean_add: DataFrame, tri: DataFr
     return (*(state.mat(df, name) for df, name in zip(tables, names)), 0)
 
 
-def _in_one_task(state: WCCState, batch: DataFrame, delete: bool) -> WCCState | None:
-    """The whole batch (the merge of the symmetrized ``batch`` and
-    ``_elect_and_refine``'s tail) in one task, when the carried |V| +
-    |E_clean| + |tri| is under ``task_tier.batch_limit()``
-    (``task_tier.incremental_batch``): one split landing, and for a
-    delete one more, the rewritten edge set.  The task recomputes the
-    stats and WCC sums of every community instead of splicing them (it
-    reads the whole state anyway), and lands only an insert's deltas, so
-    the lazy unions and their compaction stay as on Spark (``_extend``).
-    None when the state does not fit, or the batch (with an insert's
-    incident edges and new triangles) would take it past the limit; the
-    batch then runs on Spark."""
+# what a batch's report keeps of each of its steps (``report["steps"]``)
+_STEP_KEYS = ("affected_vertices", "scope_vertices", "rounds", "moves")
+
+
+def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
+    """Every one of ``steps`` (``(op, edges)``: "insert" or "delete" of
+    an edge batch, at most one insert, applied in order; each the merge
+    and ``_elect_and_refine``'s tail) in one task, when the
+    carried |V| + |E_clean| + |tri| is under ``task_tier.batch_limit()``
+    (``task_tier.incremental_batch``): one split landing, and when a
+    step deletes one more, the rewritten edge set ``(state.edges ∪ the
+    new edges) − the pairs whose last step deletes them``.  The task
+    recomputes the stats and WCC sums of every community instead of
+    splicing them (it reads the whole state anyway).  Without a delete
+    it lands only the insert's deltas, so the lazy unions and their
+    compaction stay as on Spark (``_extend``).  The report is the last
+    step's, with every step's in ``steps``.  None when the state does
+    not fit, or the steps (their batches, the insert's incident edges
+    and new triangles) would take it past the limit; nothing of the
+    task stays landed then."""
     rows = state.vertex_count + state.clean_edge_count + state.tri_count
     if rows >= task_tier.batch_limit():
         return None
     out = task_tier.incremental_batch(
-        state, batch, delete, rows, FixedRounds(INCREMENTAL_ROUNDS),
+        state, steps, rows, FixedRounds(INCREMENTAL_ROUNDS),
         ScopeRule(_SCOPE_FRACTION), MAX_ITERATIONS,
     )
     if out is None:
         return None
     landed, info = out
-    if delete:
-        # deleting an absent edge changes nothing: no semi-join first
-        edges = state.mat(
-            state.edges.join(F.broadcast(batch), ["src", "dst"], "left_anti"), "inc-edges"
+    mat = state.mat
+    if "deleted" in landed:
+        edges = mat(
+            state.edges.unionByName(landed["edges"])
+            .join(F.broadcast(landed["deleted"]), ["src", "dst"], "left_anti"),
+            "inc-edges",
         )
+        mat.drop(landed["edges"])
+        mat.drop(landed["deleted"])
         clean, tri, pending = landed["clean-edges"], landed["tri"], 0
-        clean_count, tri_count = info["clean_edges"], info["tri"]
     else:
         edges, clean, tri, pending = _extend(
             state, landed["edges"], landed["clean-edges"], landed["tri"]
         )
-        clean_count = state.clean_edge_count + info["clean_edges"]
-        tri_count = state.tri_count + info["tri"]
-    moves = info["moves"]
+    last = info["steps"][-1]
     return WCCState(
         edges=edges,
         clean_edges=clean,
@@ -417,19 +431,49 @@ def _in_one_task(state: WCCState, batch: DataFrame, delete: bool) -> WCCState | 
         stats=landed["stats"],
         global_wcc=info["wcc"],
         vertex_count=info["vertices"],
-        clean_edge_count=clean_count,
-        tri_count=tri_count,
+        clean_edge_count=info["clean_edges"],
+        tri_count=info["tri"],
         tri=tri,
         wccv=landed["wccv"],
-        mat=state.mat,
+        mat=mat,
         report=dict(
-            election="task", refinement="task", moves=moves, rounds=len(moves),
-            affected_vertices=info["affected_vertices"],
-            scope_vertices=info["scope_vertices"],
+            election="task", refinement="task", steps=info["steps"],
+            **{key: last[key] for key in _STEP_KEYS},
         ),
         pending_unions=pending,
         max_vertex=_raised(state.max_vertex, info["max_vertex"]),
     )
+
+
+def incremental_steps(state: WCCState, steps: list) -> WCCState:
+    """Apply ``steps`` in order: ``(op, edges)`` pairs, ``op`` "insert"
+    (``incremental_update``) or "delete" (``incremental_delete``), at
+    most one insert.  When the carried state fits the small-state tier
+    they all run in ONE task with one split landing
+    (``_in_one_task``); otherwise, or when that task gives up, each
+    step runs as its own batch, on the loop it fits.  The returned
+    state's report is the last step's, with every step's ``op``,
+    ``affected_vertices``, ``scope_vertices``, ``rounds`` and
+    ``moves`` in ``report["steps"]``.  No steps: ``state`` itself."""
+    ops = {"insert": incremental_update, "delete": incremental_delete}
+    names = [op for op, _ in steps]
+    if not set(names) <= set(ops) or names.count("insert") > 1:
+        raise ValueError(
+            f"incremental_steps: steps {names} — expected 'insert' or 'delete' "
+            "steps, at most one insert"
+        )
+    if not steps:
+        return state
+    if len(steps) > 1:  # one step tries its own task
+        done = _in_one_task(state, steps)
+        if done is not None:
+            return done
+    reports = []
+    for op, edges in steps:
+        state = ops[op](state, edges)
+        reports += state.report["steps"]
+    state.report["steps"] = reports
+    return state
 
 
 class _Merge(NamedTuple):
@@ -478,14 +522,14 @@ def _land_vertices(vertices: DataFrame, mat: Materializer, **merge) -> _Merge:
     )
 
 
-def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
-    """Shared tail of every incremental batch (insert or delete) on
-    the Spark loop: re-elect centers inside the affected communities,
-    run the fixed movement rounds over the scope ``_pick_scope`` chooses
-    — the batch neighborhood, or every clean vertex — splice
-    ``state``'s carried per-community stats/WCC sums, and assemble the
-    next ``WCCState`` (its ``report`` holds counts the batch computes
-    anyway — no extra job).  The other loop of a batch, one task for a
+def _elect_and_refine(state: WCCState, op: str, merge: _Merge) -> WCCState:
+    """Shared tail of every incremental batch (``op``: "insert" or
+    "delete") on the Spark loop: re-elect centers inside the affected
+    communities, run the fixed movement rounds over the scope
+    ``_pick_scope`` chooses — the batch neighborhood, or every clean
+    vertex — splice ``state``'s carried per-community stats/WCC sums,
+    and assemble the next ``WCCState`` (its ``report`` holds counts the
+    batch computes anyway — no extra job — and ``steps``, this one).  The other loop of a batch, one task for a
     state under the small-state tier (``_in_one_task``), runs this tail
     over arrays after its merge and recomputes the stats and WCC sums
     instead of splicing them; the tests assert both loops agree.  Every
@@ -627,6 +671,8 @@ def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
     # scope and the round labelings are superseded
     for df in (scope.candidates, scope.outer_labels, part, cur, vr):
         mat.drop(df)
+    report.update(affected_vertices=n_affected, scope_vertices=scope.scope_vertices,
+                  rounds=n_rounds)
     return WCCState(
         edges=merge.edges,
         clean_edges=clean_new,
@@ -639,12 +685,7 @@ def _elect_and_refine(state: WCCState, merge: _Merge) -> WCCState:
         tri=merge.tri,
         wccv=new_wccv,
         mat=mat,
-        report=dict(
-            report,
-            affected_vertices=n_affected,
-            scope_vertices=scope.scope_vertices,
-            rounds=n_rounds,
-        ),
+        report=dict(report, steps=[dict(op=op, **{k: report[k] for k in _STEP_KEYS})]),
         pending_unions=merge.pending_unions,
         max_vertex=merge.max_vertex,
     )
@@ -816,10 +857,10 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     """
     mat = state.mat
 
-    sym = symmetrize_edges(deleted_edges)
-    done = _in_one_task(state, sym, delete=True)
+    done = _in_one_task(state, [("delete", deleted_edges)])
     if done is not None:
         return done
+    sym = symmetrize_edges(deleted_edges)
     # only edges actually present can be deleted
     del_e = mat(sym.join(state.edges, ["src", "dst"], "left_semi"), "del-e")
     full_edges = mat(
@@ -913,7 +954,7 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     changed_verts = (
         dead.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct()
     )
-    return _elect_and_refine(state, _land_vertices(
+    return _elect_and_refine(state, "delete", _land_vertices(
         vertex_table, mat, edges=full_edges, tri=tri_new,
         tri_count=int(tri_obs.get["n"]), changed=changed_verts,
         clean_edges=clean_new, clean_edge_count=int(clean_obs.get["n"]),

@@ -69,7 +69,10 @@ def initial_partition(
     incremental batch's clean-edge count), so no job runs for it.  It
     picks the loop (``task_tier.fits``) and sizes the Spark loop's
     shuffle width.  ``report``, if given, receives ``election``: the
-    loop that ran, "task" or "spark".
+    loop that ran, "task" or "spark"; the Spark loop also reports
+    ``election_rounds`` (the frontier rounds, counted by each round's
+    convergence Observation) and ``election_landings`` (the initial
+    undecided set, one per round and the centers).
 
     The task loop's plan is the whole election, run by the caller's
     landing.  The Spark loop's returned plan reads a ``mis-centers``
@@ -197,6 +200,9 @@ def initial_partition(
         # its plan reads are alive, then free all of them; the returned
         # plan reads the landing until the caller's release()
         centers = mat.scratch(centers, "mis-centers")
+    if report is not None:
+        report.update(election_rounds=len(undec_files) - 1,
+                      election_landings=len(undec_files) + 1)
     for df in frontier_caches:
         df.unpersist(False)
     for df in undec_files:

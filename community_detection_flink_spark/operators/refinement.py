@@ -70,9 +70,11 @@ class WCCResult:
     # asserted in tests
     wcc_history: list | None = None
     # what the run did, from values it has anyway (no job): ``rounds``,
-    # ``moves`` (vertices moved in each round) and which loop ran each
-    # phase, ``graph`` (the load), ``election`` and ``refinement``
-    # ("task" = the small-state tier, "spark" = the distributed loop)
+    # ``moves`` (vertices moved in each round), ``election_rounds`` (the
+    # election's frontier rounds; the Spark loop also reports its
+    # ``election_landings``) and which loop ran each phase, ``graph``
+    # (the load), ``election`` and ``refinement`` ("task" = the
+    # small-state tier, "spark" = the distributed loop)
     report: dict | None = None
 
 
@@ -311,8 +313,8 @@ def refine_partition(
     ``history``, if given, receives the initial WCC and each ACCEPTED
     round's WCC (driver-side floats the loop computes anyway);
     ``report``, if given, what ``initial_partition`` and
-    ``movement_rounds`` report (``election``, ``refinement``,
-    ``moves``).  The loop width, the loop choice, |V| and the global CC
+    ``movement_rounds`` report (``election``, ``election_rounds``,
+    ``refinement``, ``moves``).  The loop width, the loop choice, |V| and the global CC
     come from ``graph``'s carried counts.
     ``graph.tri`` (static triangle list of the clean edges) makes the
     per-round tC pass three joins + one aggregate (see
@@ -322,11 +324,12 @@ def refine_partition(
     vertex_count = graph.vertex_count
     global_cc = graph.cc_sum / float(vertex_count)  # DistributedWCC.scala:261-262
     if task_tier.fits(graph.clean_edge_count + graph.tri_count):
-        best, best_cs, moves = task_tier.run_wcc(
+        best, best_cs, moves, elections = task_tier.run_wcc(
             graph, global_cc, mat, policy, MAX_ITERATIONS
         )
         if report is not None:
-            report.update(election="task", refinement="task", moves=moves)
+            report.update(election="task", refinement="task", moves=moves,
+                          election_rounds=elections)
         return best, best_cs, policy.wcc, global_cc, len(moves)
     vertices = mat(
         initial_partition(

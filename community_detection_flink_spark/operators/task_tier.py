@@ -30,16 +30,18 @@ Five tasks, each chosen on row counts that ride earlier landings:
 * ``run_wcc`` (``refinement.refine_partition``): the election AND every
   accept-if-improved round, when the clean graph's |E_clean| + |tri|
   fits — always so after the graph task, as |E_clean| <= |E|;
-* ``incremental_batch`` (``incremental_update``/``incremental_delete``):
-  a whole incremental batch — the merge (new or dead edges and
-  triangles, ``t``/``vt``/``cc``, a delete's singletons), the
-  affected-community election, the scope rule, the fixed rounds, and
-  the stats and WCC sums of every community — when the carried |V| +
-  |E_clean| + |tri| is under ``batch_limit()`` (its own measured gate
-  ``BATCH_ROWS``, and ``TASK_ROWS``); like the graph task, it gives up
-  when the batch, an insert's incident edges or its new triangles
-  (closed in bounded wedge chunks) stop fitting, and the batch then
-  runs on Spark;
+* ``incremental_batch`` (``incremental_update``/``incremental_delete``,
+  and ``incremental_steps`` for a CDC micro-batch's U-delete, insert and
+  delete): every step of an incremental batch — each the merge (new or
+  dead edges and triangles, ``t``/``vt``/``cc``, a delete's
+  singletons), the affected-community election, the scope rule, the
+  fixed rounds, and the stats and WCC sums of every community, on the
+  arrays the step before returned — with one landing, when the carried
+  |V| + |E_clean| + |tri| is under ``batch_limit()`` (its own measured
+  gate ``BATCH_ROWS``, and ``TASK_ROWS``); like the graph task, it
+  gives up when the batches, an insert's incident edges or its new
+  triangles (closed in bounded wedge chunks) stop fitting, and the
+  steps then run one by one;
 * ``elect`` (``initial_partition``) and ``run_rounds``
   (``movement_rounds``) on their own, for the Spark tail of an
   incremental batch above that gate, on the carried |E_clean| and the
@@ -105,13 +107,14 @@ def batch_limit() -> int:
 
 
 # The packed input: one row per vertex, edge, candidate, outer label,
-# triangle, batch edge or incident carried edge, tagged by ``k``; unused
-# fields are 0 (never NULL, so the Arrow → pandas conversion keeps every
-# id an exact int64).  The graph task's output uses the same fields
-# under a string tag.
+# triangle, incident carried edge or batch edge, tagged by ``k`` (the
+# i-th step of an incremental task packs its batch under ``_BATCH +
+# i``); unused fields are 0 (never NULL, so the Arrow → pandas
+# conversion keeps every id an exact int64).  The graph task's output
+# uses the same fields under a string tag.
 _FIELDS = (("a", "long"), ("b", "long"), ("c", "long"), ("t", "int"),
            ("vt", "int"), ("cc", "double"))
-_SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE, _BATCH, _INCIDENT = range(8)
+_SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE, _INCIDENT, _BATCH = range(8)
 _LABELING = "vId LONG, t INT, vt INT, cc DOUBLE, cId LONG"
 _LABELING_COLUMNS = ["vId", "t", "vt", "cc", "cId"]
 _PACKED = ", ".join(f"{name} {ty}" for name, ty in _FIELDS)
@@ -406,11 +409,12 @@ def load_graph(edges: DataFrame, n_edges: int, mat,
 # The MIS election
 # ----------------------------------------------------------------------
 
-def _elect(g: _SmallGraph, max_iterations: int) -> np.ndarray:
+def _elect(g: _SmallGraph, max_iterations: int) -> tuple[np.ndarray, int]:
     """``initial_partition``'s loop over ``g``'s labeling: the same
     frontier rounds (capped at ``max_iterations``) over the total order
     ``(cc, vt, vId)``, then each vertex adopts its highest-ordered
-    higher center neighbor.  Returns the ``cId`` of every vertex."""
+    higher center neighbor.  Returns the ``cId`` of every vertex and
+    the rounds run."""
     n, vid = g.n, g.vid
     rank = np.empty(n, np.int64)
     rank[np.lexsort((vid, g.vt, g.cc))] = np.arange(n)
@@ -421,7 +425,8 @@ def _elect(g: _SmallGraph, max_iterations: int) -> np.ndarray:
     center = np.zeros(n, bool)
     undecided = np.ones(n, bool)
     fs, fd = hs, hd
-    for _ in range(max_iterations):
+    rounds = 0
+    for rounds in range(1, max_iterations + 1):
         blocked = np.zeros(n, bool)
         blocked[fs] = True
         new = undecided & ~blocked
@@ -441,7 +446,7 @@ def _elect(g: _SmallGraph, max_iterations: int) -> np.ndarray:
         a_s, a_d = a_s[o], a_d[o]
         last = np.r_[a_s[1:] != a_s[:-1], True]
         cid[a_s[last]] = vid[a_d[last]]
-    return cid
+    return cid, rounds
 
 
 def elect(vertices: DataFrame, edges: DataFrame, max_iterations: int) -> DataFrame:
@@ -451,7 +456,7 @@ def elect(vertices: DataFrame, edges: DataFrame, max_iterations: int) -> DataFra
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         g = _SmallGraph.unpack(pdf)
         return pd.DataFrame({"vId": g.vid, "t": g.t, "vt": g.vt, "cc": g.cc,
-                             "cId": _elect(g, max_iterations)})
+                             "cId": _elect(g, max_iterations)[0]})
 
     return _one_task(
         [
@@ -634,7 +639,7 @@ def run_wcc(graph, global_cc: float, mat, policy,
     ``community_stats`` ``(cId, r, a, b, d)`` land through ``mat`` with
     one split landing (``wcc``); the moves and the WCCs ride it, and
     ``policy`` is brought up to date from the WCCs.  Returns
-    ``(labeling, stats, moves)``."""
+    ``(labeling, stats, moves, election rounds)``."""
 
     columns = _LABELING_COLUMNS + ["r", "a", "b", "d"]
     stats_columns = ["cId", "r", "a", "b", "d"]
@@ -643,14 +648,14 @@ def run_wcc(graph, global_cc: float, mat, policy,
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         g = _SmallGraph.unpack(pdf)
         st = _Rounds(g, global_cc, vertex_count, scoped=False)
-        cur, moves, wccs = protocol(policy, _elect(g, max_iterations), st.move, st.wcc,
-                                    lambda lab: None)
+        elected, elections = _elect(g, max_iterations)
+        cur, moves, wccs = protocol(policy, elected, st.move, st.wcc, lambda lab: None)
         comms, _, _, _, r, a, b, _ = st.stats(cur)
         parts = {
             "labels": dict(vId=g.vid, t=g.t, vt=g.vt, cc=g.cc, cId=cur),
             "stats": dict(cId=comms, r=r, a=a, b=b, d=np_density(r, a)),
         }
-        return _tagged(columns, parts, {"moves": moves, "wccs": wccs})
+        return _tagged(columns, parts, {"moves": moves, "wccs": wccs, "elections": elections})
 
     plan = _one_task(
         [
@@ -666,7 +671,7 @@ def run_wcc(graph, global_cc: float, mat, policy,
     landed, info = _land(mat, plan, "wcc", {"labels": _LABELING_COLUMNS,
                                             "stats": stats_columns})
     replay(policy, info["wccs"])
-    return landed["labels"], landed["stats"], info["moves"]
+    return landed["labels"], landed["stats"], info["moves"], info["elections"]
 
 
 # ----------------------------------------------------------------------
@@ -713,13 +718,32 @@ def _through(adj: np.ndarray, half: np.ndarray, n: int, cap: int):
     return np.concatenate(out) if out else np.zeros((0, 3), np.int64)
 
 
-def _insert(vid, lab, t, clean, tri, batch, cap, incident):
+def _keys(ids: np.ndarray, pairs) -> np.ndarray:
+    """The key ``src * n + dst`` of each id pair in ``pairs`` whose
+    endpoints are both in ``ids`` (``n = len(ids)``), by position."""
+    s, d = _index(ids, pairs[0]), _index(ids, pairs[1])
+    ok = (s >= 0) & (d >= 0)
+    return s[ok] * len(ids) + d[ok]
+
+
+def _symmetrized(pairs) -> list[np.ndarray]:
+    """``sources.edges.symmetrize_edges`` over the arrays of a batch
+    whose self-loops were dropped: both directions of every pair,
+    once."""
+    both = np.stack([np.concatenate(pairs), np.concatenate(pairs[::-1])], axis=1)
+    return list(np.unique(both, axis=0).T) if len(both) else [_NONE, _NONE]
+
+
+def _insert(vid, lab, t, clean, tri, batch, cap, incident, gone=(_NONE, _NONE)):
     """``incremental_update``'s merge over arrays.  ``batch``: the
-    symmetrized batch; ``incident``: every carried edge whose src is a
-    batch endpoint, which holds every carried batch edge and every side
-    of a new triangle.  Returns the merged graph (see ``_delete``), or
-    None when the batch, the incident edges and the new triangles
-    number ``cap`` or more rows."""
+    symmetrized batch; ``incident``: every edge of the task's input
+    state whose src is a batch endpoint, less ``gone`` (the pairs the
+    task's earlier steps deleted) — so it holds every carried batch edge
+    and every side of a new triangle.  Returns the merged graph (see
+    ``_delete``) with the insert's deltas to land: the edges new to the
+    input state (a re-inserted ``gone`` pair is not), the new triangles
+    and the new clean edges; or None when the batch, the incident edges
+    and the new triangles number ``cap`` or more rows."""
     cap -= len(batch[0]) + len(incident[0])
     if cap <= 0:
         return None
@@ -730,7 +754,8 @@ def _insert(vid, lab, t, clean, tri, batch, cap, incident):
     labels[at(ids, vid)] = lab
     t_new = np.zeros(n, np.int64)
     t_new[at(ids, vid)] = t
-    old = np.unique(at(ids, incident[0]) * n + at(ids, incident[1]))
+    packed = np.unique(at(ids, incident[0]) * n + at(ids, incident[1]))
+    old = np.setdiff1d(packed, _keys(ids, gone))
     new = np.setdiff1d(np.unique(at(ids, batch[0]) * n + at(ids, batch[1])), old)
     adj = np.union1d(old, new)
     found = _through(adj, new[new // n < new % n], n, cap)
@@ -743,12 +768,13 @@ def _insert(vid, lab, t, clean, tri, batch, cap, incident):
     add = np.setdiff1d(cs * n + cd, carried)
     keys = np.concatenate([carried, add])
     tri_all = [np.concatenate([at(ids, c), x]) for c, x in zip(tri, (u, v, w))]
+    fresh = np.setdiff1d(new, packed)
     parts = {
-        "edges": dict(a=ids[new // n], b=ids[new % n]),
+        "edges": dict(a=ids[fresh // n], b=ids[fresh % n]),
         "tri": dict(a=ids[u], b=ids[v], c=ids[w]),
         "clean-edges": dict(a=ids[add // n], b=ids[add % n]),
     }
-    info = dict(clean_edges=len(add), tri=len(found),
+    info = dict(rows=len(batch[0]) + len(incident[0]) + len(found),
                 max_vertex=int(ids[new // n].max()) if len(new) else None)
     return (ids, labels, labels, t_new, keys // n, keys % n, tri_all, np.unique(found),
             parts, info)
@@ -761,9 +787,10 @@ def _delete(vid, lab, t, clean, tri, batch, cap):
     ``(ids, carried labels, merged labels, t, clean src, clean dst,
     triangles, changed, parts, info)``: positions in ``ids`` (every
     vertex, ascending), the merged labels before the election, the
-    changed vertices (corners of changed triangles), and the tables and
-    counts to land (here the rewritten clean edges and triangles) — or
-    None when the batch numbers ``cap`` or more rows."""
+    changed vertices (corners of changed triangles), the deltas to land
+    (none for a delete: its task lands the rewritten tables) and the
+    rows the merge held — or None when the batch numbers ``cap`` or
+    more rows."""
     if len(batch[0]) >= cap:
         return None
     ids, n = vid, len(vid)
@@ -781,13 +808,9 @@ def _delete(vid, lab, t, clean, tri, batch, cap):
     gone = np.union1d(np.setdiff1d(candidates, alive), gone)
     cs, cd = _index(ids, clean[0]), _index(ids, clean[1])
     keep = ~np.isin(_undirected(cs, cd, n), gone)
-    parts = {
-        "tri": dict(a=tri[0][~dead], b=tri[1][~dead], c=tri[2][~dead]),
-        "clean-edges": dict(a=clean[0][keep], b=clean[1][keep]),
-    }
-    info = dict(clean_edges=int(keep.sum()), tri=int((~dead).sum()), max_vertex=None)
     return (ids, lab, np.where(t_new > 0, lab, ids), t_new, cs[keep], cd[keep],
-            [c[~dead] for c in corners], np.unique(dead_corners), parts, info)
+            [c[~dead] for c in corners], np.unique(dead_corners), {},
+            dict(rows=len(batch[0]), max_vertex=None))
 
 
 def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
@@ -810,7 +833,7 @@ def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
     # vertices carried
     elect = np.isin(g.labels, carried[changed])
     part = g.labels.copy()
-    part[elect] = _elect(g.restrict(elect, g.labels), max_iterations)
+    part[elect] = _elect(g.restrict(elect, g.labels), max_iterations)[0]
     # S: the elected fragments' members; M = S ∪ nbr(S); V_R: the
     # members of M's communities
     s_set = np.isin(part, part[elect])
@@ -840,25 +863,39 @@ def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
     return parts, info
 
 
-def incremental_batch(state, batch: DataFrame, delete: bool, rows: int, policy, rule,
+def incremental_batch(state, steps: list, rows: int, policy, rule,
                       max_iterations: int) -> tuple[dict, dict] | None:
-    """One incremental batch on ``state`` (an ``incremental.WCCState``
-    of ``rows`` vertex, clean-edge and triangle rows) in ONE task: the
-    merge of the symmetrized ``batch`` (deleted when ``delete``, else
-    inserted), then the tail.  The task reads the carried vertices,
-    clean edges and triangles, the batch and, for an insert, the carried
-    edges from the batch's endpoints, and lands with one split landing
-    (``inc-batch``): the final vertices, the stats and WCC sums of every
-    community, and an insert's new edges, triangles and clean edges or a
-    delete's rewritten triangles and clean edges.  The counts ride it.
-    Returns ``(landings, info)``, or None (nothing left landed) when
-    the rows the task holds beside the state — the batch, an insert's
-    incident edges and new triangles — would take it past
-    ``batch_limit()``; an insert closes its wedges in bounded chunks
-    (``_through``), so it gives up before it holds more."""
+    """Incremental ``steps`` on ``state`` (an ``incremental.WCCState``
+    of ``rows`` vertex, clean-edge and triangle rows) in ONE task.
+    ``steps``: ``(op, batch)`` pairs, ``op`` "insert" or "delete" (at
+    most one insert) and ``batch`` an edge list ``(src, dst)``, applied
+    in order; each step is the merge of its batch (symmetrized in the
+    task, so no batch costs a shuffle), then the tail, over the arrays
+    the step before it returned.  The task reads the carried vertices,
+    clean edges and triangles, each step's batch under its own tag and,
+    for an insert, the carried edges from its batch's endpoints (less,
+    in the task, the pairs earlier steps deleted).  It lands with one
+    split landing (``inc-batch``): the final vertices, the stats and WCC
+    sums of every community, and
+
+    * without a delete step, the insert's deltas: its new edges,
+      triangles and clean edges;
+    * with one, the final triangles and clean edges, the edges new to
+      ``state.edges`` (``edges``) and the pairs whose last step deletes
+      them (``deleted``), from which the caller rewrites the edge set.
+
+    The final counts and every step's report (``steps``) ride it.
+    Returns ``(landings, info)``, or None (nothing left landed) when the
+    rows the steps hold beside the state — their batches, the insert's
+    incident edges and new triangles, counted against one
+    ``batch_limit() - rows`` — would take it past ``batch_limit()``; an
+    insert closes its wedges in bounded chunks (``_through``), so it
+    gives up before it holds more."""
 
     cap = batch_limit() - rows
     columns = [name for name, _ in _FIELDS] + ["d"]
+    ops = [op for op, _ in steps]
+    deletes = "delete" in ops
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         k = pdf["k"].to_numpy()
@@ -867,23 +904,62 @@ def incremental_batch(state, batch: DataFrame, delete: bool, rows: int, policy, 
         def rows_of(tag, *cols):
             return [pdf[k == tag][c].to_numpy() for c in cols]
 
-        args = (v["a"].to_numpy(), v["b"].to_numpy(), v["t"].to_numpy(),
-                rows_of(_EDGE, "a", "b"), rows_of(_TRIANGLE, "a", "b", "c"),
-                rows_of(_BATCH, "a", "b"), cap)
-        merged = _delete(*args) if delete else _insert(*args, rows_of(_INCIDENT, "a", "b"))
-        if merged is None:
-            return _tagged(columns, {}, {"tri": None})
-        *graph, parts, info = merged
-        tail, tail_info = _batch_tail(*graph, policy, rule, max_iterations)
-        return _tagged(columns, {**parts, **tail}, {**info, **tail_info})
+        vid, lab, t = (v[c].to_numpy() for c in ("a", "b", "t"))
+        clean, tri = rows_of(_EDGE, "a", "b"), rows_of(_TRIANGLE, "a", "b", "c")
+        batches = [_symmetrized(rows_of(_BATCH + i, "a", "b")) for i in range(len(ops))]
+        left, parts, reports, max_vertex = cap, {}, [], None
+        gone = [_NONE, _NONE]  # the pairs the steps so far deleted
+        for op, batch in zip(ops, batches):
+            if op == "delete":
+                merged = _delete(vid, lab, t, clean, tri, batch, left)
+                gone = [np.concatenate(x) for x in zip(gone, batch)]
+            else:
+                merged = _insert(vid, lab, t, clean, tri, batch, left,
+                                 rows_of(_INCIDENT, "a", "b"), gone)
+            if merged is None:
+                return _tagged(columns, {}, {"tri": None})
+            *graph, deltas, info = merged
+            tail, tail_info = _batch_tail(*graph, policy, rule, max_iterations)
+            parts.update(deltas)
+            left -= info["rows"]
+            if info["max_vertex"] is not None:
+                max_vertex = info["max_vertex"]
+            moves = tail_info.pop("moves")
+            reports.append(dict(op=op, affected_vertices=tail_info.pop("affected_vertices"),
+                                scope_vertices=tail_info.pop("scope_vertices"),
+                                rounds=len(moves), moves=moves))
+            # the next step's input: the ids this step's arrays index
+            ids, _, _, t, cs, cd, tri_at = graph[:7]
+            vid, lab = ids, tail["vertices"]["b"]
+            clean, tri = (ids[cs], ids[cd]), [ids[c] for c in tri_at]
+        if deletes:
+            last = np.zeros(0, np.int64)  # pairs whose last step deletes them
+            for op, batch in zip(ops, batches):
+                keys = _keys(vid, batch)
+                last = np.union1d(last, keys) if op == "delete" else np.setdiff1d(last, keys)
+            n = len(vid)
+            parts.update({
+                "tri": dict(a=tri[0], b=tri[1], c=tri[2]),
+                "clean-edges": dict(a=clean[0], b=clean[1]),
+                "deleted": dict(a=vid[last // n], b=vid[last % n]),
+            })
+        info = dict(tail_info, clean_edges=len(clean[0]), tri=len(tri[0]),
+                    max_vertex=max_vertex, steps=reports)
+        return _tagged(columns, {**parts, **tail}, info)
 
     parts = [
-        _sentinel(batch),
+        _sentinel(state.vertices),
         _part(_VERTEX, state.vertices, a="vId", b="cId", t="t"),
         _part(_EDGE, state.clean_edges, a="src", b="dst"),
         _part(_TRIANGLE, state.tri, a="u", b="v", c="w"),
-        _part(_BATCH, batch, a="src", b="dst"),
     ]
+    for i, (op, batch) in enumerate(steps):
+        batch = batch.where(F.col("src") != F.col("dst"))  # as symmetrize_edges
+        parts.append(_part(_BATCH + i, batch, a="src", b="dst"))
+        if op == "insert":
+            ends = batch.select("src").unionByName(batch.select(F.col("dst").alias("src")))
+            incident = state.edges.join(F.broadcast(ends), "src", "left_semi")
+            parts.append(_part(_INCIDENT, incident, a="src", b="dst"))
     edges = [F.col("a").alias("src"), F.col("b").alias("dst")]
     split = {
         "vertices": [F.col("a").alias("vId"), "t", "vt", "cc", F.col("b").alias("cId")],
@@ -892,11 +968,10 @@ def incremental_batch(state, batch: DataFrame, delete: bool, rows: int, policy, 
         "wccv": [F.col("a").alias("cId"), F.col("cc").alias("s"), F.col("b").alias("n")],
         "tri": [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")],
         "clean-edges": edges,
+        "edges": edges,
     }
-    if not delete:
-        incident = state.edges.join(F.broadcast(batch.select("src")), "src", "left_semi")
-        parts.append(_part(_INCIDENT, incident, a="src", b="dst"))
-        split["edges"] = edges
+    if deletes:
+        split["deleted"] = edges
     plan = _one_task(parts, task, f"k STRING, {_PACKED}, d DOUBLE, info STRING")
     landed, info = _land(state.mat, plan, "inc-batch", split)
     if info["tri"] is None:

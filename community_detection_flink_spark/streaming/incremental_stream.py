@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from community_detection_flink_spark.operators.incremental import (
     WCCState,
-    incremental_delete,
+    incremental_steps,
     incremental_update,
     prepare,
 )
@@ -179,10 +179,16 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame) -> WCCState:
     (``max_files_per_trigger=1`` over per-op files does this).  Unknown
     op codes are an ERROR, not a silent drop.
 
-    Each of the (up to three) batches lands through ``state.mat``, and
-    the returned state's ``report`` is the last one's.  One aggregate
+    The (up to three) steps run as one ``incremental_steps`` call: when
+    the carried state fits the small-state tier, all of them run in ONE
+    task with one split landing (``inc-batch``), plus the rewritten edge
+    set (``inc-edges``) when a step deletes; otherwise, or when that
+    task gives up, each step runs as its own batch.  Everything lands
+    through ``state.mat``.  The returned state's ``report`` is the last
+    step's, and ``report["steps"]`` holds every step's.  One aggregate
     over the batch's op column (its distinct values) both validates it
-    and picks the batches that run.
+    and picks the steps that run; an empty batch runs none and returns
+    ``state`` itself.
     """
     ops = {r["op"] for r in batch_df.select("op").distinct().collect()}
     bad = ops - {"I", "D", "U"}
@@ -194,14 +200,15 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame) -> WCCState:
     ups = batch_df.where("op = 'U'").select("src", "dst")
     ins = batch_df.where("op = 'I'").select("src", "dst")
     dels = batch_df.where("op = 'D'").select("src", "dst")
+    steps = []
     if "U" in ops:
-        state = incremental_delete(state, ups)
+        steps.append(("delete", ups))
         ins = ins.union(ups)
     if "I" in ops or "U" in ops:
-        state = incremental_update(state, ins)
+        steps.append(("insert", ins))
     if "D" in ops:
-        state = incremental_delete(state, dels)
-    return state
+        steps.append(("delete", dels))
+    return incremental_steps(state, steps)
 
 
 class StreamHandle:

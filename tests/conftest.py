@@ -8,6 +8,23 @@ from pyspark.sql import SparkSession
 from community_detection_flink_spark.operators import task_tier
 
 
+# the reasons of the skips that a missing reference data set causes
+DATA_SKIPS = ("reference graph absent", "testdata absent")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One counted line naming every test skipped because a reference
+    data set is absent, so that those skips are not silent."""
+    names = [
+        rep.nodeid for rep in terminalreporter.stats.get("skipped", [])
+        if any(reason in str(rep.longrepr) for reason in DATA_SKIPS)
+    ]
+    if names:
+        terminalreporter.write_line(
+            f"{len(names)} skipped for absent reference data: {', '.join(names)}"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = (

@@ -87,6 +87,26 @@ def test_initial_partition_elects_max_id(spark, golden_edges, tmp_path, each_loo
         assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 7, 5: 7, 6: 7, 7: 7}
 
 
+def test_both_loops_report_their_election_rounds(spark, each_loop):
+    """``run_wcc``'s report names the election's frontier rounds on both
+    loops, and the Spark loop its landings (the undecided set, one per
+    round, and the centers); both loops run the same rounds."""
+    from community_detection_flink_spark.operators.refinement import run_wcc
+    from test_incremental_localized import _community_graph
+
+    edges = symmetrize_edges(spark.createDataFrame(_community_graph(), "src LONG, dst LONG"))
+    rounds = {}
+    for loop in each_loop():
+        res = run_wcc(edges)
+        report = res.report
+        assert report["election"] == loop
+        rounds[loop] = report["election_rounds"]
+        if loop == "spark":
+            assert report["election_landings"] == rounds[loop] + 2
+        res.mat.cleanup()
+    assert rounds["task"] == rounds["spark"] > 1
+
+
 def test_community_stats(spark, golden_edges, tmp_path):
     mat = Materializer(spark, base_dir=str(tmp_path))
     g = load_graph(symmetrize_edges(golden_edges), mat)

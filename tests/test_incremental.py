@@ -163,15 +163,16 @@ def test_prepare_lands_only_through_its_materializer(
         names = {p.rsplit("-", 1)[0] for p in landed}
         if loop == "task":
             # each batch runs in one task: one split landing per batch
-            # (the insert, the delete, and the CDC file's insert and
-            # delete), and each delete's rewritten edge set
+            # (the insert, the delete, and the CDC file, whose insert
+            # and delete share one), and each rewritten edge set
             assert names == {"inc-batch", "inc-edges"}
-            final = "inc-batch"
+            final, batches = "inc-batch", 3
         else:
+            # the CDC file's insert and delete run as two batches
             assert {"inc-newe", "del-e"} <= names
-            final = "inc-final"
+            final, batches = "inc-final", 4
         # one final labeling per batch
-        assert sum(p.startswith(final) for p in landed) == 4
+        assert sum(p.startswith(final) for p in landed) == batches
         assert handle.state.mat is mat and handle.state.report is not None
         assert handle.state.report["refinement"] == loop
 
@@ -184,7 +185,7 @@ def test_prepare_lands_only_through_its_materializer(
 # its rewritten edge set); on the Spark loop (``TASK_ROWS = 0``) the
 # merge and the tail run as joins, landings and the distributed rounds.
 BATCH_JOBS = {
-    "task": {"insert": 4, "delete": 6, "cdc": 12},
+    "task": {"insert": 3, "delete": 4, "cdc": 7},
     "spark": {"insert": 93, "delete": 103, "cdc": 209},
 }
 
@@ -320,6 +321,14 @@ def test_insert_past_the_tier_runs_on_spark(spark, golden_edges, monkeypatch, ro
     assert _labels(got) == _labels(want)
     assert (got.tri_count, got.clean_edge_count) == (want.tri_count, want.clean_edge_count)
     assert math.isclose(got.global_wcc, want.global_wcc, rel_tol=1e-12)
+
+
+@pytest.mark.parametrize("ops", [("insert", "insert"), ("delete", "upsert")])
+def test_incremental_steps_reject_what_one_task_cannot_run(ops):
+    """A second insert (its incident edges would miss the first's) and
+    an unknown op are errors, raised before any work."""
+    with pytest.raises(ValueError, match="at most one insert"):
+        inc.incremental_steps(None, [(op, None) for op in ops])
 
 
 def test_new_triangles_close_in_chunks(monkeypatch):

@@ -10,10 +10,13 @@ carried stats and WCC sums, and runs both scopes.  One graph per seed,
 the disjoint union of ``test_incremental_localized._community_graph`` and
 five adversarial graphs, is prepared once; from that state each loop
 takes an insert (scoped), a delete (the whole graph) and a CDC batch
-(an insert and a delete):
+(inserts, deletes and three U rows: a U of an existing edge, a U of an
+absent edge, and a U and a D of one edge):
 
 * every batch equals the reference: labels, stats, |V|, global WCC,
-  rounds and the scope's sizes;
+  rounds and the scope's sizes; the CDC batch equals the reference's
+  chain delete(U) → insert(I ∪ U) → delete(D), step by step in its
+  report, and its edge set holds each pair once;
 * the two loops agree on the labels, the stats and WCC-sum maps, the
   report's scope and rounds, and the global WCC (to 1e-12);
 * the task's recomputed stats and WCC sums equal Spark's recomputation
@@ -65,7 +68,9 @@ def _undirected(pairs):
 def _batches(pairs, seed):
     """An insert anchored in one community of the community graph, a
     delete of a third of every graph's edges, and a CDC file that closes
-    a triangle beside one community and deletes two edges."""
+    a triangle beside one community, deletes two edges and updates
+    three: one present, one absent, and one present that the file also
+    deletes (the last is among the deletes)."""
     rng = random.Random(seed)
     nodes = [0, 1, 2] + list(range(5000, 5006))
     ins = [(u, v) for i, u in enumerate(nodes) for v in nodes[i + 1:]]
@@ -73,7 +78,12 @@ def _batches(pairs, seed):
     cdc_ins = [(12, 6000), (13, 6000), (12, 13)]
     left = sorted(_undirected(pairs) | _undirected(ins))
     cdc_dels = rng.sample([e for e in left if e[0] < 36 and e not in dels], 2)
-    return ins, dels, cdc_ins, cdc_dels
+    present = [e for e in left if e[0] < 36 and e not in dels and e not in cdc_dels]
+    u_present, u_deleted = rng.sample(present, 2)
+    absent = [(a, b) for a in range(36) for b in range(a + 1, 36)
+              if (a, b) not in set(left) - set(dels)]
+    cdc_ups = [u_present, rng.choice(absent), u_deleted]
+    return ins, dels, cdc_ins, cdc_dels + [u_deleted], cdc_ups
 
 
 def _labels(state):
@@ -94,6 +104,7 @@ def _assert_matches(state, want):
 def _snapshot(state):
     assert state.tri_count == state.tri.count()
     assert state.clean_edge_count == state.clean_edges.count()
+    assert state.edges.count() == state.edges.distinct().count()
     report = state.report
     return dict(
         labels=_labels(state), stats=_stats_map(state.stats), wccv=_wccv_map(state.wccv),
@@ -106,29 +117,37 @@ def _snapshot(state):
 @pytest.mark.parametrize("seed", [1, pytest.param(2, marks=pytest.mark.slow)])
 def test_both_loops_match_the_reference_in_both_scopes(spark, seed, each_loop):
     pairs = _graph(seed)
-    ins, dels, cdc_ins, cdc_dels = _batches(pairs, seed)
+    ins, dels, cdc_ins, cdc_dels, cdc_ups = _batches(pairs, seed)
     pairs_df = lambda p: spark.createDataFrame(p, "src LONG, dst LONG")
     cdc = spark.createDataFrame(
-        [(a, b, "I") for a, b in cdc_ins] + [(a, b, "D") for a, b in cdc_dels],
+        [(a, b, "I") for a, b in cdc_ins] + [(a, b, "D") for a, b in cdc_dels]
+        + [(a, b, "U") for a, b in cdc_ups],
         "src LONG, dst LONG, op STRING",
     )
     # both loops start from one prepared state, and the reference's
-    # chain from its labels; each reference step starts from its own
+    # chain from its labels; each reference step starts from its own.
+    # The CDC file is three steps: delete(U), insert(I ∪ U), delete(D)
     prepared = prepare(symmetrize_edges(pairs_df(pairs)))
     after_ins = pairs + ins
     after_del = sorted(_undirected(after_ins) - set(dels))
-    after_cdc_ins = after_del + cdc_ins
+    after_cdc_u = sorted(set(after_del) - set(cdc_ups))
+    after_cdc_ins = after_cdc_u + cdc_ins + cdc_ups
     after_cdc = sorted(_undirected(after_cdc_ins) - _undirected(cdc_dels))
     want = []
     labels = _labels(prepared)
-    for old, new in ((pairs, after_ins), (after_ins, after_del),
-                     (after_del, after_cdc_ins), (after_cdc_ins, after_cdc)):
+    for old, new in ((pairs, after_ins), (after_ins, after_del), (after_del, after_cdc_u),
+                     (after_cdc_u, after_cdc_ins), (after_cdc_ins, after_cdc)):
         want.append(oracle.incremental_batch(
             old, new, labels, INCREMENTAL_ROUNDS, _SCOPE_FRACTION
         ))
         labels = want[-1]["communities"]
     # the insert is scoped, the delete reaches most of the graph
     assert want[0]["scope_vertices"] is not None and want[1]["scope_vertices"] is None
+    cdc_steps = [
+        (op, ref["affected_vertices"], ref["scope_vertices"], ref["rounds"])
+        for op, ref in zip(("delete", "insert", "delete"), want[2:])
+    ]
+    final_edges = {(a, b) for e in after_cdc for a, b in (e, e[::-1])}
 
     got = {}
     for loop in each_loop():
@@ -136,7 +155,7 @@ def test_both_loops_match_the_reference_in_both_scopes(spark, seed, each_loop):
         for step, batch, ref in (
             (incremental_update, pairs_df(ins), want[0]),
             (incremental_delete, pairs_df(dels), want[1]),
-            (apply_cdc_batch, cdc, want[3]),
+            (apply_cdc_batch, cdc, want[4]),
         ):
             state = step(state, batch)
             assert (state.report["election"], state.report["refinement"]) == (loop, loop)
@@ -144,6 +163,9 @@ def test_both_loops_match_the_reference_in_both_scopes(spark, seed, each_loop):
             if loop == "task":
                 _assert_splice_exact(state)
             steps.append(_snapshot(state))
+        assert [(s["op"], s["affected_vertices"], s["scope_vertices"], s["rounds"])
+                for s in state.report["steps"]] == cdc_steps
+        assert {(r.src, r.dst) for r in state.edges.collect()} == final_edges
         got[loop] = steps
     prepared.mat.cleanup()
 
