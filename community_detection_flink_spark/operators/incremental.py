@@ -32,20 +32,21 @@ exact — every divergence documented:
   per-community stats/WCC sums are spliced, so the final evaluation
   reads only the scope.
 * Two loops run that one batch.  When the carried state (|V| +
-  |E_clean| + |tri|) is under the small-state tier's batch gate
-  (``task_tier.batch_limit()``), the WHOLE batch runs in one task
+  |E_clean| + |tri|) is under the small-state tier's gate
+  (``task_tier.TASK_ROWS``), the WHOLE batch runs in one task
   (``task_tier.incremental_batch``): the merge over arrays, then the
   same election, scope rule and rounds over one shared in-task graph,
   the stats and WCC sums of every community recomputed (below the gate
   the task reads the whole state anyway, so a splice saves nothing),
-  and one split landing — an insert lands only its
-  deltas, a delete also rewrites its edge set.  A batch of several
-  steps (``incremental_steps``: a CDC micro-batch's U-deletes, inserts
-  and deletes) runs all of them in that one task, each step on the
-  arrays the one before returned.  Otherwise the merge
-  runs as joins and landings and the tail (``_elect_and_refine``) as
-  the election, ``_pick_scope`` and ``movement_rounds``, each on the
-  loop its own state fits.
+  and one split landing of the batch's net change to the carried
+  tables, which every batch carries the one way ``_extend`` says,
+  whatever it inserts or deletes.  A batch of several steps
+  (``incremental_steps``: a CDC micro-batch's U-deletes, inserts and
+  deletes) runs all of them in that one task, each step on the arrays
+  the one before returned.  Otherwise the merge runs as joins and
+  landings and the tail (``_elect_and_refine``) as the election,
+  ``_pick_scope`` and ``movement_rounds``, each on the loop its own
+  state fits.
 * The reference returns the PRE-batch community stats
   (``IncrementalWCC.scala:69`` quirk); we return the freshly computed
   stats — the honest value.
@@ -107,13 +108,13 @@ class WCCState:
     global_wcc: float
     vertex_count: int
     # |clean_edges|, carried so no batch counts it: prepare's
-    # ``Graph.clean_edge_count``, plus each insert's disjoint delta, or
-    # a delete's count of its rewritten set (both ride their landings)
+    # ``Graph.clean_edge_count``, then each batch's count of its result
+    # (riding its landing)
     clean_edge_count: int
-    # |tri|, carried the same way: prepare's ``Graph.tri_count``, plus
-    # each insert's new triangles, or a delete's count of the survivors.
+    # |tri|, carried the same way: prepare's ``Graph.tri_count``, then
+    # each batch's count of its result.
     # |V| + |E_clean| + |tri| is the state a batch's one task reads
-    # (``task_tier.batch_limit``)
+    # (``task_tier.fits``)
     tri_count: int
     # static triangle list (u, v, w) of clean_edges, maintained
     # incrementally: every new triangle contains ≥1 new edge, so the
@@ -147,11 +148,13 @@ class WCCState:
     # read it here instead of re-running an agg job over the edge set;
     # ``None`` (unknown) stays ``None``
     max_vertex: int | None = None
-    # batches since ``edges``/``clean_edges`` were last parquet-landed:
-    # inserts extend both as LAZY unions of disjoint deltas (no O(|E|)
-    # dedup-shuffle-and-rewrite per batch — the r2 plans all paid one),
-    # compacted to a single parquet root every COMPACT_EVERY batches so
-    # scan fan-out and plan depth stay bounded
+    # batches since ``edges``/``clean_edges``/``tri`` were last
+    # parquet-landed: a batch in one task, and a Spark insert, carry
+    # each as a LAZY ``(carried ∪ adds) anti-join removes`` of its net
+    # change (``_extend``; no O(|E|) rewrite per batch — the r2 plans
+    # all paid one), compacted to a single parquet root every
+    # COMPACT_EVERY batches so scan fan-out and plan depth stay bounded;
+    # a Spark delete rewrites all three and resets it
     pending_unions: int = 0
 
 
@@ -251,27 +254,30 @@ def _new_triangles(full_edges: DataFrame, new_e: DataFrame) -> DataFrame:
 
 def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     """Merge one edge micro-batch and re-partition
-    (``IncrementalWCC.run``, ``IncrementalWCC.scala:27-71``).
+    (``IncrementalWCC.run``, ``IncrementalWCC.scala:27-71``): the
+    one-step form of ``incremental_steps``.  A state that fits the
+    small-state tier runs the whole batch in one task
+    (``_in_one_task``), any other the Spark merge (``_spark_update``)
+    and ``_elect_and_refine``.  Every table lands through
+    ``state.mat``."""
+    return incremental_steps(state, [("insert", batch_edges)])
 
-    The merge is exact and batch-sized (anti-joined edge delta, exact
-    triangle delta, lazy unions of the carried sets); the rest of the
-    batch is ``_elect_and_refine``, shared with ``incremental_delete``:
-    centers are re-elected only inside the affected communities, then
-    the fixed movement rounds run over the batch neighborhood, or over
-    every clean vertex when the neighborhood is most of the graph, and
-    the carried per-community stats/WCC sums are spliced.  A localized
+
+def _spark_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
+    """``incremental_update`` on Spark.  The merge is exact and
+    batch-sized (anti-joined edge delta, exact triangle delta, lazy
+    unions of the carried sets, ``_extend``); the rest of the batch is
+    ``_elect_and_refine``, shared with ``_spark_delete``: centers are
+    re-elected only inside the affected communities, then the fixed
+    movement rounds run over the batch neighborhood, or over every
+    clean vertex when the neighborhood is most of the graph, and the
+    carried per-community stats/WCC sums are spliced.  A localized
     batch therefore costs ∝ its neighborhood, not |E| (VERDICT r3 #2;
     the reference re-runs its election over the whole triangle
     subgraph and re-scans the whole graph 5×/batch,
     ``IncrementalWCC.scala:185-227, 332-393`` — forbidden at 100 TB).
-    A state that fits the small-state tier runs all of it in one task
-    instead (``_in_one_task``).  Every table lands through ``state.mat``.
     """
     mat = state.mat
-
-    done = _in_one_task(state, [("insert", batch_edges)])
-    if done is not None:
-        return done
     sym = symmetrize_edges(batch_edges)
     # the batch's highest new vertex id rides the landing: the next
     # state's id ceiling
@@ -336,7 +342,7 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
     )
 
-    edges, clean_new, tri_static, pending = _extend(state, new_e, clean_add, tri)
+    edges, clean_new, tri_static, pending = _extend(state, [new_e, clean_add, tri])
     return _elect_and_refine(state, "insert", _land_vertices(
         vertex_table, mat, edges=edges, tri=tri_static,
         tri_count=state.tri_count + int(tri_obs.get["n"]),
@@ -360,19 +366,24 @@ def _raised(max_vertex: int | None, batch_max) -> int | None:
     return max(max_vertex, int(batch_max))
 
 
-def _extend(state: WCCState, new_e: DataFrame, clean_add: DataFrame, tri: DataFrame):
-    """The carried edges, clean edges and triangles extended by an
-    insert's new rows (each DISJOINT from its carried set, so a plain
-    union), and the next ``pending_unions``.  The unions stay LAZY (a
-    scan of the carried parquet roots plus this batch's delta files):
-    landing them would rewrite the ENTIRE O(|E|) and O(|T|) sets every
-    batch for no lineage benefit.  Every ``COMPACT_EVERY`` batches they
-    land, so scan fan-out and plan depth stay bounded."""
-    tables = (
-        state.edges.unionByName(new_e),
-        state.clean_edges.unionByName(clean_add),
-        state.tri.unionByName(tri.select("u", "v", "w")),
-    )
+def _extend(state: WCCState, adds: list, removes: list | None = None):
+    """The carried edges, clean edges and triangles after a batch that
+    adds the rows ``adds`` and removes the rows ``removes`` (one table
+    each, in that order; None: it removes none), and the next
+    ``pending_unions``.  Each is carried as ``(carried ∪ adds) anti-join
+    removes``: the adds are DISJOINT from the carried set (so a plain
+    union), a row both added and removed (a pair a batch inserts, then
+    deletes) goes, and an anti-join against an empty removes table folds
+    away.  The tables stay LAZY (a scan of the
+    carried parquet roots plus each batch's delta files): landing them
+    would rewrite the ENTIRE O(|E|) and O(|T|) sets every batch for no
+    lineage benefit.  Every ``COMPACT_EVERY`` batches they land, so scan
+    fan-out and plan depth stay bounded."""
+    carried = (state.edges, state.clean_edges, state.tri)
+    tables = [table.unionByName(add) for table, add in zip(carried, adds)]
+    if removes is not None:
+        tables = [t.join(F.broadcast(gone), gone.columns, "left_anti")
+                  for t, gone in zip(tables, removes)]
     if state.pending_unions + 1 < COMPACT_EVERY:
         return (*tables, state.pending_unions + 1)
     names = ("inc-edges", "inc-clean", "inc-tri-static")
@@ -387,20 +398,19 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
     """Every one of ``steps`` (``(op, edges)``: "insert" or "delete" of
     an edge batch, at most one insert, applied in order; each the merge
     and ``_elect_and_refine``'s tail) in one task, when the
-    carried |V| + |E_clean| + |tri| is under ``task_tier.batch_limit()``
-    (``task_tier.incremental_batch``): one split landing, and when a
-    step deletes one more, the rewritten edge set ``(state.edges ∪ the
-    new edges) − the pairs whose last step deletes them``.  The task
+    carried |V| + |E_clean| + |tri| fits the small-state tier
+    (``task_tier.incremental_batch``): one split landing, whatever the
+    steps, with the batch's net change to the carried edges, clean edges
+    and triangles, which ``_extend`` carries as lazy anti-joined unions
+    and compacts on the one ``pending_unions`` counter.  The task
     recomputes the stats and WCC sums of every community instead of
-    splicing them (it reads the whole state anyway).  Without a delete
-    it lands only the insert's deltas, so the lazy unions and their
-    compaction stay as on Spark (``_extend``).  The report is the last
-    step's, with every step's in ``steps``.  None when the state does
-    not fit, or the steps (their batches, the insert's incident edges
-    and new triangles) would take it past the limit; nothing of the
-    task stays landed then."""
+    splicing them (it reads the whole state anyway).  The report is the
+    last step's, with every step's in ``steps``.  None when the state
+    does not fit, or the steps (their batches, the insert's incident
+    edges and new triangles) would take it past the limit; nothing of
+    the task stays landed then."""
     rows = state.vertex_count + state.clean_edge_count + state.tri_count
-    if rows >= task_tier.batch_limit():
+    if not task_tier.fits(rows):
         return None
     out = task_tier.incremental_batch(
         state, steps, rows, FixedRounds(INCREMENTAL_ROUNDS),
@@ -409,20 +419,10 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
     if out is None:
         return None
     landed, info = out
-    mat = state.mat
-    if "deleted" in landed:
-        edges = mat(
-            state.edges.unionByName(landed["edges"])
-            .join(F.broadcast(landed["deleted"]), ["src", "dst"], "left_anti"),
-            "inc-edges",
-        )
-        mat.drop(landed["edges"])
-        mat.drop(landed["deleted"])
-        clean, tri, pending = landed["clean-edges"], landed["tri"], 0
-    else:
-        edges, clean, tri, pending = _extend(
-            state, landed["edges"], landed["clean-edges"], landed["tri"]
-        )
+    tags = ("edges", "clean-edges", "tri")
+    edges, clean, tri, pending = _extend(
+        state, [landed[tag] for tag in tags], [landed[f"{tag}-gone"] for tag in tags]
+    )
     last = info["steps"][-1]
     return WCCState(
         edges=edges,
@@ -435,7 +435,7 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
         tri_count=info["tri"],
         tri=tri,
         wccv=landed["wccv"],
-        mat=mat,
+        mat=state.mat,
         report=dict(
             election="task", refinement="task", steps=info["steps"],
             **{key: last[key] for key in _STEP_KEYS},
@@ -447,27 +447,31 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
 
 def incremental_steps(state: WCCState, steps: list) -> WCCState:
     """Apply ``steps`` in order: ``(op, edges)`` pairs, ``op`` "insert"
-    (``incremental_update``) or "delete" (``incremental_delete``), at
-    most one insert.  When the carried state fits the small-state tier
-    they all run in ONE task with one split landing
-    (``_in_one_task``); otherwise, or when that task gives up, each
-    step runs as its own batch, on the loop it fits.  The returned
-    state's report is the last step's, with every step's ``op``,
-    ``affected_vertices``, ``scope_vertices``, ``rounds`` and
-    ``moves`` in ``report["steps"]``.  No steps: ``state`` itself."""
-    ops = {"insert": incremental_update, "delete": incremental_delete}
+    or "delete", at most one insert.  When the carried state fits the
+    small-state tier they all run in ONE task with one split landing
+    (``_in_one_task``, called from here only).  Otherwise one step runs
+    its Spark merge (``_spark_update`` / ``_spark_delete``), and
+    several run one by one as ``incremental_update`` /
+    ``incremental_delete``, each trying its own task before its Spark
+    merge.  The returned state's report is the last step's, with every
+    step's ``op``, ``affected_vertices``, ``scope_vertices``,
+    ``rounds`` and ``moves`` in ``report["steps"]``.  No steps:
+    ``state`` itself."""
     names = [op for op, _ in steps]
-    if not set(names) <= set(ops) or names.count("insert") > 1:
+    if not set(names) <= {"insert", "delete"} or names.count("insert") > 1:
         raise ValueError(
             f"incremental_steps: steps {names} — expected 'insert' or 'delete' "
             "steps, at most one insert"
         )
     if not steps:
         return state
-    if len(steps) > 1:  # one step tries its own task
-        done = _in_one_task(state, steps)
-        if done is not None:
-            return done
+    done = _in_one_task(state, steps)
+    if done is not None:
+        return done
+    if len(steps) == 1:
+        op, edges = steps[0]
+        return (_spark_update if op == "insert" else _spark_delete)(state, edges)
+    ops = {"insert": incremental_update, "delete": incremental_delete}
     reports = []
     for op, edges in steps:
         state = ops[op](state, edges)
@@ -839,27 +843,30 @@ def _pick_scope(
 
 def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     """Engine extension BEYOND the reference (``IncrementalWCC`` is
-    insert-only): remove an edge micro-batch and re-partition.
+    insert-only): remove an edge micro-batch and re-partition; the
+    one-step form of ``incremental_steps``.  A state that fits the
+    small-state tier runs the whole batch in one task
+    (``_in_one_task``), any other the Spark merge (``_spark_delete``)
+    and ``_elect_and_refine``."""
+    return incremental_steps(state, [("delete", deleted_edges)])
 
-    Exactness rides on the carried triangle list: a triangle dies iff
-    one of its three undirected edges is deleted, so the delta is
-    three broadcast semi-joins of the static list against the (small)
-    deleted set — never a re-enumeration.  A cleaned edge survives iff
-    some remaining triangle still contains it, and the only edges that
-    can change status are edges of dead triangles, so the survivor
-    check is again a broadcast semi-join.  Vertices never disappear:
-    one whose last triangle dies reverts to a singleton community
-    (t = 0 ⇒ cId = vId), the same rule the batch pipeline applies to
-    pruned vertices (``DistributedWCC.scala:63-78`` semantics).  The
-    re-partition is ``_elect_and_refine``, the same as an insert's.  A
-    state that fits the small-state tier runs all of it in one task
-    instead (``_in_one_task``).
+
+def _spark_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
+    """``incremental_delete`` on Spark.  Exactness rides on the carried
+    triangle list: a triangle dies iff one of its three undirected edges
+    is deleted, so the delta is three broadcast semi-joins of the static
+    list against the (small) deleted set — never a re-enumeration.  A
+    cleaned edge survives iff some remaining triangle still contains it,
+    and the only edges that can change status are edges of dead
+    triangles, so the survivor check is again a broadcast semi-join.
+    Vertices never disappear: one whose last triangle dies reverts to a
+    singleton community (t = 0 ⇒ cId = vId), the same rule the batch
+    pipeline applies to pruned vertices (``DistributedWCC.scala:63-78``
+    semantics).  The re-partition is ``_elect_and_refine``, the same as
+    an insert's.  Unlike the task's lazy carry (``_extend``), this merge
+    still lands ``edges``, ``clean_edges`` and ``tri`` whole.
     """
     mat = state.mat
-
-    done = _in_one_task(state, [("delete", deleted_edges)])
-    if done is not None:
-        return done
     sym = symmetrize_edges(deleted_edges)
     # only edges actually present can be deleted
     del_e = mat(sym.join(state.edges, ["src", "dst"], "left_semi"), "del-e")

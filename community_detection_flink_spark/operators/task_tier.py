@@ -30,15 +30,17 @@ Five tasks, each chosen on row counts that ride earlier landings:
 * ``run_wcc`` (``refinement.refine_partition``): the election AND every
   accept-if-improved round, when the clean graph's |E_clean| + |tri|
   fits — always so after the graph task, as |E_clean| <= |E|;
-* ``incremental_batch`` (``incremental_update``/``incremental_delete``,
-  and ``incremental_steps`` for a CDC micro-batch's U-delete, insert and
-  delete): every step of an incremental batch — each the merge (new or
-  dead edges and triangles, ``t``/``vt``/``cc``, a delete's
-  singletons), the affected-community election, the scope rule, the
-  fixed rounds, and the stats and WCC sums of every community, on the
-  arrays the step before returned — with one landing, when the carried
-  |V| + |E_clean| + |tri| is under ``batch_limit()`` (its own measured
-  gate ``BATCH_ROWS``, and ``TASK_ROWS``); like the graph task, it
+* ``incremental_batch`` (``incremental.incremental_steps``: a CDC
+  micro-batch's U-delete, insert and delete, or the one step of
+  ``incremental_update``/``incremental_delete``): every step of an
+  incremental batch — each the merge (new or dead edges and triangles,
+  ``t``/``vt``/``cc``, a delete's singletons), the affected-community
+  election, the scope rule, the fixed rounds, and the stats and WCC sums
+  of every community, on the arrays the step before returned — with one
+  landing, of one shape whatever the steps: the final vertices, stats
+  and WCC sums, and the batch's net change to the carried edges, clean
+  edges and triangles (the rows to add and to remove), when the carried
+  |V| + |E_clean| + |tri| fits; like the graph task, it
   gives up when the batches, an insert's incident edges or its new
   triangles (closed in bounded wedge chunks) stop fitting, and the
   steps then run one by one;
@@ -81,29 +83,16 @@ from community_detection_flink_spark.operators.movement import protocol, replay
 # graph task fused in, 2.2x there at ~1.3 GB peak RSS in the one Python
 # worker; 1.2x at 3.96M rows of disjoint 45-cliques, 88% of them
 # triangles, at ~1.05 GB); the crossover lies above and this is the
-# largest state measured.
+# largest state measured.  An incremental batch's task (``--batch``; a
+# 21-edge insert and a 10-edge delete on a prepared co-purchase state)
+# beat the Spark merge at every size measured up to 4.06M rows: 8.1 s vs
+# 14.5 s and 8.7 s vs 19.8 s there, at ~1.2 GB worker peak.
 TASK_ROWS = 4_000_000
 
 
 def fits(rows: int) -> bool:
     """True iff a state of ``rows`` rows takes the task tier."""
     return rows < TASK_ROWS
-
-
-# An incremental batch's own gate on its carried |V| + |E_clean| +
-# |tri|: its task reads the whole state however small the batch, where
-# the Spark merge reads the batch's neighbourhood.  Measured on 4 cores
-# (plans/r14/crossover.txt, ``--batch``; 21-edge insert, 10-edge
-# delete): the task beat the Spark merge on both up to 3.04M rows
-# (4-5x on small states; the delete 16.0 s vs 17.4 s there, at ~1.4 GB
-# worker peak) and lost the delete at 4.06M rows (18.4 s vs 18.0 s, ~1.7
-# GB); this is the largest state where it won, rounded up.
-BATCH_ROWS = 3_100_000
-
-
-def batch_limit() -> int:
-    """The rows an incremental batch's task may hold: below both gates."""
-    return min(TASK_ROWS, BATCH_ROWS)
 
 
 # The packed input: one row per vertex, edge, candidate, outer label,
@@ -740,10 +729,9 @@ def _insert(vid, lab, t, clean, tri, batch, cap, incident, gone=(_NONE, _NONE)):
     state whose src is a batch endpoint, less ``gone`` (the pairs the
     task's earlier steps deleted) — so it holds every carried batch edge
     and every side of a new triangle.  Returns the merged graph (see
-    ``_delete``) with the insert's deltas to land: the edges new to the
-    input state (a re-inserted ``gone`` pair is not), the new triangles
-    and the new clean edges; or None when the batch, the incident edges
-    and the new triangles number ``cap`` or more rows."""
+    ``_delete``; the new clean edges and triangles follow the carried
+    ones), or None when the batch, the incident edges and the new
+    triangles number ``cap`` or more rows."""
     cap -= len(batch[0]) + len(incident[0])
     if cap <= 0:
         return None
@@ -754,8 +742,7 @@ def _insert(vid, lab, t, clean, tri, batch, cap, incident, gone=(_NONE, _NONE)):
     labels[at(ids, vid)] = lab
     t_new = np.zeros(n, np.int64)
     t_new[at(ids, vid)] = t
-    packed = np.unique(at(ids, incident[0]) * n + at(ids, incident[1]))
-    old = np.setdiff1d(packed, _keys(ids, gone))
+    old = np.setdiff1d(at(ids, incident[0]) * n + at(ids, incident[1]), _keys(ids, gone))
     new = np.setdiff1d(np.unique(at(ids, batch[0]) * n + at(ids, batch[1])), old)
     adj = np.union1d(old, new)
     found = _through(adj, new[new // n < new % n], n, cap)
@@ -763,21 +750,16 @@ def _insert(vid, lab, t, clean, tri, batch, cap, incident, gone=(_NONE, _NONE)):
         return None
     u, v, w = found.T
     t_new += np.bincount(found.ravel(), minlength=n)
-    carried = np.sort(at(ids, clean[0]) * n + at(ids, clean[1]))
+    carried = at(ids, clean[0]) * n + at(ids, clean[1])
     cs, cd = _clean_edges(n, adj // n, adj % n, u, v, w)
     add = np.setdiff1d(cs * n + cd, carried)
     keys = np.concatenate([carried, add])
     tri_all = [np.concatenate([at(ids, c), x]) for c, x in zip(tri, (u, v, w))]
-    fresh = np.setdiff1d(new, packed)
-    parts = {
-        "edges": dict(a=ids[fresh // n], b=ids[fresh % n]),
-        "tri": dict(a=ids[u], b=ids[v], c=ids[w]),
-        "clean-edges": dict(a=ids[add // n], b=ids[add % n]),
-    }
     info = dict(rows=len(batch[0]) + len(incident[0]) + len(found),
-                max_vertex=int(ids[new // n].max()) if len(new) else None)
-    return (ids, labels, labels, t_new, keys // n, keys % n, tri_all, np.unique(found),
-            parts, info)
+                max_vertex=int(ids[new // n].max()) if len(new) else None,
+                origin=[np.r_[np.arange(len(carried)), np.full(len(add), -1)],
+                        np.r_[np.arange(len(tri[0])), np.full(len(found), -1)]])
+    return ids, labels, labels, t_new, keys // n, keys % n, tri_all, np.unique(found), info
 
 
 def _delete(vid, lab, t, clean, tri, batch, cap):
@@ -785,12 +767,12 @@ def _delete(vid, lab, t, clean, tri, batch, cap):
     deleted side die, the clean edges that only they held go, and a
     vertex left without a triangle reverts to a singleton.  Returns
     ``(ids, carried labels, merged labels, t, clean src, clean dst,
-    triangles, changed, parts, info)``: positions in ``ids`` (every
-    vertex, ascending), the merged labels before the election, the
-    changed vertices (corners of changed triangles), the deltas to land
-    (none for a delete: its task lands the rewritten tables) and the
-    rows the merge held — or None when the batch numbers ``cap`` or
-    more rows."""
+    triangles, changed, info)``: positions in ``ids`` (every vertex,
+    ascending), the merged labels before the election, the changed
+    vertices (corners of changed triangles) and ``info``: the rows the
+    merge held, the new id ceiling and ``origin``, the input row of
+    each clean edge and triangle (-1: a new one) — or None when the
+    batch numbers ``cap`` or more rows."""
     if len(batch[0]) >= cap:
         return None
     ids, n = vid, len(vid)
@@ -809,8 +791,9 @@ def _delete(vid, lab, t, clean, tri, batch, cap):
     cs, cd = _index(ids, clean[0]), _index(ids, clean[1])
     keep = ~np.isin(_undirected(cs, cd, n), gone)
     return (ids, lab, np.where(t_new > 0, lab, ids), t_new, cs[keep], cd[keep],
-            [c[~dead] for c in corners], np.unique(dead_corners), {},
-            dict(rows=len(batch[0]), max_vertex=None))
+            [c[~dead] for c in corners], np.unique(dead_corners),
+            dict(rows=len(batch[0]), max_vertex=None,
+                 origin=[np.flatnonzero(keep), np.flatnonzero(~dead)]))
 
 
 def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
@@ -863,6 +846,30 @@ def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
     return parts, info
 
 
+def _net(ids: np.ndarray, before: list, after: list, origin: np.ndarray):
+    """The net change from the table ``before`` to ``after``, whose rows
+    come from the rows ``origin`` of ``before`` (-1: a new row): the
+    rows to remove and the rows to add, each as packed fields ``a``,
+    ``b`` (, ``c``) — the rows of ``before`` no row comes from and the
+    new rows, less those removed and added back.  A table is a list of
+    id columns (every id in ``ids``, ascending), and a row compares as
+    the set of its ids: a triangle's corners are carried in any order,
+    and a clean edge in both.  A row's key folds each of its sorted
+    positions into the dense rank of the ones before it, so it stays an
+    exact int64 (``u·n² + v·n + w`` would overflow above ~2.1M
+    vertices)."""
+    gone = np.isin(np.arange(len(before[0])), origin, invert=True)
+    before, after = [c[gone] for c in before], [c[origin < 0] for c in after]
+    m = len(before[0])
+    pos = np.sort(np.searchsorted(ids, np.concatenate([before, after], axis=1)), axis=0)
+    key = pos[0]
+    for col in pos[1:]:
+        key = np.unique(key, return_inverse=True)[1] * len(ids) + col
+    old, new = key[:m], key[m:]
+    return tuple(dict(zip("abc", (c[keep] for c in rows)))
+                 for rows, keep in ((before, ~np.isin(old, new)), (after, ~np.isin(new, old))))
+
+
 def incremental_batch(state, steps: list, rows: int, policy, rule,
                       max_iterations: int) -> tuple[dict, dict] | None:
     """Incremental ``steps`` on ``state`` (an ``incremental.WCCState``
@@ -876,26 +883,29 @@ def incremental_batch(state, steps: list, rows: int, policy, rule,
     for an insert, the carried edges from its batch's endpoints (less,
     in the task, the pairs earlier steps deleted).  It lands with one
     split landing (``inc-batch``): the final vertices, the stats and WCC
-    sums of every community, and
-
-    * without a delete step, the insert's deltas: its new edges,
-      triangles and clean edges;
-    * with one, the final triangles and clean edges, the edges new to
-      ``state.edges`` (``edges``) and the pairs whose last step deletes
-      them (``deleted``), from which the caller rewrites the edge set.
+    sums of every community, and the batch's net change to the carried
+    edges, clean edges and triangles, whatever its steps — the rows to
+    add (``edges``, ``clean-edges``, ``tri``) and the rows to remove
+    (each tag with ``-gone``), relative to the state the task read.
+    Each step reports the row it came from of each of its clean edges
+    and triangles (``origin``); composed over the steps, they give once,
+    at the end, the input rows to remove (a triangle as its input row,
+    corners in their carried order) and the final rows to add
+    (``_net``).  The added edges are the insert's pairs new to
+    ``state.edges``, the removed ones the pairs whose last step deletes
+    them.
 
     The final counts and every step's report (``steps``) ride it.
     Returns ``(landings, info)``, or None (nothing left landed) when the
     rows the steps hold beside the state — their batches, the insert's
     incident edges and new triangles, counted against one
-    ``batch_limit() - rows`` — would take it past ``batch_limit()``; an
+    ``TASK_ROWS - rows`` — would take it past ``TASK_ROWS``; an
     insert closes its wedges in bounded chunks (``_through``), so it
     gives up before it holds more."""
 
-    cap = batch_limit() - rows
+    cap = TASK_ROWS - rows
     columns = [name for name, _ in _FIELDS] + ["d"]
     ops = [op for op, _ in steps]
-    deletes = "delete" in ops
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         k = pdf["k"].to_numpy()
@@ -906,21 +916,22 @@ def incremental_batch(state, steps: list, rows: int, policy, rule,
 
         vid, lab, t = (v[c].to_numpy() for c in ("a", "b", "t"))
         clean, tri = rows_of(_EDGE, "a", "b"), rows_of(_TRIANGLE, "a", "b", "c")
+        carried, incident = (clean, tri), rows_of(_INCIDENT, "a", "b")
+        origin = [np.arange(len(x[0])) for x in carried]  # each row's input row; -1: new
         batches = [_symmetrized(rows_of(_BATCH + i, "a", "b")) for i in range(len(ops))]
-        left, parts, reports, max_vertex = cap, {}, [], None
+        left, reports, max_vertex = cap, [], None
         gone = [_NONE, _NONE]  # the pairs the steps so far deleted
         for op, batch in zip(ops, batches):
             if op == "delete":
                 merged = _delete(vid, lab, t, clean, tri, batch, left)
                 gone = [np.concatenate(x) for x in zip(gone, batch)]
             else:
-                merged = _insert(vid, lab, t, clean, tri, batch, left,
-                                 rows_of(_INCIDENT, "a", "b"), gone)
+                merged = _insert(vid, lab, t, clean, tri, batch, left, incident, gone)
             if merged is None:
                 return _tagged(columns, {}, {"tri": None})
-            *graph, deltas, info = merged
+            *graph, info = merged
             tail, tail_info = _batch_tail(*graph, policy, rule, max_iterations)
-            parts.update(deltas)
+            origin = [np.append(o, -1)[step] for o, step in zip(origin, info["origin"])]
             left -= info["rows"]
             if info["max_vertex"] is not None:
                 max_vertex = info["max_vertex"]
@@ -932,20 +943,21 @@ def incremental_batch(state, steps: list, rows: int, policy, rule,
             ids, _, _, t, cs, cd, tri_at = graph[:7]
             vid, lab = ids, tail["vertices"]["b"]
             clean, tri = (ids[cs], ids[cd]), [ids[c] for c in tri_at]
-        if deletes:
-            last = np.zeros(0, np.int64)  # pairs whose last step deletes them
-            for op, batch in zip(ops, batches):
-                keys = _keys(vid, batch)
-                last = np.union1d(last, keys) if op == "delete" else np.setdiff1d(last, keys)
-            n = len(vid)
-            parts.update({
-                "tri": dict(a=tri[0], b=tri[1], c=tri[2]),
-                "clean-edges": dict(a=clean[0], b=clean[1]),
-                "deleted": dict(a=vid[last // n], b=vid[last % n]),
-            })
+        n = len(vid)
+        fresh, last = _NONE, _NONE  # pairs new to the input's edges; pairs deleted last
+        for op, batch in zip(ops, batches):
+            keys = _keys(vid, batch)
+            last = np.union1d(last, keys) if op == "delete" else np.setdiff1d(last, keys)
+            if op == "insert":
+                fresh = np.setdiff1d(keys, _keys(vid, incident))
+        parts = dict(tail)
+        for tag, keys in (("edges", fresh), ("edges-gone", last)):
+            parts[tag] = dict(a=vid[keys // n], b=vid[keys % n])
+        for tag, *tables in zip(("clean-edges", "tri"), carried, (clean, tri), origin):
+            parts[f"{tag}-gone"], parts[tag] = _net(vid, *tables)
         info = dict(tail_info, clean_edges=len(clean[0]), tri=len(tri[0]),
                     max_vertex=max_vertex, steps=reports)
-        return _tagged(columns, {**parts, **tail}, info)
+        return _tagged(columns, parts, info)
 
     parts = [
         _sentinel(state.vertices),
@@ -961,17 +973,15 @@ def incremental_batch(state, steps: list, rows: int, policy, rule,
             incident = state.edges.join(F.broadcast(ends), "src", "left_semi")
             parts.append(_part(_INCIDENT, incident, a="src", b="dst"))
     edges = [F.col("a").alias("src"), F.col("b").alias("dst")]
+    tri = [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")]
     split = {
         "vertices": [F.col("a").alias("vId"), "t", "vt", "cc", F.col("b").alias("cId")],
         "stats": [F.col("a").alias("cId"), F.col("t").alias("r"), F.col("cc").alias("a"),
                   "b", "d"],
         "wccv": [F.col("a").alias("cId"), F.col("cc").alias("s"), F.col("b").alias("n")],
-        "tri": [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")],
-        "clean-edges": edges,
-        "edges": edges,
     }
-    if deletes:
-        split["deleted"] = edges
+    for tag, cols in (("edges", edges), ("clean-edges", edges), ("tri", tri)):
+        split[tag] = split[f"{tag}-gone"] = cols
     plan = _one_task(parts, task, f"k STRING, {_PACKED}, d DOUBLE, info STRING")
     landed, info = _land(state.mat, plan, "inc-batch", split)
     if info["tri"] is None:

@@ -177,7 +177,8 @@ class Materializer:
         ``{tag: landing}``: each tag's columns, read from the tag's own
         directory, so ``drop`` frees exactly that landing (and the
         write's directory with its last tag).  A tag with no rows reads
-        as an empty table of its columns."""
+        as an empty table of its columns, which the optimizer folds
+        away (an anti-join against it costs no job)."""
         if light:
             # LIGHT landing (r13): ``localCheckpoint(eager=True)`` —
             # one job, no file write/commit/read-back, plan truncated
@@ -223,7 +224,9 @@ class Materializer:
             if jpath.getFileSystem(conf).exists(jpath):
                 landed = self.spark.read.schema(schema).parquet(part)
             else:
-                landed = self.spark.createDataFrame([], schema)
+                # limit(0): the optimizer reads it as an empty
+                # LocalRelation, so a join or union with it folds away
+                landed = self.spark.createDataFrame([], schema).limit(0)
             landed = landed.select(*cols)
             self._by_df[id(landed)] = (landed, part)
             self._split_root[part] = path

@@ -30,12 +30,12 @@ before it loads on Spark).
 ``--batch``: one small incremental batch on a prepared co-purchase
 state of scale k — an insert of a 7-clique over 5 carried vertices and
 2 new ones (21 edges), and a delete of 10 carried edges — on three
-loops: "task" (the whole batch in one task, both gates lifted),
-"merge" (``task_tier.BATCH_ROWS = 0``: the Spark merge, its tail at the
-real tier gate, as above the batch gate) and "spark" (``TASK_ROWS =
-0``).  Each line gives the state's rows (|V| + |E_clean| + |tri|, what
-``incremental._in_one_task`` compares to ``task_tier.batch_limit()``),
-the batch's wall time and the Python workers' peak RSS.
+loops: "task" (the whole batch in one task, the gate lifted), "merge"
+(``incremental._in_one_task`` patched to decline: the Spark merge, its
+tail at the real tier gate, as above the gate) and "spark" (``TASK_ROWS
+= 0``).  Each line gives the state's rows (|V| + |E_clean| + |tri|, what
+``incremental._in_one_task`` compares to ``task_tier.TASK_ROWS``), the
+batch's wall time and the Python workers' peak RSS.
 """
 
 from __future__ import annotations
@@ -190,16 +190,14 @@ def main_abort(counts):
 def _batch_run(state, op, batch, loop: str):
     """``op`` (``incremental_update`` or ``incremental_delete``) of
     ``batch`` on ``state`` on ``loop`` (see ``--batch``)."""
-    saved = task_tier.TASK_ROWS, task_tier.BATCH_ROWS
-    task_tier.TASK_ROWS, task_tier.BATCH_ROWS = {
-        "task": (sys.maxsize, sys.maxsize),
-        "merge": (saved[0], 0),
-        "spark": (0, saved[1]),
-    }[loop]
+    saved = task_tier.TASK_ROWS, incremental._in_one_task
+    task_tier.TASK_ROWS = {"task": sys.maxsize, "spark": 0}.get(loop, saved[0])
+    if loop == "merge":
+        incremental._in_one_task = lambda state, steps: None
     try:
         out, wall, rss = _sampled(lambda: op(state, batch))
     finally:
-        task_tier.TASK_ROWS, task_tier.BATCH_ROWS = saved
+        task_tier.TASK_ROWS, incremental._in_one_task = saved
     got = {r["vId"]: r["cId"] for r in out.vertices.select("vId", "cId").collect()}
     return wall, got, rss, out.report["scope_vertices"]
 

@@ -164,8 +164,8 @@ def test_prepare_lands_only_through_its_materializer(
         if loop == "task":
             # each batch runs in one task: one split landing per batch
             # (the insert, the delete, and the CDC file, whose insert
-            # and delete share one), and each rewritten edge set
-            assert names == {"inc-batch", "inc-edges"}
+            # and delete share one), its net change carried lazily
+            assert names == {"inc-batch"}
             final, batches = "inc-batch", 3
         else:
             # the CDC file's insert and delete run as two batches
@@ -181,11 +181,13 @@ def test_prepare_lands_only_through_its_materializer(
 # (a new triangle beside the graph), a delete and a CDC batch of both.
 # Every count these batches branch on rides one of their landings, so a
 # driver-side query added to the batch path shows here.  On the task
-# loop each batch is one task and one split landing (a delete also lands
-# its rewritten edge set); on the Spark loop (``TASK_ROWS = 0``) the
-# merge and the tail run as joins, landings and the distributed rounds.
+# loop each batch is one task and one split landing of its net change;
+# the CDC batch reads the state the delete left, whose edges, clean
+# edges and triangles each anti-join the delete's removed rows (one
+# broadcast each).  On the Spark loop (``TASK_ROWS = 0``) the merge and
+# the tail run as joins, landings and the distributed rounds.
 BATCH_JOBS = {
-    "task": {"insert": 3, "delete": 4, "cdc": 7},
+    "task": {"insert": 3, "delete": 2, "cdc": 8},
     "spark": {"insert": 93, "delete": 103, "cdc": 209},
 }
 

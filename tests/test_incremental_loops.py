@@ -31,6 +31,7 @@ import random
 
 from community_detection_flink_spark.operators.incremental import (
     _SCOPE_FRACTION,
+    COMPACT_EVERY,
     INCREMENTAL_ROUNDS,
     incremental_delete,
     incremental_update,
@@ -177,3 +178,107 @@ def test_both_loops_match_the_reference_in_both_scopes(spark, seed, each_loop):
             assert task["wccv"][c][1] == n
             assert math.isclose(task["wccv"][c][0], s, rel_tol=1e-12, abs_tol=1e-15)
         assert math.isclose(task["wcc"], spark_["wcc"], rel_tol=1e-12)
+
+
+def _sequence(pairs, seed, n_batches=10):
+    """``n_batches`` batches over ``pairs``, cycling insert, delete and
+    CDC file.  An insert closes a clique over three carried vertices and
+    two new ones and re-inserts up to four pairs deleted before (so a
+    triangle a batch removed comes back); a delete drops five present
+    pairs and one absent one; a CDC file closes a triangle on a new
+    vertex, deletes two present pairs and updates three: one present,
+    one absent, and one present that the file also deletes.  Returns
+    ``(kind, rows, chain)``: ``rows`` the batch's ``(src, dst[, op])``
+    rows, ``chain`` the edge sets after each of its reference steps."""
+    rng = random.Random(seed)
+    present, ever, fresh = _undirected(pairs), set(_undirected(pairs)), 7000
+    out = []
+    for i in range(n_batches):
+        kind = ("insert", "delete", "cdc")[i % 3]
+        verts = sorted({v for e in present for v in e})
+        if kind == "insert":
+            nodes = rng.sample(verts, 3) + [fresh, fresh + 1]
+            fresh += 2
+            rows = [tuple(sorted((u, v))) for j, u in enumerate(nodes) for v in nodes[j + 1:]]
+            rows += rng.sample(sorted(ever - present), min(4, len(ever - present)))
+            chain = [present | set(rows)]
+        elif kind == "delete":
+            rows = rng.sample(sorted(present), 5) + [(fresh, fresh + 1)]
+            chain = [present - set(rows)]
+        else:
+            a, b = rng.choice(sorted(present))
+            ins = [(a, fresh), (b, fresh), (a, b)]
+            fresh += 1
+            dels = rng.sample(sorted(present - {(a, b)}), 2)
+            u_present = rng.choice(sorted(present - set(dels) - {(a, b)}))
+            absent = rng.choice([(x, y) for x in verts[:30] for y in verts[:30]
+                                 if x < y and (x, y) not in present])
+            ups = [u_present, absent, dels[0]]
+            rows = ([(*e, "I") for e in ins] + [(*e, "D") for e in dels]
+                    + [(*e, "U") for e in ups])
+            after_u = present - set(ups)
+            after_ins = after_u | set(ins) | set(ups)
+            chain = [after_u, after_ins, after_ins - set(dels)]
+        present = chain[-1]
+        ever |= present
+        out.append((kind, rows, chain))
+    return out
+
+
+def test_task_loop_carries_every_batch_and_compacts_on_one_counter(spark):
+    """More than ``COMPACT_EVERY`` batches on the task loop (inserts,
+    deletes and CDC files with U rows) against the reference chain: each
+    batch lands its net change, carried as lazy anti-joined unions, and
+    the carried tables land again only at the compaction batch.  After
+    every batch the labels, stats, |V|, WCC, rounds and scope equal the
+    reference; ``edges``, ``clean_edges`` and ``tri`` hold no duplicate
+    row and equal the reference's edge set, clean edges and triangles;
+    the carried counts equal their tables' rows; ``pending_unions``
+    counts the batches since the last compaction."""
+    import os
+
+    pairs = list(_community_graph(seed=3))
+    batches = _sequence(pairs, seed=3)
+    assert len(batches) > COMPACT_EVERY
+    state = prepare(symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG")))
+    landed = set(os.listdir(state.mat.base))
+    present, labels = _undirected(pairs), _labels(state)
+    for i, (kind, rows, chain) in enumerate(batches, start=1):
+        steps = []
+        for new in chain:
+            steps.append(oracle.incremental_batch(
+                sorted(present), sorted(new), labels, INCREMENTAL_ROUNDS, _SCOPE_FRACTION
+            ))
+            present, labels = new, steps[-1]["communities"]
+        if kind == "cdc":
+            batch = spark.createDataFrame(rows, "src LONG, dst LONG, op STRING")
+            state = apply_cdc_batch(state, batch)
+            assert [s["op"] for s in state.report["steps"]] == ["delete", "insert", "delete"]
+            assert [(s["affected_vertices"], s["scope_vertices"], s["rounds"])
+                    for s in state.report["steps"]] == [
+                (w["affected_vertices"], w["scope_vertices"], w["rounds"]) for w in steps]
+        else:
+            step = incremental_update if kind == "insert" else incremental_delete
+            state = step(state, spark.createDataFrame(rows, "src LONG, dst LONG"))
+        assert state.report["refinement"] == "task"
+        _assert_matches(state, steps[-1])
+
+        clean_adj, _, _, _, tri = oracle.preprocess(oracle.symmetrize(present))
+        for df in (state.edges, state.clean_edges, state.tri):
+            assert df.count() == df.distinct().count()
+        assert {(r.src, r.dst) for r in state.edges.collect()} == {
+            e for a, b in present for e in ((a, b), (b, a))}
+        assert {(r.src, r.dst) for r in state.clean_edges.collect()} == {
+            (v, w) for v, nbrs in clean_adj.items() for w in nbrs}
+        assert {tuple(sorted(r)) for r in state.tri.collect()} == {
+            tuple(sorted(t)) for t in tri}
+        assert state.tri_count == state.tri.count() == len(tri)
+        assert state.clean_edge_count == state.clean_edges.count()
+
+        assert state.pending_unions == i % COMPACT_EVERY
+        now = set(os.listdir(state.mat.base))
+        names = {p.rsplit("-", 1)[0] for p in now - landed}
+        compacted = {"inc-edges", "inc-clean", "inc-tri-static"}
+        assert names == ({"inc-batch"} | compacted if i == COMPACT_EVERY else {"inc-batch"})
+        landed = now
+    state.mat.cleanup()
