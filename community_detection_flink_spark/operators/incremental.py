@@ -38,12 +38,12 @@ exact — every divergence documented:
   same election, scope rule and rounds over one shared in-task graph,
   the stats and WCC sums of every community recomputed (below the gate
   the task reads the whole state anyway, so a splice saves nothing),
-  and one split landing of the batch's net change to the carried
-  tables, which every batch carries the one way ``_extend`` says,
-  whatever it inserts or deletes.  A batch of several steps
-  (``incremental_steps``: a CDC micro-batch's U-deletes, inserts and
-  deletes) runs all of them in that one task, each step on the arrays
-  the one before returned.  Otherwise the merge runs as joins and
+  and one split landing of the carried tables' rows gone from and new
+  to their last landed roots, the batch's net change folded in — one
+  carry rule (``_extend``), whatever the batch inserts or deletes.  A
+  batch of several steps (``incremental_steps``: a CDC micro-batch's
+  U-deletes, inserts and deletes) runs all of them in that one task,
+  each step on the arrays the one before returned.  Otherwise the merge runs as joins and
   landings and the tail (``_elect_and_refine``) as the election,
   ``_pick_scope`` and ``movement_rounds``, each on the loop its own
   state fits.
@@ -149,13 +149,19 @@ class WCCState:
     # ``None`` (unknown) stays ``None``
     max_vertex: int | None = None
     # batches since ``edges``/``clean_edges``/``tri`` were last
-    # parquet-landed: a batch in one task, and a Spark insert, carry
-    # each as a LAZY ``(carried ∪ adds) anti-join removes`` of its net
-    # change (``_extend``; no O(|E|) rewrite per batch — the r2 plans
-    # all paid one), compacted to a single parquet root every
-    # COMPACT_EVERY batches so scan fan-out and plan depth stay bounded;
-    # a Spark delete rewrites all three and resets it
+    # parquet-landed: a batch in one task, and a Spark insert, fold
+    # their net change into ``carried`` (``_extend``; no O(|E|) rewrite
+    # per batch — the r2 plans all paid one), and the tables land again
+    # as their new roots every COMPACT_EVERY batches, so scan fan-out
+    # stays bounded; a Spark delete rewrites all three and resets it
     pending_unions: int = 0
+    # since that landing, each of ``edges``, ``clean_edges`` and ``tri``
+    # as ``(root, gone, new)``: the landed root, the rows removed from
+    # it and the rows added since, landed flat (None: no such rows); the
+    # table is the LAZY ``(root anti-join gone) ∪ new``, so reading it
+    # costs at most one broadcast of ``gone``, however many batches
+    # folded into it.  None: each table is its own root
+    carried: tuple | None = None
 
 
 def prepare(
@@ -342,17 +348,18 @@ def _spark_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
     )
 
-    edges, clean_new, tri_static, pending = _extend(state, [new_e, clean_add, tri])
+    # the adds join each table's new rows (a root row this batch adds
+    # back stays in ``gone`` and comes back through ``new``)
+    levels = [(gone, add if new is None else new.unionByName(add))
+              for (_, gone, new), add in zip(_carried(state), [new_e, clean_add, tri])]
     return _elect_and_refine(state, "insert", _land_vertices(
-        vertex_table, mat, edges=edges, tri=tri_static,
+        vertex_table, mat, **_extend(state, levels),
         tri_count=state.tri_count + int(tri_obs.get["n"]),
-        clean_edges=clean_new,
         clean_edge_count=state.clean_edge_count + int(add_obs.get["n"]),
         # t changes exactly at corners of new triangles; vt changes at
         # endpoints of newly-cleaned edges — all of which are corners
         # too (a new clean edge is an edge of some new triangle)
         changed=tri.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct(),
-        pending_unions=pending,
         max_vertex=_raised(state.max_vertex, new_obs.get["m"]),
     ))
 
@@ -366,28 +373,44 @@ def _raised(max_vertex: int | None, batch_max) -> int | None:
     return max(max_vertex, int(batch_max))
 
 
-def _extend(state: WCCState, adds: list, removes: list | None = None):
-    """The carried edges, clean edges and triangles after a batch that
-    adds the rows ``adds`` and removes the rows ``removes`` (one table
-    each, in that order; None: it removes none), and the next
-    ``pending_unions``.  Each is carried as ``(carried ∪ adds) anti-join
-    removes``: the adds are DISJOINT from the carried set (so a plain
-    union), a row both added and removed (a pair a batch inserts, then
-    deletes) goes, and an anti-join against an empty removes table folds
-    away.  The tables stay LAZY (a scan of the
-    carried parquet roots plus each batch's delta files): landing them
-    would rewrite the ENTIRE O(|E|) and O(|T|) sets every batch for no
-    lineage benefit.  Every ``COMPACT_EVERY`` batches they land, so scan
-    fan-out and plan depth stay bounded."""
-    carried = (state.edges, state.clean_edges, state.tri)
-    tables = [table.unionByName(add) for table, add in zip(carried, adds)]
-    if removes is not None:
-        tables = [t.join(F.broadcast(gone), gone.columns, "left_anti")
-                  for t, gone in zip(tables, removes)]
+def _carried(state: WCCState) -> tuple:
+    """``state.carried``: its edges, clean edges and triangles, each as
+    ``(root, gone, new)``."""
+    if state.carried is not None:
+        return state.carried
+    return tuple((table, None, None) for table in (state.edges, state.clean_edges, state.tri))
+
+
+def _table(root: DataFrame, gone: DataFrame | None, new: DataFrame | None) -> DataFrame:
+    """A carried table: ``(root anti-join gone) ∪ new``; an empty
+    ``gone`` or ``new`` folds away."""
+    if gone is not None:
+        root = root.join(F.broadcast(gone), gone.columns, "left_anti")
+    return root if new is None else root.unionByName(new)
+
+
+def _extend(state: WCCState, levels: list) -> dict:
+    """The carried ``edges``, ``clean_edges`` and ``tri`` after a batch,
+    whose ``levels`` are each table's ``(gone, new)`` rows since its
+    root with the batch folded in, with ``carried`` and the next
+    ``pending_unions`` (as ``WCCState`` fields).  The one carry rule of
+    every batch but a Spark delete: a row the batch removes leaves
+    ``new`` and joins ``gone`` (where it is no root row, it removes
+    nothing), and a row it adds joins ``new`` (a root row added back
+    too: ``gone`` keeps its root copy out), so the table ``(root
+    anti-join gone) ∪ new`` stays one level deep, however many batches
+    folded into it.  The tables stay LAZY (a scan of the
+    roots plus the landed levels): landing them would rewrite the ENTIRE
+    O(|E|) and O(|T|) sets every batch for no lineage benefit.  Every
+    ``COMPACT_EVERY`` batches they land as the new roots, so scan
+    fan-out stays bounded."""
+    carried = tuple((root, *level) for (root, _, _), level in zip(_carried(state), levels))
+    tables = [_table(*c) for c in carried]
+    fields = ("edges", "clean_edges", "tri")
     if state.pending_unions + 1 < COMPACT_EVERY:
-        return (*tables, state.pending_unions + 1)
+        return dict(zip(fields, tables), carried=carried, pending_unions=state.pending_unions + 1)
     names = ("inc-edges", "inc-clean", "inc-tri-static")
-    return (*(state.mat(df, name) for df, name in zip(tables, names)), 0)
+    return dict(zip(fields, map(state.mat, tables, names)), carried=None, pending_unions=0)
 
 
 # what a batch's report keeps of each of its steps (``report["steps"]``)
@@ -400,9 +423,10 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
     and ``_elect_and_refine``'s tail) in one task, when the
     carried |V| + |E_clean| + |tri| fits the small-state tier
     (``task_tier.incremental_batch``): one split landing, whatever the
-    steps, with the batch's net change to the carried edges, clean edges
-    and triangles, which ``_extend`` carries as lazy anti-joined unions
-    and compacts on the one ``pending_unions`` counter.  The task
+    steps, with the carried edges', clean edges' and triangles' gone and
+    new rows, the batch's net change folded in, which ``_extend`` carries
+    as one lazy ``(root anti-join gone) ∪ new`` per table and compacts
+    on the one ``pending_unions`` counter.  The task
     recomputes the stats and WCC sums of every community instead of
     splicing them (it reads the whole state anyway).  The report is the
     last step's, with every step's in ``steps``.  None when the state
@@ -413,34 +437,28 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
     if not task_tier.fits(rows):
         return None
     out = task_tier.incremental_batch(
-        state, steps, rows, FixedRounds(INCREMENTAL_ROUNDS),
+        state, _carried(state), steps, rows, FixedRounds(INCREMENTAL_ROUNDS),
         ScopeRule(_SCOPE_FRACTION), MAX_ITERATIONS,
     )
     if out is None:
         return None
     landed, info = out
-    tags = ("edges", "clean-edges", "tri")
-    edges, clean, tri, pending = _extend(
-        state, [landed[tag] for tag in tags], [landed[f"{tag}-gone"] for tag in tags]
-    )
     last = info["steps"][-1]
     return WCCState(
-        edges=edges,
-        clean_edges=clean,
+        **_extend(state, [(landed[f"{tag}-gone"], landed[tag])
+                          for tag in ("edges", "clean-edges", "tri")]),
         vertices=landed["vertices"],
         stats=landed["stats"],
         global_wcc=info["wcc"],
         vertex_count=info["vertices"],
         clean_edge_count=info["clean_edges"],
         tri_count=info["tri"],
-        tri=tri,
         wccv=landed["wccv"],
         mat=state.mat,
         report=dict(
             election="task", refinement="task", steps=info["steps"],
             **{key: last[key] for key in _STEP_KEYS},
         ),
-        pending_unions=pending,
         max_vertex=_raised(state.max_vertex, info["max_vertex"]),
     )
 
@@ -499,6 +517,7 @@ class _Merge(NamedTuple):
     # ``_elect_and_refine`` for why a delete passes its own)
     affected_comms: DataFrame | None = None
     pending_unions: int = 0
+    carried: tuple | None = None  # (``WCCState.carried``)
     # the next state's id ceiling (``WCCState.max_vertex``)
     max_vertex: int | None = None
 
@@ -691,6 +710,7 @@ def _elect_and_refine(state: WCCState, op: str, merge: _Merge) -> WCCState:
         mat=mat,
         report=dict(report, steps=[dict(op=op, **{k: report[k] for k in _STEP_KEYS})]),
         pending_unions=merge.pending_unions,
+        carried=merge.carried,
         max_vertex=merge.max_vertex,
     )
 

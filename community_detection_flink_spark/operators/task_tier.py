@@ -38,9 +38,10 @@ Five tasks, each chosen on row counts that ride earlier landings:
   election, the scope rule, the fixed rounds, and the stats and WCC sums
   of every community, on the arrays the step before returned — with one
   landing, of one shape whatever the steps: the final vertices, stats
-  and WCC sums, and the batch's net change to the carried edges, clean
-  edges and triangles (the rows to add and to remove), when the carried
-  |V| + |E_clean| + |tri| fits; like the graph task, it
+  and WCC sums, and the carried edges', clean edges' and triangles' rows
+  gone from and new to their roots, the batch's net change folded in
+  (the task reads them with the roots, so no read costs a join), when
+  the carried |V| + |E_clean| + |tri| fits; like the graph task, it
   gives up when the batches, an insert's incident edges or its new
   triangles (closed in bounded wedge chunks) stop fitting, and the
   steps then run one by one;
@@ -841,92 +842,118 @@ def _batch_tail(ids, carried, labels, t, cs, cd, tri, changed, policy, rule,
         "wccv": dict(a=comms, b=size,
                      cc=np.bincount(ci, np.where(ok, wcc_v, 0.0), minlength=len(comms))),
     }
-    info = dict(vertices=n, wcc=math.fsum(wcc_v[ok]) / max(n, 1), affected_vertices=n_affected,
-                scope_vertices=n_vr if scoped else None, moves=moves)
-    return parts, info
+    report = dict(affected_vertices=n_affected, scope_vertices=n_vr if scoped else None,
+                  rounds=len(moves), moves=moves)
+    return parts, dict(vertices=n, wcc=math.fsum(wcc_v[ok]) / max(n, 1), report=report)
+
+
+def _row_keys(ids: np.ndarray, tables: list, sort: bool) -> list[np.ndarray]:
+    """One int64 key per row of each of ``tables`` (lists of id
+    columns, every id in ``ids``, ascending), equal iff the rows are
+    equal — as sets of ids when ``sort`` (a triangle's corners are
+    carried in any order, and a clean edge in both), else as tuples.  A
+    row's key folds each of its positions into the dense rank of the
+    ones before it, so it stays exact (``u·n² + v·n + w`` would
+    overflow above ~2.1M vertices).  Keys compare within one call
+    only."""
+    pos = np.searchsorted(ids, np.concatenate(tables, axis=1))
+    if sort:
+        pos = np.sort(pos, axis=0)
+    key = pos[0]
+    for col in pos[1:]:
+        key = np.unique(key, return_inverse=True)[1] * len(ids) + col
+    return np.split(key, np.cumsum([len(t[0]) for t in tables])[:-1])
 
 
 def _net(ids: np.ndarray, before: list, after: list, origin: np.ndarray):
     """The net change from the table ``before`` to ``after``, whose rows
-    come from the rows ``origin`` of ``before`` (-1: a new row): the
-    rows to remove and the rows to add, each as packed fields ``a``,
-    ``b`` (, ``c``) — the rows of ``before`` no row comes from and the
-    new rows, less those removed and added back.  A table is a list of
-    id columns (every id in ``ids``, ascending), and a row compares as
-    the set of its ids: a triangle's corners are carried in any order,
-    and a clean edge in both.  A row's key folds each of its sorted
-    positions into the dense rank of the ones before it, so it stays an
-    exact int64 (``u·n² + v·n + w`` would overflow above ~2.1M
-    vertices)."""
+    come from the rows ``origin`` of ``before`` (-1: a new row), as two
+    masks: the rows of ``before`` to remove — those no row comes from —
+    and the rows of ``after`` to add — the new ones —, less those
+    removed and added back (equal as sets of ids)."""
     gone = np.isin(np.arange(len(before[0])), origin, invert=True)
-    before, after = [c[gone] for c in before], [c[origin < 0] for c in after]
-    m = len(before[0])
-    pos = np.sort(np.searchsorted(ids, np.concatenate([before, after], axis=1)), axis=0)
-    key = pos[0]
-    for col in pos[1:]:
-        key = np.unique(key, return_inverse=True)[1] * len(ids) + col
-    old, new = key[:m], key[m:]
-    return tuple(dict(zip("abc", (c[keep] for c in rows)))
-                 for rows, keep in ((before, ~np.isin(old, new)), (after, ~np.isin(new, old))))
+    added = origin < 0
+    old, new = _row_keys(ids, [[c[gone] for c in before], [c[added] for c in after]], True)
+    gone[gone] = ~np.isin(old, new)
+    added[added] = ~np.isin(new, old)
+    return gone, added
 
 
-def incremental_batch(state, steps: list, rows: int, policy, rule,
+def _carried_rows(ids: np.ndarray, root: list, gone: list, new: list) -> list:
+    """A carried table, ``(root anti-join gone) ∪ new`` (see
+    ``incremental.WCCState.carried``), over arrays: the rows of
+    ``root`` that are no row of ``gone``, then the rows of ``new``."""
+    if len(gone[0]):
+        keep = ~np.isin(*_row_keys(ids, [root, gone], False))
+        root = [c[keep] for c in root]
+    return [np.concatenate(x) for x in zip(root, new)]
+
+
+def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
                       max_iterations: int) -> tuple[dict, dict] | None:
     """Incremental ``steps`` on ``state`` (an ``incremental.WCCState``
-    of ``rows`` vertex, clean-edge and triangle rows) in ONE task.
-    ``steps``: ``(op, batch)`` pairs, ``op`` "insert" or "delete" (at
-    most one insert) and ``batch`` an edge list ``(src, dst)``, applied
-    in order; each step is the merge of its batch (symmetrized in the
-    task, so no batch costs a shuffle), then the tail, over the arrays
-    the step before it returned.  The task reads the carried vertices,
-    clean edges and triangles, each step's batch under its own tag and,
-    for an insert, the carried edges from its batch's endpoints (less,
-    in the task, the pairs earlier steps deleted).  It lands with one
+    of ``rows`` vertex, clean-edge and triangle rows, whose edges, clean
+    edges and triangles are ``carried``: each ``(root, gone, new)``, see
+    ``WCCState.carried``) in ONE task.  ``steps``: ``(op, batch)``
+    pairs, ``op`` "insert" or "delete" (at most one insert) and
+    ``batch`` an edge list ``(src, dst)``, applied in order; each step
+    is the merge of its batch (symmetrized in the task, so no batch
+    costs a shuffle), then the tail, over the arrays the step before it
+    returned.  The task reads the carried vertices, the roots, gone and
+    new rows of the clean edges and triangles, the gone and new edges,
+    each step's batch under its own tag and, for an insert, the root
+    edges from its batch's endpoints; it forms the carried tables itself
+    (``_carried_rows``), so reading them costs no join.  It lands with one
     split landing (``inc-batch``): the final vertices, the stats and WCC
-    sums of every community, and the batch's net change to the carried
-    edges, clean edges and triangles, whatever its steps — the rows to
-    add (``edges``, ``clean-edges``, ``tri``) and the rows to remove
-    (each tag with ``-gone``), relative to the state the task read.
-    Each step reports the row it came from of each of its clean edges
-    and triangles (``origin``); composed over the steps, they give once,
-    at the end, the input rows to remove (a triangle as its input row,
-    corners in their carried order) and the final rows to add
-    (``_net``).  The added edges are the insert's pairs new to
-    ``state.edges``, the removed ones the pairs whose last step deletes
-    them.
+    sums of every community, and the carried tables' gone and new rows
+    after the batch, whatever its steps — ``edges``, ``clean-edges``,
+    ``tri`` (new) and each tag with ``-gone``.  The batch's net change
+    folds into them (``incremental._extend``'s rule).  Each step reports the row it came from of each
+    of its clean edges and triangles (``origin``); composed over the
+    steps, they give once, at the end, the input rows to remove (a
+    triangle as its input row, corners in their carried order) and the
+    final rows to add (``_net``).  The added edges are the insert's
+    pairs new to ``state.edges``, the removed ones the pairs whose last
+    step deletes them (a pair never carried too: it removes nothing).
 
     The final counts and every step's report (``steps``) ride it.
     Returns ``(landings, info)``, or None (nothing left landed) when the
-    rows the steps hold beside the state — their batches, the insert's
-    incident edges and new triangles, counted against one
-    ``TASK_ROWS - rows`` — would take it past ``TASK_ROWS``; an
-    insert closes its wedges in bounded chunks (``_through``), so it
-    gives up before it holds more."""
+    rows the task holds beside the state — the gone and new rows, the
+    batches, the insert's incident edges and new triangles, counted
+    against one ``TASK_ROWS - rows`` — would take it past
+    ``TASK_ROWS``; an insert closes its wedges in bounded chunks
+    (``_through``), so it gives up before it holds more."""
 
     cap = TASK_ROWS - rows
     columns = [name for name, _ in _FIELDS] + ["d"]
     ops = [op for op, _ in steps]
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = pdf["k"].to_numpy()
+        k, of = pdf["k"].to_numpy(), pdf["t"].to_numpy()
         v = pdf[k == _VERTEX].sort_values("a")
 
-        def rows_of(tag, *cols):
-            return [pdf[k == tag][c].to_numpy() for c in cols]
+        def rows_of(tag, *cols, level=0):  # level: 0 root, 1 gone, 2 new
+            return [pdf[(k == tag) & (of == level)][c].to_numpy() for c in cols]
 
         vid, lab, t = (v[c].to_numpy() for c in ("a", "b", "t"))
-        clean, tri = rows_of(_EDGE, "a", "b"), rows_of(_TRIANGLE, "a", "b", "c")
-        carried, incident = (clean, tri), rows_of(_INCIDENT, "a", "b")
-        origin = [np.arange(len(x[0])) for x in carried]  # each row's input row; -1: new
+        levels = [[rows_of(tag, *cols, level=i) for i in range(3)]
+                  for tag, cols in ((_INCIDENT, "ab"), (_EDGE, "ab"), (_TRIANGLE, "abc"))]
+        carried = clean, tri = [_carried_rows(vid, *x) for x in levels[1:]]
         batches = [_symmetrized(rows_of(_BATCH + i, "a", "b")) for i in range(len(ops))]
-        left, reports, max_vertex = cap, [], None
-        gone = [_NONE, _NONE]  # the pairs the steps so far deleted
+        origin = [np.arange(len(x[0])) for x in carried]  # each row's input row; -1: new
+        incident = [_NONE, _NONE]
+        if "insert" in ops:
+            (root, gone, new), ends = levels[0], batches[ops.index("insert")][0]
+            incident = _carried_rows(vid, root, gone, [c[np.isin(new[0], ends)] for c in new])
+        left = cap - sum(len(x[0]) for level in levels for x in level[1:])
+        reports, max_vertex = [], None
+        deleted = [_NONE, _NONE]  # the pairs the steps so far deleted
         for op, batch in zip(ops, batches):
             if op == "delete":
                 merged = _delete(vid, lab, t, clean, tri, batch, left)
-                gone = [np.concatenate(x) for x in zip(gone, batch)]
+                deleted = [np.concatenate(x) for x in zip(deleted, batch)]
             else:
-                merged = _insert(vid, lab, t, clean, tri, batch, left, incident, gone)
+                merged = _insert(vid, lab, t, clean, tri, batch, left, incident, deleted)
             if merged is None:
                 return _tagged(columns, {}, {"tri": None})
             *graph, info = merged
@@ -935,10 +962,7 @@ def incremental_batch(state, steps: list, rows: int, policy, rule,
             left -= info["rows"]
             if info["max_vertex"] is not None:
                 max_vertex = info["max_vertex"]
-            moves = tail_info.pop("moves")
-            reports.append(dict(op=op, affected_vertices=tail_info.pop("affected_vertices"),
-                                scope_vertices=tail_info.pop("scope_vertices"),
-                                rounds=len(moves), moves=moves))
+            reports.append(dict(op=op, **tail_info.pop("report")))
             # the next step's input: the ids this step's arrays index
             ids, _, _, t, cs, cd, tri_at = graph[:7]
             vid, lab = ids, tail["vertices"]["b"]
@@ -950,37 +974,52 @@ def incremental_batch(state, steps: list, rows: int, policy, rule,
             last = np.union1d(last, keys) if op == "delete" else np.setdiff1d(last, keys)
             if op == "insert":
                 fresh = np.setdiff1d(keys, _keys(vid, incident))
+        _, gone, new = levels[0]
         parts = dict(tail)
-        for tag, keys in (("edges", fresh), ("edges-gone", last)):
+        for tag, keys in (("edges", np.setdiff1d(np.union1d(_keys(vid, new), fresh), last)),
+                          ("edges-gone", np.union1d(_keys(vid, gone), last))):
             parts[tag] = dict(a=vid[keys // n], b=vid[keys % n])
-        for tag, *tables in zip(("clean-edges", "tri"), carried, (clean, tri), origin):
-            parts[f"{tag}-gone"], parts[tag] = _net(vid, *tables)
+        for tag, (_, gone, new), before, after, o in zip(
+                ("clean-edges", "tri"), levels[1:], carried, (clean, tri), origin):
+            out, add = _net(vid, before, after, o)
+            m = len(before[0]) - len(new[0])  # the root rows: new ones follow them
+            parts[f"{tag}-gone"] = dict(zip("abc", (
+                np.concatenate([g, c[out]]) for g, c in zip(gone, before))))
+            parts[tag] = dict(zip("abc", (
+                np.concatenate([c[m:][~out[m:]], x[add]]) for c, x in zip(before, after))))
         info = dict(tail_info, clean_edges=len(clean[0]), tri=len(tri[0]),
                     max_vertex=max_vertex, steps=reports)
         return _tagged(columns, parts, info)
 
+    def levels(tag, tables, **cols):  # a carried table's parts, ``t`` its level
+        return [_part(tag, df.withColumn("_level", F.lit(i)), t="_level", **cols)
+                for i, df in enumerate(tables) if df is not None]
+
+    (edges, gone, new), clean, tri = carried
+    pair = dict(a="src", b="dst")
     parts = [
         _sentinel(state.vertices),
         _part(_VERTEX, state.vertices, a="vId", b="cId", t="t"),
-        _part(_EDGE, state.clean_edges, a="src", b="dst"),
-        _part(_TRIANGLE, state.tri, a="u", b="v", c="w"),
+        *levels(_EDGE, clean, **pair),
+        *levels(_TRIANGLE, tri, a="u", b="v", c="w"),
+        *levels(_INCIDENT, (None, gone, new), **pair),
     ]
     for i, (op, batch) in enumerate(steps):
         batch = batch.where(F.col("src") != F.col("dst"))  # as symmetrize_edges
-        parts.append(_part(_BATCH + i, batch, a="src", b="dst"))
+        parts.append(_part(_BATCH + i, batch, **pair))
         if op == "insert":
             ends = batch.select("src").unionByName(batch.select(F.col("dst").alias("src")))
-            incident = state.edges.join(F.broadcast(ends), "src", "left_semi")
-            parts.append(_part(_INCIDENT, incident, a="src", b="dst"))
-    edges = [F.col("a").alias("src"), F.col("b").alias("dst")]
-    tri = [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")]
+            incident = edges.join(F.broadcast(ends), "src", "left_semi")
+            parts.append(_part(_INCIDENT, incident, **pair))
+    edge_cols = [F.col("a").alias("src"), F.col("b").alias("dst")]
+    tri_cols = [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")]
     split = {
         "vertices": [F.col("a").alias("vId"), "t", "vt", "cc", F.col("b").alias("cId")],
         "stats": [F.col("a").alias("cId"), F.col("t").alias("r"), F.col("cc").alias("a"),
                   "b", "d"],
         "wccv": [F.col("a").alias("cId"), F.col("cc").alias("s"), F.col("b").alias("n")],
     }
-    for tag, cols in (("edges", edges), ("clean-edges", edges), ("tri", tri)):
+    for tag, cols in (("edges", edge_cols), ("clean-edges", edge_cols), ("tri", tri_cols)):
         split[tag] = split[f"{tag}-gone"] = cols
     plan = _one_task(parts, task, f"k STRING, {_PACKED}, d DOUBLE, info STRING")
     landed, info = _land(state.mat, plan, "inc-batch", split)

@@ -181,8 +181,9 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame) -> WCCState:
 
     The (up to three) steps run as one ``incremental_steps`` call: when
     the carried state fits the small-state tier, all of them run in ONE
-    task with one split landing (``inc-batch``) of the batch's net
-    change, whatever its ops; otherwise, or when that task gives up,
+    task with one split landing (``inc-batch``) of the carried tables'
+    gone and new rows, the batch's net change folded in, whatever its
+    ops; otherwise, or when that task gives up,
     each step runs as its own batch.  Everything lands
     through ``state.mat``.  The returned state's ``report`` is the last
     step's, and ``report["steps"]`` holds every step's.  One aggregate

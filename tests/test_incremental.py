@@ -181,13 +181,13 @@ def test_prepare_lands_only_through_its_materializer(
 # (a new triangle beside the graph), a delete and a CDC batch of both.
 # Every count these batches branch on rides one of their landings, so a
 # driver-side query added to the batch path shows here.  On the task
-# loop each batch is one task and one split landing of its net change;
-# the CDC batch reads the state the delete left, whose edges, clean
-# edges and triangles each anti-join the delete's removed rows (one
-# broadcast each).  On the Spark loop (``TASK_ROWS = 0``) the merge and
-# the tail run as joins, landings and the distributed rounds.
+# loop each batch is one task and one split landing of its carried
+# tables' gone and new rows; the CDC batch reads the rows the delete
+# left gone in that task too, at no join.  On the Spark loop
+# (``TASK_ROWS = 0``) the merge and the tail run as joins, landings and
+# the distributed rounds.
 BATCH_JOBS = {
-    "task": {"insert": 3, "delete": 2, "cdc": 8},
+    "task": {"insert": 3, "delete": 2, "cdc": 5},
     "spark": {"insert": 93, "delete": 103, "cdc": 209},
 }
 

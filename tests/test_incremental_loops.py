@@ -225,25 +225,39 @@ def _sequence(pairs, seed, n_batches=10):
     return out
 
 
-def test_task_loop_carries_every_batch_and_compacts_on_one_counter(spark):
+# the second case runs its fourth batch, an insert that re-inserts
+# deleted pairs, on the Spark loop, on the gone and new rows the task
+# batches left (a state that grew past the gate between compactions);
+# the fifth runs on the task again
+@pytest.mark.parametrize("n_batches, spark_batches", [
+    (10, ()), pytest.param(5, (4,), marks=pytest.mark.slow)])
+def test_task_loop_carries_every_batch_and_compacts_on_one_counter(
+        spark, monkeypatch, n_batches, spark_batches):
     """More than ``COMPACT_EVERY`` batches on the task loop (inserts,
     deletes and CDC files with U rows) against the reference chain: each
-    batch lands its net change, carried as lazy anti-joined unions, and
-    the carried tables land again only at the compaction batch.  After
-    every batch the labels, stats, |V|, WCC, rounds and scope equal the
-    reference; ``edges``, ``clean_edges`` and ``tri`` hold no duplicate
-    row and equal the reference's edge set, clean edges and triangles;
-    the carried counts equal their tables' rows; ``pending_unions``
-    counts the batches since the last compaction."""
+    batch folds its net change into one level of gone and new rows per
+    carried table, and the carried tables land again only at the
+    compaction batch.  After every batch the labels, stats, |V|, WCC,
+    rounds and scope equal the reference; ``edges``, ``clean_edges`` and
+    ``tri`` hold no duplicate row, equal the reference's edge set, clean
+    edges and triangles, and each reads through at most one broadcast
+    (its gone rows), however many batches folded in; the carried counts
+    equal their tables' rows; ``pending_unions`` counts the batches
+    since the last compaction."""
     import os
 
+    from community_detection_flink_spark.operators import task_tier
+
     pairs = list(_community_graph(seed=3))
-    batches = _sequence(pairs, seed=3)
-    assert len(batches) > COMPACT_EVERY
+    batches = _sequence(pairs, seed=3, n_batches=n_batches)
+    assert n_batches > COMPACT_EVERY or spark_batches
     state = prepare(symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG")))
     landed = set(os.listdir(state.mat.base))
     present, labels = _undirected(pairs), _labels(state)
+    task_rows = task_tier.TASK_ROWS
     for i, (kind, rows, chain) in enumerate(batches, start=1):
+        loop = "spark" if i in spark_batches else "task"
+        monkeypatch.setattr(task_tier, "TASK_ROWS", task_rows if loop == "task" else 0)
         steps = []
         for new in chain:
             steps.append(oracle.incremental_batch(
@@ -260,12 +274,14 @@ def test_task_loop_carries_every_batch_and_compacts_on_one_counter(spark):
         else:
             step = incremental_update if kind == "insert" else incremental_delete
             state = step(state, spark.createDataFrame(rows, "src LONG, dst LONG"))
-        assert state.report["refinement"] == "task"
+        assert state.report["refinement"] == loop
         _assert_matches(state, steps[-1])
 
         clean_adj, _, _, _, tri = oracle.preprocess(oracle.symmetrize(present))
         for df in (state.edges, state.clean_edges, state.tri):
             assert df.count() == df.distinct().count()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("BroadcastExchange") <= 1
         assert {(r.src, r.dst) for r in state.edges.collect()} == {
             e for a, b in present for e in ((a, b), (b, a))}
         assert {(r.src, r.dst) for r in state.clean_edges.collect()} == {
@@ -277,8 +293,9 @@ def test_task_loop_carries_every_batch_and_compacts_on_one_counter(spark):
 
         assert state.pending_unions == i % COMPACT_EVERY
         now = set(os.listdir(state.mat.base))
-        names = {p.rsplit("-", 1)[0] for p in now - landed}
-        compacted = {"inc-edges", "inc-clean", "inc-tri-static"}
-        assert names == ({"inc-batch"} | compacted if i == COMPACT_EVERY else {"inc-batch"})
+        if loop == "task":
+            names = {p.rsplit("-", 1)[0] for p in now - landed}
+            compacted = {"inc-edges", "inc-clean", "inc-tri-static"}
+            assert names == ({"inc-batch"} | compacted if i == COMPACT_EVERY else {"inc-batch"})
         landed = now
     state.mat.cleanup()
