@@ -43,10 +43,10 @@ exact — every divergence documented:
   carry rule (``_extend``), whatever the batch inserts or deletes.  A
   batch of several steps (``incremental_steps``: a CDC micro-batch's
   U-deletes, inserts and deletes) runs all of them in that one task,
-  each step on the arrays the one before returned.  Otherwise the merge runs as joins and
-  landings and the tail (``_elect_and_refine``) as the election,
-  ``_pick_scope`` and ``movement_rounds``, each on the loop its own
-  state fits.
+  each step on the arrays the one before returned.  Otherwise the merge
+  runs as joins and landings and the tail (``_elect_and_refine``) as
+  the election, ``_pick_scope`` and ``movement_rounds``, each on the
+  loop its own state fits.
 * The reference returns the PRE-batch community stats
   (``IncrementalWCC.scala:69`` quirk); we return the freshly computed
   stats — the honest value.
@@ -399,9 +399,9 @@ def _extend(state: WCCState, levels: list) -> dict:
     nothing), and a row it adds joins ``new`` (a root row added back
     too: ``gone`` keeps its root copy out), so the table ``(root
     anti-join gone) ∪ new`` stays one level deep, however many batches
-    folded into it.  The tables stay LAZY (a scan of the
-    roots plus the landed levels): landing them would rewrite the ENTIRE
-    O(|E|) and O(|T|) sets every batch for no lineage benefit.  Every
+    folded into it.  The tables stay LAZY (a scan of the roots plus the
+    landed levels): landing them would rewrite the ENTIRE O(|E|) and
+    O(|T|) sets every batch for no lineage benefit.  Every
     ``COMPACT_EVERY`` batches they land as the new roots, so scan
     fan-out stays bounded."""
     carried = tuple((root, *level) for (root, _, _), level in zip(_carried(state), levels))

@@ -87,7 +87,9 @@ from community_detection_flink_spark.operators.movement import protocol, replay
 # largest state measured.  An incremental batch's task (``--batch``; a
 # 21-edge insert and a 10-edge delete on a prepared co-purchase state)
 # beat the Spark merge at every size measured up to 4.06M rows: 8.1 s vs
-# 14.5 s and 8.7 s vs 19.8 s there, at ~1.2 GB worker peak.
+# 14.5 s and 8.7 s vs 19.8 s there, at ~1.2 GB worker peak; so did a
+# 10-file CDC stream, each batch reading the removed rows the ones before
+# left, at 3.53M rows: 88 s vs 267 s (plans/r18/stream.txt).
 TASK_ROWS = 4_000_000
 
 

@@ -55,7 +55,7 @@ def one_run(clusters: int, files: int) -> dict:
     from community_detection_flink_spark.streaming.incremental_stream import run_stream
 
     t_start = time.perf_counter()
-    work = tempfile.mkdtemp(prefix="stream-ab-", dir=os.environ.get("STREAM_AB_TMP"))
+    work = tempfile.mkdtemp(prefix="stream-ab-")
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", 4)
@@ -73,6 +73,9 @@ def one_run(clusters: int, files: int) -> dict:
         rows = state.vertex_count + state.clean_edge_count + state.tri_count
         src = os.path.join(work, "source")
         os.makedirs(src)
+        # the file source takes files in modification-time order; files
+        # written within one clock tick would tie and run in any order
+        mtime = time.time() - len(cdc)
         for k, f in enumerate(cdc):
             ops = [(*e, "I") for e in f.inserts] + [(*e, "D") for e in f.deletes]
             tmp = os.path.join(work, f"batch-{k:03d}.parquet")
@@ -81,6 +84,7 @@ def one_run(clusters: int, files: int) -> dict:
                 "dst": pa.array([r[1] for r in ops], pa.int64()),
                 "op": pa.array([r[2] for r in ops], pa.string()),
             }), tmp)
+            os.utime(tmp, (mtime + k, mtime + k))
             os.rename(tmp, os.path.join(src, os.path.basename(tmp)))
         setup = time.perf_counter() - t_start
         marks = [time.perf_counter()]
