@@ -39,14 +39,17 @@ exact — every divergence documented:
   the stats and WCC sums of every community recomputed (below the gate
   the task reads the whole state anyway, so a splice saves nothing),
   and one split landing of the carried tables' rows gone from and new
-  to their last landed roots, the batch's net change folded in — one
-  carry rule (``_extend``), whatever the batch inserts or deletes.  A
+  to their last landed roots, the batch's net change folded in.  A
   batch of several steps (``incremental_steps``: a CDC micro-batch's
   U-deletes, inserts and deletes) runs all of them in that one task,
   each step on the arrays the one before returned.  Otherwise the merge
-  runs as joins and landings and the tail (``_elect_and_refine``) as
-  the election, ``_pick_scope`` and ``movement_rounds``, each on the
-  loop its own state fits.
+  runs as joins and batch-sized landings, folds its removed and added
+  rows in the same way (``_fold``), and the tail
+  (``_elect_and_refine``) runs as the election, ``_pick_scope`` and
+  ``movement_rounds``, each on the loop its own state fits.  So one
+  carry rule (``_extend``) holds on both loops, whatever a batch
+  inserts or deletes: no batch rewrites a carried table but the
+  compaction every ``COMPACT_EVERY`` batches.
 * The reference returns the PRE-batch community stats
   (``IncrementalWCC.scala:69`` quirk); we return the freshly computed
   stats — the honest value.
@@ -55,6 +58,7 @@ exact — every divergence documented:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation
@@ -94,6 +98,9 @@ COMPACT_EVERY = 8  # batches between parquet compactions of the lazy edge unions
 # have the better constant (see _pick_scope); a value below 0 forces the
 # whole-graph scope
 _SCOPE_FRACTION = 0.5
+# the split tags of the carried ``edges``, ``clean_edges`` and ``tri``
+# (``_fold``, and the task's ``inc-batch`` landing)
+_TAGS = ("edges", "clean-edges", "tri")
 
 
 @dataclass
@@ -149,11 +156,10 @@ class WCCState:
     # ``None`` (unknown) stays ``None``
     max_vertex: int | None = None
     # batches since ``edges``/``clean_edges``/``tri`` were last
-    # parquet-landed: a batch in one task, and a Spark insert, fold
-    # their net change into ``carried`` (``_extend``; no O(|E|) rewrite
-    # per batch — the r2 plans all paid one), and the tables land again
-    # as their new roots every COMPACT_EVERY batches, so scan fan-out
-    # stays bounded; a Spark delete rewrites all three and resets it
+    # parquet-landed: every batch, on either loop, folds its net change
+    # into ``carried`` (``_extend``; no O(|E|) rewrite per batch — the
+    # r2 plans all paid one), and the tables land again as their new
+    # roots every COMPACT_EVERY batches, so scan fan-out stays bounded
     pending_unions: int = 0
     # since that landing, each of ``edges``, ``clean_edges`` and ``tri``
     # as ``(root, gone, new)``: the landed root, the rows removed from
@@ -271,13 +277,13 @@ def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
 
 def _spark_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     """``incremental_update`` on Spark.  The merge is exact and
-    batch-sized (anti-joined edge delta, exact triangle delta, lazy
-    unions of the carried sets, ``_extend``); the rest of the batch is
-    ``_elect_and_refine``, shared with ``_spark_delete``: centers are
-    re-elected only inside the affected communities, then the fixed
-    movement rounds run over the batch neighborhood, or over every
-    clean vertex when the neighborhood is most of the graph, and the
-    carried per-community stats/WCC sums are spliced.  A localized
+    batch-sized (anti-joined edge delta, exact triangle delta, the
+    added rows folded into the carried sets, ``_fold``); the rest of
+    the batch is ``_elect_and_refine``, shared with ``_spark_delete``:
+    centers are re-elected only inside the affected communities, then
+    the fixed movement rounds run over the batch neighborhood, or over
+    every clean vertex when the neighborhood is most of the graph, and
+    the carried per-community stats/WCC sums are spliced.  A localized
     batch therefore costs ∝ its neighborhood, not |E| (VERDICT r3 #2;
     the reference re-runs its election over the whole triangle
     subgraph and re-scans the whole graph 5×/batch,
@@ -297,23 +303,18 @@ def _spark_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     # DISJOINT — no dedup shuffle, no O(|E|) rewrite per batch
     full_edges = state.edges.unionByName(new_e)
 
-    # distributed border/new classification (J5; reference collects maps)
-    batch_verts = (
+    # distributed border/new classification (J5; reference collects
+    # maps): the new vertices join the carried ones, disjoint
+    new_verts = (
         new_e.select(F.col("src").alias("vId")).distinct()
+        .join(state.vertices, "vId", "left_anti")
     )
-    old_verts = state.vertices.select("vId")
-    new_verts = batch_verts.join(old_verts, "vId", "left_anti")
 
     # exact triangle delta
     tri_obs = Observation()
     tri = mat(
         _new_triangles(full_edges, new_e).observe(tri_obs, F.count(F.lit(1)).alias("n")),
         "inc-tri",
-    )
-    delta_t = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("vId"))
-        .groupBy("vId")
-        .agg(F.count("*").cast("int").alias("dt"))
     )
     # cleaned edge set only grows: add the edges of new triangles
     tri_edges = triangle_edges(tri)
@@ -330,38 +331,48 @@ def _spark_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
         .observe(add_obs, F.count(F.lit(1)).alias("n")),
         "inc-clean-add",
     )
-    vt_new = state.clean_edges.unionByName(clean_add).groupBy(F.col("src").alias("vId")).agg(
-        F.count("*").cast("int").alias("vt_new")
+    vertex_table, changed = _moved(
+        state.vertices.drop("cc").unionByName(new_verts, allowMissingColumns=True),
+        tri, clean_add, 1,
     )
-
-    all_verts = old_verts.unionByName(new_verts).distinct()
-    vertex_table = (
-        all_verts.join(state.vertices.drop("vt", "cc"), "vId", "left")
-        .join(delta_t, "vId", "left")
-        .join(vt_new, "vId", "left")
-        .select(
-            "vId",
-            (F.coalesce("t", F.lit(0)) + F.coalesce("dt", F.lit(0))).cast("int").alias("t"),
-            F.coalesce("vt_new", F.lit(0)).alias("vt"),
-            F.coalesce("cId", F.col("vId")).alias("cId"),
-        )
-        .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
-    )
-
-    # the adds join each table's new rows (a root row this batch adds
-    # back stays in ``gone`` and comes back through ``new``)
-    levels = [(gone, add if new is None else new.unionByName(add))
-              for (_, gone, new), add in zip(_carried(state), [new_e, clean_add, tri])]
     return _elect_and_refine(state, "insert", _land_vertices(
-        vertex_table, mat, **_extend(state, levels),
+        vertex_table, mat, **_fold(state, [None] * 3, [new_e, clean_add, tri]),
         tri_count=state.tri_count + int(tri_obs.get["n"]),
         clean_edge_count=state.clean_edge_count + int(add_obs.get["n"]),
-        # t changes exactly at corners of new triangles; vt changes at
-        # endpoints of newly-cleaned edges — all of which are corners
-        # too (a new clean edge is an edge of some new triangle)
-        changed=tri.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct(),
+        changed=changed,
         max_vertex=_raised(state.max_vertex, new_obs.get["m"]),
     ))
+
+
+def _moved(vertices: DataFrame, tri: DataFrame, clean: DataFrame, sign: int):
+    """The vertex table after a batch that adds (``sign`` 1) or removes
+    (-1) the triangles ``tri`` and the clean edges ``clean``, and the
+    vertices it changes.  ``vertices``: ``(vId, t, vt, cId)``, all null
+    but ``vId`` for a new vertex.  ``t`` moves by the vertex's corners
+    in ``tri`` and ``vt`` by its edges in ``clean`` — batch-sized work,
+    never an aggregate over the carried clean edges.  A vertex with no
+    triangle left (or none yet) is its own singleton community (the
+    batch pipeline's rule for pruned vertices, ``DistributedWCC.scala:
+    63-78``).  The changed vertices are the corners of ``tri``: every
+    edge of ``clean`` is an edge of one of its triangles (a deleted
+    clean edge's triangles all died)."""
+    moves = (
+        tri.select(F.explode(F.array("u", "v", "w")).alias("vId"),
+                   F.lit(1).alias("dt"), F.lit(0).alias("dvt"))
+        .unionByName(clean.select(F.col("src").alias("vId"),
+                                  F.lit(0).alias("dt"), F.lit(1).alias("dvt")))
+        .groupBy("vId")
+        .agg(F.sum("dt").alias("dt"), F.sum("dvt").alias("dvt"))
+    )
+    t, vt = (
+        (F.coalesce(c, F.lit(0)) + sign * F.coalesce(d, F.lit(0))).cast("int")
+        for c, d in (("t", "dt"), ("vt", "dvt"))
+    )
+    table = vertices.join(moves, "vId", "left").select(
+        "vId", t.alias("t"), vt.alias("vt"),
+        F.when(t > 0, F.coalesce("cId", "vId")).otherwise(F.col("vId")).alias("cId"),
+    )
+    return table.withColumn("cc", cc_col(F.col("t"), F.col("vt"))), moves.select("vId")
 
 
 def _raised(max_vertex: int | None, batch_max) -> int | None:
@@ -394,16 +405,16 @@ def _extend(state: WCCState, levels: list) -> dict:
     whose ``levels`` are each table's ``(gone, new)`` rows since its
     root with the batch folded in, with ``carried`` and the next
     ``pending_unions`` (as ``WCCState`` fields).  The one carry rule of
-    every batch but a Spark delete: a row the batch removes leaves
-    ``new`` and joins ``gone`` (where it is no root row, it removes
-    nothing), and a row it adds joins ``new`` (a root row added back
-    too: ``gone`` keeps its root copy out), so the table ``(root
-    anti-join gone) ∪ new`` stays one level deep, however many batches
-    folded into it.  The tables stay LAZY (a scan of the roots plus the
-    landed levels): landing them would rewrite the ENTIRE O(|E|) and
-    O(|T|) sets every batch for no lineage benefit.  Every
-    ``COMPACT_EVERY`` batches they land as the new roots, so scan
-    fan-out stays bounded."""
+    every batch, on both loops: a row the batch removes leaves ``new``
+    and joins ``gone`` (where it is no root row, it removes nothing),
+    and a row it adds joins ``new`` (a root row added back too:
+    ``gone`` keeps its root copy out), so the table ``(root anti-join
+    gone) ∪ new`` stays one level deep, however many batches folded
+    into it.  The tables stay LAZY (a scan of the roots plus the landed
+    levels): landing them would rewrite the ENTIRE O(|E|) and O(|T|)
+    sets every batch for no lineage benefit.  Every ``COMPACT_EVERY``
+    batches they land as the new roots, so scan fan-out stays
+    bounded."""
     carried = tuple((root, *level) for (root, _, _), level in zip(_carried(state), levels))
     tables = [_table(*c) for c in carried]
     fields = ("edges", "clean_edges", "tri")
@@ -411,6 +422,45 @@ def _extend(state: WCCState, levels: list) -> dict:
         return dict(zip(fields, tables), carried=carried, pending_unions=state.pending_unions + 1)
     names = ("inc-edges", "inc-clean", "inc-tri-static")
     return dict(zip(fields, map(state.mat, tables, names)), carried=None, pending_unions=0)
+
+
+def _fold(state: WCCState, removed: list, added: list) -> dict:
+    """``_extend`` for a Spark merge, whose batch removes the rows
+    ``removed`` and adds the rows ``added`` of the carried ``edges``,
+    ``clean_edges`` and ``tri`` (each batch-sized, landed, or None).
+    The task folds its batch over arrays by the same rule
+    (``task_tier.incremental_batch``): a removed row joins ``gone`` and
+    leaves ``new``, and an added row joins ``new``.  The folded levels
+    land flat, in ONE split landing (``inc-fold``) of the task's
+    ``inc-batch`` tags, so a read of a table costs one broadcast of ONE
+    landed ``gone``, however many batches folded into it."""
+    levels = {}
+    for tag, (_, gone, new), out, add in zip(_TAGS, _carried(state), removed, added):
+        if out is not None and new is not None:
+            new = new.join(F.broadcast(out), out.columns, "left_anti")
+        for name, parts in ((f"{tag}-gone", (gone, out)), (tag, (new, add))):
+            parts = [df for df in parts if df is not None]
+            if parts:
+                levels[name] = reduce(DataFrame.unionByName, parts)
+    landed = state.mat(
+        reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), [
+            df.toDF(*"abc"[:len(df.columns)]).withColumn("k", F.lit(name))
+            for name, df in levels.items()
+        ]),
+        "inc-fold",
+        split={name: [F.col(x).alias(c) for x, c in zip("abc", df.columns)]
+               for name, df in levels.items()},
+    )
+    return _extend(state, [(landed.get(f"{tag}-gone"), landed.get(tag)) for tag in _TAGS])
+
+
+def _corner_pairs(tri: DataFrame) -> DataFrame:
+    """Each row ``(u, v, w)`` of ``tri`` once per corner pair, as
+    ``(u, v, w, p, q)`` with ``p < q``."""
+    return reduce(DataFrame.unionByName, [
+        tri.select("u", "v", "w", F.least(a, b).alias("p"), F.greatest(a, b).alias("q"))
+        for a, b in (("u", "v"), ("u", "w"), ("v", "w"))
+    ])
 
 
 # what a batch's report keeps of each of its steps (``report["steps"]``)
@@ -446,7 +496,7 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
     last = info["steps"][-1]
     return WCCState(
         **_extend(state, [(landed[f"{tag}-gone"], landed[tag])
-                          for tag in ("edges", "clean-edges", "tri")]),
+                          for tag in _TAGS]),
         vertices=landed["vertices"],
         stats=landed["stats"],
         global_wcc=info["wcc"],
@@ -513,13 +563,13 @@ class _Merge(NamedTuple):
     tri: DataFrame
     tri_count: int
     changed: DataFrame  # vIds whose t or vt changed
+    pending_unions: int  # (``WCCState.pending_unions``)
+    carried: tuple | None  # (``WCCState.carried``)
+    # the next state's id ceiling (``WCCState.max_vertex``)
+    max_vertex: int | None
     # None: the changed vertices' labels in ``vertices`` (see
     # ``_elect_and_refine`` for why a delete passes its own)
     affected_comms: DataFrame | None = None
-    pending_unions: int = 0
-    carried: tuple | None = None  # (``WCCState.carried``)
-    # the next state's id ceiling (``WCCState.max_vertex``)
-    max_vertex: int | None = None
 
 
 def _land_vertices(vertices: DataFrame, mat: Materializer, **merge) -> _Merge:
@@ -874,122 +924,70 @@ def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
 def _spark_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     """``incremental_delete`` on Spark.  Exactness rides on the carried
     triangle list: a triangle dies iff one of its three undirected edges
-    is deleted, so the delta is three broadcast semi-joins of the static
-    list against the (small) deleted set — never a re-enumeration.  A
-    cleaned edge survives iff some remaining triangle still contains it,
-    and the only edges that can change status are edges of dead
-    triangles, so the survivor check is again a broadcast semi-join.
-    Vertices never disappear: one whose last triangle dies reverts to a
-    singleton community (t = 0 ⇒ cId = vId), the same rule the batch
-    pipeline applies to pruned vertices (``DistributedWCC.scala:63-78``
-    semantics).  The re-partition is ``_elect_and_refine``, the same as
-    an insert's.  Unlike the task's lazy carry (``_extend``), this merge
-    still lands ``edges``, ``clean_edges`` and ``tri`` whole.
+    is deleted, so the delta is a broadcast semi-join of the static
+    list's corner pairs against the (small) deleted set — never a
+    re-enumeration.  A cleaned edge survives iff some remaining
+    triangle still contains it, and the only edges that can change
+    status are edges of dead triangles, so the survivor check is again
+    a broadcast semi-join.  Vertices never disappear: one whose last
+    triangle dies reverts to a singleton community (``_moved``).  The
+    merge lands only batch-sized rows — the deleted edges, the dead
+    triangles and the removed clean edges, the counts riding — and
+    folds them into the carried tables like every other batch
+    (``_fold``).  The re-partition is ``_elect_and_refine``, the same
+    as an insert's.
     """
     mat = state.mat
     sym = symmetrize_edges(deleted_edges)
     # only edges actually present can be deleted
     del_e = mat(sym.join(state.edges, ["src", "dst"], "left_semi"), "del-e")
-    full_edges = mat(
-        state.edges.join(del_e, ["src", "dst"], "left_anti"), "inc-edges"
-    )
     half_del = del_e.where(F.col("src") < F.col("dst")).select(
         F.col("src").alias("p"), F.col("dst").alias("q")
     )
-
-    tri_all = state.tri
-    corner_pairs = (("u", "v"), ("u", "w"), ("v", "w"))
-
-    def _pairs(df):
-        parts = [
-            df.select(
-                F.least(F.col(a), F.col(b)).alias("p"),
-                F.greatest(F.col(a), F.col(b)).alias("q"),
-            )
-            for a, b in corner_pairs
-        ]
-        return parts[0].unionByName(parts[1]).unionByName(parts[2])
-
-    dead_parts = [
-        tri_all.select(
-            "u", "v", "w",
-            F.least(F.col(a), F.col(b)).alias("p"),
-            F.greatest(F.col(a), F.col(b)).alias("q"),
-        )
+    dead_obs = Observation()
+    dead = mat(
+        _corner_pairs(state.tri)
         .join(F.broadcast(half_del), ["p", "q"], "left_semi")
         .select("u", "v", "w")
-        for a, b in corner_pairs
-    ]
-    dead = mat(
-        dead_parts[0].unionByName(dead_parts[1]).unionByName(dead_parts[2]).distinct(),
+        .distinct()
+        .observe(dead_obs, F.count(F.lit(1)).alias("n")),
         "del-dead-tri",
-    )
-    tri_obs = Observation()
-    tri_new = mat(
-        tri_all.join(dead, ["u", "v", "w"], "left_anti")
-        .observe(tri_obs, F.count(F.lit(1)).alias("n")),
-        "inc-tri-static",
-    )
-
-    # exact t delta: each dead triangle un-counts once per corner
-    dt = (
-        dead.select(F.explode(F.array("u", "v", "w")).alias("vId"))
-        .groupBy("vId")
-        .agg(F.count("*").cast("int").alias("dt"))
     )
 
     # cleaned-edge survivors among the candidates (edges of dead
-    # triangles); everything else keeps its status
-    cand = _pairs(dead).distinct()
+    # triangles): those of a triangle left; everything else keeps its
+    # status
+    cand = _corner_pairs(dead).select("p", "q")
     alive = (
-        _pairs(tri_new)
+        _corner_pairs(state.tri)
         .join(F.broadcast(cand), ["p", "q"], "left_semi")
-        .distinct()
+        .join(F.broadcast(dead), ["u", "v", "w"], "left_anti")
     )
     gone_half = cand.join(alive, ["p", "q"], "left_anti")
     gone = (
         gone_half.select(F.col("p").alias("src"), F.col("q").alias("dst"))
         .unionByName(gone_half.select(F.col("q").alias("src"), F.col("p").alias("dst")))
-        .unionByName(del_e.select("src", "dst"))
-        .dropDuplicates(["src", "dst"])
+        .unionByName(del_e)
     )
+    # the removed clean edges: the present clean rows among ``gone``
     clean_obs = Observation()
-    clean_new = mat(
-        state.clean_edges.join(gone, ["src", "dst"], "left_anti")
+    clean_out = mat(
+        state.clean_edges.join(F.broadcast(gone), ["src", "dst"], "left_semi")
         .observe(clean_obs, F.count(F.lit(1)).alias("n")),
-        "inc-clean",
-    )
-    vt_new = clean_new.groupBy(F.col("src").alias("vId")).agg(
-        F.count("*").cast("int").alias("vt_new")
+        "del-clean",
     )
 
-    t_new = (F.col("t") - F.coalesce("dt", F.lit(0))).cast("int")
-    vertex_table = (
-        state.vertices.drop("vt", "cc")
-        .join(dt, "vId", "left")
-        .join(vt_new, "vId", "left")
-        .select(
-            "vId",
-            t_new.alias("t"),
-            F.coalesce("vt_new", F.lit(0)).alias("vt"),
-            # losing the last triangle reverts to a singleton community
-            F.when(t_new > 0, F.col("cId")).otherwise(F.col("vId")).alias("cId"),
-        )
-        .withColumn("cc", cc_col(F.col("t"), F.col("vt")))
-    )
-
-    changed_verts = (
-        dead.select(F.explode(F.array("u", "v", "w")).alias("vId")).distinct()
-    )
+    vertex_table, changed = _moved(state.vertices.drop("cc"), dead, clean_out, -1)
     return _elect_and_refine(state, "delete", _land_vertices(
-        vertex_table, mat, edges=full_edges, tri=tri_new,
-        tri_count=int(tri_obs.get["n"]), changed=changed_verts,
-        clean_edges=clean_new, clean_edge_count=int(clean_obs.get["n"]),
-        # PRE-delete labels (see _elect_and_refine: a reverted
-        # singleton's new cId = vId would hide its former community)
+        vertex_table, mat, **_fold(state, [del_e, clean_out, dead], [None] * 3),
+        tri_count=state.tri_count - int(dead_obs.get["n"]),
+        clean_edge_count=state.clean_edge_count - int(clean_obs.get["n"]),
+        changed=changed,
         # a delete adds no vertex and removes none: the ceiling carries
         max_vertex=state.max_vertex,
-        affected_comms=state.vertices.join(changed_verts, "vId", "left_semi")
+        # PRE-delete labels (see _elect_and_refine: a reverted
+        # singleton's new cId = vId would hide its former community)
+        affected_comms=state.vertices.join(changed, "vId", "left_semi")
         .select("cId")
         .distinct(),
     ))

@@ -39,8 +39,9 @@ Five tasks, each chosen on row counts that ride earlier landings:
   of every community, on the arrays the step before returned — with one
   landing, of one shape whatever the steps: the final vertices, stats
   and WCC sums, and the carried edges', clean edges' and triangles' rows
-  gone from and new to their roots, the batch's net change folded in
-  (the task reads them with the roots, so no read costs a join), when
+  gone from and new to their roots, the batch's net change folded in by
+  the carry rule the Spark merges follow too (``incremental._extend``;
+  the task reads them with the roots, so no read costs a join), when
   the carried |V| + |E_clean| + |tri| fits; like the graph task, it
   gives up when the batches, an insert's incident edges or its new
   triangles (closed in bounded wedge chunks) stop fitting, and the
@@ -910,7 +911,8 @@ def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
     sums of every community, and the carried tables' gone and new rows
     after the batch, whatever its steps — ``edges``, ``clean-edges``,
     ``tri`` (new) and each tag with ``-gone``.  The batch's net change
-    folds into them (``incremental._extend``'s rule).  Each step reports the row it came from of each
+    folds into them by the one rule of both loops (``incremental._extend``;
+    ``incremental._fold`` for a Spark merge).  Each step reports the row it came from of each
     of its clean edges and triangles (``origin``); composed over the
     steps, they give once, at the end, the input rows to remove (a
     triangle as its input row, corners in their carried order) and the

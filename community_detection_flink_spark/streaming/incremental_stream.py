@@ -265,6 +265,12 @@ def run_stream(
     micro-batch: U's stale-version deletes, then inserts (I ∪ U), then
     explicit deletes — the natural CDC contract where a batch's deletes
     may refer to edges the same batch inserted or updated.
+
+    With ``max_files_per_trigger`` the file source takes its files in
+    modification-time order, and files whose times tie (written within
+    one clock tick) run in any order.  An order-sensitive CDC log (file
+    k deletes edges file k-1 inserted) must therefore give its files
+    distinct modification times.
     """
     holder = {"state": initial_state}
 

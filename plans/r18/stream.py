@@ -1,6 +1,6 @@
 """A multi-file CDC stream, timed per micro-batch, between two checkouts.
 
-    python3 plans/r18/stream.py PARENT_DIR CHANGE_DIR --pairs 10 [--clusters 100] [--files 10]
+    python3 plans/r18/stream.py PARENT_DIR CHANGE_DIR --pairs 10 [--clusters 100] [--files 10] [--merge]
 
 Each run is one fresh process (and JVM, local[4] with 4 shuffle
 partitions, as perfbench runs) from the root of one checkout: it
@@ -16,7 +16,11 @@ small-state tier gates on), the set-up time, each micro-batch's latency
 (from the stream's start or the batch before it to the batch's
 ``on_batch`` callback), the stream's total, and a fingerprint of the
 final labels; with at most 200 clusters it also checks the final edge
-set against the applied inserts and deletes.
+set against the applied inserts and deletes.  ``--merge`` times the
+Spark merges on any state: each run patches ``incremental._in_one_task``
+to decline (as ``plans/r14/crossover.py``'s ``merge`` loop does), so no
+micro-batch runs in one task; above ``task_tier.TASK_ROWS`` state rows
+they run the Spark merges anyway.
 
 The pairs interleave the two checkouts, the side that runs first
 alternating from pair to pair.  Prints one line per run, then per batch
@@ -41,7 +45,7 @@ PLANTED = dict(size=20, p_in=0.95, inter_per_vertex=0.1)
 CDC = dict(anchors=3, new_per_batch=8, deleted_inserts=2)
 
 
-def one_run(clusters: int, files: int) -> dict:
+def one_run(clusters: int, files: int, merge: bool) -> dict:
     """The stream on the checkout this process runs from."""
     sys.path[:0] = [os.getcwd(), os.path.join(os.getcwd(), "perfbench")]
     import gen
@@ -54,6 +58,8 @@ def one_run(clusters: int, files: int) -> dict:
     from community_detection_flink_spark.sources.edges import symmetrize_edges
     from community_detection_flink_spark.streaming.incremental_stream import run_stream
 
+    if merge:
+        incremental._in_one_task = lambda state, steps: None
     t_start = time.perf_counter()
     work = tempfile.mkdtemp(prefix="stream-ab-")
     spark = (
@@ -115,11 +121,11 @@ def one_run(clusters: int, files: int) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def run(checkout: str, clusters: int, files: int) -> dict:
+def run(checkout: str, clusters: int, files: int, merge: bool) -> dict:
     env = dict(os.environ, PYTHONPATH=checkout)
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--run", "--clusters", str(clusters),
-         "--files", str(files)],
+         "--files", str(files)] + ["--merge"] * merge,
         cwd=checkout, env=env, capture_output=True, text=True, timeout=3600,
     )
     lines = [line for line in out.stdout.splitlines() if line.startswith("{")]
@@ -142,17 +148,18 @@ def main() -> None:
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--clusters", type=int, default=100)
     ap.add_argument("--files", type=int, default=10)
+    ap.add_argument("--merge", action="store_true", help="every micro-batch on the Spark merges")
     ap.add_argument("--run", action="store_true", help="one run, on the checkout in cwd")
     args = ap.parse_args()
     if args.run:
-        print(json.dumps(one_run(args.clusters, args.files)), flush=True)
+        print(json.dumps(one_run(args.clusters, args.files, args.merge)), flush=True)
         return
     sides = {"parent": args.parent, "change": args.change}
     got = {side: [] for side in sides}
     for p in range(args.pairs):
         order = ("parent", "change") if p % 2 == 0 else ("change", "parent")
         for side in order:
-            r = run(sides[side], args.clusters, args.files)
+            r = run(sides[side], args.clusters, args.files, args.merge)
             got[side].append(r)
             print(f"pair{p} {side}: rows={r['rows']} setup={r['setup']:.2f}s total={r['total']:.2f}s "
                   f"batches=[{', '.join(f'{b:.2f}' for b in r['batches'])}] ok={r['ok']} "

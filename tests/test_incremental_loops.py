@@ -228,22 +228,29 @@ def _sequence(pairs, seed, n_batches=10):
 # the second case runs its fourth batch, an insert that re-inserts
 # deleted pairs, on the Spark loop, on the gone and new rows the task
 # batches left (a state that grew past the gate between compactions);
-# the fifth runs on the task again
+# the fifth runs on the task again.  The third runs a Spark delete and
+# a Spark CDC file (three Spark batches) on the task's levels, and the
+# task then reads theirs.  The fourth runs every batch on the Spark loop
 @pytest.mark.parametrize("n_batches, spark_batches", [
-    (10, ()), pytest.param(5, (4,), marks=pytest.mark.slow)])
+    (10, ()),
+    pytest.param(5, (4,), marks=pytest.mark.slow),
+    pytest.param(6, (2, 3), marks=pytest.mark.slow),
+    pytest.param(10, tuple(range(1, 11)), marks=pytest.mark.slow),
+])
 def test_task_loop_carries_every_batch_and_compacts_on_one_counter(
         spark, monkeypatch, n_batches, spark_batches):
-    """More than ``COMPACT_EVERY`` batches on the task loop (inserts,
-    deletes and CDC files with U rows) against the reference chain: each
-    batch folds its net change into one level of gone and new rows per
-    carried table, and the carried tables land again only at the
-    compaction batch.  After every batch the labels, stats, |V|, WCC,
-    rounds and scope equal the reference; ``edges``, ``clean_edges`` and
-    ``tri`` hold no duplicate row, equal the reference's edge set, clean
-    edges and triangles, and each reads through at most one broadcast
-    (its gone rows), however many batches folded in; the carried counts
-    equal their tables' rows; ``pending_unions`` counts the batches
-    since the last compaction."""
+    """More than ``COMPACT_EVERY`` batches (inserts, deletes and CDC
+    files with U rows) against the reference chain: each batch, on
+    either loop, folds its net change into one level of gone and new
+    rows per carried table, and the carried tables land again only at
+    the compaction batch.  After every batch the labels, stats, |V|,
+    WCC, rounds and scope equal the reference; ``edges``,
+    ``clean_edges`` and ``tri`` hold no duplicate row, equal the
+    reference's edge set, clean edges and triangles, and each reads
+    through at most one broadcast (its gone rows), however many batches
+    folded in; the carried counts equal their tables' rows;
+    ``pending_unions`` counts the batches since the last compaction (a
+    CDC file on the Spark loop is one batch per step)."""
     import os
 
     from community_detection_flink_spark.operators import task_tier
@@ -253,7 +260,7 @@ def test_task_loop_carries_every_batch_and_compacts_on_one_counter(
     assert n_batches > COMPACT_EVERY or spark_batches
     state = prepare(symmetrize_edges(spark.createDataFrame(pairs, "src LONG, dst LONG")))
     landed = set(os.listdir(state.mat.base))
-    present, labels = _undirected(pairs), _labels(state)
+    present, labels, pending = _undirected(pairs), _labels(state), 0
     task_rows = task_tier.TASK_ROWS
     for i, (kind, rows, chain) in enumerate(batches, start=1):
         loop = "spark" if i in spark_batches else "task"
@@ -291,11 +298,16 @@ def test_task_loop_carries_every_batch_and_compacts_on_one_counter(
         assert state.tri_count == state.tri.count() == len(tri)
         assert state.clean_edge_count == state.clean_edges.count()
 
-        assert state.pending_unions == i % COMPACT_EVERY
+        pending += len(state.report["steps"]) if loop == "spark" else 1
+        assert state.pending_unions == pending % COMPACT_EVERY
+        compacts = pending >= COMPACT_EVERY
+        pending %= COMPACT_EVERY
         now = set(os.listdir(state.mat.base))
+        names = {p.rsplit("-", 1)[0] for p in now - landed}
+        compacted = {"inc-edges", "inc-clean", "inc-tri-static"}
         if loop == "task":
-            names = {p.rsplit("-", 1)[0] for p in now - landed}
-            compacted = {"inc-edges", "inc-clean", "inc-tri-static"}
-            assert names == ({"inc-batch"} | compacted if i == COMPACT_EVERY else {"inc-batch"})
+            assert names == ({"inc-batch"} | compacted if compacts else {"inc-batch"})
+        else:
+            assert names & compacted == (compacted if compacts else set())
         landed = now
     state.mat.cleanup()
