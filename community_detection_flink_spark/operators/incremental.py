@@ -42,6 +42,7 @@ exact — every divergence documented:
   to their last landed roots, the batch's net change folded in.  A
   batch of several steps (``incremental_steps``: a CDC micro-batch's
   U-deletes, inserts and deletes) runs all of them in that one task,
+  which picks them from the batch's op column (``task_tier.cdc_steps``),
   each step on the arrays the one before returned.  Otherwise the merge
   runs as joins and batch-sized landings, folds its removed and added
   rows in the same way (``_fold``), and the tail
@@ -267,12 +268,12 @@ def _new_triangles(full_edges: DataFrame, new_e: DataFrame) -> DataFrame:
 def incremental_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
     """Merge one edge micro-batch and re-partition
     (``IncrementalWCC.run``, ``IncrementalWCC.scala:27-71``): the
-    one-step form of ``incremental_steps``.  A state that fits the
-    small-state tier runs the whole batch in one task
-    (``_in_one_task``), any other the Spark merge (``_spark_update``)
-    and ``_elect_and_refine``.  Every table lands through
-    ``state.mat``."""
-    return incremental_steps(state, [("insert", batch_edges)])
+    one-step form of ``incremental_steps``, its op the literal "I".  A
+    state that fits the small-state tier runs the whole batch in one
+    task (``_in_one_task``), any other the Spark merge
+    (``_spark_update``) and ``_elect_and_refine``.  Every table lands
+    through ``state.mat``."""
+    return incremental_steps(state, batch_edges.withColumn("op", F.lit("I")), {"I"})
 
 
 def _spark_update(state: WCCState, batch_edges: DataFrame) -> WCCState:
@@ -431,9 +432,10 @@ def _fold(state: WCCState, removed: list, added: list) -> dict:
     The task folds its batch over arrays by the same rule
     (``task_tier.incremental_batch``): a removed row joins ``gone`` and
     leaves ``new``, and an added row joins ``new``.  The folded levels
-    land flat, in ONE split landing (``inc-fold``) of the task's
-    ``inc-batch`` tags, so a read of a table costs one broadcast of ONE
-    landed ``gone``, however many batches folded into it."""
+    land flat, from one task, in ONE split landing (``inc-fold``) of the
+    task's ``inc-batch`` tags: one file per tag, so a read of a table
+    costs one broadcast of ONE landed ``gone``, and its scan one file per
+    level, however many batches folded into it."""
     levels = {}
     for tag, (_, gone, new), out, add in zip(_TAGS, _carried(state), removed, added):
         if out is not None and new is not None:
@@ -446,7 +448,7 @@ def _fold(state: WCCState, removed: list, added: list) -> dict:
         reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), [
             df.toDF(*"abc"[:len(df.columns)]).withColumn("k", F.lit(name))
             for name, df in levels.items()
-        ]),
+        ]).coalesce(1),  # batch-sized: one task, so one file per tag
         "inc-fold",
         split={name: [F.col(x).alias(c) for x, c in zip("abc", df.columns)]
                for name, df in levels.items()},
@@ -467,32 +469,36 @@ def _corner_pairs(tri: DataFrame) -> DataFrame:
 _STEP_KEYS = ("affected_vertices", "scope_vertices", "rounds", "moves")
 
 
-def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
-    """Every one of ``steps`` (``(op, edges)``: "insert" or "delete" of
-    an edge batch, at most one insert, applied in order; each the merge
-    and ``_elect_and_refine``'s tail) in one task, when the
+def _in_one_task(state: WCCState, batch: DataFrame) -> WCCState | None:
+    """The batch ``batch`` (``src, dst, op``) in one task, when the
     carried |V| + |E_clean| + |tri| fits the small-state tier
-    (``task_tier.incremental_batch``): one split landing, whatever the
-    steps, with the carried edges', clean edges' and triangles' gone and
-    new rows, the batch's net change folded in, which ``_extend`` carries
-    as one lazy ``(root anti-join gone) ∪ new`` per table and compacts
-    on the one ``pending_unions`` counter.  The task
-    recomputes the stats and WCC sums of every community instead of
-    splicing them (it reads the whole state anyway).  The report is the
-    last step's, with every step's in ``steps``.  None when the state
-    does not fit, or the steps (their batches, the insert's incident
-    edges and new triangles) would take it past the limit; nothing of
-    the task stays landed then."""
+    (``task_tier.incremental_batch``): the task picks the steps from the
+    ops it finds (``task_tier.cdc_steps``) and runs each, the merge and
+    ``_elect_and_refine``'s tail, on the arrays the one before returned.
+    One split landing, whatever the steps, with the carried edges',
+    clean edges' and triangles' gone and new rows, the batch's net
+    change folded in, which ``_extend`` carries as one lazy ``(root
+    anti-join gone) ∪ new`` per table and compacts on the one
+    ``pending_unions`` counter.  The task recomputes the stats and WCC
+    sums of every community instead of splicing them (it reads the
+    whole state anyway).  The report is the last step's, with every
+    step's in ``steps``.  A batch of no rows returns ``state`` itself.
+    None when the state does not fit, when the batch holds an op the
+    task cannot apply, or when the steps (their batches, the insert's
+    incident edges and new triangles) would take it past the limit;
+    nothing of the task stays landed then."""
     rows = state.vertex_count + state.clean_edge_count + state.tri_count
     if not task_tier.fits(rows):
         return None
     out = task_tier.incremental_batch(
-        state, _carried(state), steps, rows, FixedRounds(INCREMENTAL_ROUNDS),
+        state, _carried(state), batch, rows, FixedRounds(INCREMENTAL_ROUNDS),
         ScopeRule(_SCOPE_FRACTION), MAX_ITERATIONS,
     )
     if out is None:
         return None
     landed, info = out
+    if not info["steps"]:
+        return state
     last = info["steps"][-1]
     return WCCState(
         **_extend(state, [(landed[f"{tag}-gone"], landed[tag])
@@ -513,36 +519,47 @@ def _in_one_task(state: WCCState, steps: list) -> WCCState | None:
     )
 
 
-def incremental_steps(state: WCCState, steps: list) -> WCCState:
-    """Apply ``steps`` in order: ``(op, edges)`` pairs, ``op`` "insert"
-    or "delete", at most one insert.  When the carried state fits the
-    small-state tier they all run in ONE task with one split landing
-    (``_in_one_task``, called from here only).  Otherwise one step runs
-    its Spark merge (``_spark_update`` / ``_spark_delete``), and
-    several run one by one as ``incremental_update`` /
-    ``incremental_delete``, each trying its own task before its Spark
-    merge.  The returned state's report is the last step's, with every
-    step's ``op``, ``affected_vertices``, ``scope_vertices``,
-    ``rounds`` and ``moves`` in ``report["steps"]``.  No steps:
-    ``state`` itself."""
-    names = [op for op, _ in steps]
-    if not set(names) <= {"insert", "delete"} or names.count("insert") > 1:
-        raise ValueError(
-            f"incremental_steps: steps {names} — expected 'insert' or 'delete' "
-            "steps, at most one insert"
-        )
-    if not steps:
-        return state
-    done = _in_one_task(state, steps)
+def incremental_steps(state: WCCState, batch: DataFrame, ops: set | None = None) -> WCCState:
+    """Fold the batch ``batch`` (``src, dst, op``, op "I", "D" or "U")
+    into ``state`` by the steps ``task_tier.cdc_steps`` picks from its
+    ops: the U rows' delete, the I and U rows' insert, then the D rows'
+    delete (see ``apply_cdc_batch``).  ``ops``: the ops the op column
+    holds when the caller knows them (``incremental_update`` and
+    ``incremental_delete``, whose op is a literal), else None.  When the
+    carried state fits the small-state tier the steps run in ONE task
+    with one split landing (``_in_one_task``, called from here only),
+    which asks Spark nothing before it runs.  Otherwise, and when the
+    task declines, the driver takes ``ops`` from one aggregate over the
+    op column when it was not given, which raises on an op other than
+    "I", "D" and "U" (NULL too); then one step runs its Spark merge
+    (``_spark_update`` / ``_spark_delete``), and several run one by one
+    as ``incremental_update`` / ``incremental_delete``, each trying its
+    own task before its Spark merge.  The returned state's report is
+    the last step's, with every step's ``op``, ``affected_vertices``,
+    ``scope_vertices``, ``rounds`` and ``moves`` in ``report["steps"]``.
+    A batch of no rows runs no step and returns ``state`` itself."""
+    done = _in_one_task(state, batch)
     if done is not None:
         return done
+    if ops is None:
+        ops = {r["op"] for r in batch.select("op").distinct().collect()}
+        bad = ops - {"I", "D", "U"}
+        if bad:
+            raise ValueError(
+                f"apply_cdc_batch: unknown op {min(bad, key=str)!r} — "
+                "expected one of 'I', 'D', 'U'"
+            )
+    steps = [(op, batch.where(F.col("op").isin(*of)).select("src", "dst"))
+             for op, of in task_tier.cdc_steps(ops)]
+    if not steps:
+        return state
     if len(steps) == 1:
         op, edges = steps[0]
         return (_spark_update if op == "insert" else _spark_delete)(state, edges)
-    ops = {"insert": incremental_update, "delete": incremental_delete}
+    run = {"insert": incremental_update, "delete": incremental_delete}
     reports = []
     for op, edges in steps:
-        state = ops[op](state, edges)
+        state = run[op](state, edges)
         reports += state.report["steps"]
     state.report["steps"] = reports
     return state
@@ -914,11 +931,11 @@ def _pick_scope(
 def incremental_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:
     """Engine extension BEYOND the reference (``IncrementalWCC`` is
     insert-only): remove an edge micro-batch and re-partition; the
-    one-step form of ``incremental_steps``.  A state that fits the
-    small-state tier runs the whole batch in one task
-    (``_in_one_task``), any other the Spark merge (``_spark_delete``)
-    and ``_elect_and_refine``."""
-    return incremental_steps(state, [("delete", deleted_edges)])
+    one-step form of ``incremental_steps``, its op the literal "D".  A
+    state that fits the small-state tier runs the whole batch in one
+    task (``_in_one_task``), any other the Spark merge
+    (``_spark_delete``) and ``_elect_and_refine``."""
+    return incremental_steps(state, deleted_edges.withColumn("op", F.lit("D")), {"D"})
 
 
 def _spark_delete(state: WCCState, deleted_edges: DataFrame) -> WCCState:

@@ -31,20 +31,25 @@ Five tasks, each chosen on row counts that ride earlier landings:
   accept-if-improved round, when the clean graph's |E_clean| + |tri|
   fits — always so after the graph task, as |E_clean| <= |E|;
 * ``incremental_batch`` (``incremental.incremental_steps``: a CDC
-  micro-batch's U-delete, insert and delete, or the one step of
-  ``incremental_update``/``incremental_delete``): every step of an
-  incremental batch — each the merge (new or dead edges and triangles,
-  ``t``/``vt``/``cc``, a delete's singletons), the affected-community
-  election, the scope rule, the fixed rounds, and the stats and WCC sums
-  of every community, on the arrays the step before returned — with one
-  landing, of one shape whatever the steps: the final vertices, stats
-  and WCC sums, and the carried edges', clean edges' and triangles' rows
-  gone from and new to their roots, the batch's net change folded in by
-  the carry rule the Spark merges follow too (``incremental._extend``;
-  the task reads them with the roots, so no read costs a join), when
-  the carried |V| + |E_clean| + |tri| fits; like the graph task, it
-  gives up when the batches, an insert's incident edges or its new
-  triangles (closed in bounded wedge chunks) stop fitting, and the
+  micro-batch, or ``incremental_update``/``incremental_delete``, whose
+  op is a literal): the batch packed once with its op column; the task
+  picks the steps from the ops it finds (``cdc_steps``, the one step
+  rule of both loops: the U-delete, the I∪U insert, the D-delete, a step
+  with no rows left out) and runs each — the merge (new or dead edges
+  and triangles, ``t``/``vt``/``cc``, a delete's singletons), the
+  affected-community election, the scope rule, the fixed rounds, and
+  the stats and WCC sums of every community, on the arrays the step
+  before returned — with one landing, of one shape whatever the steps:
+  the final vertices, stats and WCC sums, and the carried edges', clean
+  edges' and triangles' rows gone from and new to their roots, the
+  batch's net change folded in by the carry rule the Spark merges
+  follow too (``incremental._extend``; the task reads them with the
+  roots, so no read costs a join), when the carried |V| + |E_clean| +
+  |tri| fits.  So a CDC micro-batch asks Spark nothing before its task.
+  The task declines (lands nothing) on an op other than "I", "D" and
+  "U", NULL too, and the driver's ops query then raises; like the graph
+  task, it gives up when the batches, an insert's incident edges or its
+  new triangles (closed in bounded wedge chunks) stop fitting, and the
   steps then run one by one;
 * ``elect`` (``initial_partition``) and ``run_rounds``
   (``movement_rounds``) on their own, for the Spark tail of an
@@ -100,11 +105,11 @@ def fits(rows: int) -> bool:
 
 
 # The packed input: one row per vertex, edge, candidate, outer label,
-# triangle, incident carried edge or batch edge, tagged by ``k`` (the
-# i-th step of an incremental task packs its batch under ``_BATCH +
-# i``); unused fields are 0 (never NULL, so the Arrow → pandas
-# conversion keeps every id an exact int64).  The graph task's output
-# uses the same fields under a string tag.
+# triangle, incident carried edge or batch edge, tagged by ``k`` (an
+# incremental task's batch rows carry their op's code in ``c``); unused
+# fields are 0 (never NULL, so the Arrow → pandas conversion keeps every
+# id an exact int64).  The graph task's output uses the same fields
+# under a string tag.
 _FIELDS = (("a", "long"), ("b", "long"), ("c", "long"), ("t", "int"),
            ("vt", "int"), ("cc", "double"))
 _SENTINEL, _VERTEX, _EDGE, _CANDIDATE, _OUTER, _TRIANGLE, _INCIDENT, _BATCH = range(8)
@@ -113,6 +118,20 @@ _LABELING_COLUMNS = ["vId", "t", "vt", "cc", "cId"]
 _PACKED = ", ".join(f"{name} {ty}" for name, ty in _FIELDS)
 # rows per chunk of the triangle kernel's wedge arrays (bounds its memory)
 _WEDGES = 1 << 22
+# a batch row's op; its code is its position here plus one, and 0 for
+# any other op (NULL too)
+_OPS = ("I", "D", "U")
+
+
+def cdc_steps(ops) -> list[tuple[str, str]]:
+    """The steps of an incremental batch whose op column holds ``ops``
+    (a set of "I", "D", "U"), in order, as ``(step, the ops whose rows
+    it applies)``: the U rows' deletes, then the I and U rows' insert,
+    then the D rows' deletes.  A step with no rows is left out.  The
+    one rule of both loops: the task applies it to the op codes it
+    reads, the Spark fallback to its ops query."""
+    return [(step, of) for step, of in (("delete", "U"), ("insert", "IU"), ("delete", "D"))
+            if not set(of).isdisjoint(ops)]
 
 
 def _part(tag: int, df: DataFrame, **cols: str) -> DataFrame:
@@ -145,18 +164,19 @@ def _one_task(parts: list[DataFrame], task, schema: str) -> DataFrame:
 def _tagged(columns: list[str], parts: dict, info: dict) -> pd.DataFrame:
     """A task's output: the rows of each ``parts`` table under its tag
     (``k``), 0 in the fields it leaves out, then one row whose ``info``
-    holds ``info`` as JSON (``info`` is NULL on every other row)."""
-    frames = []
-    for tag, cols in parts.items():
-        n = len(next(iter(cols.values())))
-        frames.append(pd.DataFrame(
-            {"k": tag, **{c: cols.get(c, np.zeros(n, np.int64)) for c in columns},
-             "info": None}
-        ))
-    frames.append(pd.DataFrame(
-        {"k": "info", **{c: [0] for c in columns}, "info": [json.dumps(info)]}
-    ))
-    return pd.concat(frames, ignore_index=True)
+    holds ``info`` as JSON (``info`` is NULL on every other row).  Each
+    column is one numpy concatenation (a field takes the dtype its parts
+    and the info row's 0 promote to), so no row is checked twice."""
+    sizes = [len(next(iter(cols.values()))) for cols in parts.values()]
+    frame = {"k": np.repeat(np.array([*parts, "info"], object), [*sizes, 1])}
+    for c in columns:
+        frame[c] = np.concatenate([
+            *(cols.get(c, np.zeros(n, np.int64)) for cols, n in zip(parts.values(), sizes)),
+            np.zeros(1, np.int64),
+        ])
+    frame["info"] = np.full(sum(sizes) + 1, None, object)
+    frame["info"][-1] = json.dumps(info)
+    return pd.DataFrame(frame)
 
 
 def _land(mat, plan: DataFrame, name: str, split: dict | None = None):
@@ -892,27 +912,30 @@ def _carried_rows(ids: np.ndarray, root: list, gone: list, new: list) -> list:
     return [np.concatenate(x) for x in zip(root, new)]
 
 
-def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
+def incremental_batch(state, carried, batch: DataFrame, rows: int, policy, rule,
                       max_iterations: int) -> tuple[dict, dict] | None:
-    """Incremental ``steps`` on ``state`` (an ``incremental.WCCState``
-    of ``rows`` vertex, clean-edge and triangle rows, whose edges, clean
-    edges and triangles are ``carried``: each ``(root, gone, new)``, see
-    ``WCCState.carried``) in ONE task.  ``steps``: ``(op, batch)``
-    pairs, ``op`` "insert" or "delete" (at most one insert) and
-    ``batch`` an edge list ``(src, dst)``, applied in order; each step
-    is the merge of its batch (symmetrized in the task, so no batch
-    costs a shuffle), then the tail, over the arrays the step before it
-    returned.  The task reads the carried vertices, the roots, gone and
-    new rows of the clean edges and triangles, the gone and new edges,
-    each step's batch under its own tag and, for an insert, the root
-    edges from its batch's endpoints; it forms the carried tables itself
-    (``_carried_rows``), so reading them costs no join.  It lands with one
-    split landing (``inc-batch``): the final vertices, the stats and WCC
-    sums of every community, and the carried tables' gone and new rows
-    after the batch, whatever its steps — ``edges``, ``clean-edges``,
-    ``tri`` (new) and each tag with ``-gone``.  The batch's net change
-    folds into them by the one rule of both loops (``incremental._extend``;
-    ``incremental._fold`` for a Spark merge).  Each step reports the row it came from of each
+    """The incremental batch ``batch`` (``src, dst, op``) on ``state``
+    (an ``incremental.WCCState`` of ``rows`` vertex, clean-edge and
+    triangle rows, whose edges, clean edges and triangles are
+    ``carried``: each ``(root, gone, new)``, see ``WCCState.carried``)
+    in ONE task.  The batch is packed once, each row with its op's code;
+    the task picks its steps from the ops it finds (``cdc_steps``: the U
+    rows' delete, the I and U rows' insert, the D rows' delete, each
+    step only when it has rows) and runs them in order, each the merge
+    of its rows (symmetrized in the task, so no batch costs a shuffle),
+    then the tail, over the arrays the step before it returned.  The
+    task reads the carried vertices, the roots, gone and new rows of the
+    clean edges and triangles, the gone and new edges, the batch and the
+    root edges from the endpoints of its I and U rows (a semi-join that
+    folds away when the op is a literal "D"); it forms the carried
+    tables itself (``_carried_rows``), so reading them costs no join.
+    It lands with one split landing (``inc-batch``): the final vertices,
+    the stats and WCC sums of every community, and the carried tables'
+    gone and new rows after the batch, whatever its steps — ``edges``,
+    ``clean-edges``, ``tri`` (new) and each tag with ``-gone``.  The
+    batch's net change folds into them by the one rule of both loops
+    (``incremental._extend``; ``incremental._fold`` for a Spark merge).
+    Each step reports the row it came from of each
     of its clean edges and triangles (``origin``); composed over the
     steps, they give once, at the end, the input rows to remove (a
     triangle as its input row, corners in their carried order) and the
@@ -921,29 +944,41 @@ def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
     step deletes them (a pair never carried too: it removes nothing).
 
     The final counts and every step's report (``steps``) ride it.
-    Returns ``(landings, info)``, or None (nothing left landed) when the
-    rows the task holds beside the state — the gone and new rows, the
-    batches, the insert's incident edges and new triangles, counted
-    against one ``TASK_ROWS - rows`` — would take it past
-    ``TASK_ROWS``; an insert closes its wedges in bounded chunks
-    (``_through``), so it gives up before it holds more."""
+    Returns ``(landings, info)``; ``({}, info)`` with no ``steps`` (and
+    nothing left landed) for a batch of no rows.  Returns None (nothing
+    left landed either), and the caller's driver path runs, when the
+    batch holds an op other than "I", "D" and "U" (NULL too: the task
+    declines, it does not validate), or when the rows the task holds
+    beside the state — the gone and new rows, the batches, the insert's
+    incident edges and new triangles, counted against one ``TASK_ROWS -
+    rows`` — would take it past ``TASK_ROWS``; an insert closes its
+    wedges in bounded chunks (``_through``), so it gives up before it
+    holds more."""
 
     cap = TASK_ROWS - rows
     columns = [name for name, _ in _FIELDS] + ["d"]
-    ops = [op for op, _ in steps]
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
         k, of = pdf["k"].to_numpy(), pdf["t"].to_numpy()
-        v = pdf[k == _VERTEX].sort_values("a")
 
         def rows_of(tag, *cols, level=0):  # level: 0 root, 1 gone, 2 new
             return [pdf[(k == tag) & (of == level)][c].to_numpy() for c in cols]
 
+        src, dst, code = rows_of(_BATCH, "a", "b", "c")
+        if not code.all():
+            return _tagged(columns, {}, {"steps": None})
+        steps = cdc_steps({_OPS[c - 1] for c in np.unique(code)})
+        if not steps:
+            return _tagged(columns, {}, {"steps": []})
+        ops = [op for op, _ in steps]
+        pair = src != dst  # as symmetrize_edges
+        batches = [_symmetrized([x[pair & np.isin(code, [_OPS.index(o) + 1 for o in of])]
+                                 for x in (src, dst)]) for _, of in steps]
+        v = pdf[k == _VERTEX].sort_values("a")
         vid, lab, t = (v[c].to_numpy() for c in ("a", "b", "t"))
         levels = [[rows_of(tag, *cols, level=i) for i in range(3)]
                   for tag, cols in ((_INCIDENT, "ab"), (_EDGE, "ab"), (_TRIANGLE, "abc"))]
         carried = clean, tri = [_carried_rows(vid, *x) for x in levels[1:]]
-        batches = [_symmetrized(rows_of(_BATCH + i, "a", "b")) for i in range(len(ops))]
         origin = [np.arange(len(x[0])) for x in carried]  # each row's input row; -1: new
         incident = [_NONE, _NONE]
         if "insert" in ops:
@@ -959,7 +994,7 @@ def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
             else:
                 merged = _insert(vid, lab, t, clean, tri, batch, left, incident, deleted)
             if merged is None:
-                return _tagged(columns, {}, {"tri": None})
+                return _tagged(columns, {}, {"steps": None})
             *graph, info = merged
             tail, tail_info = _batch_tail(*graph, policy, rule, max_iterations)
             origin = [np.append(o, -1)[step] for o, step in zip(origin, info["origin"])]
@@ -1001,20 +1036,19 @@ def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
 
     (edges, gone, new), clean, tri = carried
     pair = dict(a="src", b="dst")
+    code = F.coalesce(F.array_position(F.array(*map(F.lit, _OPS)), F.col("op")), F.lit(0))
+    inserted = batch.where(F.col("op").isin(*dict(cdc_steps(_OPS))["insert"])
+                           & (F.col("src") != F.col("dst")))
+    ends = inserted.select("src").unionByName(inserted.select(F.col("dst").alias("src")))
     parts = [
         _sentinel(state.vertices),
         _part(_VERTEX, state.vertices, a="vId", b="cId", t="t"),
         *levels(_EDGE, clean, **pair),
         *levels(_TRIANGLE, tri, a="u", b="v", c="w"),
         *levels(_INCIDENT, (None, gone, new), **pair),
+        _part(_INCIDENT, edges.join(F.broadcast(ends), "src", "left_semi"), **pair),
+        _part(_BATCH, batch.withColumn("_op", code), c="_op", **pair),
     ]
-    for i, (op, batch) in enumerate(steps):
-        batch = batch.where(F.col("src") != F.col("dst"))  # as symmetrize_edges
-        parts.append(_part(_BATCH + i, batch, **pair))
-        if op == "insert":
-            ends = batch.select("src").unionByName(batch.select(F.col("dst").alias("src")))
-            incident = edges.join(F.broadcast(ends), "src", "left_semi")
-            parts.append(_part(_INCIDENT, incident, **pair))
     edge_cols = [F.col("a").alias("src"), F.col("b").alias("dst")]
     tri_cols = [F.col("a").alias("u"), F.col("b").alias("v"), F.col("c").alias("w")]
     split = {
@@ -1027,8 +1061,8 @@ def incremental_batch(state, carried, steps: list, rows: int, policy, rule,
         split[tag] = split[f"{tag}-gone"] = cols
     plan = _one_task(parts, task, f"k STRING, {_PACKED}, d DOUBLE, info STRING")
     landed, info = _land(state.mat, plan, "inc-batch", split)
-    if info["tri"] is None:
+    if not info["steps"]:  # declined (None) or no rows ([])
         for df in landed.values():
             state.mat.drop(df)
-        return None
+        return None if info["steps"] is None else ({}, info)
     return landed, info

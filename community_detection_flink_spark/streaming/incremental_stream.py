@@ -179,37 +179,22 @@ def apply_cdc_batch(state: WCCState, batch_df: DataFrame) -> WCCState:
     (``max_files_per_trigger=1`` over per-op files does this).  Unknown
     op codes are an ERROR, not a silent drop.
 
-    The (up to three) steps run as one ``incremental_steps`` call: when
-    the carried state fits the small-state tier, all of them run in ONE
-    task with one split landing (``inc-batch``) of the carried tables'
-    gone and new rows, the batch's net change folded in, whatever its
-    ops; otherwise, or when that task gives up,
-    each step runs as its own batch.  Everything lands
-    through ``state.mat``.  The returned state's ``report`` is the last
-    step's, and ``report["steps"]`` holds every step's.  One aggregate
-    over the batch's op column (its distinct values) both validates it
-    and picks the steps that run; an empty batch runs none and returns
-    ``state`` itself.
+    The batch runs as one ``incremental_steps`` call: when the carried
+    state fits the small-state tier, the batch is packed once with its
+    op column and ONE task picks its (up to three) steps from the ops it
+    finds (``task_tier.cdc_steps``) and runs them, with one split
+    landing (``inc-batch``) of the carried tables' gone and new rows, the
+    batch's net change folded in, whatever its ops — no Spark query runs
+    before the task.  An empty batch runs none and returns ``state``
+    itself.  The task declines an unknown op (NULL too) and leaves
+    nothing landed; the driver then runs one aggregate over the op
+    column (its distinct values), which raises on it, as it does for a
+    state above the gate before each step runs as its own batch.
+    Everything lands through ``state.mat``.  The returned state's
+    ``report`` is the last step's, and ``report["steps"]`` holds every
+    step's.
     """
-    ops = {r["op"] for r in batch_df.select("op").distinct().collect()}
-    bad = ops - {"I", "D", "U"}
-    if bad:
-        raise ValueError(
-            f"apply_cdc_batch: unknown op {min(bad, key=str)!r} — "
-            "expected one of 'I', 'D', 'U'"
-        )
-    ups = batch_df.where("op = 'U'").select("src", "dst")
-    ins = batch_df.where("op = 'I'").select("src", "dst")
-    dels = batch_df.where("op = 'D'").select("src", "dst")
-    steps = []
-    if "U" in ops:
-        steps.append(("delete", ups))
-        ins = ins.union(ups)
-    if "I" in ops or "U" in ops:
-        steps.append(("insert", ins))
-    if "D" in ops:
-        steps.append(("delete", dels))
-    return incremental_steps(state, steps)
+    return incremental_steps(state, batch_df)
 
 
 class StreamHandle:
@@ -277,7 +262,7 @@ def run_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         before = holder["state"]
         if cdc:
-            # its op aggregate finds an empty batch: no ops, no batch
+            # an empty batch runs no step and returns the state itself
             holder["state"] = apply_cdc_batch(before, batch_df)
         elif not batch_df.isEmpty():
             holder["state"] = incremental_update(before, batch_df.select("src", "dst"))

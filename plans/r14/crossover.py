@@ -193,7 +193,7 @@ def _batch_run(state, op, batch, loop: str):
     saved = task_tier.TASK_ROWS, incremental._in_one_task
     task_tier.TASK_ROWS = {"task": sys.maxsize, "spark": 0}.get(loop, saved[0])
     if loop == "merge":
-        incremental._in_one_task = lambda state, steps: None
+        incremental._in_one_task = lambda state, batch: None
     try:
         out, wall, rss = _sampled(lambda: op(state, batch))
     finally:

@@ -59,7 +59,7 @@ def one_run(clusters: int, files: int, merge: bool) -> dict:
     from community_detection_flink_spark.streaming.incremental_stream import run_stream
 
     if merge:
-        incremental._in_one_task = lambda state, steps: None
+        incremental._in_one_task = lambda state, batch: None
     t_start = time.perf_counter()
     work = tempfile.mkdtemp(prefix="stream-ab-")
     spark = (

@@ -182,14 +182,15 @@ def test_prepare_lands_only_through_its_materializer(
 # Every count these batches branch on rides one of their landings, so a
 # driver-side query added to the batch path shows here.  On the task
 # loop each batch is one task and one split landing of its carried
-# tables' gone and new rows; the CDC batch reads the rows the delete
-# left gone in that task too, at no join.  On the Spark loop
+# tables' gone and new rows; the task picks a CDC batch's steps from its
+# op column, so no query runs before it, and it reads the rows the
+# delete left gone too, at no join.  On the Spark loop
 # (``TASK_ROWS = 0``) the merge and the tail run as joins, landings and
 # the distributed rounds; each merge lands only batch-sized rows, and a
 # read of a carried table after a delete pays one broadcast of its gone
 # rows.
 BATCH_JOBS = {
-    "task": {"insert": 3, "delete": 2, "cdc": 5},
+    "task": {"insert": 3, "delete": 2, "cdc": 3},
     "spark": {"insert": 91, "delete": 103, "cdc": 218},
 }
 
@@ -327,12 +328,108 @@ def test_insert_past_the_tier_runs_on_spark(spark, golden_edges, monkeypatch, ro
     assert math.isclose(got.global_wcc, want.global_wcc, rel_tol=1e-12)
 
 
-@pytest.mark.parametrize("ops", [("insert", "insert"), ("delete", "upsert")])
-def test_incremental_steps_reject_what_one_task_cannot_run(ops):
-    """A second insert (its incident edges would miss the first's) and
-    an unknown op are errors, raised before any work."""
-    with pytest.raises(ValueError, match="at most one insert"):
-        inc.incremental_steps(None, [(op, None) for op in ops])
+# the steps of each op mix, in order (``task_tier.cdc_steps``)
+MIX_STEPS = {
+    "I": ["insert"], "D": ["delete"], "U": ["delete", "insert"],
+    "ID": ["insert", "delete"], "IU": ["delete", "insert"],
+    "UD": ["delete", "insert", "delete"], "IUD": ["delete", "insert", "delete"],
+}
+
+
+def test_cdc_steps_run_at_most_one_insert():
+    """The one step rule: the U rows' delete, the I and U rows' insert,
+    then the D rows' delete, each only when it has rows — so a batch
+    runs at most one insert, and no ops run no step."""
+    from community_detection_flink_spark.operators.task_tier import cdc_steps
+
+    assert cdc_steps(set()) == []
+    for mix, want in MIX_STEPS.items():
+        assert [op for op, _ in cdc_steps(set(mix))] == want
+    assert cdc_steps({"I", "D", "U"}) == [("delete", "U"), ("insert", "IU"), ("delete", "D")]
+
+
+def test_cdc_batch_the_task_declines(spark, golden_edges, each_loop):
+    """The task declines what it cannot apply: on an unknown op (NULL
+    too) it lands nothing, and the driver's ops query raises, on both
+    loops.  An empty batch runs no step and returns the state itself.
+    Either way no ``inc-batch`` landing is left and the state is
+    unchanged."""
+    import os
+
+    from community_detection_flink_spark.streaming.incremental_stream import (
+        apply_cdc_batch,
+    )
+
+    cases = [
+        ([(0, 1, "X")], "unknown op 'X'"),
+        ([(0, 1, "I"), (0, 2, None)], "unknown op None"),
+        ([(0, 1, "I"), (0, 2, "X")], "unknown op 'X'"),
+        ([], None),
+    ]
+    for loop in each_loop():
+        state = prepare(symmetrize_edges(golden_edges))
+        before = (sorted(os.listdir(state.mat.base)), _labels(state), state.global_wcc)
+        for rows, error in cases:
+            batch = spark.createDataFrame(rows, "src LONG, dst LONG, op STRING")
+            if error is None:
+                assert apply_cdc_batch(state, batch) is state
+            else:
+                with pytest.raises(ValueError, match=error):
+                    apply_cdc_batch(state, batch)
+            assert not any(p.startswith("inc-batch") for p in os.listdir(state.mat.base))
+            assert (sorted(os.listdir(state.mat.base)), _labels(state),
+                    state.global_wcc) == before
+
+
+@pytest.mark.slow  # ~2 min: 14 steps on the Spark loop
+def test_cdc_steps_are_the_same_on_both_loops(spark, golden_edges, each_loop):
+    """Over every mix of I, D and U rows, ``report["steps"]`` lists the
+    steps of the one rule, in order, on both loops: the task picks them
+    from the op column, the Spark loop from its ops query."""
+    from community_detection_flink_spark.streaming.incremental_stream import (
+        apply_cdc_batch,
+    )
+
+    # an insert beside clique A, a delete in clique B, an update of a
+    # present edge of clique A
+    rows = {"I": (0, 20), "D": (4, 5), "U": (1, 2)}
+    got = {}
+    for loop in each_loop():
+        state = prepare(symmetrize_edges(golden_edges))
+        for mix in MIX_STEPS:
+            batch = spark.createDataFrame(
+                [(*rows[op], op) for op in mix], "src LONG, dst LONG, op STRING"
+            )
+            report = apply_cdc_batch(state, batch).report
+            assert report["refinement"] == loop
+            got[loop, mix] = [step["op"] for step in report["steps"]]
+    for mix, want in MIX_STEPS.items():
+        assert got["task", mix] == got["spark", mix] == want
+
+
+def test_spark_fold_lands_one_file_per_tag(spark, golden_edges, monkeypatch):
+    """On the Spark loop each batch lands its folded gone / new levels
+    (``inc-fold``) from one task: after three batches every tag of the
+    latest ``inc-fold`` is one data file, however many batches and
+    partitions folded into it."""
+    import os
+
+    from community_detection_flink_spark.operators import task_tier
+
+    monkeypatch.setattr(task_tier, "TASK_ROWS", 0)
+    pairs_df = lambda pairs: spark.createDataFrame(pairs, "src LONG, dst LONG")
+    state = prepare(symmetrize_edges(golden_edges))
+    state = incremental_update(state, pairs_df([(20, 21), (20, 22), (21, 22)]))
+    state = incremental_delete(state, pairs_df([(0, 1)]))
+    state = incremental_update(state, pairs_df([(20, 23), (21, 23)]))
+    assert state.report["refinement"] == "spark" and state.pending_unions == 3
+    base = state.mat.base
+    fold = os.path.join(base, max(p for p in os.listdir(base) if p.startswith("inc-fold")))
+    tags = [p for p in os.listdir(fold) if p.startswith("k=")]
+    assert {"k=edges", "k=edges-gone", "k=tri", "k=tri-gone"} <= set(tags)
+    for tag in tags:
+        files = [f for f in os.listdir(os.path.join(fold, tag)) if f.startswith("part-")]
+        assert len(files) == 1, (tag, files)
 
 
 def test_new_triangles_close_in_chunks(monkeypatch):
